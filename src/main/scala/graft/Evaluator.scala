@@ -62,6 +62,11 @@ object Evaluator {
       df.select(keep.toSeq ++ ordered: _*)
     } else df
 
+  /** Row count beyond which ranking takes the scalable prefix-sum path
+    * (Spark conf `graft.rank.rangeThreshold`, default 2M). */
+  private[graft] def rankRangeThreshold(spark: SparkSession): Long =
+    spark.conf.get("graft.rank.rangeThreshold", "2000000").toLong
+
   /** Final-score combine shared by batch and streaming: weighted scores
     * summed in registration order (bit-exact parity with pandas'
     * sequential `sum`), divided by the total weight when normalizing
@@ -169,34 +174,20 @@ class Evaluator(val normalizeWeights: Boolean = true) {
     * reference's empty dict. Prefer [[EvaluationResult.statistics]]. */
   def getStatistics: Map[String, Stats] = lastStatistics
 
-  def evaluateResult(
-      bids: DataFrame,
-      includeDetails: Boolean = true
-  ): EvaluationResult = {
-    val cols = criteriaMap.keys.toSeq
-    if (cols.isEmpty) buildResult(bids, Map.empty, includeDetails, None)
-    else {
-      val (stats, n) = StatsAgg.computeWithCount(bids, cols)
-      buildResult(bids, stats, includeDetails, Some(n))
-    }
-  }
-
-  /** Plan construction given pre-computed statistics — lets the staged
-    * pipeline fuse its per-stage cohort count into the same aggregation
-    * job instead of issuing separate count/isEmpty jobs. The row count
-    * (when known) also picks the ranking strategy: beyond
+  /** Statistics come from ONE aggregation job that also counts the rows.
+    * The count picks the ranking strategy: beyond
     * `graft.rank.rangeThreshold` rows (default 2M) the distinct-score
     * rank's window can itself grow unbounded, so ranking switches to the
     * fully distributed prefix-sum strategy (`withCompetitionRank(scalable =
     * true)`) — identical rank values either way. */
-  private[graft] def buildResult(
+  def evaluateResult(
       bids: DataFrame,
-      stats: Map[String, Stats],
-      includeDetails: Boolean,
-      rowCount: Option[Long],
-      sortOutput: Boolean = true
+      includeDetails: Boolean = true
   ): EvaluationResult = {
     val specs = criteriaMap.toSeq
+    val (stats, rowCount) =
+      if (specs.isEmpty) (Map.empty[String, Stats], 0L)
+      else StatsAgg.computeWithCount(bids, specs.map(_._1))
 
     // Weighted score expression per criterion, in registration order.
     val scoreExprs: Seq[(String, Column)] = specs.map { case (column, c) =>
@@ -213,17 +204,10 @@ class Evaluator(val normalizeWeights: Boolean = true) {
     val scored = withDetails.withColumn("final_score", finalScore)
 
     // E4: competition ranking; E5: output sort.
-    val rangeThreshold = bids.sparkSession.conf
-      .get("graft.rank.rangeThreshold", "2000000").toLong
-    val withRank = Ranks
+    val ranked = Ranks
       .withCompetitionRank(scored, "final_score", "ranking",
-        scalable = rowCount.exists(_ > rangeThreshold))
-    // E5 output sort; the staged pipeline skips it (its joins would destroy
-    // the order anyway and it re-sorts at the end) — a full sort exchange
-    // saved per stage.
-    val ranked =
-      if (sortOutput) withRank.orderBy(col("ranking").asc_nulls_last)
-      else withRank
+        scalable = rowCount > Evaluator.rankRangeThreshold(bids.sparkSession))
+      .orderBy(col("ranking").asc_nulls_last)
 
     val statsByName = specs.map { case (col_, c) => c.name -> stats(col_) }.toMap
     lastStatistics = statsByName

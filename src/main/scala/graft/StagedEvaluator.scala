@@ -4,8 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.criteria.Criterion
 import graft.model._
 
 /** One evaluation stage: a name, its own single-stage [[Evaluator]], an
@@ -19,9 +19,10 @@ final case class StageDefinition(
 )
 
 /** Per-stage outcome (`/root/reference/bid_evaluation/staged.py:50-57`).
-  * The reference stores `pd.Index` objects; the Spark analogue keeps lazy
-  * id frames (single `__bid_id` column) so nothing materializes until asked.
-  */
+  * The reference stores `pd.Index` objects; here every frame is a lazy
+  * view of the one staged frame: the stage's single-stage result over its
+  * cohort (input columns, `score_*` details, `final_score`, `ranking`),
+  * and the input rows the stage advanced and eliminated. */
 final case class StageResult(
     name: String,
     resultDf: DataFrame,
@@ -31,39 +32,35 @@ final case class StageResult(
 
 /** Staged evaluation result (SURVEY.md §7.3 immutability deviation): the
   * final frame, per-stage results, and per-stage statistics keyed
-  * `stageName -> criterionName -> Stats`. Call [[unpersist]] when done to
-  * release the frames cached during evaluation. */
+  * `stageName -> criterionName -> Stats`. The result holds no cached
+  * blocks; [[unpersist]] is kept for callers that release results. */
 final case class StagedResult(
     df: DataFrame,
     stageResults: List[StageResult],
-    statistics: Map[String, Map[String, Stats]],
-    private[graft] val caches: Seq[DataFrame] = Nil,
-    private[graft] val checkpoints: Seq[DataFrame] = Nil
+    statistics: Map[String, Map[String, Stats]]
 ) {
-  def unpersist(): Unit = {
-    caches.foreach(_.unpersist())
-    checkpoints.foreach(graft.Checkpoints.free)
-  }
+  def unpersist(): Unit = ()
 }
 
 /** Multi-stage pipeline with inter-stage elimination — the Spark-native
   * counterpart of the reference `StagedEvaluator`
   * (`/root/reference/bid_evaluation/staged.py`).
   *
-  * Where the reference slices rows by pandas index and writes scores back
-  * index-aligned (`staged.py:317,322-333`), this engine assigns each row a
-  * stable `__bid_id` (`monotonically_increasing_id`) once at entry and
-  * realizes every merge-back as an equi-join on that id. Stage k's cohort —
-  * and therefore all of stage k's statistics — is the set of rows not yet
-  * eliminated, exactly like the reference's active mask (`staged.py:292`).
+  * Like the reference's active mask over one table (`staged.py:292`),
+  * every stage's outputs are columns on ONE frame: stage k's cohort is the
+  * predicate "not yet eliminated", its scores are masked to that cohort,
+  * and its filter folds into the elimination marker that becomes
+  * `eliminated_at_stage`. No row ids, checkpoints, caches or joins by id:
+  * the only joins are [[Ranks]]' joins by score value.
   *
-  * Scale design: the base frame is cached (each stage's stats aggregation
-  * re-reads it); per-stage score frames are narrow (id + score columns) and
-  * cached because they are consumed multiple times (result join, elimination
-  * marking, next-cohort anti-join). The driver crosses the cluster boundary
-  * once per stage for the stats aggregate (plus two scalar jobs for a top-N
-  * 'exclude' filter) — an inherently sequential pipeline, since stage k's
-  * statistics depend on stage k-1's filter. Everything else stays lazy.
+  * Driver round trips: one statistics aggregate per stage (it also counts
+  * the cohort, for the emptiness checks and top-N filters) and one
+  * aggregate over the rank column for a top-N 'exclude' filter — an
+  * inherently sequential pipeline, since stage k's statistics depend on
+  * stage k-1's filter.
+  * Everything else is one lazy plan. [[StreamingEval.scoreStagedStream]]
+  * builds its columns with the same [[stageColumns]], over frozen
+  * statistics.
   */
 object StagedEvaluator {
   /** Factory front ends (P13, `staged.py:86-159`). */
@@ -73,6 +70,55 @@ object StagedEvaluator {
     graft.config.ConfigLoader.stagedFromYaml(path)
   def fromJson(path: String): StagedEvaluator =
     graft.config.ConfigLoader.stagedFromJson(path)
+
+  /** One stage's columns: the weighted criterion scores keyed by criterion
+    * name and the stage score, all null outside the stage's cohort. */
+  private[graft] final case class StageColumns(details: Seq[(String, Column)], score: Column) {
+    /** Rows a score-threshold filter eliminates. A null or NaN score is
+      * neither advanced nor eliminated and stays active (pandas NaN falls
+      * through both masks, `staged.py:339-340,383-385`). */
+    def below(threshold: Double): Column = score < lit(threshold)
+  }
+
+  /** The stage-column function shared by the batch engine and the streaming
+    * scorer: `stats(column, criterion)` supplies the statistics, `alive`
+    * is the stage's cohort predicate. */
+  private[graft] def stageColumns(
+      stage: StageDefinition,
+      stats: (String, Criterion) => Stats,
+      alive: Column
+  ): StageColumns = {
+    val ev = stage.evaluator
+    val scores = ev.criteria.map { case (column, c) =>
+      c.name -> c.expr(col(column).cast("double"), stats(column, c))
+    }
+    StageColumns(
+      scores.map { case (name, e) => name -> when(alive, e) },
+      when(alive, Evaluator.combinedFinalScore(scores, ev.normalizeWeights, ev.getTotalWeight)))
+  }
+
+  /** The elimination marker after a filtering stage: rows not yet
+    * eliminated whose `eliminated` predicate holds get the stage name. */
+  private[graft] def markEliminated(marker: Column, stage: String, eliminated: Column): Column =
+    when(marker.isNull && coalesce(eliminated, lit(false)), lit(stage)).otherwise(marker)
+
+  /** P7/P8 final score (`staged.py:415-453`) from each stage's score
+    * column, in stage order; `None` for a stage that produced none. */
+  private[graft] def finalScore(
+      mode: FinalScoreMode,
+      scores: Seq[(StageDefinition, Option[Column])]
+  ): Column = mode match {
+    case FinalScoreMode.LastStage =>
+      scores.last._2.getOrElse(lit(null).cast("double"))
+    case FinalScoreMode.WeightedCombination =>
+      val totalWeight = scores.map(_._1.weight).sum
+      val present = scores.collect { case (s, Some(c)) => s.weight -> c }
+      if (totalWeight == 0 || present.isEmpty) lit(Double.NaN)
+      else present.foldLeft(lit(0.0): Column) { case (acc, (w, c)) =>
+        // pandas fillna(0) covers both missing (null) and NaN
+        acc + coalesce(nanvl(c, lit(0.0)), lit(0.0)) * lit(w / totalWeight)
+      }
+  }
 }
 
 class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastStage) {
@@ -81,9 +127,6 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
 
   private val stages = ArrayBuffer.empty[StageDefinition]
   private var lastResult: Option[StagedResult] = None
-
-  /** Stable row-identity column, the analogue of the pandas index. */
-  val BidId = "__bid_id"
 
   def stageDefinitions: Seq[StageDefinition] = stages.toSeq
 
@@ -168,210 +211,164 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
     if (stages.isEmpty)
       throw new IllegalStateException("No stages defined. Add stages before evaluating.")
 
-    // P12: empty-input short-circuit (staged.py:459-465).
-    if (bids.isEmpty) {
-      val empty = bids
-        .withColumn("eliminated_at_stage", lit(null).cast("string"))
-        .withColumn("final_score", lit(null).cast("double"))
-        .withColumn("ranking", lit(null).cast("long"))
-      return StagedResult(empty, Nil, Map.empty)
-    }
+    val inputCols = bids.columns.toSeq
+    val rangeThreshold = Evaluator.rankRangeThreshold(bids.sparkSession)
+    val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+    val none = bids.limit(0)
 
-    // Eager checkpoint, not persist: BidId is monotonically_increasing_id,
-    // which is NONDETERMINISTIC across recomputes — a persist made a
-    // divergent re-assignment merely unlikely (evicted blocks recompute),
-    // truncated lineage makes it impossible. Blocks release via
-    // StagedResult.unpersist() or the host's Checkpoints.freeAll barrier.
-    // lazy: stage 1's statistics aggregation is a full pass over base,
-    // so the id assignment freezes inside that first job
-    val base = graft.Checkpoints.localCheckpoint(
-      bids.withColumn(BidId, monotonically_increasing_id()), eager = false)
-    val caches = ArrayBuffer[DataFrame]()
-
-    // Accumulating wide result: original columns + one narrow join per stage.
-    var result = base.withColumn("eliminated_at_stage", lit(null).cast("string"))
-    // Cohort for the next stage: original columns + BidId only.
-    var active = base
+    // The one frame: input columns plus each stage's score, rank and
+    // elimination marker under working names; the output is one
+    // projection of it at the end.
+    var frame = bids
+    var marker: Column = lit(null).cast("string")
+    var working = Seq.empty[String]
+    // Output layout (pandas column order) and each output column's value.
+    var layout: Seq[String] = inputCols.filterNot(_ == "eliminated_at_stage") :+ "eliminated_at_stage"
+    var values: Map[String, Column] = inputCols.map(c => c -> col(c)).toMap - "eliminated_at_stage"
 
     val stageResults = ArrayBuffer.empty[StageResult]
-    var lastActiveCount = 0L
     val statsOut = ArrayBuffer.empty[(String, Map[String, Stats])]
-    val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+    var lastActiveCount = 0L
 
-    val n = stages.size
     for ((stage, i) <- stages.zipWithIndex) {
-      val isLast = i == n - 1
       val safe = safeName(stage.name)
-
+      val alive = marker.isNull
       // One aggregation job per stage: all criterion statistics + the
-      // cohort count (used for the emptiness check and top-N cutoffs).
+      // cohort count (emptiness check and top-N cutoffs). A cohort that
+      // emptied stays empty, so later stages need no job.
       val (stageStats, activeCount) =
-        StatsAgg.computeWithCount(active, stage.evaluator.criteria.map(_._1))
+        if (i > 0 && lastActiveCount == 0L) (Map.empty[String, Stats], 0L)
+        else StatsAgg.computeWithCount(frame.filter(alive), stage.evaluator.criteria.map(_._1))
       lastActiveCount = activeCount
 
-      if (activeCount == 0L) {
+      if (activeCount == 0L && i == 0) {
+        // P12: empty-input short-circuit (staged.py:459-465).
+        val empty = bids
+          .withColumn("eliminated_at_stage", lit(null).cast("string"))
+          .withColumn("final_score", lit(null).cast("double"))
+          .withColumn("ranking", lit(null).cast("long"))
+        return StagedResult(empty, Nil, Map.empty)
+      } else if (activeCount == 0L) {
         // P6: all eliminated — warn, record empty stage, skip (staged.py:301-314).
         logger.warn(
           s"All bids were eliminated before stage '${stage.name}'. " +
             "Skipping this and subsequent stages.")
-        val empty = active.limit(0).select(col(BidId))
-        stageResults += StageResult(stage.name, active.limit(0), empty, empty)
+        stageResults += StageResult(stage.name, none, none, none)
       } else {
-        // Evaluate the surviving cohort with this stage's single-stage engine.
-        val er = stage.evaluator.buildResult(active, stageStats, includeDetails,
-          Some(activeCount), sortOutput = false)
-        statsOut += stage.name -> er.statistics
+        val sc = StagedEvaluator.stageColumns(stage, (column, _) => stageStats(column), alive)
+        statsOut += stage.name -> stage.evaluator.criteria
+          .map { case (column, c) => c.name -> stageStats(column) }.toMap
 
-        // Narrow frame of stage outputs, renamed with the stage prefix
-        // (staged.py:322-333): score_X -> {safe}_X, final_score ->
-        // {safe}_score, ranking -> {safe}_ranking.
-        val renamePairs: Seq[(String, Column)] = er.df.columns.collect {
-          case c if c.startsWith("score_") =>
-            s"${safe}_${c.stripPrefix("score_")}" -> col(c)
-          case c @ "final_score" => s"${safe}_score" -> col(c)
-          case c @ "ranking"     => s"${safe}_ranking" -> col(c)
-        }.toSeq
-        // Prefixed names can collide (e.g. criterion named 'score' makes
-        // score_score -> {safe}_score, same as final_score). pandas assigns
-        // sequentially so the LAST writer wins while the column keeps its
-        // first position — reproduce both.
-        val lastByName = renamePairs.groupBy(_._1).view.mapValues(_.last._2).toMap
-        val renames: Seq[Column] = renamePairs.map(_._1).distinct
-          .map(n => lastByName(n).as(n))
-        // persist (not checkpoint): deterministic given the checkpointed
-        // base, so a post-release re-execution recomputes correctly; the
-        // registry releases it at the host's freeAll barrier for callers
-        // that never call StagedResult.unpersist()
-        val stageCols = graft.Checkpoints.trackCache(er.df
-          .select(col(BidId) +: renames: _*)
-          .persist(StorageLevel.MEMORY_AND_DISK))
-        caches += stageCols
-
-        // two stages can sanitize to the same prefix; pandas overwrites the
-        // columns, so drop the earlier ones before this stage's join
-        val overwritten = stageCols.columns
-          .filter(c => c != BidId && result.columns.contains(c))
-        result = result.drop(overwritten: _*).join(stageCols, Seq(BidId), "left")
-
-        val scoreCol = col(s"${safe}_score")
-        val rankCol = col(s"${safe}_ranking")
+        // Stage score and its competition rank over the cohort: rows
+        // outside it have a null score, hence a null rank.
+        val (scoreName, rankName) = (s"__graft_s${i}_score", s"__graft_s${i}_rank")
+        frame = Ranks.withCompetitionRank(frame.withColumn(scoreName, sc.score),
+          scoreName, rankName, scalable = activeCount > rangeThreshold)
+        val (score, rank) = (col(scoreName), col(rankName))
+        working ++= Seq(scoreName, rankName)
+        val details = sc.details.map { case (n, c) => s"score_$n" -> c }
 
         // P3-P5: inter-stage filter (never on the last stage, staged.py:336).
-        // `elimPred` must evaluate on rows of `stageCols`/`result` alike;
-        // a null outcome means "neither advanced nor eliminated" (pandas
-        // NaN-score rows fall through the threshold masks and stay active,
-        // staged.py:383-385,339-340).
-        val filterOpt = if (isLast) None else stage.filter
-        val (advPred, elimPred): (Column, Column) = filterOpt match {
+        // A null `eliminated` outcome means "neither advanced nor
+        // eliminated": the row stays active (staged.py:339-340).
+        val filterOpt = if (i == stages.size - 1) None else stage.filter
+        val (advanced, eliminated): (Column, Column) = filterOpt match {
           case Some(StageFilter.ScoreThreshold(t)) =>
-            (scoreCol >= lit(t), scoreCol < lit(t))
+            // !isnan: Spark evaluates NaN >= t as TRUE, numpy as False
+            (score >= lit(t) && !isnan(score), sc.below(t))
 
-          case Some(StageFilter.TopN(topN, TieMode.Include)) =>
-            // P4: the stage's own competition ranking IS the filter ranking
-            // (both are rank(desc, method='min') over the cohort,
-            // staged.py:389-393). Unranked rows — null OR NaN score, both
-            // null-ranked by Ranks — are eliminated: pandas puts them in
-            // index.difference(advanced).
-            (rankCol <= lit(topN), coalesce(!(rankCol <= lit(topN)), lit(true)))
+          case Some(StageFilter.TopN(topN, tie)) if tie == TieMode.Exclude && activeCount <= topN =>
+            (lit(true), lit(false))
 
-          case Some(StageFilter.TopN(topN, TieMode.Exclude)) =>
-            // P5: cutoff = n-th highest score; if more than n rows sit
-            // at-or-above the cutoff the tie spans it -> advance only
-            // strictly-above (staged.py:394-409). pandas sorts NaN last
-            // (Spark would sort it FIRST), so the cutoff window holds only
-            // real scores; fewer than topN real scores means the n-th
-            // sorted score is NaN and `scores >= NaN` advances nobody.
-            if (activeCount <= topN) (lit(true), lit(false))
-            else {
-              val window = stageCols
-                .filter(scoreCol.isNotNull && !isnan(scoreCol))
-                .select(scoreCol.as("s"))
-                .orderBy(col("s").desc)
-                .limit(topN)
-                .agg(min(col("s")).as("cut"), count(lit(1)).as("n"))
-                .head()
-              if (window.isNullAt(0) || window.getLong(1) < topN) {
-                // NaN/null cutoff: eliminate the whole cohort
-                (lit(false), lit(true))
-              } else {
-                val cutoff = window.getDouble(0)
-                // guard both the count and the predicate with !isnan:
-                // Spark evaluates NaN >= x as TRUE, numpy as False
-                val atOrAbove = stageCols
-                  .filter(!isnan(scoreCol) && scoreCol >= lit(cutoff)).count()
-                val pred = (if (atOrAbove > topN) scoreCol > lit(cutoff)
-                            else scoreCol >= lit(cutoff)) && !isnan(scoreCol)
-                (pred, coalesce(!pred, lit(true)))
+          case Some(StageFilter.TopN(topN, tie)) =>
+            // P4/P5 (staged.py:389-409): the stage's competition rank IS
+            // the filter rank. Ranks <= n are exactly the real scores at or
+            // above the lowest of them, v; one aggregate over the rank
+            // column gives v and their count a. 'include' advances them
+            // all. 'exclude' advances only the scores strictly above v when
+            // the tie at v spans the cutoff (a > n), and nobody when fewer
+            // than n scores are real (pandas sorts NaN last, and
+            // `scores >= NaN` advances nobody). Null and NaN scores are
+            // unranked and never advance. Comparing with the literal v
+            // keeps later cohorts row-local: no later stage re-plans this
+            // rank.
+            val inTop = rank <= lit(topN)
+            val cut = frame.agg(count(when(inTop, lit(1))), min(when(inTop, score))).head()
+            val atOrAbove = cut.getLong(0)
+            val exclude = tie == TieMode.Exclude
+            val advanced =
+              if (atOrAbove == 0 || (exclude && atOrAbove < topN)) lit(false)
+              else {
+                val v = lit(cut.getDouble(1))
+                (if (exclude && atOrAbove > topN) score > v else score >= v) && !isnan(score)
               }
-            }
+            (advanced, coalesce(!advanced, lit(true)))
 
           case _ => (lit(true), lit(false))
         }
 
-        val advanced = stageCols.filter(advPred).select(col(BidId))
-        val eliminated = stageCols.filter(elimPred).select(col(BidId))
+        // The stage's single-stage result over its cohort, laid out as
+        // Evaluator.evaluate lays it out; input columns only for the rows
+        // it advanced and eliminated.
+        val inputs = inputCols.map(col)
+        val stageDf = Evaluator.detailProjection(frame.filter(alive), details, includeDetails)
+          .withColumn("final_score", score)
+          .drop("ranking").withColumn("ranking", rank)
+          .drop(working: _*)
+        stageResults += StageResult(stage.name, stageDf,
+          frame.filter(alive && advanced).select(inputs: _*),
+          frame.filter(alive && eliminated).select(inputs: _*))
+
+        // Stage outputs renamed with the stage prefix (staged.py:322-333):
+        // score_X -> {safe}_X (input columns named score_X too),
+        // final_score -> {safe}_score, ranking -> {safe}_ranking. Names can
+        // collide (a criterion named 'score' gives {safe}_score twice, two
+        // stages can share a prefix): pandas assigns sequentially, so the
+        // last writer wins while a stage's column keeps its first position
+        // and a later stage's columns move to the end.
+        val detailValues = if (includeDetails) details.toMap else Map.empty[String, Column]
+        val renamed = stageDf.columns.toSeq.collect {
+          case c if c.startsWith("score_") =>
+            s"${safe}_${c.stripPrefix("score_")}" -> detailValues.getOrElse(c, when(alive, col(c)))
+          case "final_score" => s"${safe}_score" -> score
+          case "ranking"     => s"${safe}_ranking" -> rank
+        }
+        val names = renamed.map(_._1).distinct
+        layout = layout.filterNot(names.contains) ++ names
+        values = values ++ renamed
 
         if (filterOpt.isDefined) {
-          // Mark eliminations on the wide result (it already carries this
-          // stage's columns, so the same predicate applies; rows eliminated
-          // in earlier stages are shielded by the isNull guard).
-          result = result.withColumn(
-            "eliminated_at_stage",
-            when(col("eliminated_at_stage").isNull && coalesce(elimPred, lit(false)),
-              lit(stage.name)
-            ).otherwise(col("eliminated_at_stage")))
-          // Next cohort = active minus eliminated (NOT "advanced only":
-          // pandas keeps neither-bucket rows active, staged.py:339-340).
-          active = active.join(eliminated, Seq(BidId), "left_anti")
+          val markerName = s"__graft_e$i"
+          frame = frame.withColumn(markerName,
+            StagedEvaluator.markEliminated(marker, stage.name, eliminated))
+          working :+= markerName
+          marker = col(markerName)
         }
-
-        stageResults += StageResult(stage.name, er.df, advanced, eliminated)
       }
     }
 
-    // P7/P8: final score (staged.py:415-453).
-    val lastSafe = safeName(stages.last.name)
-    val resultCols = result.columns.toSet
-    val finalScore: Column = finalScoreMode match {
-      case FinalScoreMode.LastStage =>
-        if (resultCols.contains(s"${lastSafe}_score")) col(s"${lastSafe}_score")
-        else lit(null).cast("double")
-      case FinalScoreMode.WeightedCombination =>
-        val totalWeight = stages.map(_.weight).sum
-        val present = stages.toSeq
-          .filter(s => resultCols.contains(s"${safeName(s.name)}_score"))
-        if (totalWeight == 0 || present.isEmpty) lit(Double.NaN)
-        else
-          present.foldLeft(lit(0.0): Column) { (acc, s) =>
-            val c = col(s"${safeName(s.name)}_score")
-            // pandas fillna(0) covers both missing (null) and NaN.
-            acc + coalesce(nanvl(c, lit(0.0)), lit(0.0)) * lit(s.weight / totalWeight)
-          }
-    }
-    result = result.withColumn("final_score", finalScore)
-
+    // The output: one projection of the frame, then the P7/P8 final score
+    // (staged.py:415-453) over the columns the output holds.
+    val staged = frame.select(layout.map(n => values.getOrElse(n, marker).as(n)): _*)
+    val finalScore = StagedEvaluator.finalScore(finalScoreMode, stages.toSeq.map { s =>
+      val c = s"${safeName(s.name)}_score"
+      s -> Option.when(layout.contains(c))(col(c))
+    })
     // P9: rank survivors only (staged.py:357-365); eliminated keep null.
-    val survivors = result
-      .filter(col("eliminated_at_stage").isNull)
-      .select(col(BidId), col("final_score"))
-    val rangeThreshold = bids.sparkSession.conf
-      .get("graft.rank.rangeThreshold", "2000000").toLong
-    val survivorRanks = Ranks
-      .withCompetitionRank(survivors, "final_score", "ranking",
-        scalable = lastActiveCount > rangeThreshold)
-      .select(col(BidId), col("ranking"))
-    result = result.join(survivorRanks, Seq(BidId), "left")
+    val ranked = Ranks.withCompetitionRank(
+        staged.withColumn("final_score", finalScore)
+          .withColumn("__graft_final",
+            when(col("eliminated_at_stage").isNull, col("final_score"))),
+        "__graft_final", "ranking", scalable = lastActiveCount > rangeThreshold)
+      .drop("__graft_final")
 
     // P10: final sort (staged.py:367-372). nanvl maps NaN final scores to
     // null so they sort LAST like pandas na_position='last' (raw Spark desc
     // would put NaN above every real score).
-    val sorted = result
-      .orderBy(col("ranking").asc_nulls_last,
-        nanvl(col("final_score"), lit(null).cast("double")).desc_nulls_last)
-      .drop(BidId)
+    val sorted = ranked.orderBy(col("ranking").asc_nulls_last,
+      nanvl(col("final_score"), lit(null).cast("double")).desc_nulls_last)
 
-    val res = StagedResult(sorted, stageResults.toList, statsOut.toMap,
-      caches.toSeq, checkpoints = Seq(base))
+    val res = StagedResult(sorted, stageResults.toList, statsOut.toMap)
     lastResult = Some(res)
     res
   }

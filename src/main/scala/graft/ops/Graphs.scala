@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -521,7 +522,8 @@ object Graphs {
     * queueing behind the loop. Identical result to
     * `ccApply(connectedComponents(histEdges, src, dst), newEdges, ...)`
     * by construction — same operators, same arguments, only job overlap.
-    * Job descriptions are thread-local, so the UI labels both lines. */
+    * The preamble's pool thread runs under the caller's local properties
+    * (job group, tags, scheduler pool), so both lines cancel together. */
   def ccIncremental(
       histEdges: DataFrame,
       newEdges: DataFrame,
@@ -530,8 +532,12 @@ object Graphs {
       maxIter: Int = 64,
       maxIncrementNodes: Long = 5000000L
   ): DataFrame = {
+    val sc = newEdges.sparkSession.sparkContext
+    val props = ListenerBridge.localProperties(sc)
     val prep = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      ccPrepIncrement(newEdges, src, dst, maxIncrementNodes))
+      ListenerBridge.withLocalProperties(sc, props) {
+        ccPrepIncrement(newEdges, src, dst, maxIncrementNodes)
+      })
     val comps =
       try connectedComponents(histEdges, src, dst, maxIter)
       catch { case t: Throwable =>

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (ORDER BY id) - 1`). Chosen over `monotonically_increasing_id` /
   * raw `zipWithIndex` because rank is a PURE FUNCTION of the id set:
   *  - stable across recomputes, partitionings, and runs — no eager
-  *    checkpoint needed to freeze it (the `__bid_id` precedent needs one
-  *    precisely because mid is execution-order-dependent);
+  *    checkpoint needed to freeze it (a `monotonically_increasing_id`
+  *    column needs one precisely because it is execution-order-dependent);
   *  - order-compatible: `min(surrogate)` ≡ `min(original id)` per group,
   *    so min-id keeper semantics survive the mapping;
   *  - engine-replayable: a SQL oracle can re-derive every value.

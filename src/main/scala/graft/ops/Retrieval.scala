@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Corpus retrieval primitives for training-data pipelines: vocabulary
@@ -36,11 +36,22 @@ object Retrieval {
     * heap. */
   private val maxLocalPageRows = 5000000
 
-  private def checkLocalPageRows(n: Int, what: String, op: String): Unit =
-    require(n <= maxLocalPageRows,
-      s"$op: $what has $n rows > maxLocalPageRows=$maxLocalPageRows — " +
+  /** Collects a driver page, refusing BEFORE the rows land: at most
+    * `max + 1` rows are collected, so an oversized batch fails with the
+    * knob's name instead of exhausting the driver heap mid-collect. */
+  private[graft] def collectLocalPage(
+      df: DataFrame,
+      what: String,
+      op: String,
+      max: Int = maxLocalPageRows
+  ): Array[Row] = {
+    val rows = df.limit(max + 1).collect()
+    require(rows.length <= max,
+      s"$op: $what has more than $max rows (maxLocalPageRows=$max) — " +
         "batch the query set; this frame lands on the driver as a local " +
         "relation by design")
+    rows
+  }
 
   /** Corpus vocabulary: for each whitespace token, the number of documents
     * containing it (`doc_freq`) and its total occurrence count
@@ -684,11 +695,14 @@ object Retrieval {
 
     // one tiny corpus-constants row, broadcast into the plan (never a
     // driver-side collect): the eager checkpoint's agg job is the full
-    // pass that materializes the postings blocks, and its values are
-    // byte-identical to the old separate-scan agg (count over every
-    // doc's marker, avg over the same integer __dl set — exact in
-    // double). Callers that score the SAME corpus twice (the PRF
-    // passes) hand in pass one's row instead.
+    // pass that materializes the postings blocks. For a corpus with
+    // unique doc ids its values equal the old separate-scan agg (count
+    // over every doc's marker, avg over the same integer __dl set —
+    // exact in double). Duplicate doc ids (outside the id contract)
+    // differ: the (id, __dl, term) groupBy folds same-id, same-length
+    // docs into one marker, so __n and __avgdl count them once.
+    // Callers that score the SAME corpus twice (the PRF passes) hand in
+    // pass one's row instead.
     val consts = constsIn.getOrElse(graft.Checkpoints.localCheckpoint(
       postings.filter(col("term").isNull).agg(
         count(lit(1)).as("__n"),
@@ -801,8 +815,7 @@ object Retrieval {
     val spark = docs.sparkSession
     val fbSchema = org.apache.spark.sql.types.StructType(Seq(
       first.schema(queryIdCol), first.schema(idCol)))
-    val fbCollected = first.select(col(queryIdCol), col(idCol)).collect()
-    checkLocalPageRows(fbCollected.length,
+    val fbCollected = collectLocalPage(first.select(col(queryIdCol), col(idCol)),
       "the first-pass feedback page (|queries| * fbDocs)", "bm25SearchPrf")
     val fbIds = spark.createDataFrame(
       java.util.Arrays.asList(fbCollected: _*), fbSchema)
@@ -824,10 +837,9 @@ object Retrieval {
       first.schema(queryIdCol),
       org.apache.spark.sql.types.StructField("term",
         org.apache.spark.sql.types.StringType, nullable = true)))
-    val pickedRows =
+    val pickedRows = collectLocalPage(
       GroupTopK.topKPerGroupString(cand, Seq(queryIdCol), "term", "__cnt", fbTerms)
-        .select(col(queryIdCol), col("term")).collect()
-    checkLocalPageRows(pickedRows.length,
+        .select(col(queryIdCol), col("term")),
       "the picked feedback-term set (|queries| * fbTerms)", "bm25SearchPrf")
     val picked = spark.createDataFrame(
       java.util.Arrays.asList(pickedRows: _*), pickedSchema)
@@ -1254,11 +1266,9 @@ object Retrieval {
     // old path persisted it, collected the bucket sliver in one job and
     // built two broadcasts in two more; ONE collect makes fbIds, its
     // distinct ids and the bucket prune all local (job-free broadcasts)
-    val fbRows = first
+    val fbRows = collectLocalPage(first
       .select(col(queryIdCol), col(idCol).cast(idType).as("__docid"),
-        pmod(xxhash64(col(idCol).cast(idType)), lit(nb.toLong)).as("__b"))
-      .collect()
-    checkLocalPageRows(fbRows.length,
+        pmod(xxhash64(col(idCol).cast(idType)), lit(nb.toLong)).as("__b")),
       "the first-pass feedback page (|queries| * fbDocs)",
       "bm25SearchPrfPreindexed")
     val fbSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -1830,12 +1840,10 @@ object Retrieval {
         org.apache.spark.sql.types.StringType, nullable = true)))
     val qtRows: Array[org.apache.spark.sql.Row] =
       if (stats.getAs[Long]("__sumdl") == 0L) Array.empty
-      else qTermsIn
+      else collectLocalPage(qTermsIn
         .select(col(queryIdCol), col("term"),
-          pmod(xxhash64(col("term")), lit(nb.toLong)).as("__b"))
-        .collect()
-    checkLocalPageRows(qtRows.length, "the (query, term) sliver",
-      "bm25SearchPreindexed")
+          pmod(xxhash64(col("term")), lit(nb.toLong)).as("__b")),
+        "the (query, term) sliver", "bm25SearchPreindexed")
     val qTerms = spark.createDataFrame(
       java.util.Arrays.asList(qtRows.map(r =>
         org.apache.spark.sql.Row(r.get(0), r.get(1))): _*), qtSchema)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.{Evaluator, StagedEvaluator}
-import graft.model.{FinalScoreMode, StageFilter, Stats}
+import graft.model.{StageFilter, Stats}
 
 /** Streaming evaluation: the reference engine is fully batch
   * (SURVEY.md §2.6 — no streaming surface), so this module is the
@@ -58,7 +58,7 @@ object StreamingEval {
     * projection). Emits the batch engine's stage score/detail columns,
     * `eliminated_at_stage`, and `final_score` (both final-score modes);
     * rows eliminated at an earlier stage get null scores for stages they
-    * never reached, exactly like the batch wide-result join.
+    * never reached, exactly like the batch engine.
     *
     * Two batch capabilities are inherently cohort-global and stay batch-
     * only: top-N stage filters (they rank the whole cohort — passing one
@@ -88,52 +88,32 @@ object StreamingEval {
         s"frozenStats('$stage') has no entry for criterion '$name' (column '$column')")))
     }
 
-    // One pass over the stage list builds every expression against the
-    // single input projection — scores masked by "not yet eliminated", the
-    // elimination marker folded stage over stage, all evaluated in ONE
-    // select (the per-stage joins of the batch engine collapse to column
-    // arithmetic once stats are literals).
-    var elim: Column = lit(null).cast("string")
+    // Every stage's columns come from the batch engine's stage-column
+    // function over frozen statistics, masked by "not yet eliminated" and
+    // evaluated in ONE select: with literal statistics the whole cascade
+    // is row-local column arithmetic.
+    var marker: Column = lit(null).cast("string")
     val details = Seq.newBuilder[(String, Column)]
-    val stageScores = Seq.newBuilder[(graft.StageDefinition, Column)]
+    val stageScores = Seq.newBuilder[Column]
     val n = stages.size
     stages.zipWithIndex.foreach { case (stage, i) =>
       val safe = staged.safeName(stage.name)
-      val alive = elim.isNull
-      val scoreExprs: Seq[(String, Column)] = stage.evaluator.criteria.map {
-        case (column, c) =>
-          s"${safe}_${c.name}" -> when(alive,
-            c.expr(col(column).cast("double"), statsFor(stage.name, column, c.name)))
-      }
-      // same combine as the batch stage engine; the mask rides inside the
-      // summands, so eliminated rows get null (≡ the batch join miss)
-      val stageScore = when(alive, Evaluator.combinedFinalScore(
-        scoreExprs, stage.evaluator.normalizeWeights, stage.evaluator.getTotalWeight))
-      details ++= scoreExprs
-      details += (s"${safe}_score" -> stageScore)
-      stageScores += stage -> stageScore
-      // P3 threshold filter (never on the last stage, like the batch); a
-      // null stage score is "neither advanced nor eliminated" and flows on
+      val sc = StagedEvaluator.stageColumns(stage,
+        (column, c) => statsFor(stage.name, column, c.name), marker.isNull)
+      details ++= sc.details.map { case (name, c) => s"${safe}_$name" -> c }
+      details += (s"${safe}_score" -> sc.score)
+      stageScores += sc.score
+      // P3 threshold filter (never on the last stage, like the batch)
       if (i < n - 1) stage.filter.foreach {
         case StageFilter.ScoreThreshold(t) =>
-          elim = when(elim.isNotNull, elim)
-            .otherwise(when(coalesce(stageScore < lit(t), lit(false)), lit(stage.name)))
+          marker = StagedEvaluator.markEliminated(marker, stage.name, sc.below(t))
         case _ => ()
       }
     }
-
-    // P7/P8 final score — same formulas as the batch result assembly
-    val finalScore: Column = staged.finalScoreMode match {
-      case FinalScoreMode.LastStage => stageScores.result().last._2
-      case FinalScoreMode.WeightedCombination =>
-        val totalWeight = stages.map(_.weight).sum
-        if (totalWeight == 0) lit(Double.NaN)
-        else stageScores.result().foldLeft(lit(0.0): Column) { case (acc, (s, c)) =>
-          acc + coalesce(nanvl(c, lit(0.0)), lit(0.0)) * lit(s.weight / totalWeight)
-        }
-    }
+    val finalScore = StagedEvaluator.finalScore(staged.finalScoreMode,
+      stages.zip(stageScores.result().map(Some(_))))
     Evaluator.detailProjection(stream, details.result(), includeDetails)
-      .withColumn("eliminated_at_stage", elim)
+      .withColumn("eliminated_at_stage", marker)
       .withColumn("final_score", finalScore)
   }
 

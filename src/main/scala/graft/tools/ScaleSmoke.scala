@@ -51,16 +51,14 @@ object ScaleSmoke {
           .evaluate(bids)
           .count())
 
-      time(s"staged 2-stage + threshold") {
-        val res = new StagedEvaluator()
+      time(s"staged 2-stage + threshold")(
+        new StagedEvaluator()
           .addStage("S1", filterType = "score_threshold", threshold = 30.0)
           .linear("l_extendedprice", 1.0)
           .addStage("S2")
           .minRatio("l_quantity", 1.0)
-          .evaluateResult(bids)
-        res.df.count()
-        res.unpersist() // release stage caches before the next measurement
-      }
+          .evaluate(bids)
+          .count())
 
       time(s"range-partitioned rank")(
         Ranks.rangePartitionedRank(

@@ -2145,6 +2145,35 @@ class OpsSpec extends SparkSpec {
     assert(bigInc.getMessage.contains("rebuild with connectedComponents"))
   }
 
+  test("ccIncremental launches every job in the caller's job group") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.ops.Graphs
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = (1L to 30L).map(i => (i, if (i % 7 == 0) i else i + 1))
+    // a pooled worker that exists before the group is set must not leak
+    // its own (empty) properties into the prep's jobs
+    java.util.concurrent.CompletableFuture.supplyAsync(() => 0).join()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("g", "ccIncremental job group")
+    try {
+      Graphs.ccIncremental(edges.take(15).toDF("s", "d"),
+        edges.drop(15).toDF("s", "d"), "s", "d").collect()
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(!groups.isEmpty)
+    assert(groups.asScala.forall(_ == "g"), groups.asScala.mkString(","))
+  }
+
   test("horizonDedup: greedy anchors, boundary kept, ties, brute-force replay") {
     import graft.ops.Dedup
     // key A: 0 (keep), 5 (drop), 10 (keep, == boundary), 14 (drop),

@@ -584,4 +584,27 @@ class PlanShapeSpec extends SparkSpec {
       s"small-domain resample must not shuffle the corpus:\n$plan")
     assert(!plan.contains("Window") && !plan.contains("Join"), plan)
   }
+
+  test("staged evaluation is one frame: no row ids, checkpoints or caches") {
+    import spark.implicits._
+    val bids = (1 to 40).map(i => (i.toLong, (i % 9) * 100.0 + i)).toDF("id", "acctbal")
+    val res = new StagedEvaluator()
+      .addStage("Screen", filterType = "score_threshold", threshold = 20.0)
+      .linear("acctbal", 1.0)
+      .addStage("Shortlist", filterType = "top_n", topN = 10, onTie = "exclude")
+      .direct("acctbal", 1.0, inputScale = 1000.0)
+      .addStage("Award")
+      .minRatio("acctbal", 1.0)
+      .evaluateResult(bids)
+    assert(res.df.count() == bids.count())
+    val qe = res.df.queryExecution
+    val analyzed = qe.analyzed.toString
+    assert(!analyzed.contains("monotonically_increasing_id"),
+      s"staged plan must not assign row ids:\n$analyzed")
+    assert(!analyzed.contains("LogicalRDD"),
+      s"staged plan must not read a checkpoint:\n$analyzed")
+    val cached = qe.withCachedData.toString
+    assert(!cached.contains("InMemoryRelation"),
+      s"staged plan must not read cached stage frames:\n$cached")
+  }
 }

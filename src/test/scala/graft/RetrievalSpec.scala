@@ -656,4 +656,16 @@ class RetrievalSpec extends SparkSpec {
     val kept = Outliers.dropOutliers(df, Seq("g"), "v", maxAbsZ = 10.0).count()
     assert(kept == 5L)
   }
+
+  test("collectLocalPage refuses an oversized page before returning rows") {
+    val page = Seq(1L, 2L, 3L).toDF("id")
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.collectLocalPage(page, "the test page", "spec", max = 2)
+    }
+    assert(e.getMessage.contains(
+      "spec: the test page has more than 2 rows (maxLocalPageRows=2)"), e.getMessage)
+    // at the ceiling every row comes back
+    assert(Retrieval.collectLocalPage(page, "the test page", "spec", max = 3)
+      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
 }

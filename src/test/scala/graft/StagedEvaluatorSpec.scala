@@ -396,4 +396,40 @@ class StagedEvaluatorSpec extends SparkSpec {
     assert(r3.columns.contains("scoring_score"))
     assert(rows(r3).forall(r => !r.isNullAt(r.fieldIndex("ranking"))))
   }
+
+  test("exact duplicate rows keep one row each, tie, and advance or fall together") {
+    // pandas keeps each duplicate under its own index label: both rows are
+    // scored, share the competition rank, and sit on the same side of a
+    // top_n 'exclude' cutoff (staged.py:394-409)
+    val dups = Seq(("A", 90L, 100L), ("B", 80L, 200L), ("B", 80L, 200L),
+      ("C", 70L, 150L), ("D", 60L, 120L), ("D", 60L, 120L))
+      .toDF("vendor", "score", "price")
+    def run(n: Int): Seq[(String, Option[String], Long, Option[Long])] =
+      rows(new StagedEvaluator()
+        .addStage("Round1", filterType = "top_n", topN = n, onTie = "exclude")
+        .direct("score", 1.0)
+        .addStage("Round2")
+        .minRatio("price", 1.0)
+        .evaluate(dups))
+        .map(r => (r.getAs[String]("vendor"),
+          Option(r.getAs[String]("eliminated_at_stage")),
+          r.getAs[Long]("round1_ranking"),
+          Option(r.getAs[Any]("ranking")).map(_.asInstanceOf[Long])))
+        .sortBy(t => (t._1, t._3))
+
+    // n=2: cutoff 80 is held by three rows > 2, so only the strictly
+    // higher A advances; both B rows fall with the tie
+    assert(run(2) == Seq(
+      ("A", None, 1L, Some(1L)),
+      ("B", Some("Round1"), 2L, None), ("B", Some("Round1"), 2L, None),
+      ("C", Some("Round1"), 4L, None),
+      ("D", Some("Round1"), 5L, None), ("D", Some("Round1"), 5L, None)))
+    // n=3: exactly three rows at or above the cutoff, so both B rows
+    // advance and tie again in the final ranking (price 200 vs A's 100)
+    assert(run(3) == Seq(
+      ("A", None, 1L, Some(1L)),
+      ("B", None, 2L, Some(2L)), ("B", None, 2L, Some(2L)),
+      ("C", Some("Round1"), 4L, None),
+      ("D", Some("Round1"), 5L, None), ("D", Some("Round1"), 5L, None)))
+  }
 }
