@@ -179,7 +179,9 @@ class Evaluator(val normalizeWeights: Boolean = true) {
     * `graft.rank.rangeThreshold` rows (default 2M) the distinct-score
     * rank's window can itself grow unbounded, so ranking switches to the
     * fully distributed prefix-sum strategy (`withCompetitionRank(scalable =
-    * true)`) — identical rank values either way. */
+    * true)`) — identical rank values either way. On that path the returned
+    * frame reads a local checkpoint, which [[Checkpoints.freeAll]]
+    * invalidates: consume the frame before that barrier. */
   def evaluateResult(
       bids: DataFrame,
       includeDetails: Boolean = true

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Standard-competition ranking ("1-2-2-4"), the only ranking the reference
   * uses: pandas `rank(ascending=False, method='min')`
@@ -12,12 +13,17 @@ import org.apache.spark.sql.functions._
   * A naive `rank().over(Window.orderBy(...))` funnels every row through ONE
   * partition — fine for a bid table, fatal at 100 TB. Instead we aggregate to
   * the distinct score values (`groupBy(score).count`), rank that far smaller
-  * frame (the only single-partition window runs over |distinct scores| rows),
-  * and join the ranks back. AQE turns the join into a broadcast when the
-  * distinct-score frame is small, so the big side is never shuffled beyond
-  * the groupBy.
+  * [[rankTable]] (the only single-partition window runs over |distinct
+  * scores| rows), and join the ranks back by score value. AQE turns the join
+  * into a broadcast when the distinct-score frame is small, so the big side
+  * is never shuffled beyond the groupBy.
   */
 object Ranks {
+
+  /** Column names of a [[rankTable]]. */
+  private[graft] val Score = "__graft_score"
+  private[graft] val Count = "__graft_cnt"
+  private[graft] val Rank = "__graft_rank"
 
   /** Appends `outCol` = competition rank of `scoreCol` (descending: highest
     * score -> rank 1) as a nullable LongType. Rows with null OR NaN score
@@ -34,51 +40,95 @@ object Ranks {
   ): DataFrame = {
     // pandas result['ranking'] = ... overwrites; a join would duplicate
     val base = if (df.columns.contains(outCol)) df.drop(outCol) else df
-    val counts = base
-      .filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
-      .groupBy(col(scoreCol).as("__graft_score"))
-      .agg(count(lit(1)).as("__graft_cnt"))
-    val ranks =
-      if (scalable) scalableCountRanks(counts, outCol)
-      else {
-        val w = Window.orderBy(col("__graft_score").desc)
-        counts.withColumn(
-          outCol,
-          (sum("__graft_cnt").over(w) - col("__graft_cnt") + lit(1L)).cast("long"))
-      }
-    base.join(ranks.select(col("__graft_score"), col(outCol)),
-        base(scoreCol) === col("__graft_score"), "left")
-      .drop("__graft_score")
+    joinRank(base, scoreCol, rankTable(base, scoreCol, scalable), outCol)
   }
 
-  /** Competition ranks from a (score, count) frame WITHOUT a global window:
-    * range-partition the distinct scores descending (narrow rows — the only
-    * thing persisted), collect one partial count-sum per partition, prefix-
-    * sum on the driver, then a per-partition running sum yields
-    * `rank = rows-before-score + 1`. Used when the caller knows the input
-    * is big enough that |distinct scores| may itself be huge. */
-  private def scalableCountRanks(counts: DataFrame, outCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import org.apache.spark.sql.{Encoders, Row}
+  /** One row per distinct real score of `scoreCol` in `df`: the score value
+    * ([[Score]]), its row count ([[Count]]) and its competition rank
+    * ([[Rank]]). Null and NaN scores are not in the table. `scalable` ranks
+    * the table with the windowless [[prefixSumRank]] kernel instead of a
+    * single-partition window, for when |distinct scores| may itself be huge.
+    * The table reads `df` once, so a caller can rank several score columns
+    * of one frame and attach every table at the output without re-planning
+    * the frame below each rank. */
+  private[graft] def rankTable(df: DataFrame, scoreCol: String, scalable: Boolean): DataFrame = {
+    val counts = df
+      .filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
+      .groupBy(col(scoreCol).as(Score))
+      .agg(count(lit(1)).as(Count))
+    if (scalable) prefixSumRank(counts, Score, Some(Count), Rank, 0)
+    else counts.withColumn(Rank,
+      (sum(Count).over(Window.orderBy(col(Score).desc)) - col(Count) + lit(1L)).cast("long"))
+  }
 
-    val spark = counts.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    // Eager checkpoint, not persist: the partial-sum collection and the
-    // ranking pass must see the SAME range partitioning
-    // (repartitionByRange SAMPLES bounds — a recompute could re-sample
-    // differently and silently mis-rank against the collected offsets).
-    // Truncated lineage makes a divergent recompute impossible, and the
-    // blocks are released at the host's Checkpoints.freeAll barrier
-    // instead of pinning the CacheManager for the session.
-    // lazy: the partial-sum collection below is a full pass, so the
-    // blocks materialize inside it — no separate upfront scan
-    val sorted = graft.Checkpoints.localCheckpoint(counts
-      .repartitionByRange(n, col("__graft_score").desc)
-      .sortWithinPartitions(col("__graft_score").desc), eager = false)
+  /** Left-joins `table`'s rank to `df` by score value as `outCol`: rows whose
+    * `scoreCol` is null, NaN or absent from the table get a null rank. */
+  private[graft] def joinRank(df: DataFrame, scoreCol: String, table: DataFrame,
+      outCol: String): DataFrame =
+    df.join(table.select(col(Score), col(Rank).as(outCol)), df(scoreCol) === col(Score), "left")
+      .drop(Score)
 
+  /** Fully distributed competition rank for CONTINUOUS score columns,
+    * where distinct-value aggregation degenerates (|distinct| ~ N and the
+    * small-frame window above would single-partition N rows): the
+    * [[prefixSumRank]] kernel over the rows themselves, each weighing 1.
+    *
+    * Null and NaN scores get null rank (excluded from the universe),
+    * matching [[withCompetitionRank]]. The returned frame (like the
+    * `scalable` one of [[withCompetitionRank]]) reads a local checkpoint
+    * that [[Checkpoints.freeAll]] invalidates: consume it before then.
+    */
+  def rangePartitionedRank(
+      df: DataFrame,
+      scoreCol: String,
+      outCol: String,
+      numPartitions: Int = 0
+  ): DataFrame = {
+    val base = if (df.columns.contains(outCol)) df.drop(outCol) else df
+    val real = col(scoreCol).isNotNull && !isnan(col(scoreCol))
+    prefixSumRank(base.filter(real), scoreCol, None, outCol, numPartitions)
+      // always union: even a non-nullable double column can carry NaN
+      .unionByName(base.filter(!real).withColumn(outCol, lit(null).cast("long")))
+  }
+
+  /** The one prefix-sum rank kernel: appends `outCol` = 1 + the total
+    * weight of the rows with a strictly higher `scoreCol`, without a
+    * global window. The weight is `weightCol` (the row count of a
+    * distinct-score table), or 1 per row when `None`. `df` must hold no
+    * null or NaN score.
+    *
+    * Three steps, none global: (1) range-partition descending on the score
+    * (equal values land in one partition, so tie groups never span a
+    * boundary); (2) collect one weight total per partition and prefix-sum
+    * them on the driver; (3) per partition, scan rows in sorted order,
+    * carrying the weight seen so far; equal scores share the rank of the
+    * first of them. The only driver data is one long per partition.
+    */
+  private def prefixSumRank(
+      df: DataFrame,
+      scoreCol: String,
+      weightCol: Option[String],
+      outCol: String,
+      numPartitions: Int
+  ): DataFrame = {
+    val spark = df.sparkSession
+    val n = if (numPartitions > 0) numPartitions
+      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    // Checkpoint, not persist: the weight collection and the ranking pass
+    // must see the SAME range partitioning (repartitionByRange SAMPLES
+    // bounds — a recompute could re-sample differently and silently
+    // mis-rank against the collected offsets). Truncated lineage makes a
+    // divergent recompute impossible; blocks release at the host's
+    // Checkpoints.freeAll barrier. Lazy: the weight collection below is a
+    // full pass, so the blocks materialize inside it.
+    val sorted = graft.Checkpoints.localCheckpoint(df
+      .repartitionByRange(n, col(scoreCol).desc)
+      .sortWithinPartitions(col(scoreCol).desc), eager = false)
+
+    // (1 long per partition) -> driver -> prefix offsets
     val partSums = sorted
-      .select(spark_partition_id().as("pid"), col("__graft_cnt"))
-      .groupBy("pid").agg(sum("__graft_cnt").as("total"))
+      .groupBy(spark_partition_id().as("pid"))
+      .agg(sum(weightCol.fold(lit(1L))(col)))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val maxPid = if (partSums.isEmpty) -1 else partSums.keys.max
     val offsets = new Array[Long](maxPid + 2)
@@ -89,106 +139,24 @@ object Ranks {
     }
     val offsetsB = spark.sparkContext.broadcast(offsets)
 
+    val scoreIdx = sorted.schema.fieldIndex(scoreCol)
+    val weightIdx = weightCol.fold(-1)(sorted.schema.fieldIndex)
     val schema = StructType(sorted.schema.fields :+
-      StructField(outCol, LongType, nullable = false))
+      StructField(outCol, LongType, nullable = true))
     sorted.mapPartitions { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val o = offsetsB.value
       var before = if (pid < o.length) o(pid) else 0L
+      var rank = 0L
+      var prev: Any = null
       rows.map { r =>
-        val cnt = r.getLong(1)
-        val out = Row.fromSeq(r.toSeq :+ (before + 1L))
-        before += cnt
-        out
+        val s = r.get(scoreIdx)
+        // Scala ==: numeric equality, so 0.0 and -0.0 tie as they do in
+        // the groupBy strategy (NaN never reaches the kernel)
+        if (rank == 0L || s != prev) { rank = before + 1L; prev = s }
+        before += (if (weightIdx < 0) 1L else r.getLong(weightIdx))
+        Row.fromSeq(r.toSeq :+ rank)
       }
     }(Encoders.row(schema))
-  }
-
-  /** Fully distributed competition rank for CONTINUOUS score columns,
-    * where distinct-value aggregation degenerates (|distinct| ~ N and the
-    * small-frame window above would single-partition N rows).
-    *
-    * Three steps, none global: (1) range-partition descending on the score
-    * (equal values land in one partition, so tie groups never span a
-    * boundary); (2) collect the tiny per-partition row counts and prefix-
-    * sum them on the driver; (3) per partition, scan rows in sorted order
-    * assigning `offset + competition rank within partition`. The only
-    * driver data is one long per partition.
-    *
-    * Null and NaN scores get null rank (excluded from the universe),
-    * matching [[withCompetitionRank]].
-    */
-  def rangePartitionedRank(
-      df: DataFrame,
-      scoreCol: String,
-      outCol: String,
-      numPartitions: Int = 0
-  ): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import org.apache.spark.sql.{Encoders, Row}
-
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-
-    val base = if (df.columns.contains(outCol)) df.drop(outCol) else df
-    val nonNull = base.filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
-    val unranked = base.filter(col(scoreCol).isNull || isnan(col(scoreCol)))
-
-    // Eager checkpoint, not persist: the size-collection job and the
-    // ranking pass must see the SAME range partitioning
-    // (repartitionByRange SAMPLES bounds — a recompute could re-sample
-    // differently and silently mis-rank against the collected offsets).
-    // Truncated lineage makes a divergent recompute impossible; blocks
-    // release at the host's Checkpoints.freeAll barrier.
-    // lazy: the size-collection below is a full pass (see above)
-    val sorted = graft.Checkpoints.localCheckpoint(nonNull
-      .repartitionByRange(n, col(scoreCol).desc)
-      .sortWithinPartitions(col(scoreCol).desc), eager = false)
-
-    // (1 long per partition) -> driver -> prefix offsets
-    val partSizes = sorted
-      .select(spark_partition_id().as("pid"))
-      .groupBy("pid").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxPid = if (partSizes.isEmpty) -1 else partSizes.keys.max
-    val offsets = new Array[Long](maxPid + 2)
-    var acc = 0L
-    for (pid <- 0 to maxPid) {
-      offsets(pid) = acc
-      acc += partSizes.getOrElse(pid, 0L)
-    }
-
-    val scoreIdx = sorted.schema.fieldIndex(scoreCol)
-    val outSchema = StructType(sorted.schema.fields :+
-      StructField(outCol, LongType, nullable = true))
-    val encoder = Encoders.row(outSchema)
-    val offsetsB = spark.sparkContext.broadcast(offsets)
-
-    val ranked = sorted.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val base = {
-        val o = offsetsB.value
-        if (pid < o.length) o(pid) else 0L
-      }
-      var i = 0L
-      var tieStart = 0L
-      var prev: Double = Double.NaN
-      var first = true
-      rows.map { r =>
-        val s = r.getDouble(scoreIdx)
-        // Double.compare, not !=: NaN != NaN would give each NaN row its own
-        // tie group here, while the groupBy strategy (Spark NaN==NaN) ties
-        // them — the two strategies must agree on NaN scores.
-        if (first || java.lang.Double.compare(s, prev) != 0) {
-          tieStart = i; prev = s; first = false
-        }
-        i += 1
-        Row.fromSeq(r.toSeq :+ (base + tieStart + 1L))
-      }
-    }(encoder)
-
-    // always union: even a non-nullable double column can carry NaN
-    ranked.unionByName(unranked.withColumn(outCol, lit(null).cast("long")))
   }
 }

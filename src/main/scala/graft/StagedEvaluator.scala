@@ -47,15 +47,20 @@ final case class StagedResult(
   * (`/root/reference/bid_evaluation/staged.py`).
   *
   * Like the reference's active mask over one table (`staged.py:292`),
-  * every stage's outputs are columns on ONE frame: stage k's cohort is the
-  * predicate "not yet eliminated", its scores are masked to that cohort,
-  * and its filter folds into the elimination marker that becomes
-  * `eliminated_at_stage`. No row ids, checkpoints, caches or joins by id:
-  * the only joins are [[Ranks]]' joins by score value.
+  * every stage's scores and elimination marker are columns on ONE frame:
+  * stage k's cohort is the predicate "not yet eliminated", its scores are
+  * masked to that cohort, and its filter folds into the elimination
+  * marker that becomes `eliminated_at_stage`. Statistics and top-N cutoffs
+  * are literals, so the frame is a row-local projection of the input.
+  * Each ranked stage, and the final ranking, gets its own [[Ranks]] rank
+  * table over that projection; the tables are joined by score value only
+  * when an output is built (`{stage}_ranking`, `ranking`,
+  * [[StageResult.resultDf]]), so the plan grows linearly in stages. No
+  * row ids, checkpoints, caches or joins by id.
   *
   * Driver round trips: one statistics aggregate per stage (it also counts
   * the cohort, for the emptiness checks and top-N filters) and one
-  * aggregate over the rank column for a top-N 'exclude' filter — an
+  * aggregate over the stage's rank table for a top-N filter — an
   * inherently sequential pipeline, since stage k's statistics depend on
   * stage k-1's filter.
   * Everything else is one lazy plan. [[StreamingEval.scoreStagedStream]]
@@ -204,6 +209,10 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
   def evaluate(bids: DataFrame, includeDetails: Boolean = true): DataFrame =
     evaluateResult(bids, includeDetails).df
 
+  /** Runs the stages over `bids`. Above `graft.rank.rangeThreshold` cohort
+    * rows a rank table takes the prefix-sum path, and the returned frames
+    * then read a local checkpoint: [[Checkpoints.freeAll]] invalidates
+    * them, so consume the result before that barrier. */
   def evaluateResult(
       bids: DataFrame,
       includeDetails: Boolean = true
@@ -216,12 +225,15 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
     val logger = org.slf4j.LoggerFactory.getLogger(getClass)
     val none = bids.limit(0)
 
-    // The one frame: input columns plus each stage's score, rank and
-    // elimination marker under working names; the output is one
-    // projection of it at the end.
+    // The one frame: a projection of the input adding each stage's score
+    // and elimination marker under working names; statistics and cutoffs
+    // are literals, so every column stays row-local. Ranks live in one
+    // rank table per ranked score column, joined by score value only when
+    // an output is built.
     var frame = bids
     var marker: Column = lit(null).cast("string")
-    var working = Seq.empty[String]
+    // (score column, its rank table, rank column) per ranked score
+    val rankTables = ArrayBuffer.empty[(String, DataFrame, String)]
     // Output layout (pandas column order) and each output column's value.
     var layout: Seq[String] = inputCols.filterNot(_ == "eliminated_at_stage") :+ "eliminated_at_stage"
     var values: Map[String, Column] = inputCols.map(c => c -> col(c)).toMap - "eliminated_at_stage"
@@ -259,13 +271,12 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
         statsOut += stage.name -> stage.evaluator.criteria
           .map { case (column, c) => c.name -> stageStats(column) }.toMap
 
-        // Stage score and its competition rank over the cohort: rows
-        // outside it have a null score, hence a null rank.
+        // Stage score and the rank table of its competition ranks over the
+        // cohort: rows outside it have a null score, hence no rank.
         val (scoreName, rankName) = (s"__graft_s${i}_score", s"__graft_s${i}_rank")
-        frame = Ranks.withCompetitionRank(frame.withColumn(scoreName, sc.score),
-          scoreName, rankName, scalable = activeCount > rangeThreshold)
-        val (score, rank) = (col(scoreName), col(rankName))
-        working ++= Seq(scoreName, rankName)
+        frame = frame.withColumn(scoreName, sc.score)
+        val ranks = Ranks.rankTable(frame, scoreName, scalable = activeCount > rangeThreshold)
+        val score = col(scoreName)
         val details = sc.details.map { case (n, c) => s"score_$n" -> c }
 
         // P3-P5: inter-stage filter (never on the last stage, staged.py:336).
@@ -284,16 +295,16 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
             // P4/P5 (staged.py:389-409): the stage's competition rank IS
             // the filter rank. Ranks <= n are exactly the real scores at or
             // above the lowest of them, v; one aggregate over the rank
-            // column gives v and their count a. 'include' advances them
+            // table gives v and their row count a. 'include' advances them
             // all. 'exclude' advances only the scores strictly above v when
             // the tie at v spans the cutoff (a > n), and nobody when fewer
             // than n scores are real (pandas sorts NaN last, and
             // `scores >= NaN` advances nobody). Null and NaN scores are
             // unranked and never advance. Comparing with the literal v
-            // keeps later cohorts row-local: no later stage re-plans this
-            // rank.
-            val inTop = rank <= lit(topN)
-            val cut = frame.agg(count(when(inTop, lit(1))), min(when(inTop, score))).head()
+            // keeps later cohorts row-local.
+            val inTop = col(Ranks.Rank) <= lit(topN)
+            val cut = ranks.agg(coalesce(sum(when(inTop, col(Ranks.Count))), lit(0L)),
+              min(when(inTop, col(Ranks.Score)))).head()
             val atOrAbove = cut.getLong(0)
             val exclude = tie == TieMode.Exclude
             val advanced =
@@ -311,13 +322,16 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
         // Evaluator.evaluate lays it out; input columns only for the rows
         // it advanced and eliminated.
         val inputs = inputCols.map(col)
-        val stageDf = Evaluator.detailProjection(frame.filter(alive), details, includeDetails)
+        val internal = frame.columns.diff(inputCols)
+        val stageDf = Evaluator.detailProjection(
+            Ranks.joinRank(frame.filter(alive), scoreName, ranks, rankName), details, includeDetails)
           .withColumn("final_score", score)
-          .drop("ranking").withColumn("ranking", rank)
-          .drop(working: _*)
+          .drop("ranking").withColumn("ranking", col(rankName))
+          .drop(internal :+ rankName: _*)
         stageResults += StageResult(stage.name, stageDf,
           frame.filter(alive && advanced).select(inputs: _*),
           frame.filter(alive && eliminated).select(inputs: _*))
+        rankTables += ((scoreName, ranks, rankName))
 
         // Stage outputs renamed with the stage prefix (staged.py:322-333):
         // score_X -> {safe}_X (input columns named score_X too),
@@ -331,7 +345,7 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
           case c if c.startsWith("score_") =>
             s"${safe}_${c.stripPrefix("score_")}" -> detailValues.getOrElse(c, when(alive, col(c)))
           case "final_score" => s"${safe}_score" -> score
-          case "ranking"     => s"${safe}_ranking" -> rank
+          case "ranking"     => s"${safe}_ranking" -> col(rankName)
         }
         val names = renamed.map(_._1).distinct
         layout = layout.filterNot(names.contains) ++ names
@@ -341,26 +355,34 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
           val markerName = s"__graft_e$i"
           frame = frame.withColumn(markerName,
             StagedEvaluator.markEliminated(marker, stage.name, eliminated))
-          working :+= markerName
           marker = col(markerName)
         }
       }
     }
 
-    // The output: one projection of the frame, then the P7/P8 final score
-    // (staged.py:415-453) over the columns the output holds.
-    val staged = frame.select(layout.map(n => values.getOrElse(n, marker).as(n)): _*)
+    // The P7/P8 final score (staged.py:415-453) over the stage scores the
+    // output holds (a `{safe}_score` value is always row-local), and P9:
+    // survivors only are ranked (staged.py:357-365); eliminated keep null.
     val finalScore = StagedEvaluator.finalScore(finalScoreMode, stages.toSeq.map { s =>
       val c = s"${safeName(s.name)}_score"
-      s -> Option.when(layout.contains(c))(col(c))
+      s -> Option.when(layout.contains(c))(values(c))
     })
-    // P9: rank survivors only (staged.py:357-365); eliminated keep null.
-    val ranked = Ranks.withCompetitionRank(
-        staged.withColumn("final_score", finalScore)
-          .withColumn("__graft_final",
-            when(col("eliminated_at_stage").isNull, col("final_score"))),
-        "__graft_final", "ranking", scalable = lastActiveCount > rangeThreshold)
-      .drop("__graft_final")
+    frame = frame.withColumn("__graft_fs", finalScore)
+      .withColumn("__graft_final", when(marker.isNull, col("__graft_fs")))
+    rankTables += (("__graft_final", Ranks.rankTable(frame, "__graft_final",
+      scalable = lastActiveCount > rangeThreshold), "__graft_final_rank"))
+
+    // The output: every rank table joined once, then one projection in
+    // pandas column order; `final_score` keeps an input column's position,
+    // `ranking` moves to the end.
+    val body = layout.filterNot(_ == "ranking").map {
+      case "final_score" => col("__graft_fs").as("final_score")
+      case n             => values.getOrElse(n, marker).as(n)
+    }
+    val ranked = rankTables
+      .foldLeft(frame) { case (out, (score, table, rank)) => Ranks.joinRank(out, score, table, rank) }
+      .select((if (layout.contains("final_score")) body
+        else body :+ col("__graft_fs").as("final_score")) :+ col("__graft_final_rank").as("ranking"): _*)
 
     // P10: final sort (staged.py:367-372). nanvl maps NaN final scores to
     // null so they sort LAST like pandas na_position='last' (raw Spark desc

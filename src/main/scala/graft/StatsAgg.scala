@@ -18,18 +18,20 @@ import graft.model.Stats
   * Parity notes (SURVEY.md §1.5):
   *   - `std` is pandas' sample std (ddof=1) -> `stddev_samp`;
   *   - `median`/quartiles use linear interpolation -> Spark's exact
-  *     `percentile`, NOT `approx_percentile`. At 100 TB swap in
-  *     `approx_percentile` via [[StatsAgg.compute]]'s `exact = false`.
+  *     `percentile`, NOT `approx_percentile`. At 100 TB set the session
+  *     conf `graft.stats.approx=true` (see [[StatsAgg.computeWithCount]]);
+  *   - `avg` and `stddev_samp` sum in partition arrival order, so the same
+  *     cohort can give a mean or std that differs in the last bit when the
+  *     plan's partitioning changes (q22's `p_retailprice` mean read
+  *     951.1881889763773 under one staged plan and 951.1881889763775 under
+  *     another). Criteria that read mean or std (e.g. `proximity_to_mean`)
+  *     are bit-reproducible for a fixed plan only.
   */
 object StatsAgg {
 
-  def compute(
-      df: DataFrame,
-      columns: Seq[String],
-      exact: Boolean = true
-  ): Map[String, Stats] =
+  def compute(df: DataFrame, columns: Seq[String]): Map[String, Stats] =
     if (columns.isEmpty) Map.empty
-    else computeWithCount(df, columns, exact)._1
+    else computeWithCount(df, columns)._1
 
   /** Same single aggregation job, also returning the cohort row count —
     * callers that need emptiness/size (the staged pipeline, top-N filters)
@@ -41,13 +43,8 @@ object StatsAgg {
     * distinct value, a driver/executor memory hazard at scale, while the
     * approximate sketch is bounded. min/max/mean/std are exact either way.
     */
-  def computeWithCount(
-      df: DataFrame,
-      columns: Seq[String],
-      exact: Boolean = true
-  ): (Map[String, Stats], Long) = {
-    val useExact = exact &&
-      !df.sparkSession.conf.get("graft.stats.approx", "false").toBoolean
+  def computeWithCount(df: DataFrame, columns: Seq[String]): (Map[String, Stats], Long) = {
+    val useExact = !df.sparkSession.conf.get("graft.stats.approx", "false").toBoolean
     val cols = columns.distinct
     val pcts = array(lit(0.5), lit(0.25), lit(0.75))
     val aggs: Seq[Column] = cols.flatMap { c =>

@@ -607,4 +607,23 @@ class PlanShapeSpec extends SparkSpec {
     assert(!cached.contains("InMemoryRelation"),
       s"staged plan must not read cached stage frames:\n$cached")
   }
+
+  test("staged plan grows linearly: every top-N stage adds the same number of leaves") {
+    import spark.implicits._
+    val bids = (1 to 200).map(i => (i.toLong, (i * 37 % 101).toDouble, (i % 13).toDouble))
+      .toDF("id", "a", "b")
+    val leaves = (1 to 4).map { k =>
+      val ev = new StagedEvaluator()
+      (1 to k).foreach { j =>
+        ev.addStage(s"Top$j", filterType = "top_n", topN = 200 - 20 * j,
+            onTie = if (j % 2 == 0) "exclude" else "include")
+          .linear(if (j % 2 == 0) "a" else "b", 1.0)
+      }
+      val res = ev.addStage("Final").minRatio("a", 1.0).evaluateResult(bids)
+      res.df.queryExecution.analyzed.collectLeaves().size
+    }
+    val steps = leaves.sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    assert(steps.distinct.size == 1 && steps.head > 0,
+      s"analyzed leaves for 1-4 top-N stages (${leaves.mkString("/")}) must grow by a constant")
+  }
 }

@@ -102,10 +102,31 @@ class ScaleOpsSpec extends SparkSpec {
       .select("id", "rank_b").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
 
+    // the windowless distinct-score strategy: the same kernel, each score
+    // weighted by its row count, over 7 range partitions
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    val viaScalable = try {
+      Ranks.withCompetitionRank(df, "score", "rank_c", scalable = true)
+        .select("id", "rank_c").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+
     assert(viaRange == viaAgg)
+    assert(viaScalable == viaAgg)
     // ties share one rank
     val tieRanks = data.filter(d => d._2 != null && d._2 == 42.5)
       .map(d => viaRange(d._1)).toSet
     assert(tieRanks.size == 1)
+
+    // signed zeros are one tie group in every strategy: Spark groups and
+    // sorts 0.0 and -0.0 as equal, so they interleave inside a partition
+    val zeros = Seq((1L, 0.0), (2L, -0.0), (3L, 0.0), (4L, -0.0), (5L, 1.0)).toDF("id", "score")
+    Seq(Ranks.withCompetitionRank(zeros, "score", "rk"),
+        Ranks.withCompetitionRank(zeros, "score", "rk", scalable = true),
+        Ranks.rangePartitionedRank(zeros, "score", "rk", numPartitions = 3)).foreach { r =>
+      assert(r.filter(col("id") < 5).select("rk").distinct().collect().map(_.getLong(0)).toSeq
+        == Seq(2L))
+    }
   }
 }
