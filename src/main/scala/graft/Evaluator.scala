@@ -62,7 +62,7 @@ object Evaluator {
       df.select(keep.toSeq ++ ordered: _*)
     } else df
 
-  /** Row count beyond which ranking takes the scalable prefix-sum path
+  /** Row count beyond which ranking takes the scalable range-rank path
     * (Spark conf `graft.rank.rangeThreshold`, default 2M). */
   private[graft] def rankRangeThreshold(spark: SparkSession): Long =
     spark.conf.get("graft.rank.rangeThreshold", "2000000").toLong
@@ -178,10 +178,8 @@ class Evaluator(val normalizeWeights: Boolean = true) {
     * The count picks the ranking strategy: beyond
     * `graft.rank.rangeThreshold` rows (default 2M) the distinct-score
     * rank's window can itself grow unbounded, so ranking switches to the
-    * fully distributed prefix-sum strategy (`withCompetitionRank(scalable =
-    * true)`) — identical rank values either way. On that path the returned
-    * frame reads a local checkpoint, which [[Checkpoints.freeAll]]
-    * invalidates: consume the frame before that barrier. */
+    * fully distributed range-rank strategy (`withCompetitionRank(scalable =
+    * true)`) — identical rank values either way. */
   def evaluateResult(
       bids: DataFrame,
       includeDetails: Boolean = true

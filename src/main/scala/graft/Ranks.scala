@@ -1,9 +1,17 @@
 package graft
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.RangePartitioner
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Standard-competition ranking ("1-2-2-4"), the only ranking the reference
   * uses: pandas `rank(ascending=False, method='min')`
@@ -17,6 +25,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * scores| rows), and join the ranks back by score value. AQE turns the join
   * into a broadcast when the distinct-score frame is small, so the big side
   * is never shuffled beyond the groupBy.
+  *
+  * When |distinct scores| may itself be huge, the windowless, checkpoint-free
+  * [[rangeRank]] kernel ranks the table instead; it also serves
+  * [[rangePartitionedRank]], [[graft.ops.Ids]] and the Gini ordinal of
+  * [[graft.ops.Metrics.activityConcentration]]. Every ranked frame is an
+  * ordinary lazy frame that can be collected again at any time.
   */
 object Ranks {
 
@@ -46,17 +60,16 @@ object Ranks {
   /** One row per distinct real score of `scoreCol` in `df`: the score value
     * ([[Score]]), its row count ([[Count]]) and its competition rank
     * ([[Rank]]). Null and NaN scores are not in the table. `scalable` ranks
-    * the table with the windowless [[prefixSumRank]] kernel instead of a
-    * single-partition window, for when |distinct scores| may itself be huge.
+    * the table with [[rangeRank]], each score weighted by its row count,
+    * instead of a single-partition window.
     * The table reads `df` once, so a caller can rank several score columns
     * of one frame and attach every table at the output without re-planning
     * the frame below each rank. */
   private[graft] def rankTable(df: DataFrame, scoreCol: String, scalable: Boolean): DataFrame = {
-    val counts = df
-      .filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
-      .groupBy(col(scoreCol).as(Score))
-      .agg(count(lit(1)).as(Count))
-    if (scalable) prefixSumRank(counts, Score, Some(Count), Rank, 0)
+    val real = df.filter(col(scoreCol).isNotNull && !isnan(col(scoreCol)))
+      .select(col(scoreCol).as(Score))
+    val counts = real.groupBy(Score).agg(count(lit(1)).as(Count))
+    if (scalable) rangeRank(counts, Score, descending = true, Some(Count), Rank, units = Some(real))
     else counts.withColumn(Rank,
       (sum(Count).over(Window.orderBy(col(Score).desc)) - col(Count) + lit(1L)).cast("long"))
   }
@@ -71,12 +84,8 @@ object Ranks {
   /** Fully distributed competition rank for CONTINUOUS score columns,
     * where distinct-value aggregation degenerates (|distinct| ~ N and the
     * small-frame window above would single-partition N rows): the
-    * [[prefixSumRank]] kernel over the rows themselves, each weighing 1.
-    *
-    * Null and NaN scores get null rank (excluded from the universe),
-    * matching [[withCompetitionRank]]. The returned frame (like the
-    * `scalable` one of [[withCompetitionRank]]) reads a local checkpoint
-    * that [[Checkpoints.freeAll]] invalidates: consume it before then.
+    * [[rangeRank]] kernel over the rows themselves, each weighing 1.
+    * Null and NaN scores get null rank, matching [[withCompetitionRank]].
     */
   def rangePartitionedRank(
       df: DataFrame,
@@ -86,77 +95,95 @@ object Ranks {
   ): DataFrame = {
     val base = if (df.columns.contains(outCol)) df.drop(outCol) else df
     val real = col(scoreCol).isNotNull && !isnan(col(scoreCol))
-    prefixSumRank(base.filter(real), scoreCol, None, outCol, numPartitions)
+    rangeRank(base.filter(real), scoreCol, descending = true, None, outCol, numPartitions)
       // always union: even a non-nullable double column can carry NaN
       .unionByName(base.filter(!real).withColumn(outCol, lit(null).cast("long")))
   }
 
-  /** The one prefix-sum rank kernel: appends `outCol` = 1 + the total
-    * weight of the rows with a strictly higher `scoreCol`, without a
-    * global window. The weight is `weightCol` (the row count of a
-    * distinct-score table), or 1 per row when `None`. `df` must hold no
-    * null or NaN score.
-    *
-    * Three steps, none global: (1) range-partition descending on the score
-    * (equal values land in one partition, so tie groups never span a
-    * boundary); (2) collect one weight total per partition and prefix-sum
-    * them on the driver; (3) per partition, scan rows in sorted order,
-    * carrying the weight seen so far; equal scores share the rank of the
-    * first of them. The only driver data is one long per partition.
-    */
-  private def prefixSumRank(
+  /** The one range-rank kernel: appends `outCol` = 1 + the total weight of
+    * the rows strictly ahead in the order of `keyCol` (any orderable atomic
+    * type; NaN-free, and a null key fails), as a non-nullable long. The
+    * weight is `weightCol` (a long), or 1 per row; with distinct keys and
+    * unit weights the rank is the 1-based position. No window, no
+    * checkpoint: (1) the driver samples split points once (a
+    * `RangePartitioner` over the keys under Spark's SQL ordering, at most
+    * `numBuckets` ranges, default `spark.sql.shuffle.partitions`) and
+    * embeds them in the plan; a row's bucket is its range — monotone in
+    * the key for ANY splits, so equal keys (0.0 and -0.0 too) share a
+    * bucket and the ranks never depend on the sample;
+    * (2) one aggregate gives each bucket's weight, prefix-summed on the
+    * driver into offsets; (3) each bucket is scanned in key order from its
+    * offset, equal keys taking the rank of the first of them. A recompute
+    * yields the same buckets, hence the same ranks. `units`, when given,
+    * holds one row per unit of weight with the same keys (the rows a
+    * count-weighted table was aggregated from); steps (1) and (2) then read
+    * it instead, with no aggregation, and only the scan reads `df`. */
+  private[graft] def rangeRank(
       df: DataFrame,
-      scoreCol: String,
+      keyCol: String,
+      descending: Boolean,
       weightCol: Option[String],
       outCol: String,
-      numPartitions: Int
+      numBuckets: Int = 0,
+      units: Option[DataFrame] = None
   ): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    // Checkpoint, not persist: the weight collection and the ranking pass
-    // must see the SAME range partitioning (repartitionByRange SAMPLES
-    // bounds — a recompute could re-sample differently and silently
-    // mis-rank against the collected offsets). Truncated lineage makes a
-    // divergent recompute impossible; blocks release at the host's
-    // Checkpoints.freeAll barrier. Lazy: the weight collection below is a
-    // full pass, so the blocks materialize inside it.
-    val sorted = graft.Checkpoints.localCheckpoint(df
-      .repartitionByRange(n, col(scoreCol).desc)
-      .sortWithinPartitions(col(scoreCol).desc), eager = false)
-
-    // (1 long per partition) -> driver -> prefix offsets
-    val partSums = sorted
-      .groupBy(spark_partition_id().as("pid"))
-      .agg(sum(weightCol.fold(lit(1L))(col)))
+    val n = if (numBuckets > 0) numBuckets
+      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val (src, weight) = units.fold((df, weightCol.fold(lit(1L))(col)))(u => (u, lit(1L)))
+    val dt = df.schema(keyCol).dataType
+    val keys = src.select(keyCol).where(col(keyCol).isNotNull).queryExecution.toRdd
+      .map(r => (InternalRow.copyValue(r.get(0, dt)), null)) // the row buffer is reused
+    val ranges = new RangePartitioner(n, keys, ascending = !descending)(
+      TypeUtils.getInterpretedOrdering(dt), ClassTag.Any)
+    val bucket = ColumnBridge.column(RangeBucket(ColumnBridge.expression(col(keyCol)), ranges))
+    val weights = src.groupBy(bucket).agg(sum(weight))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxPid = if (partSums.isEmpty) -1 else partSums.keys.max
-    val offsets = new Array[Long](maxPid + 2)
-    var acc = 0L
-    for (pid <- 0 to maxPid) {
-      offsets(pid) = acc
-      acc += partSums.getOrElse(pid, 0L)
-    }
-    val offsetsB = spark.sparkContext.broadcast(offsets)
+    // offsets(b) = total weight of the buckets ahead of bucket b
+    val offsets = (0 until ranges.numPartitions - 1)
+      .scanLeft(0L)((acc, b) => acc + weights.getOrElse(b, 0L)).toArray
 
-    val scoreIdx = sorted.schema.fieldIndex(scoreCol)
-    val weightIdx = weightCol.fold(-1)(sorted.schema.fieldIndex)
-    val schema = StructType(sorted.schema.fields :+
-      StructField(outCol, LongType, nullable = true))
-    sorted.mapPartitions { rows =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val o = offsetsB.value
-      var before = if (pid < o.length) o(pid) else 0L
-      var rank = 0L
-      var prev: Any = null
-      rows.map { r =>
-        val s = r.get(scoreIdx)
-        // Scala ==: numeric equality, so 0.0 and -0.0 tie as they do in
-        // the groupBy strategy (NaN never reaches the kernel)
-        if (rank == 0L || s != prev) { rank = before + 1L; prev = s }
-        before += (if (weightIdx < 0) 1L else r.getLong(weightIdx))
-        Row.fromSeq(r.toSeq :+ rank)
-      }
-    }(Encoders.row(schema))
+    val keyIdx = df.schema.fieldIndex(keyCol)
+    val weightIdx = weightCol.fold(-1)(df.schema.fieldIndex)
+    val bucketIdx = df.schema.length
+    val schema = StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = false))
+    df.withColumn(Bucket, bucket)
+      .repartition(n, col(Bucket))
+      .sortWithinPartitions(if (descending) col(keyCol).desc else col(keyCol).asc)
+      .mapPartitions { rows =>
+        var bucket = -1
+        var before = 0L
+        var rank = 0L
+        var prev: Any = null
+        rows.map { r =>
+          val b = r.getInt(bucketIdx)
+          if (b != bucket) { bucket = b; before = offsets(b); rank = 0L }
+          val s = r.get(keyIdx)
+          // Scala ==: numeric equality, so 0.0 and -0.0 tie as they do in
+          // the groupBy strategy
+          if (rank == 0L || s != prev) { rank = before + 1L; prev = s }
+          before += (if (weightIdx < 0) 1L else r.getLong(weightIdx))
+          Row.fromSeq(r.toSeq.init :+ rank)
+        }
+      }(Encoders.row(schema))
   }
+
+  private val Bucket = "__graft_bucket"
+}
+
+/** A key's bucket: its range under `ranges`, whose split points were
+  * sampled once (catalyst values, Spark's SQL ordering). A null key has no
+  * range and fails. */
+private[graft] case class RangeBucket(child: Expression, ranges: RangePartitioner[Any, Null])
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val key = child.eval(input)
+    if (key == null) throw new IllegalArgumentException(s"rank key ${child.sql} must be non-null")
+    ranges.getPartition(key)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): RangeBucket =
+    copy(child = newChild)
 }

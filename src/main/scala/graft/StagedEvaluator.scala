@@ -210,9 +210,8 @@ class StagedEvaluator(val finalScoreMode: FinalScoreMode = FinalScoreMode.LastSt
     evaluateResult(bids, includeDetails).df
 
   /** Runs the stages over `bids`. Above `graft.rank.rangeThreshold` cohort
-    * rows a rank table takes the prefix-sum path, and the returned frames
-    * then read a local checkpoint: [[Checkpoints.freeAll]] invalidates
-    * them, so consume the result before that barrier. */
+    * rows a rank table takes the range-rank path ([[Ranks.rankTable]]);
+    * either way the returned frames are ordinary lazy frames. */
   def evaluateResult(
       bids: DataFrame,
       includeDetails: Boolean = true

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Surrogate-id on-ramp for the engine-wide numeric-id contract.
   *
@@ -15,8 +14,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * The surrogate of an id is its 0-based RANK IN THE SORTED ORDER of the
   * distinct ids (binary/UTF8 string order — SQL `row_number() OVER
-  * (ORDER BY id) - 1`). Chosen over `monotonically_increasing_id` /
-  * raw `zipWithIndex` because rank is a PURE FUNCTION of the id set:
+  * (ORDER BY id) - 1`). Chosen over `monotonically_increasing_id` / a
+  * raw arrival-order index because rank is a PURE FUNCTION of the id set:
   *  - stable across recomputes, partitionings, and runs — no eager
   *    checkpoint needed to freeze it (a `monotonically_increasing_id`
   *    column needs one precisely because it is execution-order-dependent);
@@ -24,13 +23,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    so min-id keeper semantics survive the mapping;
   *  - engine-replayable: a SQL oracle can re-derive every value.
   *
-  * Scale shape: ranks come from a range-repartitioned sort of the
-  * DISTINCT id frame (narrow: one string column) + per-partition
-  * zipWithIndex — partition index offsets are exact because range
-  * partitions are globally ordered; no single-partition window, no
-  * driver collect beyond one count per partition (the
-  * [[graft.Ranks]] scalable-rank shape). The mapping join is a plain
-  * equi-join on the id — broadcast when small, shuffle once when not.
+  * Scale shape: the surrogate is the [[graft.Ranks.rangeRank]] position,
+  * minus 1, in the ascending order of the DISTINCT id frame (narrow: one
+  * string column) — no global window, no checkpoint; the mapping is an
+  * ordinary lazy frame, joined on the id (broadcast when small).
   */
 object Ids {
 
@@ -38,28 +34,13 @@ object Ids {
   final case class SurrogateResult(df: DataFrame, mapping: DataFrame)
 
   /** The (distinct id → dense 0-based sorted-rank long) mapping.
-    * Null ids are refused loudly — the numeric-id contract is non-null. */
+    * Null ids are refused loudly — the numeric-id contract is non-null:
+    * the rank kernel fails on a null key ("rank key … must be non-null"),
+    * already inside this call. */
   def surrogateMapping(df: DataFrame, idCol: String, sidCol: String = "sid"): DataFrame = {
-    val ids = df
-      .select(when(col(idCol).isNull,
-        raise_error(lit(s"withSurrogateId: id column '$idCol' must be non-null")))
-        .otherwise(col(idCol).cast("string")).as(idCol))
-      .distinct()
-    val spark = df.sparkSession
-    val parts = math.max(1, ids.rdd.getNumPartitions)
-    // Global sorted order: range partitions are ordered, rows sorted
-    // within each, so partition-local index + the prefix count of all
-    // earlier partitions IS the global rank. zipWithIndex computes
-    // exactly that (one count job, no collect of data).
-    val ranked = ids
-      .repartitionByRange(parts, col(idCol))
-      .sortWithinPartitions(idCol)
-      .rdd
-      .zipWithIndex()
-      .map { case (r: Row, i: Long) => Row(r.getString(0), i) }
-    spark.createDataFrame(ranked, StructType(Seq(
-      StructField(idCol, org.apache.spark.sql.types.StringType, nullable = false),
-      StructField(sidCol, LongType, nullable = false))))
+    val ids = df.select(col(idCol).cast("string").as(idCol)).distinct()
+    graft.Ranks.rangeRank(ids, idCol, descending = false, None, sidCol)
+      .select(col(idCol), (col(sidCol) - 1L).as(sidCol))
   }
 
   /** Adds `sidCol` = the dense deterministic surrogate long for `idCol`;

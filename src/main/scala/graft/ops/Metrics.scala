@@ -447,10 +447,9 @@ object Metrics {
     * ascending-sort textbook form, re-indexed so the scalable
     * descending rank serves it directly).
     *
-    * Scale shape: one |users|-grain count, then the [[graft.ops.Ids
-    * .surrogateMapping]] rank pattern over a combined `(count, id)`
-    * LONG sort key — range partitions + per-partition zipWithIndex
-    * offsets, NEVER a single-partition global window (and never a
+    * Scale shape: one |users|-grain count, then the
+    * [[graft.Ranks.rangeRank]] kernel over a combined `(count, id)` LONG
+    * sort key — NEVER a single-partition global window (and never a
     * double-typed rank: the combined key exceeds 2⁵³ long before the
     * counts stop fitting it) — and one final aggregate. The combined
     * key needs `count < 2³¹` per user and `id` in `[0, 2³¹)`;
@@ -458,7 +457,6 @@ object Metrics {
     * [[graft.ops.Ids.withSurrogateId]] pointer (the numeric-id
     * contract). */
   def activityConcentration(events: DataFrame, userCol: String): DataFrame = {
-    val spark = events.sparkSession
     val counts = events.filter(col(userCol).isNotNull)
       .groupBy(col(userCol).as("__u")).agg(count(lit(1)).as("__c"))
     val uid = col("__u").cast("long")
@@ -472,23 +470,9 @@ object Metrics {
       .otherwise(uid)
     val keyed = counts.select(
       (col("__c") * lit(1L << 31) + checked).as("__key"), col("__c"))
-    // global DESCENDING position j via range partitions + per-partition
-    // zipWithIndex (exact: range partitions are globally ordered) — the
-    // surrogateMapping shape, long keys end to end
-    val parts = math.max(1, keyed.rdd.getNumPartitions)
-    val rankedRdd = keyed
-      .repartitionByRange(parts, col("__key").desc)
-      .sortWithinPartitions(col("__key").desc)
-      .rdd
-      .zipWithIndex()
-      .map { case (r: org.apache.spark.sql.Row, i: Long) =>
-        org.apache.spark.sql.Row(r.getLong(1), i + 1L) }
-    val ranked = spark.createDataFrame(rankedRdd,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__c",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__j",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    // global DESCENDING position j: the keys are distinct, so the
+    // range-rank kernel's rank IS the 1-based position
+    val ranked = graft.Ranks.rangeRank(keyed, "__key", descending = true, None, "__j")
     import org.apache.spark.sql.types.DecimalType
     val totals = ranked.agg(
       count(lit(1)).as("n_users"), sum(col("__c")).as("n_events"),

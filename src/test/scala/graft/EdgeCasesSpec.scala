@@ -205,18 +205,28 @@ class EdgeCasesSpec extends SparkSpec {
   }
 
   test("all rank strategies give NaN scores a null rank, others unshifted") {
-    val df = Seq(("a", 5.0), ("b", Double.NaN), ("c", Double.NaN), ("d", 3.0))
-      .toDF("id", "score")
-    val strategies = Seq(
+    def strategies(df: org.apache.spark.sql.DataFrame) = Seq(
       Ranks.withCompetitionRank(df, "score", "rk"),
       Ranks.withCompetitionRank(df, "score", "rk", scalable = true),
       Ranks.rangePartitionedRank(df, "score", "rk"))
-    for (r <- strategies) {
+    val df = Seq(("a", 5.0), ("b", Double.NaN), ("c", Double.NaN), ("d", 3.0))
+      .toDF("id", "score")
+    for (r <- strategies(df)) {
       val m = byKey(r, "id")
       assert(m("a").getAs[Long]("rk") == 1L)
       assert(m("d").getAs[Long]("rk") == 2L)
       assert(m("b").isNullAt(m("b").fieldIndex("rk")))
       assert(m("c").isNullAt(m("c").fieldIndex("rk")))
+    }
+    // all scores equal: one hot bucket, every row ties at rank 1
+    val flat = (1 to 50).map(i => (s"v$i", 7.0)).toDF("id", "score")
+    for (r <- strategies(flat))
+      assert(r.select("rk").collect().map(_.getLong(0)).toSet == Set(1L))
+    // an empty frame ranks to an empty frame with the rank column
+    val empty = flat.limit(0)
+    for (r <- strategies(empty)) {
+      assert(r.columns.toSeq == Seq("id", "score", "rk"))
+      assert(r.count() == 0L)
     }
   }
 

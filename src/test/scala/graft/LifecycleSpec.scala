@@ -209,22 +209,38 @@ class LifecycleSpec extends SparkSpec {
     val bids = Seq(
       ("A", 10L, 80L, 100000L),
       ("B", 5L, 60L, 95000L),
-      ("C", 8L, 90L, 110000L)
+      ("C", 8L, 90L, 110000L),
+      ("D", 8L, 90L, 110000L)
     ).toDF("vendor", "experience", "quality_score", "bid_amount")
-    val out = new StagedEvaluator()
-      .addStage("Technical", filterType = "score_threshold", threshold = 10.0)
-      .linear("experience", 0.4)
-      .direct("quality_score", 0.6)
-      .addStage("Economic")
-      .minRatio("bid_amount", 1.0)
-      .evaluate(bids)
-    assert(out.count() == 3)
-    val ranked = Ranks.rangePartitionedRank(
-      Seq((1L, 5.0), (2L, 3.0), (3L, 5.0)).toDF("id", "score"), "score", "rk")
-    assert(ranked.count() == 3)
-    Checkpoints.freeAll(spark)
-    assert((persistedIds -- before).isEmpty,
-      "staged base checkpoint, stage caches, and rank partitions must all be released")
+    val prev = spark.conf.getOption("graft.rank.rangeThreshold")
+    // every rank below takes the range-rank kernel
+    spark.conf.set("graft.rank.rangeThreshold", "1")
+    try {
+      val results = Seq(
+        new Evaluator().linear("experience", 0.4).direct("quality_score", 0.6)
+          .evaluate(bids),
+        new StagedEvaluator()
+          .addStage("Technical", filterType = "top_n", topN = 3)
+          .linear("experience", 0.4)
+          .direct("quality_score", 0.6)
+          .addStage("Economic")
+          .minRatio("bid_amount", 1.0)
+          .evaluate(bids),
+        Ranks.rangePartitionedRank(
+          Seq((1L, 5.0), (2L, 3.0), (3L, 5.0)).toDF("id", "score"), "score", "rk"))
+      val first = results.map(_.collect().toSeq.map(_.toString).sorted)
+      assert(first.map(_.size) == Seq(4, 4, 3))
+      Checkpoints.freeAll(spark)
+      // ordinary lazy frames: the barrier leaves them runnable, same rows
+      assert(results.map(_.collect().toSeq.map(_.toString).sorted) == first)
+      assert((persistedIds -- before).isEmpty,
+        "ranked results must persist and checkpoint nothing")
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("graft.rank.rangeThreshold", v)
+        case None    => spark.conf.unset("graft.rank.rangeThreshold")
+      }
+    }
   }
 
   test("writePartitioned buckets around unhashable map columns") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (1) the single-partition window only ever runs over the DISTINCT-score
   * frame and its join-back broadcasts (the big side never re-shuffles);
   * (2) past `graft.rank.rangeThreshold` the evaluator abandons the window
-  * entirely for the prefix-sum strategy. */
+  * entirely for the range-rank kernel, which reads no checkpoint. */
 class RankPlanSpec extends SparkSpec {
 
   import spark.implicits._
@@ -47,6 +47,10 @@ class RankPlanSpec extends SparkSpec {
       val plan = scalable.queryExecution.executedPlan.toString
       assert(!plan.contains("Window"),
         s"beyond the threshold no window operator may appear:\n$plan")
+      // no checkpoint leaf: the ranked frame recomputes from its input
+      val optimized = scalable.queryExecution.optimizedPlan.toString
+      assert(!optimized.contains("LogicalRDD"),
+        s"the scalable rank must not read a checkpoint:\n$optimized")
       // identical rank values either way
       assert(a == b)
     } finally {
