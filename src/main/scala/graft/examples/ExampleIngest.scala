@@ -31,7 +31,7 @@ object ExampleIngest {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("graft-ingest-demo").toString
+    val root = graft.io.TempDirs.create("graft-ingest-demo").toString
     val crawlDir = s"$root/crawl"
     val indexPath = s"$root/sig_index"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(crawlDir))

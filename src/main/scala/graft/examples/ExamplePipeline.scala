@@ -320,7 +320,7 @@ object ExamplePipeline {
     //     cell), then answer a query batch against the persisted index —
     //     the build-once/query-forever path annQueryStream loops on
     val emb2 = spark.read.parquet(s"$dir/embeddings.parquet")
-    val servingDir = java.nio.file.Files.createTempDirectory("graft-ivf-serve").toString
+    val servingDir = graft.io.TempDirs.create("graft-ivf-serve").toString
     val cents2 = graft.ops.Similarity.trainIvfCentroids(emb2, "embedding", nLists = 16)
     graft.ops.Similarity.saveIvfIndex(emb2, cents2, servingDir)
     val served = graft.ops.Similarity.ivfTopKPreassigned(
@@ -334,7 +334,7 @@ object ExamplePipeline {
     //      chunk-grain BM25 index ONCE, then serve queries from it and
     //      map hits back INTO the document — the build-once/serve-forever
     //      discipline for retrieval that points at a passage, not a doc
-    val chunkIdxDir = java.nio.file.Files.createTempDirectory("graft-chunk-serve").toString
+    val chunkIdxDir = graft.io.TempDirs.create("graft-chunk-serve").toString
     val ragChunks = Retrieval.chunkText(docs, "doc_id", "text",
         chunkSize = 200, overlap = 50)
       .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
@@ -549,7 +549,7 @@ object ExamplePipeline {
     //     mutation rides one marker — served PRF can never read the
     //     pair out of step), plus a chunk-grain RAG index with the
     //     cid = doc_id·1000 + chunk_idx provenance
-    val bm25Dir = java.nio.file.Files.createTempDirectory("graft-ex-bm25").toString
+    val bm25Dir = graft.io.TempDirs.create("graft-ex-bm25").toString
     graft.ops.Retrieval.saveBm25WithForward(prepared.df, "doc_id", "text", bm25Dir)
     graft.ops.Retrieval.bm25SearchPreindexed(
         spark, bm25Dir, queries, "qid", "qtext", topK = 3)
@@ -558,7 +558,7 @@ object ExamplePipeline {
         spark, bm25Dir, graft.ops.Retrieval.bm25ForwardPathFor(bm25Dir),
         queries, "qid", "qtext", topK = 3, fbDocs = 3, fbTerms = 2)
       .orderBy("qid", "rank").show()
-    val chunkDir = java.nio.file.Files.createTempDirectory("graft-ex-chunk").toString
+    val chunkDir = graft.io.TempDirs.create("graft-ex-chunk").toString
     def cidsOf(d: org.apache.spark.sql.DataFrame) =
       graft.ops.Retrieval.chunkText(d, "doc_id", "text", 200, 50)
         .select((col("doc_id") * lit(1000L) + col("chunk_idx")).as("cid"),
@@ -569,7 +569,7 @@ object ExamplePipeline {
     // 34. tokenizer serving artifact: freeze step 32's vocabulary to
     //     disk, encode through the frozen artifact (what every later
     //     backfill/ingest job loads instead of retraining)
-    val tokDir = java.nio.file.Files.createTempDirectory("graft-ex-tok").toString
+    val tokDir = graft.io.TempDirs.create("graft-ex-tok").toString
     graft.ops.UnigramTrain.saveTokenizer(spark, uniVocab, tokDir)
     val tokenized = graft.ops.UnigramTrain.encodeDocsPreindexed(
       spark, tokDir, docs, "doc_id", "text")
@@ -628,7 +628,7 @@ object ExamplePipeline {
     //     verifiable manifest, APPEND the rest through the marker-fenced
     //     O(increment) path, then prove both the integrity (verifyShards)
     //     and the forgetting story (takedownAudit after a takedown)
-    val exportDir = java.nio.file.Files.createTempDirectory("graft-ex-export").toString
+    val exportDir = graft.io.TempDirs.create("graft-ex-export").toString
     graft.io.Layout.writeShardsWithManifest(
       d0.filter(pmod(col("doc_id"), lit(3)) =!= 0), "doc_id", exportDir, numShards = 4)
     graft.io.Layout.appendShardsWithManifest(

@@ -27,7 +27,7 @@ object ExampleStreaming {
 
     // Stream the same data through a file source to exercise the real
     // streaming path (schema must be declared for readStream).
-    val stage = java.nio.file.Files.createTempDirectory("events_stream").toString
+    val stage = graft.io.TempDirs.create("events_stream").toString
     batch.write.mode("overwrite").parquet(stage)
     val stream = spark.readStream.schema(batch.schema).parquet(stage)
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Joins, Multimodal, Similarity, TextAnalysis}
+import RegistryMemo.{memo, memoDir}
 
 /** Training-data-pipeline and classical-relational queries over the shared
   * testdata: dedup, similarity search, text analysis, multimodal plumbing,
@@ -25,447 +26,167 @@ object PipelineQueries extends OracleSqlStatic {
     */
   private[queries] def roundz(c: Column, scale: Int): Column = round(c, scale) + lit(0.0)
 
-  /** The q54 IVF quantizer trained during the query run, cached per sf
-    * dir: the oracle SQL can only be written AFTER training (centroids
-    * are data-dependent, unlike the seeded hyperplanes), so the query fn
-    * stores them here and [[oracleSql]] — a def, evaluated when Verify
-    * dumps it at the END of the run — interpolates them as literals. The
-    * cache also keeps Bench's 3 iterations from re-training KMeans. */
-  private[queries] object IvfState {
-    /** Trained quantizers keyed by (sf dir, nLists): a cache keyed on dir
-      * alone would silently hand a 16-list quantizer to a caller asking
-      * for a different list count. */
-    @volatile private var cache: Map[(String, Int), Seq[(Int, Seq[Double], Double)]] =
-      Map.empty
-    /** The most recently requested key — [[ivfOracleSql]] interpolates
-      * THIS quantizer. Verify dumps oracles after running one dir's
-      * queries, so "most recent" is exactly the dumped dir. */
-    @volatile private var lastKey: Option[(String, Int)] = None
-    def forDir(emb: DataFrame, dir: String, nLists: Int): Seq[(Int, Seq[Double], Double)] =
-      synchronized {
-        val key = (dir, nLists)
-        lastKey = Some(key)
-        cache.get(key) match {
-          case Some(c) => c
-          case None =>
-            val c = Similarity.trainIvfCentroids(emb, "embedding", nLists)
-            cache += key -> c
-            c
-        }
-      }
-    /** The quantizer behind the last [[forDir]] call, if any — None when
-      * oracleSql is requested before any IVF query ran (the q54/q111
-      * oracles are then omitted and the driver records a rows-only
-      * check). */
-    def current: Option[Seq[(Int, Seq[Double], Double)]] =
-      synchronized { lastKey.flatMap(cache.get) }
-  }
+  private[queries] type Centroids = Seq[(Int, Seq[Double], Double)]
 
-  /** Persisted-IVF serving artifacts keyed by sf dir (q191): built once
-    * per dir from the [[IvfState]] quantizer, then every serving query
-    * reads the SAME on-disk index — the build-once/query-forever
-    * contract under test. */
-  private[queries] object ServeState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(
-        emb: DataFrame, cents: Seq[(Int, Seq[Double], Double)], dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-ivf-serve").toString
-            Similarity.saveIvfIndex(emb, cents, p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** The IVF quantizer (q54 and the IVF serving chain). The q54 oracle can
+    * only be written after training, because the centroids depend on the
+    * data, so [[ivfOracleSql]] reads `current("ivf")`. The key carries
+    * `nLists`: a dir-only key would hand a 16-list quantizer to a caller
+    * asking for another list count. */
+  private[queries] def ivfCentroids(emb: DataFrame, dir: String, nLists: Int): Centroids =
+    memo("ivf", (dir, nLists))(Similarity.trainIvfCentroids(emb, "embedding", nLists))
 
-  /** Persisted-BM25 serving artifact keyed by sf dir (q248): built once
-    * per dir with [[graft.ops.Retrieval.saveBm25Index]], then every
-    * serving query reads the SAME on-disk postings — the lexical twin
-    * of [[ServeState]]'s build-once/query-forever contract. */
-  private[queries] object Bm25ServeState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-bm25-serve").toString
-            graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", p, numBuckets = 32)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Persisted IVF index (q191): every serving query reads the same
+    * on-disk index, the build-once/query-forever contract under test. */
+  private[queries] def ivfServe(emb: DataFrame, cents: Centroids, dir: String): String =
+    memoDir("ivf-serve", dir)(Similarity.saveIvfIndex(emb, cents, _))
 
-  /** Doc-grain FORWARD sidecar next to [[Bm25ServeState]]'s index (q289):
-    * built once per sf dir, read bucket-pruned by the PRF harvest. */
-  private[queries] object Bm25ForwardState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-bm25-fwd").toString
-            graft.ops.Retrieval.saveBm25Forward(docs, "doc_id", "text", p, numBuckets = 32)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Persisted BM25 index (q248), the lexical twin of [[ivfServe]]. */
+  private[queries] def bm25Serve(docs: DataFrame, dir: String): String =
+    memoDir("bm25-serve", dir)(
+      graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", _, numBuckets = 32))
 
-  /** Persisted CHUNK-GRAIN BM25 index keyed by sf dir (q274): the q269
-    * chunk frame (q86 chunker + surrogate `cid` carrying integer
-    * provenance back to (doc_id, chunk_idx)) saved once with
-    * [[graft.ops.Retrieval.saveBm25Index]] — RAG retrieval with the
-    * q248 build-once/serve-forever discipline, pointing INTO the
-    * document instead of at it. */
-  private[queries] object Bm25ChunkServeState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(chunks: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-bm25-chunk").toString
-            graft.ops.Retrieval.saveBm25Index(chunks, "cid", "chunk", p, numBuckets = 32)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Doc-grain forward sidecar of [[bm25Serve]]'s corpus (q289). */
+  private[queries] def bm25Forward(docs: DataFrame, dir: String): String =
+    memoDir("bm25-fwd", dir)(
+      graft.ops.Retrieval.saveBm25Forward(docs, "doc_id", "text", _, numBuckets = 32))
 
-  /** MATRYOSHKA serving artifacts (q293): the IVF family built over
-    * 16-dim SLICED vectors — quantizer trained on the slices, corpus
-    * persisted cell-partitioned at the budget width — cached per sf
-    * dir; the sliced centroids interpolate into the oracle via
-    * [[matryoshkaOracleSql]] (the [[IvfState]] late-binding pattern). */
-  private[queries] object MatryoshkaState {
-    val Dim = 16
-    val NLists = 16
-    @volatile private var cache:
-      Map[String, (Seq[(Int, Seq[Double], Double)], String)] = Map.empty
-    @volatile private var lastDir: Option[String] = None
-    def forDir(sliced: DataFrame, dir: String):
-        (Seq[(Int, Seq[Double], Double)], String) =
-      synchronized {
-        lastDir = Some(dir)
-        cache.get(dir) match {
-          case Some(v) => v
-          case None =>
-            val cents = Similarity.trainIvfCentroids(sliced, "embedding", NLists)
-            val p = java.nio.file.Files.createTempDirectory("graft-mat-ivf").toString
-            Similarity.saveIvfIndex(sliced, cents, p)
-            cache += dir -> ((cents, p))
-            (cents, p)
-        }
-      }
-    def current: Option[Seq[(Int, Seq[Double], Double)]] =
-      synchronized { lastDir.flatMap(cache.get).map(_._1) }
-  }
+  /** Chunk-grain BM25 index over the q269 chunk frame (q274). */
+  private[queries] def bm25ChunkServe(chunks: DataFrame, dir: String): String =
+    memoDir("bm25-chunk", dir)(
+      graft.ops.Retrieval.saveBm25Index(chunks, "cid", "chunk", _, numBuckets = 32))
 
-  /** CHUNK-grain forward sidecar at the fused nested location inside
-    * [[Bm25ChunkServeState]]'s index (q292): built once per sf dir,
-    * read bucket-pruned by the chunk-grain PRF harvest. (The index is
-    * already cached when this runs, so the standalone sidecar build
-    * slots into the fused layout without a rebuild.) */
-  private[queries] object Bm25ChunkForwardState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(chunks: DataFrame, idxPath: String, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = graft.ops.Retrieval.bm25ForwardPathFor(idxPath)
-            graft.ops.Retrieval.saveBm25Forward(chunks, "cid", "chunk", p,
-              numBuckets = 32)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Chunk-grain forward sidecar at the fused location inside the
+    * [[bm25ChunkServe]] index `idxPath` (q292); that index is built first,
+    * so the sidecar slots into the fused layout without a rebuild. */
+  private[queries] def bm25ChunkForward(chunks: DataFrame, idxPath: String, dir: String): String =
+    memo("bm25-chunk-fwd", dir) {
+      val p = graft.ops.Retrieval.bm25ForwardPathFor(idxPath)
+      graft.ops.Retrieval.saveBm25Forward(chunks, "cid", "chunk", p, numBuckets = 32)
+      p
+    }
 
-  /** Incremental shard EXPORT keyed by sf dir (q277): two thirds of the
-    * corpus delivered via [[graft.io.Layout.writeShardsWithManifest]],
-    * the last third appended through the marker-fenced
-    * [[graft.io.Layout.appendShardsWithManifest]] — the served manifest
-    * must equal a write-once export of the union. */
-  private[queries] object ShardAppendState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-shard-app").toString
-            graft.io.Layout.writeShardsWithManifest(
-              docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-              "doc_id", p, numShards = 8, salt = "m15")
-            graft.io.Layout.appendShardsWithManifest(
-              docs.filter(pmod(col("doc_id"), lit(3)) === 0), p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Width of the matryoshka slice (q293). */
+  private[queries] val MatryoshkaDim = 16
 
-  /** Post-TAKEDOWN shard export keyed by sf dir (q281): the full corpus
-    * delivered via [[graft.io.Layout.writeShardsWithManifest]], then
-    * every `doc_id % 7 == 3` row REMOVED via
-    * [[graft.io.Layout.removeFromShardExport]] — the published manifest
-    * must equal the oracle's derivation over the SURVIVORS (takedown ≡
-    * write-once without the rows), completing the delivery lifecycle
-    * the q256/q257 index takedowns pin for their artifacts. */
-  private[queries] object ShardTakedownState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-shard-rm").toString
-            graft.io.Layout.writeShardsWithManifest(
-              docs, "doc_id", p, numShards = 8, salt = "m16")
-            graft.io.Layout.removeFromShardExport(
-              docs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"), p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** The IVF quantizer over the sliced vectors (q293); late-bound into
+    * [[matryoshkaOracleSql]] like [[ivfCentroids]]. */
+  private[queries] def matryoshkaCentroids(sliced: DataFrame, dir: String): Centroids =
+    memo("mat-centroids", dir)(Similarity.trainIvfCentroids(sliced, "embedding", 16))
 
-  /** Post-TAKEDOWN BM25 index keyed by sf dir (q256): a fresh index
-    * over `documents` with every `doc_id % 7 == 3` document REMOVED via
-    * [[graft.ops.Retrieval.removeFromBm25Index]] — the oracle rebuilds
-    * from the filtered corpus, so the query proves post-delete search ≡
-    * rebuild-without-the-docs. Separate from [[Bm25ServeState]]: a
-    * takedown MUTATES its index, and q248's must stay pristine. */
-  private[queries] object Bm25TakedownState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-bm25-rm").toString
-            graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", p, numBuckets = 32)
-            graft.ops.Retrieval.removeFromBm25Index(
-              docs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"), p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Persisted IVF index over the sliced vectors (q293). */
+  private[queries] def matryoshkaServe(sliced: DataFrame, cents: Centroids, dir: String): String =
+    memoDir("mat-ivf", dir)(Similarity.saveIvfIndex(sliced, cents, _))
 
-  /** POSITIONAL BM25 index keyed by sf dir (q309): the q248 corpus
-    * rebuilt with `withPositions = true` — postings carry each term's
-    * sorted occurrence positions, the artifact
-    * [[graft.ops.Retrieval.phraseSearchPreindexed]] intersects by
-    * position arithmetic. Separate from [[Bm25ServeState]]: the layouts
-    * differ (tf-only vs positional), and q248's must stay pristine. */
-  private[queries] object Bm25PositionalState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-bm25-pos").toString
-            graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", p,
-              numBuckets = 32, withPositions = true)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Shard export of two thirds of the corpus with the last third appended
+    * (q277); the served manifest must equal a write-once export. */
+  private[queries] def shardAppend(docs: DataFrame, dir: String): String =
+    memoDir("shard-app", dir) { p =>
+      graft.io.Layout.writeShardsWithManifest(
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
+        "doc_id", p, numShards = 8, salt = "m15")
+      graft.io.Layout.appendShardsWithManifest(
+        docs.filter(pmod(col("doc_id"), lit(3)) === 0), p)
+    }
 
-  /** Post-TAKEDOWN chunk-grain BM25 index keyed by sf dir (q299): the
-    * q274 chunker's index rebuilt fresh, then every `doc_id % 7 == 3`
-    * DOCUMENT forgotten through
-    * [[graft.ops.Retrieval.removeDocsFromChunkIndex]] — the takedown
-    * list is doc ids only; the cid set comes from the index's own
-    * doclens ledger, so the oracle (chunk run over the surviving
-    * documents) pins the arithmetic recovery AND the df-exact remove. */
-  private[queries] object ChunkTakedownState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-chunk-rm").toString
-            val chunks = graft.ops.Retrieval.chunkText(
-                docs, "doc_id", "text", chunkSize = 200, overlap = 50)
-              .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"),
-                col("chunk"))
-            graft.ops.Retrieval.saveBm25Index(chunks, "cid", "chunk", p,
-              numBuckets = 32)
-            graft.ops.Retrieval.removeDocsFromChunkIndex(
-              docs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"), p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Shard export with every `doc_id % 7 == 3` row removed (q281). */
+  private[queries] def shardTakedown(docs: DataFrame, dir: String): String =
+    memoDir("shard-rm", dir) { p =>
+      graft.io.Layout.writeShardsWithManifest(
+        docs, "doc_id", p, numShards = 8, salt = "m16")
+      graft.io.Layout.removeFromShardExport(
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"), p)
+    }
 
-  /** Post-TAKEDOWN IVF index keyed by sf dir (q257): q191's serving
-    * artifact rebuilt fresh, then every `vec_id % 5 == 2` vector REMOVED
-    * via [[graft.ops.Similarity.removeFromIvfIndex]]; the oracle assigns
-    * cells over the filtered corpus with the same interpolated quantizer
-    * (cell assignment is per-vector, so dropping rows IS the rebuild). */
-  private[queries] object IvfTakedownState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(
-        emb: DataFrame, cents: Seq[(Int, Seq[Double], Double)], dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-ivf-rm").toString
-            Similarity.saveIvfIndex(emb, cents, p)
-            Similarity.removeFromIvfIndex(
-              emb.filter(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"), p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** BM25 index with every `doc_id % 7 == 3` document removed (q256). Kept
+    * apart from [[bm25Serve]]: a takedown mutates its index, and q248's
+    * must stay pristine. */
+  private[queries] def bm25Takedown(docs: DataFrame, dir: String): String =
+    memoDir("bm25-rm", dir) { p =>
+      graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", p, numBuckets = 32)
+      graft.ops.Retrieval.removeFromBm25Index(
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"), p)
+    }
 
-  /** Trained unigram-LM vocabulary keyed by sf dir (q249/q250 share one
-    * training run; the oracle re-trains in DuckDB). Same plain-value
-    * cache contract as [[BpeState]]. */
-  private[queries] object UnigramState {
-    @volatile private var cache: Map[String, Seq[graft.ops.UnigramTrain.Piece]] = Map.empty
-    def forDir(docs: DataFrame, dir: String): Seq[graft.ops.UnigramTrain.Piece] =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = graft.ops.UnigramTrain.train(docs, "text",
-              maxPieceLen = 4, vocabSize = 64, iters = 2, maxWordLen = 12)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Positional BM25 index (q309). Kept apart from [[bm25Serve]]: the
+    * layouts differ (tf-only vs positional), and q248's must stay
+    * pristine. */
+  private[queries] def bm25Positional(docs: DataFrame, dir: String): String =
+    memoDir("bm25-pos", dir)(graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", _,
+      numBuckets = 32, withPositions = true))
 
-  /** Persisted tokenizer ARTIFACT keyed by sf dir (q262): the
-    * [[UnigramState]] vocabulary frozen to disk with
-    * [[graft.ops.UnigramTrain.saveTokenizer]] once per dir; the serving
-    * query encodes through the artifact — build-once/encode-forever,
-    * the tokenizer's [[Bm25ServeState]] twin. */
-  private[queries] object TokenizerServeState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-tokenizer").toString
-            graft.ops.UnigramTrain.saveTokenizer(
-              docs.sparkSession, UnigramState.forDir(docs, dir), p, maxPieceLen = 4)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** Chunk-grain BM25 index with every `doc_id % 7 == 3` document
+    * forgotten by doc id (q299). */
+  private[queries] def chunkTakedown(docs: DataFrame, dir: String): String =
+    memoDir("chunk-rm", dir) { p =>
+      val chunks = graft.ops.Retrieval.chunkText(
+          docs, "doc_id", "text", chunkSize = 200, overlap = 50)
+        .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
+      graft.ops.Retrieval.saveBm25Index(chunks, "cid", "chunk", p, numBuckets = 32)
+      graft.ops.Retrieval.removeDocsFromChunkIndex(
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3).select("doc_id"), p)
+    }
 
-  /** Persisted REFERENCE drift histogram keyed by sf dir (q273): the
-    * src0 bin counts written once, so every later drift check reads
-    * the blessed histogram instead of recounting the reference — the
-    * [[graft.ops.Drift.driftFromCounts]] serving contract under test. */
-  private[queries] object DriftRefState {
-    @volatile private var cache: Map[String, String] = Map.empty
-    def forDir(docs: DataFrame, dir: String): String =
-      synchronized {
-        cache.get(dir) match {
-          case Some(p) => p
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-drift-ref").toString
-            docs.filter(col("source") === "src0" && col("n_chars").isNotNull)
-              .groupBy(expr("n_chars div 100").as("bin"))
-              .agg(count(lit(1)).as("cnt"))
-              .write.mode("overwrite").parquet(p)
-            cache += dir -> p
-            p
-        }
-      }
-  }
+  /** IVF index with every `vec_id % 5 == 2` vector removed (q257). */
+  private[queries] def ivfTakedown(emb: DataFrame, cents: Centroids, dir: String): String =
+    memoDir("ivf-rm", dir) { p =>
+      Similarity.saveIvfIndex(emb, cents, p)
+      Similarity.removeFromIvfIndex(
+        emb.filter(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"), p)
+    }
+
+  /** Trained unigram-LM vocabulary (q249/q250 and the tokenizer artifact). */
+  private[queries] def unigramVocab(docs: DataFrame, dir: String): Seq[graft.ops.UnigramTrain.Piece] =
+    memo("unigram", dir)(graft.ops.UnigramTrain.train(docs, "text",
+      maxPieceLen = 4, vocabSize = 64, iters = 2, maxWordLen = 12))
+
+  /** The [[unigramVocab]] vocabulary frozen to disk (q262). */
+  private[queries] def tokenizerServe(docs: DataFrame, dir: String): String =
+    memoDir("tokenizer", dir)(graft.ops.UnigramTrain.saveTokenizer(
+      docs.sparkSession, unigramVocab(docs, dir), _, maxPieceLen = 4))
+
+  /** Reference (src0) drift histogram written once (q273), so each drift
+    * check recounts only the current side. */
+  private[queries] def driftRef(docs: DataFrame, dir: String): String =
+    memoDir("drift-ref", dir) { p =>
+      docs.filter(col("source") === "src0" && col("n_chars").isNotNull)
+        .groupBy(expr("n_chars div 100").as("bin"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(p)
+    }
+
+  /** Weights of the q165 portable trainer, so the held-out-eval query
+    * (q178) measures evaluation cost, not a second training run. */
+  private[queries] def clfTrained(docs: DataFrame, dir: String): Seq[Double] =
+    memo("clf", dir)(graft.ops.Classifier.trainPortable(
+      docs, "text", "y", "doc_id", dim = 64, iters = 4, lr = 0.5))
 
   /** Merge rounds the BPE queries train/replay (q133/q134/q135 share one
     * training run per sf dir; the oracle re-trains in DuckDB). */
   private[queries] val BpeNumMerges = 12
 
-  /** Trained BPE merges keyed by sf dir — q133's training run is reused
-    * by q134/q135 (and by Bench's repeat iterations) instead of
-    * re-running 12 aggregation rounds per consumer. Merges are plain
-    * collected values (no Spark state), so cache entries never interact
-    * with the Checkpoints lifecycle. */
-  /** Weights of the q165 portable trainer, cached per sf dir so the
-    * held-out-eval query (q178) measures EVALUATION cost, not a second
-    * training run — the [[IvfState]]/[[BpeState]] pattern. The oracle
-    * needs no interpolation: it re-trains in SQL (the q165 CTEs). */
-  private[queries] object ClfState {
-    @volatile private var cache: Map[String, Seq[Double]] = Map.empty
-    def forDir(docs: DataFrame, dir: String): Seq[Double] =
-      synchronized {
-        cache.get(dir) match {
-          case Some(w) => w
-          case None =>
-            val w = graft.ops.Classifier.trainPortable(
-              docs, "text", "y", "doc_id", dim = 64, iters = 4, lr = 0.5)
-            cache += dir -> w
-            w
-        }
-      }
-  }
+  /** Trained BPE merges: q133's training run is reused by q134/q135
+    * instead of re-running 12 aggregation rounds per consumer. Merges are
+    * plain collected values, so the memo holds no Spark state that the
+    * Checkpoints lifecycle could free. */
+  private[queries] def bpeMerges(docs: DataFrame, dir: String, n: Int): Seq[graft.ops.BpeTrain.Merge] =
+    memo("bpe", (dir, n))(graft.ops.BpeTrain.train(docs, "text", n))
 
-  private[queries] object BpeState {
-    @volatile private var cache: Map[(String, Int), Seq[graft.ops.BpeTrain.Merge]] =
-      Map.empty
-    def forDir(docs: DataFrame, dir: String, n: Int): Seq[graft.ops.BpeTrain.Merge] =
-      synchronized {
-        val key = (dir, n)
-        cache.get(key) match {
-          case Some(m) => m
-          case None =>
-            val m = graft.ops.BpeTrain.train(docs, "text", n)
-            cache += key -> m
-            m
-        }
-      }
-  }
+  /** Approximate-mode BPE merges (q283). */
+  private[queries] def bpeApproxMerges(docs: DataFrame, dir: String): Seq[graft.ops.BpeTrain.Merge] =
+    memo("bpe-approx", dir)(graft.ops.BpeTrain.train(docs, "text",
+      numMerges = 6, maxBatch = 3, exactGreedy = false))
 
   /** Portable-kmeans parameters the q143/q144 pair trains/replays. */
   private[queries] val KmClusters = 8
   private[queries] val KmIters = 4
   private[queries] val KmSalt = "graft-km"
 
-  /** Trained portable-kmeans centroids keyed by sf dir (q143/q144 and
-    * Bench's repeat iterations share one training run). Collected
-    * values only — no interplay with the Checkpoints lifecycle. */
-  private[queries] object KmState {
-    @volatile private var cache: Map[String, Seq[(Int, Seq[Double], Double)]] = Map.empty
-    @volatile private var lastDir: Option[String] = None
-    def forDir(emb: DataFrame, dir: String): Seq[(Int, Seq[Double], Double)] =
-      synchronized {
-        lastDir = Some(dir)
-        cache.get(dir) match {
-          case Some(c) => c
-          case None =>
-            val c = Similarity.trainKmeansPortable(
-              emb, "vec_id", "embedding", KmClusters, KmIters, KmSalt)
-            cache += dir -> c
-            c
-        }
-      }
-    /** Backs the late-bound q151 oracle (IvfState convention). */
-    def current: Option[Seq[(Int, Seq[Double], Double)]] =
-      synchronized { lastDir.flatMap(cache.get) }
-  }
+  /** Trained portable-kmeans centroids (q143/q144); late-bound into the
+    * q151 oracle. */
+  private[queries] def kmCentroids(emb: DataFrame, dir: String): Centroids =
+    memo("km", dir)(Similarity.trainKmeansPortable(
+      emb, "vec_id", "embedding", KmClusters, KmIters, KmSalt))
 
   /** Product-quantization parameters for q149/q150 (dim 64 → m=4
     * subspaces × 16 codewords, 3 Lloyd rounds each). */
@@ -474,36 +195,12 @@ object PipelineQueries extends OracleSqlStatic {
   private[queries] val PqIters = 3
   private[queries] val PqSalt = "graft"
 
-  /** Trained PQ codebooks keyed by sf dir (q149/q150 + Bench iterations
-    * share one training); `current` backs the late-bound oracle, the
-    * IvfState convention. */
-  private[queries] object PqState {
-    @volatile private var cache: Map[String, Seq[Seq[(Int, Seq[Double], Double)]]] =
-      Map.empty
-    @volatile private var lastDir: Option[String] = None
-    def forDir(emb: DataFrame, dir: String): Seq[Seq[(Int, Seq[Double], Double)]] =
-      synchronized {
-        lastDir = Some(dir)
-        cache.get(dir) match {
-          case Some(c) => c
-          case None =>
-            val c = Similarity.trainPqCodebooks(
-              emb, "vec_id", "embedding", dim = 64, m = PqM, k = PqK,
-              iters = PqIters, salt = PqSalt)
-            cache += dir -> c
-            c
-        }
-      }
-    def current: Option[Seq[Seq[(Int, Seq[Double], Double)]]] =
-      synchronized { lastDir.flatMap(cache.get) }
-  }
+  /** Trained PQ codebooks (q149/q150); late-bound into their oracles. */
+  private[queries] def pqCodebooks(emb: DataFrame, dir: String): Seq[Centroids] =
+    memo("pq", dir)(Similarity.trainPqCodebooks(
+      emb, "vec_id", "embedding", dim = 64, m = PqM, k = PqK,
+      iters = PqIters, salt = PqSalt))
 
-  /** q77/q109 shared SemDeDup closure (identical parameters), computed
-    * once per (session, sf dir) and pinned across [[graft.Checkpoints]]
-    * cleanup barriers — the two keeper policies are views over the SAME
-    * cluster assignment, and recomputing the pair + closure chain per
-    * policy was round 5's heaviest redundant work (q109 at 4.4s re-ran
-    * everything q77 had just computed). */
   /** q119/q120 shared oracle: 13-gram collision decontamination.
     * lowercased whitespace tokens (the q58 idiom), 13-token windows with
     * the WordGrams short-doc convention (sub-13 docs contribute their
@@ -536,6 +233,12 @@ object PipelineQueries extends OracleSqlStatic {
     "the", "and", "of", "to", "data", "supplier", "quality",
     "zzz_absent_token", "qqq_never_seen")
 
+  /** q77/q109 shared SemDeDup closure (identical parameters), computed
+    * once per (session, sf dir) and pinned across [[graft.Checkpoints]]
+    * cleanup barriers — the two keeper policies are views over the SAME
+    * cluster assignment, and recomputing the pair + closure chain per
+    * policy was round 5's heaviest redundant work (q109 at 4.4s re-ran
+    * everything q77 had just computed). */
   private[queries] def semClusters(s: SparkSession, dir: String): DataFrame =
     graft.Checkpoints.pinned(
       s"semclusters:${s.sparkContext.applicationId}:$dir:0.2:8:3") {
@@ -543,10 +246,6 @@ object PipelineQueries extends OracleSqlStatic {
         dim = 64, threshold = 0.2, nBits = 8, nTables = 3)
     }
 
-  /** A fixed 64-bucket weight vector for the q90 classifier demo —
-    * deterministic integer arithmetic; the doubles are interpolated into
-    * the oracle SQL via toString (round-trip exact), standing in for a
-    * model exported by an offline trainer. */
   /** GD iterations of the portable trainer (q165/q178). */
   private[queries] val ClfIters = 4
 
@@ -611,6 +310,10 @@ object PipelineQueries extends OracleSqlStatic {
        |$iterCtes""".stripMargin
   }
 
+  /** A fixed 64-bucket weight vector for the q90 classifier demo —
+    * deterministic integer arithmetic; the doubles are interpolated into
+    * the oracle SQL via toString (round-trip exact), standing in for a
+    * model exported by an offline trainer. */
   private[queries] val clfWeights: Seq[Double] =
     (0 until 64).map(j => ((j * 37 + 11) % 101) / 101.0 - 0.5)
   private[queries] val clfBias: Double = -0.05
@@ -977,8 +680,8 @@ object PipelineQueries extends OracleSqlStatic {
         (2L, "window agg fast"),
         (3L, "customer order value part"))).toDF("qid", "qtext")
       val d = t(s, dir, "documents")
-      val idx = Bm25ServeState.forDir(d, dir)
-      val fwd = Bm25ForwardState.forDir(d, dir)
+      val idx = bm25Serve(d, dir)
+      val fwd = bm25Forward(d, dir)
       graft.ops.Retrieval.bm25SearchPrfPreindexed(
         s, idx, fwd, qs, "qid", "qtext",
         topK = 10, fbDocs = 5, fbTerms = 3, minTermLen = 3)
@@ -995,9 +698,9 @@ object PipelineQueries extends OracleSqlStatic {
       // arithmetic) — the oracle composes the three chains
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
-      val ivfPath = ServeState.forDir(emb, cents, dir)
-      val bm25Path = Bm25ServeState.forDir(docs, dir)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
+      val ivfPath = ivfServe(emb, cents, dir)
+      val bm25Path = bm25Serve(docs, dir)
       val qs = s.createDataFrame(Seq(
           (1L, "query hash join"),
           (2L, "window agg fast"),
@@ -1508,7 +1211,7 @@ object PipelineQueries extends OracleSqlStatic {
       // shuffle) + a deterministic md5-ranked quota per cell; the oracle
       // interpolates the SAME centroids and re-ranks the same hash
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
       graft.ops.Sampling.clusterBalancedSample(emb, "vec_id", "embedding",
         cents, perCluster = 10, salt = "cb")
         .select("vec_id", "list_id", "sample_rank")
@@ -1755,7 +1458,7 @@ object PipelineQueries extends OracleSqlStatic {
       // so rounds ≈ merges / maxBatch. The oracle replays the whole
       // thing — ranked candidates, conflict skips, budget-capped
       // windows, chained greedy rewrites — unrolled in SQL.
-      val merges = BpeApproxState.forDir(t(s, dir, "documents"), dir)
+      val merges = bpeApproxMerges(t(s, dir, "documents"), dir)
       graft.ops.BpeTrain.mergeTable(s, merges)
     },
 
@@ -1765,7 +1468,7 @@ object PipelineQueries extends OracleSqlStatic {
       // + a TakeOrdered argmax; greedy left-to-right rewrite via the
       // native merge-step expression. The oracle RE-TRAINS from scratch
       // in DuckDB and must land on the identical merge table.
-      val merges = BpeState.forDir(t(s, dir, "documents"), dir, BpeNumMerges)
+      val merges = bpeMerges(t(s, dir, "documents"), dir, BpeNumMerges)
       graft.ops.BpeTrain.mergeTable(s, merges)
     },
 
@@ -1775,7 +1478,7 @@ object PipelineQueries extends OracleSqlStatic {
       // (one native encode pass per DISTINCT word, frequency-weighted —
       // the corpus itself is never re-read)
       val docs = t(s, dir, "documents")
-      val merges = BpeState.forDir(docs, dir, BpeNumMerges)
+      val merges = bpeMerges(docs, dir, BpeNumMerges)
       graft.ops.BpeTrain.tokenFrequencies(docs, "text", merges)
         .orderBy(desc("freq"), asc("token"))
         .limit(40)
@@ -1786,7 +1489,7 @@ object PipelineQueries extends OracleSqlStatic {
       // BPE token counts via the word-cache join (per-word token LENGTH
       // joins back, not token arrays; AQE broadcasts the vocab side)
       val docs = t(s, dir, "documents")
-      val merges = BpeState.forDir(docs, dir, BpeNumMerges)
+      val merges = bpeMerges(docs, dir, BpeNumMerges)
       graft.ops.BpeTrain.tokensPerDoc(docs, "doc_id", "text", merges)
         .orderBy("doc_id")
     },
@@ -1883,7 +1586,7 @@ object PipelineQueries extends OracleSqlStatic {
       // argmax assignment, two-level-fold updates — unlike the MLlib
       // quantizer, the DuckDB oracle RE-TRAINS all 4 rounds from scratch
       // and must land on bit-identical centroids (round-9 protected)
-      val cents = KmState.forDir(t(s, dir, "embeddings"), dir)
+      val cents = kmCentroids(t(s, dir, "embeddings"), dir)
       val rows = cents.flatMap { case (cid, c, _) =>
         c.zipWithIndex.map { case (x, d) => (cid, d, x) }
       }
@@ -1897,7 +1600,7 @@ object PipelineQueries extends OracleSqlStatic {
       // the trained quantizer in use: zero-shuffle assignment of the whole
       // table to its nearest portable-kmeans centroid, per-cluster sizes
       val emb = t(s, dir, "embeddings")
-      val cents = KmState.forDir(emb, dir)
+      val cents = kmCentroids(emb, dir)
       Similarity.assignCells(
         emb.filter(col("vec_id").isNotNull && col("embedding").isNotNull),
         "embedding", cents, outCol = "cluster")
@@ -1925,7 +1628,7 @@ object PipelineQueries extends OracleSqlStatic {
       // 512-token chunk layout via sharded exclusive prefix sums — the
       // full "tokenize, shuffle, pack" tail of a training-data pipeline
       val docs = t(s, dir, "documents")
-      val merges = BpeState.forDir(docs, dir, BpeNumMerges)
+      val merges = bpeMerges(docs, dir, BpeNumMerges)
       val lens = graft.ops.BpeTrain.tokensPerDoc(docs, "doc_id", "text", merges)
       val sharded = graft.ops.Sampling.withShuffleOrder(
         lens, "doc_id", numShards = 8, salt = "graft-pack")
@@ -1968,7 +1671,7 @@ object PipelineQueries extends OracleSqlStatic {
       // zero-shuffle literal argmax per subspace — the 16x-compressed
       // embedding table a 100-TB deployment persists
       val emb = t(s, dir, "embeddings")
-      val cbs = PqState.forDir(emb, dir)
+      val cbs = pqCodebooks(emb, dir)
       Similarity.pqEncode(emb, "embedding", cbs)
         .select(col("vec_id"),
           element_at(col("pq_codes"), 1).as("c0"),
@@ -1983,7 +1686,7 @@ object PipelineQueries extends OracleSqlStatic {
       // 5 queries — per-query LUTs of exact subspace distances, corpus
       // scanned as CODES only, heap-ranked (Window-free)
       val emb = t(s, dir, "embeddings")
-      val cbs = PqState.forDir(emb, dir)
+      val cbs = pqCodebooks(emb, dir)
       val codes = Similarity.pqEncode(emb, "embedding", cbs)
       Similarity.pqTopK(codes, emb.filter(col("vec_id") < 5), cbs, k = 10)
         .orderBy("query_id", "pq_rank")
@@ -1995,8 +1698,8 @@ object PipelineQueries extends OracleSqlStatic {
       // probed cells — per-query work nProbe/nLists of the corpus at 16x
       // compression, floats never touched after encode
       val emb = t(s, dir, "embeddings")
-      val coarse = KmState.forDir(emb, dir)
-      val cbs = PqState.forDir(emb, dir)
+      val coarse = kmCentroids(emb, dir)
+      val cbs = pqCodebooks(emb, dir)
       Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 5), coarse, cbs,
         k = 10, nProbe = 3)
         .orderBy("query_id", "pq_rank")
@@ -2126,7 +1829,7 @@ object PipelineQueries extends OracleSqlStatic {
       // per-source tokenizer fertility under the trained merges: exact
       // token/word totals, the vocab-fit signal for mixing decisions
       val docs = t(s, dir, "documents")
-      val merges = BpeState.forDir(docs, dir, BpeNumMerges)
+      val merges = bpeMerges(docs, dir, BpeNumMerges)
       graft.ops.BpeTrain.fertility(docs, "doc_id", "text", "source", merges)
         .orderBy("source")
     },
@@ -2199,7 +1902,7 @@ object PipelineQueries extends OracleSqlStatic {
       // evaluation, and the oracle re-trains from scratch in SQL
       val docs = t(s, dir, "documents")
         .withColumn("y", (col("doc_id") % 2).cast("double"))
-      val w = ClfState.forDir(docs, dir)
+      val w = clfTrained(docs, dir)
       graft.ops.Classifier.evaluate(
         docs, "text", "y", "doc_id", w, bias = 0.0, threshold = 0.5, split = "test")
     },
@@ -2232,7 +1935,7 @@ object PipelineQueries extends OracleSqlStatic {
       // "threshold lies about volume" audit
       val docs = t(s, dir, "documents")
         .withColumn("y", (col("doc_id") % 2).cast("double"))
-      val w = ClfState.forDir(docs, dir)
+      val w = clfTrained(docs, dir)
       graft.ops.Classifier.calibration(
         docs, "text", "y", "doc_id", w, bias = 0.0, nBins = 10)
         .orderBy("bin")
@@ -2275,11 +1978,11 @@ object PipelineQueries extends OracleSqlStatic {
 
     "q191_ivf_served" -> { (s, dir) =>
       // the q54 search answered from the PERSISTED index: build once per
-      // dir (ServeState), read the preassigned corpus back (partition-
+      // dir (ivfServe), read the preassigned corpus back (partition-
       // pruned by probed cell), same quantizer — shares q54's oracle
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
-      val path = ServeState.forDir(emb, cents, dir)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
+      val path = ivfServe(emb, cents, dir)
       Similarity.ivfTopKPreassigned(
           s.read.parquet(s"$path/corpus"), emb.filter(col("vec_id") < 5),
           k = 10, Similarity.loadIvfCentroids(s, path), nProbe = 4)
@@ -2296,8 +1999,8 @@ object PipelineQueries extends OracleSqlStatic {
       // neighborhood — the oracle replays the greedy as a recursive
       // CTE carrying the picked set
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
-      val path = ServeState.forDir(emb, cents, dir)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
+      val path = ivfServe(emb, cents, dir)
       val cand = Similarity.ivfTopKPreassigned(
           s.read.parquet(s"$path/corpus"), emb.filter(col("vec_id") < 5),
           k = 20, Similarity.loadIvfCentroids(s, path), nProbe = 4)
@@ -2316,9 +2019,9 @@ object PipelineQueries extends OracleSqlStatic {
       // steps
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
-      val ivfPath = ServeState.forDir(emb, cents, dir)
-      val bm25Path = Bm25ServeState.forDir(docs, dir)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
+      val ivfPath = ivfServe(emb, cents, dir)
+      val bm25Path = bm25Serve(docs, dir)
       val qs = s.createDataFrame(Seq(
           (1L, "query hash join"),
           (2L, "window agg fast"),
@@ -2351,7 +2054,7 @@ object PipelineQueries extends OracleSqlStatic {
       val chunks = graft.ops.Retrieval.chunkText(
           t(s, dir, "documents"), "doc_id", "text", chunkSize = 200, overlap = 50)
         .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-      val idx = Bm25ChunkServeState.forDir(chunks, dir)
+      val idx = bm25ChunkServe(chunks, dir)
       val qs = s.createDataFrame(Seq(
         (1L, "query hash join"),
         (2L, "window agg fast"),
@@ -2372,7 +2075,7 @@ object PipelineQueries extends OracleSqlStatic {
         (1L, "query hash join"),
         (2L, "window agg fast"),
         (3L, "customer order value part"))).toDF("qid", "qtext")
-      val idx = ChunkTakedownState.forDir(t(s, dir, "documents"), dir)
+      val idx = chunkTakedown(t(s, dir, "documents"), dir)
       graft.ops.Retrieval.bm25SearchPreindexed(
           s, idx, qs, "qid", "qtext", topK = 5)
         .select(col("qid"), col("rank"),
@@ -2727,7 +2430,7 @@ object PipelineQueries extends OracleSqlStatic {
         (1L, "query hash join"),
         (2L, "window agg fast"),
         (3L, "customer order value part"))).toDF("qid", "qtext")
-      val idx = Bm25ServeState.forDir(d, dir)
+      val idx = bm25Serve(d, dir)
       val hits = graft.ops.Retrieval.bm25SearchPreindexed(
         s, idx, qs, "qid", "qtext", topK = 5)
       graft.ops.Retrieval.extractSnippets(d, "doc_id", "text",
@@ -2746,7 +2449,7 @@ object PipelineQueries extends OracleSqlStatic {
           slice(graft.ops.TextAnalysis.tokens(col("text")), 1, 2).as("pt"))
         .filter(size(col("pt")) === 2)
         .select(col("pid"), concat_ws(" ", col("pt")).as("phrase"))
-      val idx = Bm25PositionalState.forDir(d, dir)
+      val idx = bm25Positional(d, dir)
       graft.ops.Retrieval.phraseSearchPreindexed(s, idx, ph, "pid", "phrase")
         .orderBy("pid", "doc_id")
     },
@@ -2760,7 +2463,7 @@ object PipelineQueries extends OracleSqlStatic {
         (1L, "query hash join"),
         (2L, "window agg fast"),
         (3L, "customer order value part"))).toDF("qid", "qtext")
-      val idx = Bm25PositionalState.forDir(d, dir)
+      val idx = bm25Positional(d, dir)
       graft.ops.Retrieval.proximitySearchPreindexed(s, idx, qs,
           "qid", "qtext", window = 10)
         .orderBy("qid", "doc_id")
@@ -2793,7 +2496,7 @@ object PipelineQueries extends OracleSqlStatic {
       // vocabulary size, postings volume, heaviest df) replayed by the
       // oracle from the source corpus — the bucket-balance columns ride
       // the xxhash64 layout and are spec-pinned instead
-      val idx = Bm25ServeState.forDir(t(s, dir, "documents"), dir)
+      val idx = bm25Serve(t(s, dir, "documents"), dir)
       graft.ops.Retrieval.describeBm25Index(s, idx)
         .select("n_docs", "n_dl", "sum_dl", "avgdl_r", "n_tokenless",
           "min_dl", "max_dl", "vocab_size", "max_df", "postings_rows")
@@ -2806,8 +2509,8 @@ object PipelineQueries extends OracleSqlStatic {
       // prunes — assignment is deterministic given the quantizer, so
       // the whole row replays from interpolated centroids
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
-      val path = ServeState.forDir(emb, cents, dir)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
+      val path = ivfServe(emb, cents, dir)
       graft.ops.Similarity.describeIvfIndex(s, path)
     },
 
@@ -3338,7 +3041,7 @@ object PipelineQueries extends OracleSqlStatic {
         (1L, "query hash join"),
         (2L, "window agg fast"),
         (3L, "customer order value part"))).toDF("qid", "qtext")
-      val idx = Bm25ServeState.forDir(t(s, dir, "documents"), dir)
+      val idx = bm25Serve(t(s, dir, "documents"), dir)
       graft.ops.Retrieval.bm25SearchPreindexed(
         s, idx, qs, "qid", "qtext", topK = 10)
         .select(col("qid"), col("rank"), col("doc_id"), roundz(col("score"), 6).as("score_r"))
@@ -3350,7 +3053,7 @@ object PipelineQueries extends OracleSqlStatic {
       // 2 hard-EM Viterbi rounds on the distinct-word histogram; the
       // oracle re-trains the identical recipe in SQL (DP unrolled)
       graft.ops.UnigramTrain.vocabTable(
-        s, UnigramState.forDir(t(s, dir, "documents"), dir))
+        s, unigramVocab(t(s, dir, "documents"), dir))
         .orderBy("vocab_rank")
     },
 
@@ -3360,11 +3063,11 @@ object PipelineQueries extends OracleSqlStatic {
       // tokenizers, one row per source with the delta
       val docs = t(s, dir, "documents")
       val uni = graft.ops.UnigramTrain.fertility(
-        docs, "doc_id", "text", "source", UnigramState.forDir(docs, dir))
+        docs, "doc_id", "text", "source", unigramVocab(docs, dir))
         .select(col("source"), col("n_words"),
           col("n_tokens").as("n_uni_tokens"), col("fertility_r").as("uni_fertility_r"))
       val bpe = graft.ops.BpeTrain.fertility(
-        docs, "doc_id", "text", "source", BpeState.forDir(docs, dir, BpeNumMerges))
+        docs, "doc_id", "text", "source", bpeMerges(docs, dir, BpeNumMerges))
         .select(col("source"), col("n_bpe_tokens"),
           col("fertility_r").as("bpe_fertility_r"))
       uni.join(bpe, Seq("source"))
@@ -3381,7 +3084,7 @@ object PipelineQueries extends OracleSqlStatic {
       // doc grain; oracle re-trains + re-encodes in SQL
       val docs = t(s, dir, "documents")
       graft.ops.UnigramTrain.tokensPerDoc(
-        docs, "doc_id", "text", UnigramState.forDir(docs, dir))
+        docs, "doc_id", "text", unigramVocab(docs, dir))
         .orderBy("doc_id")
     },
 
@@ -3414,7 +3117,7 @@ object PipelineQueries extends OracleSqlStatic {
       // convention), oracle re-trains + re-derives both folds
       val docs = t(s, dir, "documents")
       graft.ops.UnigramTrain.docLogProb(
-        docs, "doc_id", "text", UnigramState.forDir(docs, dir))
+        docs, "doc_id", "text", unigramVocab(docs, dir))
         .orderBy("doc_id")
     },
 
@@ -3557,7 +3260,7 @@ object PipelineQueries extends OracleSqlStatic {
       // packs the identical chain in SQL
       val docs = t(s, dir, "documents")
       val enc = graft.ops.UnigramTrain.encodeDocs(
-        docs, "doc_id", "text", UnigramState.forDir(docs, dir))
+        docs, "doc_id", "text", unigramVocab(docs, dir))
         .withColumn("shard", pmod(col("doc_id"), lit(4L)))
       val packed = graft.ops.Packing.sequencePacking(
         enc, "doc_id", "n_pieces", "shard", budget = 128L, orderCol = "doc_id")
@@ -3575,7 +3278,7 @@ object PipelineQueries extends OracleSqlStatic {
       // not whitespace proxies
       val docs = t(s, dir, "documents")
       val enc = graft.ops.UnigramTrain.encodeDocs(
-        docs, "doc_id", "text", UnigramState.forDir(docs, dir))
+        docs, "doc_id", "text", unigramVocab(docs, dir))
         .withColumn("shard", pmod(col("doc_id"), lit(4L)))
       val packed = graft.ops.Packing.sequencePacking(
         enc, "doc_id", "n_pieces", "shard", budget = 128L, orderCol = "doc_id")
@@ -3652,7 +3355,7 @@ object PipelineQueries extends OracleSqlStatic {
       val chunks = graft.ops.Retrieval.chunkText(
           t(s, dir, "documents"), "doc_id", "text", chunkSize = 200, overlap = 50)
         .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-      val idx = Bm25ChunkServeState.forDir(chunks, dir)
+      val idx = bm25ChunkServe(chunks, dir)
       val qs = s.createDataFrame(Seq(
         (1L, "query hash join"),
         (2L, "window agg fast"),
@@ -3677,8 +3380,8 @@ object PipelineQueries extends OracleSqlStatic {
       val chunks = graft.ops.Retrieval.chunkText(
           t(s, dir, "documents"), "doc_id", "text", chunkSize = 200, overlap = 50)
         .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-      val idx = Bm25ChunkServeState.forDir(chunks, dir)
-      val fwd = Bm25ChunkForwardState.forDir(chunks, idx, dir)
+      val idx = bm25ChunkServe(chunks, dir)
+      val fwd = bm25ChunkForward(chunks, idx, dir)
       val qs = s.createDataFrame(Seq(
         (1L, "query hash join"),
         (2L, "window agg fast"),
@@ -3702,7 +3405,7 @@ object PipelineQueries extends OracleSqlStatic {
       val chunks = graft.ops.Retrieval.chunkText(
           t(s, dir, "documents"), "doc_id", "text", chunkSize = 200, overlap = 50)
         .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-      val idx = Bm25ChunkServeState.forDir(chunks, dir)
+      val idx = bm25ChunkServe(chunks, dir)
       val qs = s.createDataFrame(Seq(
         (1L, "query hash join"),
         (2L, "window agg fast"),
@@ -3728,7 +3431,7 @@ object PipelineQueries extends OracleSqlStatic {
       val chunks = graft.ops.Retrieval.chunkText(
           t(s, dir, "documents"), "doc_id", "text", chunkSize = 200, overlap = 50)
         .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-      val idx = Bm25ChunkServeState.forDir(chunks, dir)
+      val idx = bm25ChunkServe(chunks, dir)
       val qs = s.createDataFrame(Seq(
         (1L, "query hash join"),
         (2L, "window agg fast"),
@@ -3885,7 +3588,7 @@ object PipelineQueries extends OracleSqlStatic {
       // must equal the oracle's derivation over the UNION (append ≡
       // write-once, counts and checksums additive-exact)
       val d = t(s, dir, "documents").filter(col("doc_id").isNotNull)
-      val p = ShardAppendState.forDir(d, dir)
+      val p = shardAppend(d, dir)
       s.read.parquet(s"$p/manifest")
         .select(col("shard"), col("n_rows"), col("id_checksum"))
         .orderBy("shard")
@@ -3897,7 +3600,7 @@ object PipelineQueries extends OracleSqlStatic {
       // a write-once export over the survivors — the oracle re-derives
       // it from the filtered corpus (exact counts, integer checksums)
       val d = t(s, dir, "documents").filter(col("doc_id").isNotNull)
-      val p = ShardTakedownState.forDir(d, dir)
+      val p = shardTakedown(d, dir)
       s.read.parquet(s"$p/manifest")
         .select(col("shard"), col("n_rows"), col("id_checksum"))
         .orderBy("shard")
@@ -3920,7 +3623,7 @@ object PipelineQueries extends OracleSqlStatic {
       // argmax, zero shuffle), add-one-smoothed PSI per cell — the
       // monitor that sees a content-cluster shift token drift cannot
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
       graft.ops.Drift.embeddingDriftCells(
           emb.filter(pmod(col("vec_id"), lit(2)) === 0),
           emb.filter(pmod(col("vec_id"), lit(2)) === 1),
@@ -3956,10 +3659,10 @@ object PipelineQueries extends OracleSqlStatic {
 
     "q273_drift_served" -> { (s, dir) =>
       // drift SERVING parity: the reference histogram persists once
-      // (DriftRefState) and the check recounts only the current side —
+      // (driftRef) and the check recounts only the current side —
       // identical smoothed arithmetic, so it shares q96's oracle
       val d = t(s, dir, "documents")
-      val ref = s.read.parquet(DriftRefState.forDir(d, dir))
+      val ref = s.read.parquet(driftRef(d, dir))
         .select(col("bin"), col("cnt").as("n_ref"))
       val cur = d.filter(col("source") === "src1" && col("n_chars").isNotNull)
         .groupBy(expr("n_chars div 100").as("bin"))
@@ -4062,7 +3765,7 @@ object PipelineQueries extends OracleSqlStatic {
       // loading it back — bit-identical to the in-memory chain; the
       // oracle re-trains + re-encodes and must match id for id
       val docs = t(s, dir, "documents")
-      val path = TokenizerServeState.forDir(docs, dir)
+      val path = tokenizerServe(docs, dir)
       graft.ops.UnigramTrain.encodeDocsPreindexed(s, path, docs, "doc_id", "text")
         .select(col("doc_id"), col("n_pieces"),
           when(col("n_pieces") > 0,
@@ -4134,7 +3837,7 @@ object PipelineQueries extends OracleSqlStatic {
         (1L, "query hash join"),
         (2L, "window agg fast"),
         (3L, "customer order value part"))).toDF("qid", "qtext")
-      val idx = Bm25TakedownState.forDir(t(s, dir, "documents"), dir)
+      val idx = bm25Takedown(t(s, dir, "documents"), dir)
       graft.ops.Retrieval.bm25SearchPreindexed(
         s, idx, qs, "qid", "qtext", topK = 10)
         .select(col("qid"), col("rank"), col("doc_id"), roundz(col("score"), 6).as("score_r"))
@@ -4148,8 +3851,8 @@ object PipelineQueries extends OracleSqlStatic {
       // quantizer keeps serving; oracle = q54's derivation over the
       // filtered corpus (per-vector cell assignment, so drop ≡ rebuild)
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
-      val path = IvfTakedownState.forDir(emb, cents, dir)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
+      val path = ivfTakedown(emb, cents, dir)
       Similarity.ivfTopKPreassigned(
           s.read.parquet(s"$path/corpus"), emb.filter(col("vec_id") < 5),
           k = 10, Similarity.loadIvfCentroids(s, path), nProbe = 4)
@@ -4205,7 +3908,7 @@ object PipelineQueries extends OracleSqlStatic {
       // micro-units so the per-cell z-score moments are exact integral
       // sums — bit-reproducible, oracle re-derives cells AND z
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
       graft.ops.Outliers.embeddingOutliers(emb, "vec_id", "embedding", cents)
         .select(col("vec_id"), col("list_id"), col("dist_u"),
           roundz(col("zscore"), 6).as("z_r"),
@@ -4572,8 +4275,8 @@ object PipelineQueries extends OracleSqlStatic {
       // interpolated sliced centroids (q54 machinery at reduced dims)
       val emb = t(s, dir, "embeddings")
       val sliced = emb.select(col("vec_id"),
-        slice(col("embedding"), 1, MatryoshkaState.Dim).as("embedding"))
-      val (_, path) = MatryoshkaState.forDir(sliced, dir)
+        slice(col("embedding"), 1, MatryoshkaDim).as("embedding"))
+      val path = matryoshkaServe(sliced, matryoshkaCentroids(sliced, dir), dir)
       val served = Similarity.ivfTopKPreassigned(
         s.read.parquet(s"$path/corpus"), sliced.filter(col("vec_id") < 5),
         k = 10, Similarity.loadIvfCentroids(s, path), nProbe = 4)
@@ -4624,9 +4327,9 @@ object PipelineQueries extends OracleSqlStatic {
     "q54_ivf_topk" -> { (s, dir) =>
       // explicit-centroid IVF: train (cached per dir), search with the
       // deterministic literal-centroid arithmetic, and let oracleSql
-      // interpolate the SAME centroids into DuckDB SQL (see IvfState)
+      // interpolate the SAME centroids into DuckDB SQL (see ivfCentroids)
       val emb = t(s, dir, "embeddings")
-      val cents = IvfState.forDir(emb, dir, nLists = 16)
+      val cents = ivfCentroids(emb, dir, nLists = 16)
       Similarity.ivfTopKWithCentroids(emb, emb.filter(col("vec_id") < 5),
         k = 10, cents, nProbe = 4)
         .select(col("query_id"), col("vec_id"),
@@ -4923,7 +4626,7 @@ object PipelineQueries extends OracleSqlStatic {
   )
 
   /** DuckDB oracle for the q54 IVF search, written from the TRAINED
-    * centroids (available only after the query fn has run — [[IvfState]]):
+    * centroids (available only after the query fn has run — [[ivfCentroids]]):
     * every stage downstream of training is plain arithmetic DuckDB can
     * mirror — cell assignment and probe selection rank `2·v⋅c − |c|²`
     * (ties toward the smaller list id), then exact cosine top-k with the
@@ -4932,7 +4635,7 @@ object PipelineQueries extends OracleSqlStatic {
     * CAST AS DOUBLE (a bare decimal literal would parse as DECIMAL and
     * lose the low bits). */
   private[queries] def ivfOracleSql: Map[String, String] =
-    IvfState.current.toSeq.flatMap { cents =>
+    RegistryMemo.current[Centroids]("ivf").toSeq.flatMap { cents =>
       def d(x: Double): String = s"CAST(${x.toString} AS DOUBLE)"
       val rows = cents.map { case (i, c, c2) =>
         s"    ($i, [${c.map(d).mkString(", ")}], ${d(c2)})"
@@ -5348,17 +5051,17 @@ object PipelineQueries extends OracleSqlStatic {
       matryoshkaOracleSql
 
   /** DuckDB oracle for the q293 matryoshka serving flow, written from
-    * the TRAINED sliced-vector quantizer ([[MatryoshkaState]], the
+    * the TRAINED sliced-vector quantizer ([[matryoshkaCentroids]], the
     * [[ivfOracleSql]] late-binding pattern): the sliced IVF chain is
     * the q54 machinery over `v[1:16]`, the recall side joins the
     * FULL-width exact brute ranking, both self-excluded/NaN-dropped. */
   private[queries] def matryoshkaOracleSql: Map[String, String] =
-    MatryoshkaState.current.toSeq.map { cents =>
+    RegistryMemo.current[Centroids]("mat-centroids").toSeq.map { cents =>
       def d(x: Double): String = s"CAST(${x.toString} AS DOUBLE)"
       val rows = cents.map { case (i, c, c2) =>
         s"    ($i, [${c.map(d).mkString(", ")}], ${d(c2)})"
       }.mkString(",\n")
-      val dim = MatryoshkaState.Dim
+      val dim = MatryoshkaDim
       "q293_matryoshka_served" ->
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |et AS (SELECT vec_id, v[1:$dim] AS vt FROM e),
@@ -5458,8 +5161,8 @@ object PipelineQueries extends OracleSqlStatic {
     * the ADC term chain. */
   private[queries] def ivfPqOracleSql: Map[String, String] =
     (for {
-      coarse <- KmState.current
-      cbs <- PqState.current
+      coarse <- RegistryMemo.current[Centroids]("km")
+      cbs <- RegistryMemo.current[Seq[Centroids]]("pq")
     } yield {
       val coarseRows = coarse.map { case (i, c, c2) =>
         s"    ($i, [${c.map(sqlDouble).mkString(", ")}], ${sqlDouble(c2)})"
@@ -5526,7 +5229,7 @@ object PipelineQueries extends OracleSqlStatic {
     * term-for-term with the subspace sum in the engine's left-assoc
     * order. */
   private[queries] def pqOracleSql: Map[String, String] =
-    PqState.current.toSeq.flatMap { cbs =>
+    RegistryMemo.current[Seq[Centroids]]("pq").toSeq.flatMap { cbs =>
       val subDim = cbs.head.head._2.size
       val qsvSelects = cbs.indices.map { s =>
         val lo = s * subDim + 1
@@ -5730,24 +5433,6 @@ object PipelineQueries extends OracleSqlStatic {
     sb.toString
   }
 
-  /** Approximate-mode trained merges keyed by sf dir (q283) — the
-    * [[BpeState]] pattern for `exactGreedy = false`. */
-  private[queries] object BpeApproxState {
-    @volatile private var cache: Map[String, Seq[graft.ops.BpeTrain.Merge]] =
-      Map.empty
-    def forDir(docs: DataFrame, dir: String): Seq[graft.ops.BpeTrain.Merge] =
-      synchronized {
-        cache.get(dir) match {
-          case Some(m) => m
-          case None =>
-            val m = graft.ops.BpeTrain.train(docs, "text",
-              numMerges = 6, maxBatch = 3, exactGreedy = false)
-            cache += dir -> m
-            m
-        }
-      }
-  }
-
   /** q108-convention synthetic PPM payloads: w = 4 + id%5, h = 3 + id%4,
     * pixel byte = (id·31 + flat) % 256 — deterministic, so oracles
     * re-derive every decoded byte arithmetically. */
@@ -5770,9 +5455,6 @@ object PipelineQueries extends OracleSqlStatic {
     }(org.apache.spark.sql.Encoders.row(schema))
   }
 
-  /** Near-dup planted pairs: even/odd ids share base image gid = id/2
-    * (16×12, pixel byte = (gid·31 + flat) % 256); odd ids perturb the
-    * SAMPLED pixel byte at flat index 6 by +128. */
   /** Paired synthetic WAVs (q163/q164): even/odd ids share a base clip
     * (gid = doc_id/2, 2048 mono PCM16 samples, value = ((gid·7919 +
     * i·31) mod 4096) − 2048); odd ids perturb samples 96..127 (+997
@@ -5800,6 +5482,9 @@ object PipelineQueries extends OracleSqlStatic {
     }(org.apache.spark.sql.Encoders.row(schema))
   }
 
+  /** Near-dup planted pairs: even/odd ids share base image gid = id/2
+    * (16×12, pixel byte = (gid·31 + flat) % 256); odd ids perturb the
+    * SAMPLED pixel byte at flat index 6 by +128. */
   private[queries] def pairedPpms(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

@@ -283,8 +283,7 @@ object ScaleSmoke {
       // — encode cost tracks the corpus scan (word-cache join), never
       // the training, and the artifact read is vocab-bounded
       {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-tok").toString
+        val dir = graft.io.TempDirs.create("graft-smoke-tok").toString
         val pieces = graft.ops.UnigramTrain.train(docs, "text",
           maxPieceLen = 4, vocabSize = 64, iters = 1)
         graft.ops.UnigramTrain.saveTokenizer(spark, pieces, dir)
@@ -330,8 +329,7 @@ object ScaleSmoke {
       // — one filtered scan+write of the signature index (index-bounded
       // by design); the removal set joins broadcast-small
       {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-ingest").toString
+        val dir = graft.io.TempDirs.create("graft-smoke-ingest").toString
         graft.ops.Dedup.polySignatures(dN, "text", "doc_id", 16, 5)
           .write.mode("append").parquet(dir)
         time(s"removeFromIngestIndex 500 ids from a $nDocs-row index") {
@@ -346,8 +344,7 @@ object ScaleSmoke {
       // file and the tag table to one file; a takedown rewrites ONLY
       // the affected shard dirs (recipe-located, partition-pruned)
       {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-export").toString
+        val dir = graft.io.TempDirs.create("graft-smoke-export").toString
         graft.io.Layout.writeShardsWithManifest(
           dN.select("doc_id", "text"), "doc_id", dir, numShards = 8)
         (1 to 6).foreach { b =>
@@ -407,7 +404,7 @@ object ScaleSmoke {
       // the delta-maintained pair table vs full per-round re-aggregation
       // at a fixed corpus. HONEST READING: at local test scale both
       // paths sit on the per-round Spark scheduling floor (~0.3s), so
-      // wall-clock is a wash (BpeDeltaProbe confirms at 96 merges); the
+      // wall-clock is a wash (the same holds at 96 merges); the
       // delta path's win is structural — it aggregates only the words
       // the round's batch rewrote, which at a 100 TB histogram is the
       // difference between a sliver and a full shuffle per round —
@@ -1060,8 +1057,7 @@ object ScaleSmoke {
       // in n), never the postings tree, so this row must stay
       // near-flat while the index build above it grows
       {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-bm25").toString
+        val dir = graft.io.TempDirs.create("graft-smoke-bm25").toString
         val base = spark.range(n * 20000L).select(col("id").as("doc_id"),
           concat(lit("term"), pmod(col("id"), lit(997L)),
             lit(" shared corpus filler text block "),
@@ -1093,10 +1089,8 @@ object ScaleSmoke {
           concat(lit("term"), pmod(col("vec_id"), lit(997L)),
             lit(" shared corpus filler text block "),
             pmod(col("vec_id") * 31L, lit(997L))).as("text"))
-        val bmDir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-hyb-bm").toString
-        val ivDir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-hyb-iv").toString
+        val bmDir = graft.io.TempDirs.create("graft-smoke-hyb-bm").toString
+        val ivDir = graft.io.TempDirs.create("graft-smoke-hyb-iv").toString
         graft.ops.Retrieval.saveBm25Index(docsN, "doc_id", "text", bmDir,
           numBuckets = 32)
         val cents = graft.ops.Similarity.trainKmeansPortable(
@@ -1115,8 +1109,7 @@ object ScaleSmoke {
         // matryoshka budget serving: the SAME corpus at 16 of 64 dims —
         // the sliced build moves/holds a quarter of the vector bytes
         // and the sliced serve reads a quarter per probed cell
-        val slDir = java.nio.file.Files
-          .createTempDirectory("graft-smoke-hyb-sl").toString
+        val slDir = graft.io.TempDirs.create("graft-smoke-hyb-sl").toString
         val slicedN = embN.select(col("vec_id"),
           slice(col("embedding"), 1, 16).as("embedding"))
         time(s"matryoshka build: IVF over ${n * 50000} sliced (16/64-dim) vectors") {
@@ -1142,7 +1135,7 @@ object ScaleSmoke {
       // big the standing export is (manifest merge is shard-grain sums,
       // staged files read back once — never a rescan of live data)
       locally {
-        val dir = java.nio.file.Files.createTempDirectory("smoke-shards").toString
+        val dir = graft.io.TempDirs.create("smoke-shards").toString
         val base = spark.range(n * 50000L)
           .select(col("id"), concat(lit("payload-"), col("id")).as("payload"))
         time(s"writeShardsWithManifest over ${n * 50000} rows") {

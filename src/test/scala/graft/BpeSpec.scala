@@ -159,7 +159,7 @@ class BpeSpec extends SparkSpec {
   test("bpe artifact: save/load round-trips the ordered merges; torn pair refuses") {
     val docs = Seq.fill(5)(Tuple1("abab abba baba")).toDF("text")
     val merges = BpeTrain.train(docs, "text", numMerges = 6)
-    val path = java.nio.file.Files.createTempDirectory("graft-bpe-art").toString
+    val path = tempDir("graft-bpe-art")
     BpeTrain.saveBpe(spark, merges, path)
     val back = BpeTrain.loadBpe(spark, path)
     assert(back == merges, "ordered merges must survive disk exactly")

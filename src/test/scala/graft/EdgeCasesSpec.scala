@@ -289,7 +289,7 @@ class EdgeCasesSpec extends SparkSpec {
       Seq((1L, "   ")).toDF("doc_id", "text"), "text").isEmpty)
     // BM25 index over an empty corpus: build succeeds, queries come back
     // empty instead of dividing by the zero avgdl
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-empty").toString
+    val dir = tempDir("graft-bm25-empty")
     Retrieval.saveBm25Index(emptyDocs, "doc_id", "text", dir, numBuckets = 4)
     val res = Retrieval.bm25SearchPreindexed(
       spark, dir, Seq((1L, "anything")).toDF("qid", "qtext"), "qid", "qtext")

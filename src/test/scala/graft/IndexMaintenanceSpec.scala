@@ -20,9 +20,6 @@ class IndexMaintenanceSpec extends SparkSpec {
   import spark.implicits._
   import scala.jdk.CollectionConverters._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private val docs1 = Seq(
     (1L, "spark shuffles data between stages"),
     (2L, "broadcast joins avoid the shuffle"),
@@ -74,8 +71,8 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("bm25 append merges df at term grain: save+append tables equal save-once") {
-    val once = tmp("bm25-once")
-    val inc = tmp("bm25-inc")
+    val once = tempDir("bm25-once")
+    val inc = tempDir("bm25-inc")
     Retrieval.saveBm25Index((docs1 ++ docs2).toDF("doc_id", "text"),
       "doc_id", "text", once, numBuckets = 8)
     Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"),
@@ -90,7 +87,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("bm25 append onto an initially token-less index; token-less increment") {
-    val dir = tmp("bm25-empty-base")
+    val dir = tempDir("bm25-empty-base")
     Retrieval.saveBm25Index(Seq((100L, ""), (101L, "  ")).toDF("doc_id", "text"),
       "doc_id", "text", dir, numBuckets = 4)
     // token-less increment: stats/doclens roll, postings/terms untouched
@@ -99,7 +96,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(s0.getAs[Long]("__n") == 3L && s0.getAs[Long]("__sumdl") == 0L)
     // first REAL tokens arrive via append: terms build from the increment
     Retrieval.appendToBm25Index(docs1.toDF("doc_id", "text"), "text", dir)
-    val once = tmp("bm25-empty-once")
+    val once = tempDir("bm25-empty-once")
     Retrieval.saveBm25Index(
       (Seq((100L, ""), (101L, "  "), (102L, "")) ++ docs1).toDF("doc_id", "text"),
       "doc_id", "text", once, numBuckets = 4)
@@ -111,11 +108,11 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("bm25 staged commit: unmarked stage discards; marker replays; mid-replay states converge") {
     def freshBase(): String = {
-      val d = tmp("bm25-crash")
+      val d = tempDir("bm25-crash")
       Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text", d, numBuckets = 8)
       d
     }
-    val want = tmp("bm25-crash-want")
+    val want = tempDir("bm25-crash-want")
     Retrieval.saveBm25Index((docs1 ++ docs2).toDF("doc_id", "text"),
       "doc_id", "text", want, numBuckets = 8)
     val fs = IndexCommit.fsFor(spark, want)
@@ -165,7 +162,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("bm25 compaction: content-identical, search-bit-identical, fewer files") {
-    val dir = tmp("bm25-compact")
+    val dir = tempDir("bm25-compact")
     Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text", dir, numBuckets = 4)
     Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text", dir)
     Retrieval.appendToBm25Index(docs3.toDF("doc_id", "text"), "text", dir)
@@ -191,13 +188,13 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("bm25 takedown equals rebuild-without-the-docs; delete-then-append interleave") {
-    val dir = tmp("bm25-rm")
+    val dir = tempDir("bm25-rm")
     Retrieval.saveBm25Index((docs1 ++ docs2).toDF("doc_id", "text"),
       "doc_id", "text", dir, numBuckets = 8)
     // remove docs 2 and 9 (shared vocab with survivors) and the
     // token-less 4 (stats-only) and an unknown id (ignored)
     Retrieval.removeFromBm25Index(Seq(2L, 9L, 4L, 999L).toDF("doc_id"), dir)
-    val want = tmp("bm25-rm-want")
+    val want = tempDir("bm25-rm-want")
     Retrieval.saveBm25Index(
       (docs1 ++ docs2).filterNot(d => Set(2L, 9L, 4L).contains(d._1))
         .toDF("doc_id", "text"),
@@ -209,7 +206,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // delete-then-append interleave: still equals the from-scratch build
     Retrieval.appendToBm25Index(docs3.toDF("doc_id", "text"), "text", dir)
     Retrieval.removeFromBm25Index(Seq(1L).toDF("doc_id"), dir)
-    val want2 = tmp("bm25-rm-want2")
+    val want2 = tempDir("bm25-rm-want2")
     Retrieval.saveBm25Index(
       ((docs1 ++ docs2).filterNot(d => Set(1L, 2L, 9L, 4L).contains(d._1)) ++ docs3)
         .toDF("doc_id", "text"),
@@ -236,7 +233,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       (1L, "spark shuffles data between stages and resizes partitions"),
       (2L, "broadcast joins avoid the shuffle on small dimension tables"),
       (3L, "catalyst prunes columns and partitions before the scan"))
-    val dir = tmp("bm25-chunk")
+    val dir = tempDir("bm25-chunk")
     Retrieval.saveBm25Index(chunksOf(longDocs), "cid", "chunk", dir, numBuckets = 8)
     def serve(d: String) = Retrieval.bm25SearchPreindexed(
         spark, d, Seq((1L, "shuffle partitions"), (2L, "broadcast tables"))
@@ -246,7 +243,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // (provenance), so every chunk goes — no orphan postings
     val doomed = chunksOf(longDocs.filter(_._1 == 2L)).select("cid")
     Retrieval.removeFromBm25Index(doomed, dir)
-    val want = tmp("bm25-chunk-want")
+    val want = tempDir("bm25-chunk-want")
     Retrieval.saveBm25Index(chunksOf(longDocs.filterNot(_._1 == 2L)),
       "cid", "chunk", want, numBuckets = 8)
     for (t <- Seq("postings", "terms", "doclens", "stats"))
@@ -257,7 +254,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // append a new doc: all its chunks join the index
     val doc4 = Seq((4L, "adaptive execution salts the skewed shuffle keys"))
     Retrieval.appendToBm25Index(chunksOf(doc4), "chunk", dir)
-    val want2 = tmp("bm25-chunk-want2")
+    val want2 = tempDir("bm25-chunk-want2")
     Retrieval.saveBm25Index(chunksOf(longDocs.filterNot(_._1 == 2L) ++ doc4),
       "cid", "chunk", want2, numBuckets = 8)
     for (t <- Seq("postings", "terms", "doclens", "stats"))
@@ -267,7 +264,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("bm25 id typing: int ids serve as long (empty or not); string ids refuse up front") {
     // INT-typed ids: the heap serves longs; the EMPTY batch must match
-    val dir = tmp("bm25-intid")
+    val dir = tempDir("bm25-intid")
     Retrieval.saveBm25Index(
       Seq((1, "alpha beta"), (2, "beta gamma")).toDF("doc_id", "text"),
       "doc_id", "text", dir, numBuckets = 4)
@@ -283,7 +280,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // STRING-typed ids: refused identically for empty AND non-empty
     // batches (the heap could only fail row-by-row, and an empty batch
     // not at all — the silent divergence the up-front check closes)
-    val sdir = tmp("bm25-strid")
+    val sdir = tempDir("bm25-strid")
     Retrieval.saveBm25Index(
       Seq(("a", "alpha beta"), ("b", "beta gamma")).toDF("name", "text"),
       "name", "text", sdir, numBuckets = 4)
@@ -316,10 +313,10 @@ class IndexMaintenanceSpec extends SparkSpec {
         k = 5, Similarity.loadIvfCentroids(spark, path), nProbe = 3)
       .collect().map(_.toSeq).toSet
 
-    val dir = tmp("ivf-maint")
+    val dir = tempDir("ivf-maint")
     Similarity.saveIvfIndex(emb1.toDF("vec_id", "embedding"), cents, dir)
     Similarity.appendToIvfIndex(emb2.toDF("vec_id", "embedding"), dir)
-    val once = tmp("ivf-once")
+    val once = tempDir("ivf-once")
     Similarity.saveIvfIndex((emb1 ++ emb2).toDF("vec_id", "embedding"), cents, once)
     assert(serve(dir) == serve(once), "append drifted from save-once")
 
@@ -338,7 +335,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // takedown: remove a slice; serving equals an index rebuilt without it
     val doomed = (emb1 ++ emb2).map(_._1).filter(_ % 5 == 2)
     Similarity.removeFromIvfIndex(doomed.toDF("vec_id"), dir)
-    val wantRm = tmp("ivf-rm-want")
+    val wantRm = tempDir("ivf-rm-want")
     Similarity.saveIvfIndex(
       (emb1 ++ emb2).filterNot(e => doomed.contains(e._1)).toDF("vec_id", "embedding"),
       cents, wantRm)
@@ -361,7 +358,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val d1 = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs")).toDF("id", "text")
     val d2 = Seq((3L, "the quick brown fox went home early today")).toDF("id", "text")
-    val dir = tmp("span-rm")
+    val dir = tempDir("span-rm")
     // two streaming-shaped versions of the fingerprint index
     val (_, f1) = Dedup.selfDedupAgainstIndex(d1, "text", "id", span, None)
     f1.write.parquet(s"$dir/v000000000")
@@ -401,7 +398,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val corpus1 = Seq((1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six seven")).toDF("doc_id", "text")
     val corpus2 = Seq((3L, "red orange yellow green blue indigo")).toDF("doc_id", "text")
-    val dir = tmp("ingest-rm")
+    val dir = tempDir("ingest-rm")
     // two append batches, the ingestWith layout (flat parquet dir)
     Dedup.polySignatures(corpus1, "text", "doc_id", 8, 3)
       .write.mode("append").parquet(dir)
@@ -439,7 +436,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     import graft.ops.Dedup
     val corpus = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
       .toDF("doc_id", "text")
-    val dir = tmp("ingest-crash")
+    val dir = tempDir("ingest-crash")
     Dedup.polySignatures(corpus, "text", "doc_id", 8, 3)
       .write.mode("append").parquet(dir)
     val untouched = spark.read.parquet(dir).collect().map(_.toSeq).toSet
@@ -471,7 +468,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     def doc(i: Int) = (0 until 6).map(j => s"w$i$j tok$i").mkString(" ")
     val d1 = (1L to 20L).map(i => (i, doc(i.toInt)))
     val d2 = (21L to 30L).map(i => (i, doc(i.toInt)))
-    val p = java.nio.file.Files.createTempDirectory("graft-fwd").toString
+    val p = tempDir("graft-fwd")
     Retrieval.saveBm25Forward(d1.toDF("doc_id", "text"), "doc_id", "text", p,
       numBuckets = 4)
     def rows(path: String) = spark.read.parquet(s"$path/docterms")
@@ -481,7 +478,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // tagged append lands once; a retried tag no-ops
     Retrieval.appendToBm25Forward(d2.toDF("doc_id", "text"), "text", p,
       batchTag = Some(1L))
-    val want = java.nio.file.Files.createTempDirectory("graft-fwd-ref").toString
+    val want = tempDir("graft-fwd-ref")
     Retrieval.saveBm25Forward((d1 ++ d2).toDF("doc_id", "text"), "doc_id", "text",
       want, numBuckets = 4)
     assert(rows(p) == rows(want), "append must equal the rebuild")
@@ -497,7 +494,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       pmod(xxhash64(lit(rmId)), lit(4L))).head().getLong(0)
     val before = (0L to 3L).filter(_ != rmBucket).map(b => b -> files(b)).toMap
     Retrieval.removeFromBm25Forward(Seq(rmId).toDF("doc_id"), p)
-    val want2 = java.nio.file.Files.createTempDirectory("graft-fwd-ref2").toString
+    val want2 = tempDir("graft-fwd-ref2")
     Retrieval.saveBm25Forward(
       (d1 ++ d2).filter(_._1 != rmId).toDF("doc_id", "text"), "doc_id", "text",
       want2, numBuckets = 4)
@@ -528,7 +525,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("fused BM25+forward lifecycle: one marker; append/takedown/compact keep served PRF ≡ ad-hoc") {
     import spark.implicits._
-    val idx = tmp("graft-fused")
+    val idx = tempDir("graft-fused")
     Retrieval.saveBm25WithForward(docs1.toDF("doc_id", "text"),
       "doc_id", "text", idx, numBuckets = 4)
     val fwd = Retrieval.bm25ForwardPathFor(idx)
@@ -590,7 +587,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("takedown audit names a planted sidecar miss (the two-call footgun the fusion closes)") {
     import spark.implicits._
-    val idx = tmp("graft-fused-miss")
+    val idx = tempDir("graft-fused-miss")
     Retrieval.saveBm25WithForward((docs1 ++ docs2).toDF("doc_id", "text"),
       "doc_id", "text", idx, numBuckets = 4)
     val fwd = Retrieval.bm25ForwardPathFor(idx)
@@ -629,11 +626,11 @@ class IndexMaintenanceSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     // fused chunk family: takedown by DOCUMENT id with NO corpus access
     // (the source docs are "already deleted" — only the index exists)
-    val idx = tmp("graft-chunk-rtbf")
+    val idx = tempDir("graft-chunk-rtbf")
     Retrieval.saveBm25WithForward(chunksOf(longDocs), "cid", "chunk", idx,
       numBuckets = 8)
     Retrieval.removeDocsFromChunkIndex(Seq(2L).toDF("doc_id"), idx)
-    val want = tmp("graft-chunk-rtbf-want")
+    val want = tempDir("graft-chunk-rtbf-want")
     Retrieval.saveBm25WithForward(chunksOf(longDocs.filterNot(_._1 == 2L)),
       "cid", "chunk", want, numBuckets = 8)
     for (t <- Seq("postings", "terms", "doclens", "stats",
@@ -644,11 +641,11 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(!serveChunks(idx).exists(r => r(2).asInstanceOf[Long] / 1000L == 2L),
       "no chunk of the forgotten doc may serve")
     // plain (sidecar-less) chunk index takes the index-only remove path
-    val plain = tmp("graft-chunk-rtbf-plain")
+    val plain = tempDir("graft-chunk-rtbf-plain")
     Retrieval.saveBm25Index(chunksOf(longDocs), "cid", "chunk", plain,
       numBuckets = 8)
     Retrieval.removeDocsFromChunkIndex(Seq(2L, 999L).toDF("doc_id"), plain)
-    val wantPlain = tmp("graft-chunk-rtbf-plainwant")
+    val wantPlain = tempDir("graft-chunk-rtbf-plainwant")
     Retrieval.saveBm25Index(chunksOf(longDocs.filterNot(_._1 == 2L)),
       "cid", "chunk", wantPlain, numBuckets = 8)
     for (t <- Seq("postings", "terms", "doclens", "stats"))
@@ -679,7 +676,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     def served(d: String) =
       Retrieval.phraseSearchPreindexed(spark, d, phrases, "pid", "phrase")
         .collect().map(_.toSeq).toSet
-    val dir = tmp("bm25-positional")
+    val dir = tempDir("bm25-positional")
     Retrieval.saveBm25Index(corpus1.toDF("doc_id", "text"), "doc_id", "text",
       dir, numBuckets = 8, withPositions = true)
     assert(served(dir) == adhoc(corpus1),
@@ -687,7 +684,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(served(dir).nonEmpty)
     // the positional column must not disturb BM25 serving: a tf-only
     // twin index answers identically
-    val plain = tmp("bm25-positional-plain")
+    val plain = tempDir("bm25-positional-plain")
     Retrieval.saveBm25Index(corpus1.toDF("doc_id", "text"), "doc_id", "text",
       plain, numBuckets = 8)
     assert(searchRows(dir) == searchRows(plain),
@@ -729,7 +726,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("describeBm25Index: hand-computed corpus facts; bucket balance sums; tracks maintenance") {
-    val dir = tmp("bm25-describe")
+    val dir = tempDir("bm25-describe")
     Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text",
       dir, numBuckets = 8)
     val r = Retrieval.describeBm25Index(spark, dir).head()
@@ -752,7 +749,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // the report tracks maintenance: after a takedown it equals the
     // rebuilt index's report
     Retrieval.removeFromBm25Index(Seq(2L, 4L).toDF("doc_id"), dir)
-    val want = tmp("bm25-describe-want")
+    val want = tempDir("bm25-describe-want")
     Retrieval.saveBm25Index(
       docs1.filterNot(d => Set(2L, 4L)(d._1)).toDF("doc_id", "text"),
       "doc_id", "text", want, numBuckets = 8)
@@ -761,7 +758,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("describeIvfIndex: cell balance facts, dead cells named, tracks takedown") {
-    val dir = tmp("ivf-describe")
+    val dir = tempDir("ivf-describe")
     val r7 = new scala.util.Random(11)
     val vecs = (1L to 30L).map(i => (i, Seq.fill(4)(r7.nextDouble())))
       .toDF("vec_id", "embedding")

@@ -100,7 +100,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("dupClusters rewinds to the last reliable checkpoint on a round failure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_rewind").toString
+    val dir = tempDir("graft_ckpt_rewind")
     spark.sparkContext.setCheckpointDir(dir)
     val pairs = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val fired = new AtomicBoolean(false)
@@ -244,7 +244,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("writePartitioned buckets around unhashable map columns") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_layout_map").toString
+    val tmp = tempDir("graft_layout_map")
     val df = Seq((1, "a"), (1, "b"), (2, "c")).toDF("k", "v")
       .withColumn("m", map(col("v"), col("k")))
     graft.io.Layout.writePartitioned(df, s"$tmp/out", Seq("k"), filesPerPartition = 2)

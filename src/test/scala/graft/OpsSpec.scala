@@ -314,7 +314,7 @@ class OpsSpec extends SparkSpec {
 
   test("dupClusters: reliable checkpoint rounds produce the same clusters") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
     val clusters = Dedup.dupClusters(pairs, reliableEvery = 1).collect()
@@ -2818,9 +2818,9 @@ class OpsSpec extends SparkSpec {
       (2L, "broadcast joins avoid the shuffle"),
       (3L, "catalyst prunes columns and partitions")
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-audit-idx").toString
+    val idx = tempDir("graft-audit-idx")
     Retrieval.saveBm25Index(docs, "doc_id", "text", idx, numBuckets = 4)
-    val exp = java.nio.file.Files.createTempDirectory("graft-audit-exp").toString
+    val exp = tempDir("graft-audit-exp")
     graft.io.Layout.writeShardsWithManifest(docs, "doc_id", exp, numShards = 2)
     // the deletion request: doc 2 — honored by the index, MISSED by the export
     val rm = Seq(2L).toDF("doc_id")

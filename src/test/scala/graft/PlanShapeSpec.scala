@@ -400,7 +400,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("persisted-IVF serving scan is dynamically partition-pruned by probed cell") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = tempDir("graft-dpp")
     val cents = Similarity.trainIvfCentroids(emb, "embedding", nLists = 4)
     Similarity.saveIvfIndex(emb, cents, dir)
     val served = Similarity.ivfTopKPreassigned(
@@ -416,7 +416,7 @@ class PlanShapeSpec extends SparkSpec {
   test("positional phrase/proximity serving reads are bucket-pruned, cartesian-free") {
     import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pos-plan").toString
+    val dir = tempDir("graft-pos-plan")
     graft.ops.Retrieval.saveBm25Index(docs, "doc_id", "text", dir,
       numBuckets = 16, withPositions = true)
     val ph = Seq((1L, "the data")).toDF("pid", "phrase")

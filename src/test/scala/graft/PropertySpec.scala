@@ -648,14 +648,14 @@ class PropertySpec extends SparkSpec {
       val rows = (1L to 120L).map(i => (i, s"p-$i"))
       // random 3-way split, first slice written, the rest appended
       val tagged = rows.map(r => (rnd.nextInt(3), r))
-      val out = java.nio.file.Files.createTempDirectory(s"graft-app-$seed").toString
+      val out = tempDir(s"graft-app-$seed")
       Layout.writeShardsWithManifest(
         tagged.filter(_._1 == 0).map(_._2).toDF("id", "payload"),
         "id", out, numShards = 4, salt = s"s$seed")
       for (slice <- 1 to 2)
         Layout.appendShardsWithManifest(
           tagged.filter(_._1 == slice).map(_._2).toDF("id", "payload"), out)
-      val ref = java.nio.file.Files.createTempDirectory(s"graft-ref-$seed").toString
+      val ref = tempDir(s"graft-ref-$seed")
       Layout.writeShardsWithManifest(rows.toDF("id", "payload"),
         "id", ref, numShards = 4, salt = s"s$seed")
       def manifest(p: String) = spark.read.parquet(s"$p/manifest")

@@ -157,8 +157,8 @@ class RetrievalSpec extends SparkSpec {
       (4L, "banana smoothie recipe")
     ).toDF("doc_id", "text")
     val qs = Seq((1L, "automobile"), (2L, "banana recipe")).toDF("qid", "qtext")
-    val idx = java.nio.file.Files.createTempDirectory("graft-prf-idx").toString
-    val fwd = java.nio.file.Files.createTempDirectory("graft-prf-fwd").toString
+    val idx = tempDir("graft-prf-idx")
+    val fwd = tempDir("graft-prf-fwd")
     Retrieval.saveBm25Index(docs, "doc_id", "text", idx, numBuckets = 8)
     Retrieval.saveBm25Forward(docs, "doc_id", "text", fwd, numBuckets = 4)
     val adhoc = Retrieval.bm25SearchPrf(docs, "doc_id", "text", qs, "qid", "qtext",
@@ -170,7 +170,7 @@ class RetrievalSpec extends SparkSpec {
     assert(served == adhoc, s"served PRF must equal ad-hoc PRF:\n$served\n$adhoc")
     // a forward sidecar seeded EMPTY (before data) degrades to plain
     // preindexed BM25 instead of failing
-    val fwd0 = java.nio.file.Files.createTempDirectory("graft-prf-fwd0").toString
+    val fwd0 = tempDir("graft-prf-fwd0")
     Retrieval.saveBm25Forward(docs.limit(0), "doc_id", "text", fwd0, numBuckets = 4)
     val degraded = Retrieval.bm25SearchPrfPreindexed(spark, idx, fwd0, qs,
       "qid", "qtext", topK = 10, fbDocs = 2, fbTerms = 2)
@@ -181,7 +181,7 @@ class RetrievalSpec extends SparkSpec {
     // an index/sidecar pair built on DIFFERENT id columns refuses
     // loudly — the silent alternative is a feedback join matching
     // nothing (degrading to plain BM25 with no signal)
-    val fwdOther = java.nio.file.Files.createTempDirectory("graft-prf-mid").toString
+    val fwdOther = tempDir("graft-prf-mid")
     Retrieval.saveBm25Forward(docs.withColumnRenamed("doc_id", "other_id"),
       "other_id", "text", fwdOther, numBuckets = 4)
     val eMis = intercept[IllegalArgumentException] {
@@ -559,7 +559,7 @@ class RetrievalSpec extends SparkSpec {
     val docs = (1L to 40L).map(i => (i, s"w${i % 7} w${i % 5} w${i % 3} tail"))
       .toDF("doc_id", "text")
     val qs = Seq((1L, "w1 w2"), (2L, "w3 tail"), (3L, "nothing matches")).toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25")
     Retrieval.saveBm25Index(docs, "doc_id", "text", dir, numBuckets = 16)
     val pre = Retrieval.bm25SearchPreindexed(
       spark, dir, qs, "qid", "qtext", topK = 4)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** §2.5 source/sink parity: the engine's bulk formats are plain
@@ -19,7 +17,7 @@ class SourcesSpec extends SparkSpec {
   ).toDF("vendor", "experience", "bid_amount")
 
   test("CSV round-trip preserves evaluator results") {
-    val dir = Files.createTempDirectory("graft_csv").toString + "/bids"
+    val dir = tempDir("graft_csv") + "/bids"
     bids.write.option("header", true).csv(dir)
     val back = spark.read.option("header", true).option("inferSchema", true).csv(dir)
 
@@ -33,7 +31,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JSON round-trip preserves evaluator results") {
-    val dir = Files.createTempDirectory("graft_json").toString + "/bids"
+    val dir = tempDir("graft_json") + "/bids"
     bids.write.json(dir)
     val back = spark.read.json(dir)
     val scored = new Evaluator().linear("experience", 1.0).evaluate(back)
@@ -83,7 +81,7 @@ class SourcesSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "lang", "source", "n_chars")
-    val base = java.nio.file.Files.createTempDirectory("graft_formats").toString
+    val base = tempDir("graft_formats")
 
     docs.write.mode("overwrite").orc(s"$base/orc")
     val orc = spark.read.orc(s"$base/orc")
@@ -105,7 +103,7 @@ class SourcesSpec extends SparkSpec {
   test("writePartitioned: hive-style directories, bounded files per partition") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val out = tempDir("graft_layout")
     graft.io.Layout.writePartitioned(docs, out, Seq("lang"), filesPerPartition = 2)
 
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
@@ -132,7 +130,7 @@ class SourcesSpec extends SparkSpec {
     // files per directory: the bucket is a row-value hash, not
     // spark_partition_id (whose distinct values a coalesce(1) collapses)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").coalesce(1)
-    val out = java.nio.file.Files.createTempDirectory("graft_layout1").toString
+    val out = tempDir("graft_layout1")
     graft.io.Layout.writePartitioned(docs, out, Seq("lang"), filesPerPartition = 3)
     val biggest = new java.io.File(out).listFiles().filter(_.isDirectory)
       .map(d => d.listFiles().count(_.getName.endsWith(".parquet"))).max
@@ -146,7 +144,7 @@ class SourcesSpec extends SparkSpec {
     import spark.implicits._
     import graft.io.Layout
     val rows = (1L to 200L).map(i => (i, s"payload-$i")).toDF("id", "payload")
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val out = tempDir("graft-shards")
     Layout.writeShardsWithManifest(rows, "id", out, numShards = 4, salt = "x")
     // round-trip: every row survives, shards partition the id space
     val back = spark.read.parquet(s"$out/data")
@@ -193,11 +191,11 @@ class SourcesSpec extends SparkSpec {
     val first = all.filter(col("id") <= 200L)
     val inc = all.filter(col("id") > 200L)
     // append path
-    val out = java.nio.file.Files.createTempDirectory("graft-shard-app").toString
+    val out = tempDir("graft-shard-app")
     Layout.writeShardsWithManifest(first, "id", out, numShards = 4, salt = "x")
     Layout.appendShardsWithManifest(inc, out)
     // write-once reference over the union
-    val ref = java.nio.file.Files.createTempDirectory("graft-shard-ref").toString
+    val ref = tempDir("graft-shard-ref")
     Layout.writeShardsWithManifest(all, "id", ref, numShards = 4, salt = "x")
     def manifest(p: String) = spark.read.parquet(s"$p/manifest")
       .select("shard", "n_rows", "id_checksum").collect().map(_.toSeq).toSet
@@ -250,7 +248,7 @@ class SourcesSpec extends SparkSpec {
     import spark.implicits._
     import graft.io.Layout
     val all = (1L to 300L).map(i => (i, s"payload-$i")).toDF("id", "payload")
-    val out = java.nio.file.Files.createTempDirectory("graft-shard-rm").toString
+    val out = tempDir("graft-shard-rm")
     Layout.writeShardsWithManifest(all, "id", out, numShards = 4, salt = "x")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     // locate one id's shard, remember every OTHER shard's exact file set
@@ -264,7 +262,7 @@ class SourcesSpec extends SparkSpec {
     val before = (0L to 3L).filter(_ != oneShard).map(s => s -> files(s)).toMap
     Layout.removeFromShardExport(Seq(one).toDF("id"), out)
     // survivors match a write-once export bit for bit (manifest + rows)
-    val ref = java.nio.file.Files.createTempDirectory("graft-shard-rm-ref").toString
+    val ref = tempDir("graft-shard-rm-ref")
     Layout.writeShardsWithManifest(all.filter(col("id") =!= one), "id", ref,
       numShards = 4, salt = "x")
     def manifest(p: String) = spark.read.parquet(s"$p/manifest")
@@ -298,7 +296,7 @@ class SourcesSpec extends SparkSpec {
   test("shard export: empty seed, tagged appends, compaction folds files and tags") {
     import spark.implicits._
     import graft.io.Layout
-    val out = java.nio.file.Files.createTempDirectory("graft-shard-seed").toString
+    val out = tempDir("graft-shard-seed")
     val empty = Seq.empty[(Long, String)].toDF("id", "payload")
     // a streaming delivery seeds BEFORE data exists
     Layout.writeShardsWithManifest(empty, "id", out, numShards = 4, salt = "x")
@@ -340,7 +338,7 @@ class SourcesSpec extends SparkSpec {
       Seq((9999L, "dup")).toDF("id", "payload"), out, batchTag = Some(1L))
     assert(spark.read.parquet(s"$out/data").count() == 120L)
     // compacting an EMPTY export keeps it readable
-    val out2 = java.nio.file.Files.createTempDirectory("graft-shard-seed2").toString
+    val out2 = tempDir("graft-shard-seed2")
     Layout.writeShardsWithManifest(empty, "id", out2, numShards = 2, salt = "")
     Layout.compactShardExport(spark, out2)
     assert(spark.read.parquet(s"$out2/data").count() == 0L)

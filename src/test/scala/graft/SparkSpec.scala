@@ -15,6 +15,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def byKey(df: DataFrame, keyCol: String): Map[Any, Row] =
     rows(df).map(r => r.getAs[Any](keyCol) -> r).toMap
 
+  /** A new temp directory, deleted with its contents when the test JVM
+    * exits. */
+  def tempDir(prefix: String): String = graft.io.TempDirs.create(prefix).toString
+
   def assertNear(actual: Double, expected: Double, tol: Double = 1e-9): Unit =
     assert(math.abs(actual - expected) <= tol,
       s"expected $expected, got $actual (tol $tol)")

@@ -410,7 +410,7 @@ class StreamingSpec extends SparkSpec {
       ImageCodecs.encodePpm(ImageCodecs.DecodedImage(16, 8,
         Array.fill(16 * 8 * 3)(r2.nextInt(256).toByte)))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-img-ingest").toString
+    val dir = tempDir("graft-img-ingest")
     val indexPath = s"$dir/index"
     import spark.implicits._
     // seed the standing index with image A (id 1)
@@ -464,7 +464,7 @@ class StreamingSpec extends SparkSpec {
       ImageCodecs.encodePpm(ImageCodecs.DecodedImage(16, 8,
         Array.fill(16 * 8 * 3)(r2.nextInt(256).toByte)))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-img-ingest256").toString
+    val dir = tempDir("graft-img-ingest256")
     val indexPath = s"$dir/index"
     import spark.implicits._
     Multimodal.imageHashes256(
@@ -532,7 +532,7 @@ class StreamingSpec extends SparkSpec {
       AudioCodecs.encodeWavPcm16(16000, 1,
         Array.fill(512)(((r2.nextInt(16000) - 8000) * gain).toShort))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-audio-ingest").toString
+    val dir = tempDir("graft-audio-ingest")
     val indexPath = s"$dir/index"
     import spark.implicits._
     // standing index: clip A
@@ -589,7 +589,7 @@ class StreamingSpec extends SparkSpec {
     // clip(s, n) = frames s..s+n-1: clip(0,4) vs clip(0,3) share 3 of 4
     def clip(start: Int, n: Int): Array[Byte] =
       VideoCodecs.encodeClip((start until start + n).map(frame))
-    val dir = java.nio.file.Files.createTempDirectory("graft-video-ingest").toString
+    val dir = tempDir("graft-video-ingest")
     val indexPath = s"$dir/index"
     import spark.implicits._
     // standing index: clip A = frames 0..3
@@ -643,7 +643,7 @@ class StreamingSpec extends SparkSpec {
     val a = "the quick brown fox jumps over the lazy dog again and again"
     val b = "completely different subject matter about spark query planning internals"
     val c = "yet another unrelated document concerning audio codecs and wave headers"
-    val dir = java.nio.file.Files.createTempDirectory("graft-txt-ingest").toString
+    val dir = tempDir("graft-txt-ingest")
     val indexPath = s"$dir/index"
     import spark.implicits._
     // standing index: document A's signature
@@ -693,7 +693,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-once").toString
+    val dir = tempDir("graft-ingest-once")
     def dataFiles(p: String) = fs.listStatus(new Path(p)).count(st =>
       st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Dedup
     def doc(i: Int) = ('a' to 'l').map(c => s"w$i$c$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-compact").toString
+    val dir = tempDir("graft-ingest-compact")
     val indexPath = s"$dir/index"
     import spark.implicits._
     Dedup.polySignatures(Seq((0L, doc(0))).toDF("doc_id", "text"), "text", "doc_id")
@@ -910,7 +910,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.io.Layout
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-export-stream").toString
+    val out = tempDir("graft-export-stream")
     // seed the standing export (the routing recipe lives in its manifest)
     Layout.writeShardsWithManifest(
       (1L to 50L).map(i => (i, s"p-$i")).toDF("id", "payload"),
@@ -926,7 +926,7 @@ class StreamingSpec extends SparkSpec {
       query.processAllAvailable()
     } finally query.stop()
     // streamed delivery ≡ write-once over the union
-    val ref = java.nio.file.Files.createTempDirectory("graft-export-ref").toString
+    val ref = tempDir("graft-export-ref")
     Layout.writeShardsWithManifest(
       (1L to 90L).map(i => (i, s"p-$i")).toDF("id", "payload"),
       "id", ref, numShards = 4, salt = "s")
@@ -961,7 +961,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "broadcast joins avoid the shuffle"))
     val d2 = Seq((3L, "shuffle partitions size the reducers"),
       (4L, "catalyst prunes columns and partitions"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-bm25-stream").toString
+    val idx = tempDir("graft-bm25-stream")
     // seed over the empty corpus: the index exists, then batches flow in
     Retrieval.saveBm25Index(Seq.empty[(Long, String)].toDF("doc_id", "text"),
       "doc_id", "text", idx, numBuckets = 8)
@@ -973,7 +973,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(d1: _*); query.processAllAvailable()
       input.addData(d2: _*); query.processAllAvailable()
     } finally query.stop()
-    val want = java.nio.file.Files.createTempDirectory("graft-bm25-once").toString
+    val want = tempDir("graft-bm25-once")
     Retrieval.saveBm25Index((d1 ++ d2).toDF("doc_id", "text"),
       "doc_id", "text", want, numBuckets = 8)
     def serve(p: String) = Retrieval.bm25SearchPreindexed(spark, p,
@@ -1011,7 +1011,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "broadcast joins avoid the shuffle"))
     val d2 = Seq((3L, "the shuffle partitions size the reducers"),
       (4L, "catalyst prunes columns and the shuffle partitions"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-pos-stream").toString
+    val idx = tempDir("graft-pos-stream")
     // seed a POSITIONAL index over the empty corpus; the stats flag
     // makes every streamed append derive positional increments
     Retrieval.saveBm25Index(Seq.empty[(Long, String)].toDF("doc_id", "text"),
@@ -1042,7 +1042,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "broadcast joins avoid the shuffle"))
     val d2 = Seq((3L, "shuffle partitions size the reducers"),
       (4L, "catalyst prunes columns and partitions"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-fused-stream").toString
+    val idx = tempDir("graft-fused-stream")
     Retrieval.saveBm25WithForward(Seq.empty[(Long, String)].toDF("doc_id", "text"),
       "doc_id", "text", idx, numBuckets = 8)
     val input = MemoryStream[(Long, String)]
@@ -1053,7 +1053,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(d1: _*); query.processAllAvailable()
       input.addData(d2: _*); query.processAllAvailable()
     } finally query.stop()
-    val want = java.nio.file.Files.createTempDirectory("graft-fused-once").toString
+    val want = tempDir("graft-fused-once")
     Retrieval.saveBm25WithForward((d1 ++ d2).toDF("doc_id", "text"),
       "doc_id", "text", want, numBuckets = 8)
     def servePrf(p: String) = Retrieval.bm25SearchPrfPreindexed(spark, p,
@@ -1088,7 +1088,7 @@ class StreamingSpec extends SparkSpec {
     def chunksOf(ds: Seq[(Long, String)]) = Retrieval.chunkText(
         ds.toDF("doc_id", "text"), "doc_id", "text", chunkSize = 40, overlap = 10)
       .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-chunk-fwd").toString
+    val idx = tempDir("graft-chunk-fwd")
     Retrieval.saveBm25WithForward(Seq.empty[(Long, String)].toDF("cid", "chunk"),
       "cid", "chunk", idx, numBuckets = 8)
     val input = MemoryStream[(Long, String)]
@@ -1100,7 +1100,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(d1: _*); query.processAllAvailable()
       input.addData(d2: _*); query.processAllAvailable()
     } finally query.stop()
-    val want = java.nio.file.Files.createTempDirectory("graft-chunk-fwd-once").toString
+    val want = tempDir("graft-chunk-fwd-once")
     Retrieval.saveBm25WithForward(chunksOf(d1 ++ d2), "cid", "chunk", want,
       numBuckets = 8)
     def servePrf(p: String) = Retrieval.bm25SearchPrfPreindexed(spark, p,
@@ -1123,7 +1123,7 @@ class StreamingSpec extends SparkSpec {
     def chunksOf(ds: Seq[(Long, String)]) = Retrieval.chunkText(
         ds.toDF("doc_id", "text"), "doc_id", "text", chunkSize = 40, overlap = 10)
       .select((col("doc_id") * 1000L + col("chunk_idx")).as("cid"), col("chunk"))
-    val idx = java.nio.file.Files.createTempDirectory("graft-chunk-stream").toString
+    val idx = tempDir("graft-chunk-stream")
     Retrieval.saveBm25Index(Seq.empty[(Long, String)].toDF("cid", "chunk"),
       "cid", "chunk", idx, numBuckets = 8)
     val input = MemoryStream[(Long, String)]
@@ -1136,7 +1136,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(d2: _*); query.processAllAvailable()
     } finally query.stop()
     // serve ≡ a save-once chunk index over the union
-    val want = java.nio.file.Files.createTempDirectory("graft-chunk-once").toString
+    val want = tempDir("graft-chunk-once")
     Retrieval.saveBm25Index(chunksOf(d1 ++ d2), "cid", "chunk", want, numBuckets = 8)
     def serve(p: String) = Retrieval.bm25SearchPreindexed(spark, p,
         Seq((1L, "token1 data"), (2L, "token3 w3t0")).toDF("qid", "qtext"),
@@ -1154,12 +1154,12 @@ class StreamingSpec extends SparkSpec {
     // doc takedown at chunk grain stays available: removing doc 2's cid
     // set leaves the index ≡ rebuild without the doc
     Retrieval.removeFromBm25Index(chunksOf(d1.filter(_._1 == 2L)).select("cid"), idx)
-    val want2 = java.nio.file.Files.createTempDirectory("graft-chunk-rm").toString
+    val want2 = tempDir("graft-chunk-rm")
     Retrieval.saveBm25Index(chunksOf(d1.filter(_._1 == 1L) ++ d2),
       "cid", "chunk", want2, numBuckets = 8)
     assert(serve(idx) == serve(want2), "doc takedown must equal the rebuild")
     // a doc blowing the cid ceiling refuses loudly
-    val tiny = java.nio.file.Files.createTempDirectory("graft-chunk-ceil").toString
+    val tiny = tempDir("graft-chunk-ceil")
     Retrieval.saveBm25Index(Seq.empty[(Long, String)].toDF("cid", "chunk"),
       "cid", "chunk", tiny, numBuckets = 4)
     val input2 = MemoryStream[(Long, String)]
@@ -1184,7 +1184,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def failsWith(needle: String)(feed: MemoryStream[(String, String)] => Unit,
         maxChunks: Int = 1000): Unit = {
-      val idx = java.nio.file.Files.createTempDirectory("graft-chunk-id").toString
+      val idx = tempDir("graft-chunk-id")
       Retrieval.saveBm25Index(Seq.empty[(Long, String)].toDF("cid", "chunk"),
         "cid", "chunk", idx, numBuckets = 4)
       val input = MemoryStream[(String, String)]
@@ -1215,7 +1215,7 @@ class StreamingSpec extends SparkSpec {
     // negative ids alias the cid space the same way
     failsWith("must be in [0,")(_.addData(("-5", "negative id doc text")))
     // the boundary itself is legal: every chunk cid of id == maxId fits
-    val okIdx = java.nio.file.Files.createTempDirectory("graft-chunk-ok").toString
+    val okIdx = tempDir("graft-chunk-ok")
     Retrieval.saveBm25Index(Seq.empty[(Long, String)].toDF("cid", "chunk"),
       "cid", "chunk", okIdx, numBuckets = 4)
     val okIn = MemoryStream[(String, String)]
@@ -1239,7 +1239,7 @@ class StreamingSpec extends SparkSpec {
     val seedCorpus = (1L to 8L).map(i => (i, vec(i.toInt).toSeq))
     val b1 = (9L to 12L).map(i => (i, vec(i.toInt).toSeq))
     val b2 = (13L to 16L).map(i => (i, vec(i.toInt).toSeq))
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
+    val idx = tempDir("graft-ivf-stream")
     val cents = Similarity.trainIvfCentroids(
       seedCorpus.toDF("vec_id", "embedding"), "embedding", nLists = 2)
     Similarity.saveIvfIndex(seedCorpus.toDF("vec_id", "embedding"), cents, idx)
@@ -1251,7 +1251,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(b1: _*); query.processAllAvailable()
       input.addData(b2: _*); query.processAllAvailable()
     } finally query.stop()
-    val want = java.nio.file.Files.createTempDirectory("graft-ivf-once").toString
+    val want = tempDir("graft-ivf-once")
     Similarity.saveIvfIndex((seedCorpus ++ b1 ++ b2).toDF("vec_id", "embedding"),
       cents, want)
     def corpus(p: String) = spark.read.parquet(s"$p/corpus")
@@ -1537,7 +1537,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = (0 until 40).map(i =>
       (i.toLong, Seq.fill(4)(rnd.nextFloat()))).toDF("vec_id", "embedding")
     val cents = Similarity.trainIvfCentroids(corpus, "embedding", nLists = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-serve").toString
+    val dir = tempDir("graft-ann-serve")
     Similarity.saveIvfIndex(corpus, cents, s"$dir/index")
 
     // three query vectors with ids OUTSIDE the corpus id space
@@ -1580,7 +1580,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Retrieval
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-srv").toString
+    val dir = tempDir("graft-bm25-srv")
     val corpus = (1L to 40L).map(i => (i, s"w${i % 7} w${i % 5} w${i % 3} tail"))
       .toDF("doc_id", "text")
     Retrieval.saveBm25Index(corpus, "doc_id", "text", s"$dir/index", numBuckets = 16)
@@ -1609,7 +1609,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.{Retrieval, Similarity}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hyb-srv").toString
+    val dir = tempDir("graft-hyb-srv")
     val r = new scala.util.Random(7)
     val corpus = (1L to 40L).map(i => (i, s"w${i % 7} w${i % 5} w${i % 3} tail",
       Seq.fill(4)(r.nextDouble())))
@@ -1652,7 +1652,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.ops.{Drift, Similarity}
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb-drift").toString
+    val dir = tempDir("graft-emb-drift")
     // frozen quantizer: train tiny centroids and persist the IVF index
     val ref = ((1L to 30L).map(i => (i, Seq(0.9, 0.1))) ++
       (31L to 40L).map(i => (i, Seq(0.1, 0.9)))).toDF("vec_id", "embedding")
@@ -1690,7 +1690,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.ops.Judges
-    val dir = java.nio.file.Files.createTempDirectory("graft-judge-stream").toString
+    val dir = tempDir("graft-judge-stream")
     // three judges: a,b always 'g'; c flips on even items (unreliable)
     def panel(items: Seq[Long]) = items.flatMap(i => Seq(
       (i, "a", "g"), (i, "b", "g"),
@@ -1734,7 +1734,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming tokenize equals the batch encode under the same frozen artifact") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tok-stream").toString
+    val dir = tempDir("graft-tok-stream")
     val train = Seq.fill(6)(Tuple1("abab ab ba")).toDF("text")
     val pieces = graft.ops.UnigramTrain.train(train, "text",
       maxPieceLen = 2, vocabSize = 4, iters = 2, maxWordLen = 8)
@@ -1765,7 +1765,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Drift
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift-mon").toString
+    val dir = tempDir("graft-drift-mon")
     val ref = Seq((1L, "a a a b c"), (2L, "a b c c")).toDF("doc_id", "text")
     Drift.tokenCounts(ref, "text").write.parquet(s"$dir/ref")
 
@@ -2082,7 +2082,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Dedup
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-span-ing").toString
+    val dir = tempDir("graft-span-ing")
     val boiler = (1 to 13).map(i => s"w$i").mkString(" ")
     // batch 1 owns the boilerplate; batch 2 repeats it across AND within
     // a doc; batch 3 repeats it again and brings fresh text
@@ -2150,7 +2150,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Graphs
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccs").toString
+    val dir = tempDir("graft-ccs")
     val historyPath = s"$dir/cc"
     // batch 1 seeds two components; batch 2 merges them through a new
     // node; batch 3 adds an intra-component edge and a fresh pair
@@ -2195,7 +2195,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.ops.Snapshot
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-scd2").toString
+    val dir = tempDir("graft-scd2")
     val historyPath = s"$dir/history"
     // (key, value, ts, tie): keys 1 and 2 evolve across batches, key 3
     // appears only in batch 2, key 1 is silent in batch 3

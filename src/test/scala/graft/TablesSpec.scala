@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -22,7 +20,7 @@ class TablesSpec extends SparkSpec {
 
   test("micros-encoded timestamp ts normalizes to the same nanos as a long ts") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("tables_spec").toString
+    val dir = tempDir("tables_spec")
     val us = Seq(1700000000000000L, 1700000123456789L, 981173106000000L)
     us.map(u => (u, "x")).toDF("us", "tag")
       .select(timestamp_micros(col("us")).as("ts"), col("tag"))

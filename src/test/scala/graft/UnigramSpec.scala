@@ -234,7 +234,7 @@ class UnigramSpec extends SparkSpec {
     val train = Seq.fill(6)(Tuple1("abab ab ba")).toDF("text")
     val pieces = UnigramTrain.train(train, "text",
       maxPieceLen = 2, vocabSize = 4, iters = 2, maxWordLen = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft-tok-art").toString
+    val path = tempDir("graft-tok-art")
     UnigramTrain.saveTokenizer(spark, pieces, path, maxPieceLen = 2)
     val tk = UnigramTrain.loadTokenizer(spark, path)
     assert(tk.pieces == pieces, "pieces and their pinned order must survive disk")
@@ -245,7 +245,7 @@ class UnigramSpec extends SparkSpec {
     val train = Seq.fill(6)(Tuple1("abab ab")).toDF("text")
     val pieces = UnigramTrain.train(train, "text",
       maxPieceLen = 2, vocabSize = 4, iters = 2, maxWordLen = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft-tok-pre").toString
+    val path = tempDir("graft-tok-pre")
     UnigramTrain.saveTokenizer(spark, pieces, path, maxPieceLen = 2)
     val docs = Seq((1L, "ab abab"), (2L, ""), (3L, "zz ab")).toDF("doc_id", "text")
     val inline = byKey(UnigramTrain.encodeDocs(docs, "doc_id", "text", pieces,
@@ -262,7 +262,7 @@ class UnigramSpec extends SparkSpec {
     val train = Seq.fill(4)(Tuple1("ab ba")).toDF("text")
     val pieces = UnigramTrain.train(train, "text",
       maxPieceLen = 2, vocabSize = 4, iters = 1, maxWordLen = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft-tok-torn").toString
+    val path = tempDir("graft-tok-torn")
     UnigramTrain.saveTokenizer(spark, pieces, path, maxPieceLen = 2)
     // simulate a torn write: clobber vocab/ with a strict subset while
     // the stats row still pins the full count

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.io.Xlsx
 
 /** XLSX source/sink specs: write-read roundtrip plus reading the
@@ -16,7 +14,7 @@ class XlsxSpec extends SparkSpec {
       ("Beta Inc", 5L, 95000.0, "plain")
     ).toDF("vendor", "experience", "bid_amount", "notes")
 
-    val path = Files.createTempDirectory("xlsx").resolve("test.xlsx").toString
+    val path = tempDir("xlsx") + "/test.xlsx"
     Xlsx.write(path, Seq("Results" -> df))
 
     assert(Xlsx.sheetNames(path) == Seq("Results"))
@@ -33,7 +31,7 @@ class XlsxSpec extends SparkSpec {
 
   test("write fails fast past the 1,048,576-row sheet limit, before collecting") {
     val big = spark.range(1048576L).toDF("id") // + header row = 1,048,577
-    val path = Files.createTempDirectory("xlsx_big").resolve("big.xlsx").toString
+    val path = tempDir("xlsx_big") + "/big.xlsx"
     val e = intercept[IllegalArgumentException] {
       Xlsx.write(path, Seq("Huge" -> big))
     }
@@ -48,7 +46,7 @@ class XlsxSpec extends SparkSpec {
   test("multi-sheet write with sheet selection on read") {
     val r = Seq(("A", 1L)).toDF("vendor", "rank")
     val s = Seq(("min", 5.0)).toDF("stat", "value")
-    val path = Files.createTempDirectory("xlsx").resolve("multi.xlsx").toString
+    val path = tempDir("xlsx") + "/multi.xlsx"
     Xlsx.write(path, Seq("Results" -> r, "Statistics" -> s))
 
     assert(Xlsx.sheetNames(path) == Seq("Results", "Statistics"))
@@ -74,15 +72,14 @@ class XlsxSpec extends SparkSpec {
 
   test("boolean columns round-trip typed; r-less cells read positionally") {
     val df = Seq(("A", true), ("B", false)).toDF("vendor", "active")
-    val path = java.nio.file.Files.createTempDirectory("xlsx").resolve("b.xlsx").toString
+    val path = tempDir("xlsx") + "/b.xlsx"
     Xlsx.write(path, Seq("S" -> df))
     val back = Xlsx.read(spark, path)
     assert(back.schema("active").dataType.typeName == "boolean")
     assert(back.filter(back("active")).count() == 1)
 
     // hand-built sheet whose cells omit r= (legal OOXML: "next column")
-    val dir = java.nio.file.Files.createTempDirectory("xlsx2")
-    val p2 = dir.resolve("noref.xlsx").toString
+    val p2 = tempDir("xlsx2") + "/noref.xlsx"
     import java.util.zip.{ZipEntry, ZipOutputStream}
     val out = new ZipOutputStream(new java.io.FileOutputStream(p2))
     def put(n: String, c: String): Unit = {

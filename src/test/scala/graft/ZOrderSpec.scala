@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.io.Layout
@@ -37,7 +35,7 @@ class ZOrderSpec extends SparkSpec {
   test("writeZOrdered produces disjoint per-file key ranges") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey")
-    val dir = Files.createTempDirectory("zorder_spec").toString + "/li"
+    val dir = tempDir("zorder_spec") + "/li"
     Layout.writeZOrdered(li, dir, Seq("l_partkey", "l_suppkey"), bits = 8, files = 4)
     // recompute the key on read-back and check file ranges don't overlap:
     // that is the property that makes parquet min/max stats prune
