@@ -38,7 +38,7 @@ object ExampleConfig {
         |    criteria:
         |      bid_amount: {type: min_ratio, weight: 1.0}
         |""".stripMargin
-    val path = Files.createTempFile("staged", ".yaml")
+    val path = graft.io.TempDirs.create("staged").resolve("staged.yaml")
     Files.writeString(path, yaml)
 
     val staged = StagedEvaluator.fromYaml(path.toString)

@@ -121,30 +121,14 @@ object Layout {
   ): Unit = {
     require(numShards >= 1, "numShards must be >= 1")
     val spark = df.sparkSession
-    // a fresh export OWNS the root: a stale maintenance stage from a
-    // previous delivery at this path must not replay into the new one
-    // (a MARKED leftover would merge old files into fresh shards), and
-    // the old incarnation's batch-tag history must not make a restarted
-    // stream skip batches
-    graft.ops.IndexCommit.fsFor(spark, path).delete(
-      new org.apache.hadoop.fs.Path(graft.ops.IndexCommit.stagingDir(path)), true)
-    graft.ops.IndexCommit.clearTags(spark, path)
+    graft.ops.IndexCommit.fresh(spark, path)
     // the routing RECIPE persists as its own one-row sidecar, not only
     // as manifest columns: an export seeded EMPTY (a standing streaming
     // delivery starts before data exists) has a zero-row manifest, and
     // every later append/verify still needs the id column, shard count,
     // and salt
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(idCol, numShards, salt)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_col",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("num_shards",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("salt",
-          org.apache.spark.sql.types.StringType, nullable = false))))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/recipe")
+    graft.ops.IndexCommit.writeRow(spark, s"$path/recipe",
+      "id_col" -> idCol, "num_shards" -> numShards, "salt" -> salt)
     if (df.isEmpty) {
       // EMPTY SEED: a delivery may legitimately start before any data
       // exists ([[graft.streaming.StreamingEval.exportStream]] appends
@@ -244,36 +228,33 @@ object Layout {
       batchTag: Option[Long] = None
   ): Unit = {
     val spark = df.sparkSession
-    graft.ops.IndexCommit.recover(spark, path)
-    val fs = graft.ops.IndexCommit.fsFor(spark, path)
     // exactly-once fencing for streaming callers: a tag that already
     // committed (its row rode the atomic marker replay into `batches/`)
     // makes the whole append a no-op — a foreachBatch RETRY after a
     // crash must not double-count the delivery
-    if (batchTag.exists(graft.ops.IndexCommit.tagCommitted(spark, path, _)))
-      return
-    // an EMPTY increment (an idle micro-batch tick) must be a no-op,
-    // not a crash: the staged-data read-back below cannot infer a
-    // schema from a file-less write, and there is nothing to deliver.
-    // The batch tag intentionally does not commit for an empty batch —
-    // replaying it appends nothing either way.
-    if (df.isEmpty) return
-    val manifest = spark.read.parquet(s"$path/manifest")
-    val (idCol, numShards, salt) = readRecipe(spark, path)
-    val staging = graft.ops.IndexCommit.stagingDir(path)
-    val routed = df.withColumn("shard",
-      pmod(shardHash(col(idCol), salt), lit(numShards.toLong)))
-    writePartitioned(routed, s"$staging/data", Seq("shard"), filesPerShard)
-    val incManifest = manifestFromShardData(
-      spark.read.parquet(s"$staging/data"), idCol, numShards, salt)
-    manifest.unionByName(incManifest)
-      .groupBy("shard", "id_col", "num_shards", "salt")
-      .agg(sum(col("n_rows")).as("n_rows"), sum(col("id_checksum")).as("id_checksum"))
-      .select(manifest.columns.map(col).toSeq: _*)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$staging/manifest")
-    val actions = Seq("merge" -> "data", "swap" -> "manifest") ++
-      batchTag.map(graft.ops.IndexCommit.stageTag(spark, path, _))
-    graft.ops.IndexCommit.commit(fs, new org.apache.hadoop.fs.Path(path), actions)
+    graft.ops.IndexCommit.maintain(spark, path, batchTag) { staging =>
+      // an EMPTY increment (an idle micro-batch tick) must be a no-op,
+      // not a crash: the staged-data read-back below cannot infer a
+      // schema from a file-less write, and there is nothing to deliver.
+      // The batch tag intentionally does not commit for an empty batch —
+      // replaying it appends nothing either way.
+      if (df.isEmpty) Seq.empty
+      else {
+        val manifest = spark.read.parquet(s"$path/manifest")
+        val (idCol, numShards, salt) = readRecipe(spark, path)
+        val routed = df.withColumn("shard",
+          pmod(shardHash(col(idCol), salt), lit(numShards.toLong)))
+        writePartitioned(routed, s"$staging/data", Seq("shard"), filesPerShard)
+        val incManifest = manifestFromShardData(
+          spark.read.parquet(s"$staging/data"), idCol, numShards, salt)
+        manifest.unionByName(incManifest)
+          .groupBy("shard", "id_col", "num_shards", "salt")
+          .agg(sum(col("n_rows")).as("n_rows"), sum(col("id_checksum")).as("id_checksum"))
+          .select(manifest.columns.map(col).toSeq: _*)
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$staging/manifest")
+        Seq("merge" -> "data", "swap" -> "manifest")
+      }
+    }
   }
 
   /** Verify a [[writeShardsWithManifest]] export: recompute each
@@ -330,8 +311,16 @@ object Layout {
       filesPerShard: Int = 1): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame of row ids, got ${ids.columns.toSeq}")
+    graft.ops.IndexCommit.maintain(ids.sparkSession, path)(
+      stageShardRemove(ids, path, filesPerShard, _))
+  }
+
+  /** [[removeFromShardExport]]'s staging half: stage the hit shards'
+    * survivors and the corrected manifest under `staging`. Returns the
+    * commit actions, empty when none of the ids was ever delivered. */
+  private def stageShardRemove(ids: DataFrame, path: String,
+      filesPerShard: Int, staging: String): Seq[(String, String)] = {
     val spark = ids.sparkSession
-    graft.ops.IndexCommit.recover(spark, path)
     val (idCol, numShards, salt) = readRecipe(spark, path)
     val data = spark.read.parquet(s"$path/data")
     val rmIds = broadcast(ids.select(col(ids.columns.head)
@@ -341,7 +330,7 @@ object Layout {
     val affected = rmIds
       .select(pmod(shardHash(col(idCol), salt), lit(numShards.toLong)).as("shard"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    if (affected.isEmpty) return
+    if (affected.isEmpty) return Seq.empty
     val pruned = data.filter(col("shard").isin(affected: _*))
     // per-shard removal deltas off the rows actually on disk (dup-id
     // appends count per ROW, exactly as the manifest summed them)
@@ -350,9 +339,8 @@ object Layout {
       .agg(count(lit(1)).as("r_rows"),
         sum(shardHash(col(idCol), salt)).as("r_checksum"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    if (removed.isEmpty) return // nothing of these ids was ever delivered
+    if (removed.isEmpty) return Seq.empty // nothing of these ids was ever delivered
     val hit = removed.keys.toSeq.sorted
-    val staging = graft.ops.IndexCommit.stagingDir(path)
     val fs = graft.ops.IndexCommit.fsFor(spark, path)
     // survivors of the HIT shards rewrite in place (also compacting
     // them); untouched shards keep their files
@@ -385,9 +373,7 @@ object Layout {
       data.drop("shard").limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$staging/data/shard=${hit.head}")
     }
-    val actions = hit.map(s => "swap" -> s"data/shard=$s") :+ ("swap" -> "manifest")
-    graft.ops.IndexCommit.commit(fs,
-      new org.apache.hadoop.fs.Path(path), actions)
+    hit.map(s => "swap" -> s"data/shard=$s") :+ ("swap" -> "manifest")
   }
 
   /** OFFLINE maintenance for a standing shard export: fold the small
@@ -404,22 +390,18 @@ object Layout {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       filesPerShard: Int = 1
-  ): Unit = {
-    graft.ops.IndexCommit.recover(spark, path)
-    val staging = graft.ops.IndexCommit.stagingDir(path)
+  ): Unit = graft.ops.IndexCommit.maintain(spark, path) { staging =>
     val data = spark.read.parquet(s"$path/data")
-    var actions = Seq.empty[(String, String)]
-    if (!data.isEmpty) {
-      writePartitioned(data, s"$staging/data", Seq("shard"), filesPerShard)
-      actions :+= (("swap", "data"))
-    }
     // an empty (seeded, nothing appended yet) export keeps its
     // schema-bearing file: rewriting zero rows would drop the footer
     // and break every later read-back
-    actions ++= graft.ops.IndexCommit.stageTagCompaction(spark, path)
-    if (actions.nonEmpty)
-      graft.ops.IndexCommit.commit(graft.ops.IndexCommit.fsFor(spark, path),
-        new org.apache.hadoop.fs.Path(path), actions)
+    val rewritten =
+      if (data.isEmpty) Seq.empty
+      else {
+        writePartitioned(data, s"$staging/data", Seq("shard"), filesPerShard)
+        Seq("swap" -> "data")
+      }
+    rewritten ++ graft.ops.IndexCommit.stageTagCompaction(spark, path)
   }
 
   /** Z-order (Morton) key over numeric columns: each value quantizes to

@@ -872,9 +872,7 @@ object Retrieval {
   ): Unit = {
     require(numBuckets >= 1, "numBuckets must be >= 1")
     val spark = docs.sparkSession
-    IndexCommit.fsFor(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(IndexCommit.stagingDir(path)), true)
-    IndexCommit.clearTags(spark, path)
+    IndexCommit.fresh(spark, path)
     val idType = docs.select(col(idCol)).schema.head.dataType.sql
     val tf = forwardRows(docs, idCol, textCol, numBuckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -899,28 +897,15 @@ object Retrieval {
 
   private def writeForwardStats(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      numBuckets: Int, idCol: String, idType: String, nRows: Long): Unit = {
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(numBuckets, idCol, idType, nRows)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("num_buckets",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("id_col",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("id_type",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("__nrows",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    ()
-  }
+      numBuckets: Int, idCol: String, idType: String, nRows: Long): Unit =
+    IndexCommit.writeRow(spark, dir, "num_buckets" -> numBuckets,
+      "id_col" -> idCol, "id_type" -> idType, "__nrows" -> nRows)
 
   /** O(increment) append to a standing [[saveBm25Forward]] sidecar: the
     * new documents' rows stage bucketed and MERGE into the live bucket
     * dirs; the stats row's exact count updates alongside. `batchTag`
     * gives streaming callers the exactly-once fence
-    * ([[IndexCommit.stageTag]] — a retried batch no-ops). An empty
+    * ([[IndexCommit.maintain]] — a retried batch no-ops). An empty
     * increment is a no-op. One maintenance op at a time per root. */
   def appendToBm25Forward(
       newDocs: DataFrame,
@@ -928,15 +913,8 @@ object Retrieval {
       path: String,
       batchTag: Option[Long] = None
   ): Unit = {
-    val spark = newDocs.sparkSession
-    IndexCommit.recover(spark, path)
-    if (batchTag.exists(IndexCommit.tagCommitted(spark, path, _)))
-      return
-    val staged = stageForwardAppend(newDocs, textCol, path, path, "")
-    if (staged.isEmpty) return
-    val actions = staged ++ batchTag.map(IndexCommit.stageTag(spark, path, _))
-    IndexCommit.commit(IndexCommit.fsFor(spark, path),
-      new org.apache.hadoop.fs.Path(path), actions)
+    IndexCommit.maintain(newDocs.sparkSession, path, batchTag)(_ =>
+      stageForwardAppend(newDocs, textCol, path, path, ""))
   }
 
   /** [[appendToBm25Forward]]'s staging half: write the increment's
@@ -982,12 +960,8 @@ object Retrieval {
   def removeFromBm25Forward(ids: DataFrame, path: String): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame of document ids, got ${ids.columns.toSeq}")
-    val spark = ids.sparkSession
-    IndexCommit.recover(spark, path)
-    val actions = stageForwardRemove(ids, path, path, "")
-    if (actions.isEmpty) return
-    IndexCommit.commit(IndexCommit.fsFor(spark, path),
-      new org.apache.hadoop.fs.Path(path), actions)
+    IndexCommit.maintain(ids.sparkSession, path)(_ =>
+      stageForwardRemove(ids, path, path, ""))
   }
 
   /** [[removeFromBm25Forward]]'s staging half (the
@@ -1038,23 +1012,20 @@ object Retrieval {
     * files back to ~one per bucket, plus the tag-table rider — the
     * [[compactBm25Index]] discipline. */
   def compactBm25Forward(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    IndexCommit.recover(spark, path)
-    val stats = spark.read.parquet(s"$path/stats").head()
-    val staging = IndexCommit.stagingDir(path)
-    var actions = Seq.empty[(String, String)]
-    if (stats.getAs[Long]("__nrows") > 0L) {
-      spark.read.parquet(s"$path/docterms")
-        .repartition(col("doc_bucket"))
-        .write.mode("overwrite").partitionBy("doc_bucket")
-        .parquet(s"$staging/docterms")
-      actions :+= (("swap", "docterms"))
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    IndexCommit.maintain(spark, path) { staging =>
+      val stats = spark.read.parquet(s"$path/stats").head()
+      val docterms =
+        if (stats.getAs[Long]("__nrows") == 0L) Seq.empty
+        else {
+          spark.read.parquet(s"$path/docterms")
+            .repartition(col("doc_bucket"))
+            .write.mode("overwrite").partitionBy("doc_bucket")
+            .parquet(s"$staging/docterms")
+          Seq("swap" -> "docterms")
+        }
+      docterms ++ IndexCommit.stageTagCompaction(spark, path)
     }
-    actions ++= IndexCommit.stageTagCompaction(spark, path)
-    if (actions.nonEmpty)
-      IndexCommit.commit(IndexCommit.fsFor(spark, path),
-        new org.apache.hadoop.fs.Path(path), actions)
-  }
 
   /** The FUSED-lifecycle sidecar location: the forward index lives
     * INSIDE the index root (`<indexPath>/forward`), so both artifacts'
@@ -1105,20 +1076,15 @@ object Retrieval {
       indexPath: String,
       batchTag: Option[Long] = None
   ): Unit = {
-    val spark = newDocs.sparkSession
     val fwd = bm25ForwardPathFor(indexPath)
-    IndexCommit.recover(spark, indexPath)
-    IndexCommit.recover(spark, fwd) // a crashed STANDALONE sidecar op
-    if (batchTag.exists(IndexCommit.tagCommitted(spark, indexPath, _))) return
-    val pinned = newDocs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val actions = stageBm25Append(pinned, textCol, indexPath) ++
-        stageForwardAppend(pinned, textCol, fwd, indexPath, "forward/") ++
-        batchTag.map(IndexCommit.stageTag(spark, indexPath, _))
-      IndexCommit.commit(IndexCommit.fsFor(spark, indexPath),
-        new org.apache.hadoop.fs.Path(indexPath), actions)
-    } finally { pinned.unpersist(); () }
+    IndexCommit.recover(newDocs.sparkSession, fwd) // a crashed STANDALONE sidecar op
+    IndexCommit.maintain(newDocs.sparkSession, indexPath, batchTag) { _ =>
+      val pinned = newDocs
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try stageBm25Append(pinned, textCol, indexPath) ++
+        stageForwardAppend(pinned, textCol, fwd, indexPath, "forward/")
+      finally { pinned.unpersist(); () }
+    }
   }
 
   /** Fused TAKEDOWN (right-to-be-forgotten): remove the documents from
@@ -1129,15 +1095,11 @@ object Retrieval {
   def removeFromBm25WithForward(ids: DataFrame, indexPath: String): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame of document ids, got ${ids.columns.toSeq}")
-    val spark = ids.sparkSession
     val fwd = bm25ForwardPathFor(indexPath)
-    IndexCommit.recover(spark, indexPath)
-    IndexCommit.recover(spark, fwd)
-    val actions = stageBm25Remove(ids, indexPath) ++
-      stageForwardRemove(ids, fwd, indexPath, "forward/")
-    if (actions.isEmpty) return
-    IndexCommit.commit(IndexCommit.fsFor(spark, indexPath),
-      new org.apache.hadoop.fs.Path(indexPath), actions)
+    IndexCommit.recover(ids.sparkSession, fwd)
+    IndexCommit.maintain(ids.sparkSession, indexPath)(_ =>
+      stageBm25Remove(ids, indexPath) ++
+        stageForwardRemove(ids, fwd, indexPath, "forward/"))
   }
 
   /** Fused OFFLINE maintenance: compact both artifacts. Sequential
@@ -1332,15 +1294,9 @@ object Retrieval {
   ): Unit = {
     require(numBuckets >= 1, "numBuckets must be >= 1")
     val spark = docs.sparkSession
-    // a fresh save OWNS the root: a stale maintenance stage from a
-    // previous index at the same path must not replay into this one,
-    // an old incarnation's batch-tag history must not make a restarted
-    // stream skip batches, and a previous FUSED family's nested forward
-    // sidecar must not survive the rebuild out of step (rebuild it too,
-    // or use saveBm25WithForward)
-    IndexCommit.fsFor(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(IndexCommit.stagingDir(path)), true)
-    IndexCommit.clearTags(spark, path)
+    IndexCommit.fresh(spark, path)
+    // a previous FUSED family's nested forward sidecar must not survive
+    // the rebuild out of step (rebuild it too, or use saveBm25WithForward)
     IndexCommit.fsFor(spark, path)
       .delete(new org.apache.hadoop.fs.Path(bm25ForwardPathFor(path)), true)
     val idType = docs.select(col(idCol)).schema.head.dataType.sql
@@ -1420,48 +1376,16 @@ object Retrieval {
       n: Long, ndl: Long, sumdl: Long,
       numBuckets: Int, idCol: String, idType: String,
       positional: Boolean
-  ): Unit = {
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(n, ndl, sumdl, numBuckets, idCol, idType,
-          positional)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__n",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__ndl",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__sumdl",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("num_buckets",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("id_col",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("id_type",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("positional",
-          org.apache.spark.sql.types.BooleanType, nullable = false))))
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-  }
+  ): Unit =
+    IndexCommit.writeRow(spark, dir, "__n" -> n, "__ndl" -> ndl,
+      "__sumdl" -> sumdl, "num_buckets" -> numBuckets, "id_col" -> idCol,
+      "id_type" -> idType, "positional" -> positional)
 
   /** Whether a standing index carries positional postings — older stats
     * rows (pre-positional artifacts) lack the column and read false. */
   private def statsPositional(stats: org.apache.spark.sql.Row): Boolean =
     stats.schema.fieldNames.contains("positional") &&
       stats.getAs[Boolean]("positional")
-
-  /** Replay a pending [[appendToBm25Index]]/[[compactBm25Index]]/
-    * [[removeFromBm25Index]] commit left by a crash (authoritative
-    * `_COMMIT` marker — the [[IndexCommit]] contract), or discard an
-    * incomplete stage. Returns true iff a pending commit was completed
-    * — in that case the interrupted operation FINISHED and must not be
-    * retried; false means it never reached its commit point and is safe
-    * to re-run. Every maintenance entry point calls this as its
-    * preamble; call it explicitly after an unclean shutdown before
-    * serving reads. */
-  def recoverBm25Index(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String
-  ): Boolean = IndexCommit.recover(spark, indexPath)
 
   /** Index MAINTENANCE: tokenize ONLY the new documents, append their
     * postings under the stored bucketing, merge their per-term document
@@ -1474,12 +1398,12 @@ object Retrieval {
     *
     * Crash safety: the increment is evaluated ONCE (persisted — a
     * non-deterministic input frame cannot diverge between its
-    * consumers), every output stages under the index's `op_staging`
-    * dir, and the postings-append + terms-swap + stats-swap publish as
-    * one marker-fenced [[IndexCommit]] commit: a crash before the
-    * marker leaves the live index untouched (re-run the append); a
-    * crash after it is completed by the next maintenance call's
-    * preamble or an explicit [[recoverBm25Index]].
+    * consumers), every output stages under the index's staging dir,
+    * and the postings-append + terms-swap + stats-swap publish as one
+    * marker-fenced [[IndexCommit]] commit: a crash before the marker
+    * leaves the live index untouched (re-run the append); a crash after
+    * it is completed by the next maintenance call's preamble or an
+    * explicit [[IndexCommit.recover]].
     *
     * Caller contract: a document id must be appended at most once
     * (duplicate postings would double-count document frequency —
@@ -1490,20 +1414,15 @@ object Retrieval {
       indexPath: String,
       batchTag: Option[Long] = None
   ): Unit = {
-    val spark = newDocs.sparkSession
-    IndexCommit.recover(spark, indexPath)
     // exactly-once fencing for streaming appenders (the tag's row rides
     // the same atomic marker replay as the postings increment)
-    if (batchTag.exists(IndexCommit.tagCommitted(spark, indexPath, _))) return
-    val actions = stageBm25Append(newDocs, textCol, indexPath) ++
-      batchTag.map(IndexCommit.stageTag(spark, indexPath, _))
-    IndexCommit.commit(IndexCommit.fsFor(spark, indexPath),
-      new org.apache.hadoop.fs.Path(indexPath), actions)
+    IndexCommit.maintain(newDocs.sparkSession, indexPath, batchTag)(_ =>
+      stageBm25Append(newDocs, textCol, indexPath))
   }
 
   /** [[appendToBm25Index]]'s staging half: recover any pending commit,
     * then write the increment's postings/doclens, the merged terms, and
-    * the rolled stats under `op_staging` WITHOUT publishing. Returns the
+    * the rolled stats under the staging dir WITHOUT publishing. Returns the
     * action list the commit needs. Package-private so crash-recovery
     * specs can stop the world between stage and commit. */
   private[graft] def stageBm25Append(
@@ -1586,36 +1505,34 @@ object Retrieval {
   def compactBm25Index(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String
-  ): Unit = {
-    IndexCommit.recover(spark, indexPath)
+  ): Unit = IndexCommit.maintain(spark, indexPath) { staging =>
     val stats = spark.read.parquet(s"$indexPath/stats").head()
     if (stats.getAs[Long]("__sumdl") == 0L && stats.getAs[Long]("__n") == 0L)
-      return // empty index: nothing accumulated
-    val staging = IndexCommit.stagingDir(indexPath)
-    var actions = Seq.empty[(String, String)]
-    if (stats.getAs[Long]("__sumdl") > 0L) {
-      // repartition by the partition column: each bucket's rows land in
-      // exactly one task, so the rewrite emits one file per bucket
-      // (size the bucket count for the corpus — the file IS the bucket)
-      spark.read.parquet(s"$indexPath/postings")
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$staging/postings")
-      spark.read.parquet(s"$indexPath/terms")
-        .repartition(col("term_bucket"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(s"$staging/terms")
-      actions ++= Seq("swap" -> "postings", "swap" -> "terms")
+      Seq.empty // empty index: nothing accumulated
+    else {
+      var actions = Seq.empty[(String, String)]
+      if (stats.getAs[Long]("__sumdl") > 0L) {
+        // repartition by the partition column: each bucket's rows land in
+        // exactly one task, so the rewrite emits one file per bucket
+        // (size the bucket count for the corpus — the file IS the bucket)
+        spark.read.parquet(s"$indexPath/postings")
+          .repartition(col("term_bucket"))
+          .write.mode("overwrite").partitionBy("term_bucket")
+          .parquet(s"$staging/postings")
+        spark.read.parquet(s"$indexPath/terms")
+          .repartition(col("term_bucket"))
+          .write.mode("overwrite").partitionBy("term_bucket")
+          .parquet(s"$staging/terms")
+        actions ++= Seq("swap" -> "postings", "swap" -> "terms")
+      }
+      // doclens: plain read->write — the scan bin-packs small files into
+      // maxPartitionBytes-sized input splits, so the output lands at
+      // healthy file sizes without a shuffle
+      spark.read.parquet(s"$indexPath/doclens")
+        .write.mode("overwrite").parquet(s"$staging/doclens")
+      (actions :+ (("swap", "doclens"))) ++
+        IndexCommit.stageTagCompaction(spark, indexPath)
     }
-    // doclens: plain read->write — the scan bin-packs small files into
-    // maxPartitionBytes-sized input splits, so the output lands at
-    // healthy file sizes without a shuffle
-    spark.read.parquet(s"$indexPath/doclens")
-      .write.mode("overwrite").parquet(s"$staging/doclens")
-    actions :+= (("swap", "doclens"))
-    actions ++= IndexCommit.stageTagCompaction(spark, indexPath)
-    IndexCommit.commit(IndexCommit.fsFor(spark, indexPath),
-      new org.apache.hadoop.fs.Path(indexPath), actions)
   }
 
   /** TAKEDOWN (right-to-be-forgotten): remove documents from the
@@ -1637,12 +1554,8 @@ object Retrieval {
   ): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame of document ids, got ${ids.columns.toSeq}")
-    val spark = ids.sparkSession
-    IndexCommit.recover(spark, indexPath)
-    val actions = stageBm25Remove(ids, indexPath)
-    if (actions.isEmpty) return
-    IndexCommit.commit(IndexCommit.fsFor(spark, indexPath),
-      new org.apache.hadoop.fs.Path(indexPath), actions)
+    IndexCommit.maintain(ids.sparkSession, indexPath)(_ =>
+      stageBm25Remove(ids, indexPath))
   }
 
   /** INDEX HEALTH REPORT — the describe an operator runs before

@@ -611,13 +611,7 @@ object Similarity {
     require(centroidSeq.nonEmpty, "need at least one centroid")
     val spark = corpus.sparkSession
     import spark.implicits._
-    // a fresh save owns the root — a stale maintenance stage from a
-    // previous index at this path must not replay into the new one,
-    // and an old incarnation's batch-tag history must not make a
-    // restarted stream skip batches
-    IndexCommit.fsFor(spark, path)
-      .delete(new org.apache.hadoop.fs.Path(IndexCommit.stagingDir(path)), true)
-    IndexCommit.clearTags(spark, path)
+    IndexCommit.fresh(spark, path)
     assignCells(corpus, corpusVec, centroidSeq, "list_id")
       .select(col(corpusId), col(corpusVec), col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/corpus")
@@ -631,11 +625,11 @@ object Similarity {
     * read). The quantizer itself is immutable; when drift warrants
     * retraining, rebuild with [[saveIvfIndex]]. Cost is the increment:
     * one literal-centroid argmax over the NEW vectors, no touch of the
-    * standing index. Crash-safe: the increment stages under
-    * `op_staging` and publishes through one marker-fenced
+    * standing index. Crash-safe: the increment stages under the
+    * index's staging dir and publishes through one marker-fenced
     * [[IndexCommit]] commit — a crash before the marker leaves the
     * index untouched (re-run); after it, the next maintenance call's
-    * preamble (or [[recoverIvfIndex]]) completes the append. */
+    * preamble (or [[IndexCommit.recover]]) completes the append. */
   def appendToIvfIndex(
       newVecs: DataFrame,
       path: String,
@@ -644,30 +638,17 @@ object Similarity {
       batchTag: Option[Long] = None
   ): Unit = {
     val spark = newVecs.sparkSession
-    IndexCommit.recover(spark, path)
     // exactly-once fencing for streaming appenders: a committed tag
     // means this whole increment already landed (the tag's row rode the
     // same atomic marker replay) — the crash-retried batch no-ops
-    if (batchTag.exists(IndexCommit.tagCommitted(spark, path, _))) return
-    val cents = loadIvfCentroids(spark, path)
-    assignCells(newVecs, corpusVec, cents, "list_id")
-      .select(col(corpusId), col(corpusVec), col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"${IndexCommit.stagingDir(path)}/corpus")
-    val actions = Seq("merge" -> "corpus") ++
-      batchTag.map(IndexCommit.stageTag(spark, path, _))
-    IndexCommit.commit(IndexCommit.fsFor(spark, path),
-      new org.apache.hadoop.fs.Path(path), actions)
+    IndexCommit.maintain(spark, path, batchTag) { staging =>
+      assignCells(newVecs, corpusVec, loadIvfCentroids(spark, path), "list_id")
+        .select(col(corpusId), col(corpusVec), col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id")
+        .parquet(s"$staging/corpus")
+      Seq("merge" -> "corpus")
+    }
   }
-
-  /** Replay a pending IVF maintenance commit after a crash, or discard
-    * an incomplete stage — the [[graft.ops.Retrieval.recoverBm25Index]]
-    * twin. True iff a pending commit was completed (the interrupted op
-    * FINISHED; don't retry it). */
-  def recoverIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String
-  ): Boolean = IndexCommit.recover(spark, path)
 
   /** OFFLINE maintenance: fold the per-append small file-sets of the
     * index corpus back into ~one file per `list_id` — identical rows,
@@ -677,15 +658,12 @@ object Similarity {
   def compactIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String
-  ): Unit = {
-    IndexCommit.recover(spark, path)
+  ): Unit = IndexCommit.maintain(spark, path) { staging =>
     spark.read.parquet(s"$path/corpus")
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"${IndexCommit.stagingDir(path)}/corpus")
-    IndexCommit.commit(IndexCommit.fsFor(spark, path),
-      new org.apache.hadoop.fs.Path(path),
-      Seq("swap" -> "corpus") ++ IndexCommit.stageTagCompaction(spark, path))
+      .parquet(s"$staging/corpus")
+    Seq("swap" -> "corpus") ++ IndexCommit.stageTagCompaction(spark, path)
   }
 
   /** TAKEDOWN: remove vectors from the persisted index corpus by id —
@@ -702,16 +680,16 @@ object Similarity {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame of vector ids, got ${ids.columns.toSeq}")
     val spark = ids.sparkSession
-    IndexCommit.recover(spark, path)
-    val corpus = spark.read.parquet(s"$path/corpus")
-    val rmIds = broadcast(ids.select(col(ids.columns.head)
-      .cast(corpus.schema(corpusId).dataType).as(corpusId)).distinct())
-    corpus.join(rmIds, Seq(corpusId), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"${IndexCommit.stagingDir(path)}/corpus")
-    IndexCommit.commit(IndexCommit.fsFor(spark, path),
-      new org.apache.hadoop.fs.Path(path), Seq("swap" -> "corpus"))
+    IndexCommit.maintain(spark, path) { staging =>
+      val corpus = spark.read.parquet(s"$path/corpus")
+      val rmIds = broadcast(ids.select(col(ids.columns.head)
+        .cast(corpus.schema(corpusId).dataType).as(corpusId)).distinct())
+      corpus.join(rmIds, Seq(corpusId), "left_anti")
+        .repartition(col("list_id"))
+        .write.mode("overwrite").partitionBy("list_id")
+        .parquet(s"$staging/corpus")
+      Seq("swap" -> "corpus")
+    }
   }
 
   /** INDEX HEALTH REPORT — the describe an operator runs before

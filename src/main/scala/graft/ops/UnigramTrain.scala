@@ -201,15 +201,9 @@ object UnigramTrain {
     require(maxPieceLen >= 1, "maxPieceLen must be >= 1")
     vocabTable(spark, pieces)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/vocab")
-    val statsSchema = StructType(Seq(
-      StructField("vocab_size", LongType, nullable = false),
-      StructField("total_cnt", LongType, nullable = false),
-      StructField("max_piece_len", IntegerType, nullable = false)))
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        Row(pieces.size.toLong, pieces.map(_.count).sum, maxPieceLen)),
-      statsSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+    IndexCommit.writeRow(spark, s"$path/stats",
+      "vocab_size" -> pieces.size.toLong, "total_cnt" -> pieces.map(_.count).sum,
+      "max_piece_len" -> maxPieceLen)
   }
 
   /** Load a [[saveTokenizer]] artifact. The vocabulary collects to the

@@ -677,7 +677,10 @@ object StreamingEval {
     * batch must not find its own first attempt's fingerprints (it
     * would cut every window of its own documents). Readers union the
     * subdirs (`spark.read.option("recursiveFileLookup", "true")
-    * .parquet(outPath)`). */
+    * .parquet(outPath)`). Each batch first completes a fold
+    * ([[compactSpanIndex]], [[removeFromSpanIndex]]) that crashed after
+    * its marker ([[graft.ops.IndexCommit.recover]]), so it never reads
+    * an index whose folded versions are half-published. */
   def spanDedupStream(
       docs: DataFrame,
       textCol: String,
@@ -688,6 +691,7 @@ object StreamingEval {
   ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
+      graft.ops.IndexCommit.recover(spark, indexPath)
       val root = new org.apache.hadoop.fs.Path(indexPath)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       val standing =
@@ -717,16 +721,14 @@ object StreamingEval {
     * must not).
     *
     * Crash safety: the distinct union stages OUTSIDE the version
-    * namespace (`compact_staging` — invisible to readers); a `_TARGET`
-    * marker written INTO the staged dir (after the stage commits)
-    * records the target name and the full superseded-version list, and
-    * from that point the stage is authoritative — the commit sequence
-    * (delete superseded versions, rename staging to the target) is
-    * idempotent, so a crash anywhere is recovered by the next call's
-    * preamble replaying it; a stage WITHOUT a marker is an incomplete
-    * write and is discarded (the source versions are all still
-    * present). The marker file rides the rename and is ignored by
-    * parquet readers (underscore prefix, like `_SUCCESS`). */
+    * namespace (the root's `_staging` dir — invisible to readers) and
+    * publishes through one [[graft.ops.IndexCommit]] marker: `delete`
+    * each superseded version, then `swap` the staged set in as the
+    * target version. From the marker on the stage is authoritative and
+    * a crash anywhere is completed by the next fold's or the next
+    * [[spanDedupStream]] batch's recovery preamble; a stage WITHOUT a
+    * marker is an incomplete write and is discarded (the source
+    * versions are all still present). */
   def compactSpanIndex(
       spark: SparkSession,
       indexPath: String,
@@ -761,46 +763,45 @@ object StreamingEval {
       _.join(broadcast(rmH), Seq("h"), "left_anti"))
   }
 
-  /** The shared fold: crash-recover any pending staged compaction, then
-    * union-distinct the versions strictly below `upToBatchId`, apply
-    * `transform`, and publish as the highest folded version through the
-    * authoritative `_TARGET` marker (idempotent commit replay — see
-    * [[compactSpanIndex]]'s scaladoc for the full contract). */
+  /** The shared fold: one [[graft.ops.IndexCommit]] maintenance op
+    * over [[stageSpanFold]] (see [[compactSpanIndex]]'s scaladoc for
+    * the contract). */
   private def foldSpanVersions(
       spark: SparkSession,
       indexPath: String,
       upToBatchId: Long,
       minVersions: Int,
       transform: DataFrame => DataFrame
-  ): Unit = {
+  ): Unit =
+    graft.ops.IndexCommit.maintain(spark, indexPath)(_ =>
+      stageSpanFold(spark, indexPath, upToBatchId, minVersions, transform))
+
+  /** [[foldSpanVersions]]'s staging half: union-distinct the versions
+    * strictly below `upToBatchId`, apply `transform`, and stage the
+    * result as the highest folded version. Returns the commit actions —
+    * delete the other folded versions, swap the target in (the target
+    * is never a `delete`: a replay re-runs deletes after the swap) —
+    * empty when fewer than `minVersions` versions qualify (or the index
+    * does not exist yet). */
+  private[graft] def stageSpanFold(
+      spark: SparkSession,
+      indexPath: String,
+      upToBatchId: Long,
+      minVersions: Int,
+      transform: DataFrame => DataFrame
+  ): Seq[(String, String)] = {
     val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    val staging = new org.apache.hadoop.fs.Path(indexPath, "compact_staging")
-    val marker = new org.apache.hadoop.fs.Path(staging, "_TARGET")
-    def commit(): Unit = {
-      val lines = new String(org.apache.hadoop.io.IOUtils
-        .readFullyToByteArray(fs.open(marker)), "UTF-8").split("\n").map(_.trim)
-      val target = lines.head
-      lines.tail.filter(_.nonEmpty).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(indexPath, v), true)
-      }
-      fs.rename(staging, new org.apache.hadoop.fs.Path(indexPath, target))
-      ()
-    }
-    // crash recovery before any new work
-    if (fs.exists(marker)) commit()
-    else if (fs.exists(staging)) fs.delete(staging, true)
+    val fs = graft.ops.IndexCommit.fsFor(spark, indexPath)
+    if (!fs.exists(root)) return Seq.empty
     val vs = fs.listStatus(root).map(_.getPath.getName)
       .filter(_.matches("v\\d+"))
       .filter(_.drop(1).toLong < upToBatchId)
       .sorted
-    if (vs.length < minVersions) return
+    if (vs.length < minVersions) return Seq.empty
     transform(spark.read.parquet(vs.map(v => s"$indexPath/$v"): _*).distinct())
-      .write.mode("overwrite").parquet(staging.toString)
-    graft.ops.IndexCommit.atomicWrite(fs, marker,
-      (vs.last +: vs).mkString("\n").getBytes("UTF-8"))
-    commit()
+      .write.mode("overwrite")
+      .parquet(graft.ops.IndexCommit.stagedPath(indexPath, vs.last))
+    vs.init.map("delete" -> _) :+ ("swap" -> vs.last)
   }
 
   /** Streaming LEXICAL SERVING: a stream of text queries answered
@@ -989,13 +990,13 @@ object StreamingEval {
     * one — this is also the flat indexes' compaction point (the
     * [[compactSpanIndex]] sibling for unversioned layouts).
     *
-    * Crash safety: the filtered copy writes under the hidden
-    * `_tk_staging` dir (readers of the live index never see it), and
-    * the `_COMMIT` marker naming the doomed live files is the point of
-    * no return — [[recoverIngestIndex]] replays a marked stage and
-    * discards an unmarked one, and both entry points run it as their
-    * preamble. Idempotent replay: deleting an already-deleted file and
-    * moving an already-moved one are no-ops.
+    * Crash safety: one [[graft.ops.IndexCommit]] maintenance op. The
+    * filtered copy stages under the root's hidden `_staging` dir
+    * (parquet reads of the flat root never see it), and the marker —
+    * `delete` each live data file frozen at stage time, then `merge .`
+    * the filtered copy into the root — is the point of no return. Its
+    * recovery preamble also completes a crashed [[ingestBatch]]
+    * append, so the rewrite sees (and filters) those rows too.
     *
     * Concurrency contract: run with the ingest stream STOPPED (the
     * [[compactSpanIndex]] rule — one writer per index root). */
@@ -1004,94 +1005,46 @@ object StreamingEval {
       indexPath: String,
       removedIds: DataFrame,
       idCol: String
-  ): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    recoverIngestIndex(spark, indexPath)
-    // a crashed stream may have left a MARKED append stage: publish it
-    // first, so the takedown's rewrite sees (and filters) those rows too
-    recoverIngestAppend(spark, indexPath)
-    // an index with no data files (never appended, or fully emptied by a
-    // previous takedown whose staged write produced none) has nothing to
-    // rewrite — and asking parquet to infer its schema would throw
-    val hasData = fs.listStatus(root).exists(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-    if (!hasData) return
-    stageIngestTakedown(spark, indexPath, removedIds, idCol)
-    ingestCommit(fs, root)
-  }
+  ): Unit =
+    graft.ops.IndexCommit.maintain(spark, indexPath)(_ =>
+      stageIngestTakedown(spark, indexPath, removedIds, idCol))
 
-  /** Replay a pending [[removeFromIngestIndex]] commit left by a crash
-    * (marked stage = authoritative), or discard an incomplete stage.
-    * Returns true iff a pending commit was completed — the interrupted
-    * takedown FINISHED and must not be retried. Call after an unclean
-    * shutdown before restarting the ingest stream. */
-  def recoverIngestIndex(spark: SparkSession, indexPath: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(root, "_tk_staging")
-    if (!fs.exists(staging)) return false
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_COMMIT"))) {
-      ingestCommit(fs, root); true
-    } else {
-      fs.delete(staging, true); false
-    }
-  }
-
-  /** The stage-then-mark half of [[removeFromIngestIndex]], split out so
-    * crash-recovery specs can stop the world exactly at the marker (the
-    * [[graft.ops.IndexCommit.writeMarker]] convention). */
+  /** [[removeFromIngestIndex]]'s staging half, split out so
+    * crash-recovery specs can stop the world at the marker (the
+    * [[graft.ops.IndexCommit.writeMarker]] convention). Returns the
+    * commit actions, empty for an index with no data files (never
+    * appended, or emptied by a previous takedown) — nothing to rewrite,
+    * and asking parquet to infer its schema would throw. */
   private[graft] def stageIngestTakedown(
       spark: SparkSession,
       indexPath: String,
       removedIds: DataFrame,
       idCol: String
-  ): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(root, "_tk_staging")
+  ): Seq[(String, String)] = {
     // the doomed file list is FROZEN at stage time: files the commit
     // must delete are exactly the live data files the filtered copy
     // was derived from
-    val live = fs.listStatus(root)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
+    val live = liveDataFiles(spark, indexPath)
+    if (live.isEmpty) return Seq.empty
     spark.read.parquet(indexPath)
       .join(broadcast(removedIds.select(col(idCol)).distinct()),
         Seq(idCol), "left_anti")
       .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(staging, "data").toString)
-    graft.ops.IndexCommit.atomicWrite(fs,
-      new org.apache.hadoop.fs.Path(staging, "_COMMIT"),
-      live.mkString("\n").getBytes("UTF-8"))
+      .parquet(graft.ops.IndexCommit.stagedPath(indexPath, graft.ops.IndexCommit.Root))
+    live.map("delete" -> _) :+ ("merge" -> graft.ops.IndexCommit.Root)
   }
 
-  /** The idempotent commit the `_COMMIT` marker describes: delete the
-    * doomed live files, move the staged data files up, drop the
-    * staging dir. */
-  private def ingestCommit(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path
-  ): Unit = {
-    val staging = new org.apache.hadoop.fs.Path(root, "_tk_staging")
-    val marker = new org.apache.hadoop.fs.Path(staging, "_COMMIT")
-    val doomed = new String(org.apache.hadoop.io.IOUtils
-      .readFullyToByteArray(fs.open(marker)), "UTF-8")
-      .split("\n").map(_.trim).filter(_.nonEmpty)
-    doomed.foreach(f =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-    val data = new org.apache.hadoop.fs.Path(staging, "data")
-    if (fs.exists(data)) fs.listStatus(data).foreach { st =>
-      val n = st.getPath.getName
-      if (!st.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
-        fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root, n))
-        ()
-      }
-    }
-    fs.delete(staging, true)
-    ()
+  /** The data files of a flat ingest root (names without a `_`/`.`
+    * prefix: not fences, stages or checksums); empty when the root does
+    * not exist. */
+  private def liveDataFiles(spark: SparkSession, indexPath: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(indexPath)
+    val fs = graft.ops.IndexCommit.fsFor(spark, indexPath)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath.getName)
   }
 
   /** Streaming EMBEDDING-DRIFT monitor — the [[driftMonitorStream]]
@@ -1299,7 +1252,6 @@ object StreamingEval {
       ingestBatch(batch, batchId, indexPath, hashFn, dedupFn)
     }
 
-  private val IngestStagingName = "_ing_staging"
   private val IngestTagDirName = "_batches"
 
   /** Exactly-once fence probe for the flat ingest indexes: tags are
@@ -1390,30 +1342,15 @@ object StreamingEval {
     }
   }
 
-  /** Replay a marked exactly-once ingest append left by a crash, or
-    * discard an unmarked (incomplete) stage. Returns true iff a pending
-    * commit was completed. Runs as the preamble of every ingest batch
-    * and of [[removeFromIngestIndex]]. */
-  def recoverIngestAppend(spark: SparkSession, indexPath: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(root, IngestStagingName)
-    if (!fs.exists(staging)) return false
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_COMMIT"))) {
-      replayIngestAppend(fs, root); true
-    } else {
-      fs.delete(staging, true); false
-    }
-  }
-
   /** Preamble for a NEW stream incarnation (a fresh checkpoint) against
     * a standing ingest index: batch ids restart at 0, so the previous
     * incarnation's fences must drop — otherwise the new stream's first
     * batches find old tags and silently no-op. Only call after a CLEAN
-    * stop (and after [[recoverIngestAppend]]): a same-checkpoint
-    * restart must NOT clear, its retried batch id relies on the fence.
-    * The flat-index analogue of [[graft.ops.IndexCommit.clearTags]]
-    * (where the index-seeding save performs this implicitly). */
+    * stop (and after [[graft.ops.IndexCommit.recover]]): a
+    * same-checkpoint restart must NOT clear, its retried batch id
+    * relies on the fence. The flat-index analogue of the tag reset in
+    * [[graft.ops.IndexCommit.fresh]] (where the index-seeding save
+    * performs this implicitly). */
   def clearIngestTags(spark: SparkSession, indexPath: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(indexPath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1421,44 +1358,19 @@ object StreamingEval {
     ()
   }
 
-  /** The idempotent publish the `_COMMIT` marker describes: move each
-    * staged data file into the flat root (files already moved are no
-    * longer listed), fence the batch id the marker names, drop the
-    * stage. From the marker's existence on, the append is
-    * authoritative — a crash anywhere in here is completed by
-    * [[recoverIngestAppend]]. */
-  private def replayIngestAppend(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val staging = new org.apache.hadoop.fs.Path(root, IngestStagingName)
-    val marker = new org.apache.hadoop.fs.Path(staging, "_COMMIT")
-    val batchId = new String(org.apache.hadoop.io.IOUtils
-      .readFullyToByteArray(fs.open(marker)), "UTF-8").trim
-    val dataDir = new org.apache.hadoop.fs.Path(staging, "data")
-    if (fs.exists(dataDir))
-      fs.listStatus(dataDir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-          fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root, n)); ()
-        }
-      }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, IngestTagDirName))
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$root/$IngestTagDirName/b$batchId"), true).close()
-    fs.delete(staging, true)
-    ()
-  }
-
   /** One exactly-once ingest micro-batch — the foreachBatch body of
     * every modality's ingest stream, split out so crash/retry specs can
     * drive it directly. The batch's admitted rows and its batch-id
-    * fence publish in ONE marker-fenced commit: a crash before the
-    * marker discards the stage (and the retry re-vets — the index never
-    * saw the attempt), a crash after it is completed by the next call's
-    * recovery preamble, and a retry of a committed batch id no-ops — so
-    * a foreachBatch replay can neither double-append signature rows
-    * (counts stayed honest before only at CLASS level) nor bloat the
-    * file set. */
+    * fence publish in ONE [[graft.ops.IndexCommit]] commit (`merge .`
+    * the rows into the flat root, `merge _batches` the fence file): a
+    * crash before the marker discards the stage (and the retry re-vets
+    * — the index never saw the attempt), a crash after it is completed
+    * by the next call's recovery preamble (which also completes a
+    * crashed [[removeFromIngestIndex]] takedown, so the batch never
+    * vets against a half-deleted index), and a retry of a committed
+    * batch id no-ops — so a foreachBatch replay can neither
+    * double-append signature rows (counts stayed honest before only at
+    * CLASS level) nor bloat the file set. */
   private[graft] def ingestBatch(
       batch: DataFrame,
       batchId: Long,
@@ -1467,33 +1379,30 @@ object StreamingEval {
       dedupFn: (DataFrame, DataFrame) => DataFrame
   ): Unit = {
     val spark = batch.sparkSession
-    val path = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverIngestAppend(spark, indexPath)
-    if (ingestTagCommitted(fs, indexPath, batchId)) return
-    val hashes = hashFn(batch)
-    // first batch against a not-yet-created (or tag-only) index: empty
-    // frame of the hash schema (an existence probe, not try/catch —
-    // Spark logs the failed read's full stack before the exception
-    // surfaces, and a root holding only fences/staging has no schema)
-    val hasData = fs.exists(path) && fs.listStatus(path).exists(st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-    val index =
-      if (hasData) spark.read.parquet(indexPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hashes.schema)
-    val admitted = dedupFn(index, hashes)
-    // stage the admissions, mark, publish: the NEXT batch's read sees
-    // them, which is what makes cross-batch dedup work. An empty
-    // admission set stages no data files and still fences the tag.
-    val staging = s"$indexPath/$IngestStagingName"
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    admitted.write.mode("overwrite").parquet(s"$staging/data")
-    graft.ops.IndexCommit.atomicWrite(fs,
-      new org.apache.hadoop.fs.Path(s"$staging/_COMMIT"),
-      batchId.toString.getBytes("UTF-8"))
-    replayIngestAppend(fs, path)
+    val fs = graft.ops.IndexCommit.fsFor(spark, indexPath)
+    graft.ops.IndexCommit.maintain(spark, indexPath) { staging =>
+      if (ingestTagCommitted(fs, indexPath, batchId)) Seq.empty
+      else {
+        val hashes = hashFn(batch)
+        // first batch against a not-yet-created (or tag-only) index: empty
+        // frame of the hash schema (an existence probe, not try/catch —
+        // Spark logs the failed read's full stack before the exception
+        // surfaces, and a root holding only fences/staging has no schema)
+        val index =
+          if (liveDataFiles(spark, indexPath).nonEmpty) spark.read.parquet(indexPath)
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hashes.schema)
+        // stage the admissions and the fence, mark, publish: the NEXT
+        // batch's read sees them, which is what makes cross-batch dedup
+        // work. An empty admission set stages no data files and still
+        // fences the tag.
+        dedupFn(index, hashes).write.mode("overwrite").parquet(
+          graft.ops.IndexCommit.stagedPath(indexPath, graft.ops.IndexCommit.Root))
+        fs.create(new org.apache.hadoop.fs.Path(
+          s"$staging/$IngestTagDirName/b$batchId"), true).close()
+        Seq("merge" -> graft.ops.IndexCommit.Root, "merge" -> IngestTagDirName)
+      }
+    }
   }
 
   /** Streaming SCD2 MAINTENANCE: a CDC/observation stream keeps a

@@ -136,7 +136,7 @@ class EdgeCasesSpec extends SparkSpec {
       "c5": {"type": "direct", "weight": 0.2},
       "c6": {"type": "direct", "weight": 0.2}
     }}"""
-    val path = java.nio.file.Files.createTempFile("order", ".json")
+    val path = java.nio.file.Paths.get(tempDir("order"), "order.json")
     java.nio.file.Files.writeString(path, json)
     val ev = Evaluator.fromJson(path.toString)
     // registration order must be file order (a hash-ordered Map breaks

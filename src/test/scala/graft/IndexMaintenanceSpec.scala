@@ -123,7 +123,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val before = allTables(a)
     Retrieval.stageBm25Append(docs2.toDF("doc_id", "text"), "text", a)
     assert(new java.io.File(s"$a/${IndexCommit.StagingName}").exists())
-    assert(!Retrieval.recoverBm25Index(spark, a), "no marker => nothing to replay")
+    assert(!IndexCommit.recover(spark, a), "no marker => nothing to replay")
     assert(allTables(a) == before, "live index must be untouched")
     Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text", a)
     assert(allTables(a) == allTables(want))
@@ -132,7 +132,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val b = freshBase()
     val actsB = Retrieval.stageBm25Append(docs2.toDF("doc_id", "text"), "text", b)
     IndexCommit.writeMarker(fs, new org.apache.hadoop.fs.Path(b), actsB)
-    assert(Retrieval.recoverBm25Index(spark, b), "marker => replay")
+    assert(IndexCommit.recover(spark, b), "marker => replay")
     assert(allTables(b) == allTables(want))
     assert(searchRows(b) == searchRows(want))
 
@@ -154,10 +154,10 @@ class IndexMaintenanceSpec extends SparkSpec {
     java.nio.file.Files.move(one, dst)
     // and simulate the swap's delete-then-rename torn in half
     fs.delete(new org.apache.hadoop.fs.Path(s"$c/terms"), true)
-    assert(Retrieval.recoverBm25Index(spark, c), "marker => replay")
+    assert(IndexCommit.recover(spark, c), "marker => replay")
     assert(allTables(c) == allTables(want), "mid-replay crash must converge")
     // recovery is idempotent: a second call is a no-op
-    assert(!Retrieval.recoverBm25Index(spark, c))
+    assert(!IndexCommit.recover(spark, c))
     assert(allTables(c) == allTables(want))
   }
 
@@ -183,7 +183,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("term_bucket").parquet(stagingPost)
     IndexCommit.writeMarker(IndexCommit.fsFor(spark, dir),
       new org.apache.hadoop.fs.Path(dir), Seq("swap" -> "postings"))
-    assert(Retrieval.recoverBm25Index(spark, dir))
+    assert(IndexCommit.recover(spark, dir))
     assert(allTables(dir) == before && searchRows(dir) == search)
   }
 
@@ -348,7 +348,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       .parquet(s"$dir/${IndexCommit.StagingName}/corpus")
     IndexCommit.writeMarker(IndexCommit.fsFor(spark, dir),
       new org.apache.hadoop.fs.Path(dir), Seq("swap" -> "corpus"))
-    assert(Similarity.recoverIvfIndex(spark, dir))
+    assert(IndexCommit.recover(spark, dir))
     assert(serve(dir) == serve(wantRm))
   }
 
@@ -444,20 +444,52 @@ class IndexMaintenanceSpec extends SparkSpec {
     graft.streaming.StreamingEval.stageIngestTakedown(
       spark, dir, Seq(Tuple1(1L)).toDF("doc_id"), "doc_id")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_tk_staging/_COMMIT"), false)
-    assert(!graft.streaming.StreamingEval.recoverIngestIndex(spark, dir))
+    assert(!IndexCommit.recover(spark, dir))
     assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == untouched,
       "an unmarked stage must discard with the live index untouched")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_tk_staging")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(IndexCommit.stagingDir(dir))))
     // crash AFTER the marker: recover must finish the takedown
-    graft.streaming.StreamingEval.stageIngestTakedown(
-      spark, dir, Seq(Tuple1(1L)).toDF("doc_id"), "doc_id")
-    assert(graft.streaming.StreamingEval.recoverIngestIndex(spark, dir))
+    IndexCommit.writeMarker(fs, new org.apache.hadoop.fs.Path(dir),
+      graft.streaming.StreamingEval.stageIngestTakedown(
+        spark, dir, Seq(Tuple1(1L)).toDF("doc_id"), "doc_id"))
+    assert(IndexCommit.recover(spark, dir))
     val after = spark.read.parquet(dir)
     assert(after.select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L),
       "a marked stage is authoritative: replay completes the takedown")
     // recovery is idempotent: nothing pending afterwards
-    assert(!graft.streaming.StreamingEval.recoverIngestIndex(spark, dir))
+    assert(!IndexCommit.recover(spark, dir))
+  }
+
+  test("ingest batch after a crashed takedown completes it before vetting") {
+    import graft.ops.Dedup
+    import graft.streaming.StreamingEval
+    import org.apache.hadoop.fs.Path
+    val dir = tempDir("ingest-tk-crash")
+    val hashFn = (b: DataFrame) => Dedup.polySignatures(b, "text", "doc_id", 8, 3)
+    val dedupFn = (index: DataFrame, sigs: DataFrame) => {
+      val hits = Dedup.incrementalNearDupPairsFromSigs(index, sigs, "doc_id", 0.5, 8, 4)
+        .select(col("new_id")).distinct()
+      sigs.join(hits, sigs("doc_id") === hits("new_id"), "left_anti")
+    }
+    val kept = "alpha beta gamma delta epsilon zeta"
+    StreamingEval.ingestBatch(Seq((1L, kept)).toDF("doc_id", "text"), 0L, dir,
+      hashFn, dedupFn)
+    StreamingEval.ingestBatch(Seq((2L, "one two three four five six")).toDF("doc_id", "text"),
+      1L, dir, hashFn, dedupFn)
+    // a takedown of doc 2 reached its marker, then the crash: the frozen
+    // live file holding the RETAINED doc 1 is already deleted
+    val fs = IndexCommit.fsFor(spark, dir)
+    IndexCommit.writeMarker(fs, new Path(dir), StreamingEval.stageIngestTakedown(
+      spark, dir, Seq(Tuple1(2L)).toDF("doc_id"), "doc_id"))
+    val keptFile = spark.read.parquet(dir).filter(col("doc_id") === 1L)
+      .select(input_file_name()).head().getString(0)
+    fs.delete(new Path(keptFile), false)
+    // the next batch must vet against the completed takedown: the twin of
+    // the retained doc is rejected
+    StreamingEval.ingestBatch(Seq((11L, kept)).toDF("doc_id", "text"), 2L, dir,
+      hashFn, dedupFn)
+    assert(spark.read.parquet(dir).select("doc_id").collect().map(_.getLong(0)).toSet ==
+      Set(1L))
   }
 
   test("forward sidecar: append ≡ rebuild, bucket-pruned takedown, compaction folds, tags fence") {

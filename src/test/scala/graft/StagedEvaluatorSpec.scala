@@ -163,7 +163,7 @@ class StagedEvaluatorSpec extends SparkSpec {
         |    criteria:
         |      bid_amount: {type: min_ratio, weight: 1.0}
         |""".stripMargin
-    val yamlPath = Files.createTempFile("staged", ".yaml")
+    val yamlPath = java.nio.file.Paths.get(tempDir("staged"), "staged.yaml")
     Files.writeString(yamlPath, yamlText)
     val result = StagedEvaluator.fromYaml(yamlPath.toString).evaluate(bids5)
     assert(survivors(result).size == 3)
@@ -176,7 +176,7 @@ class StagedEvaluatorSpec extends SparkSpec {
         |  {"name": "Economic",
         |   "criteria": {"bid_amount": {"type": "min_ratio", "weight": 1.0}}}
         |]}""".stripMargin
-    val jsonPath = Files.createTempFile("staged", ".json")
+    val jsonPath = java.nio.file.Paths.get(tempDir("staged"), "staged.json")
     Files.writeString(jsonPath, jsonText)
     val jres = StagedEvaluator.fromJson(jsonPath.toString).evaluate(bids5)
     assert(jres.columns.contains("eliminated_at_stage"))

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.ops.IndexCommit
 import graft.streaming.StreamingEval
 import graft.streaming.StreamingEval.{SessionEvent, SessionOut}
 
@@ -735,22 +736,26 @@ class StreamingSpec extends SparkSpec {
     // crash AFTER the marker: hand-stage batch 3 exactly as ingestBatch
     // does, mark it, "crash" — recovery must publish rows + fence once
     val staged = hashFn(Seq((6L, doc(6))).toDF("doc_id", "text"))
-    staged.write.mode("overwrite").parquet(s"$idx/_ing_staging/data")
-    graft.ops.IndexCommit.atomicWrite(fs, new Path(s"$idx/_ing_staging/_COMMIT"),
-      "3".getBytes("UTF-8"))
-    assert(StreamingEval.recoverIngestAppend(spark, idx), "marked stage must replay")
+    val staging = IndexCommit.stagingDir(idx)
+    staged.write.mode("overwrite")
+      .parquet(IndexCommit.stagedPath(idx, IndexCommit.Root))
+    fs.create(new Path(s"$staging/_batches/b3"), true).close()
+    IndexCommit.writeMarker(fs, new Path(idx),
+      Seq("merge" -> IndexCommit.Root, "merge" -> "_batches"))
+    assert(IndexCommit.recover(spark, idx), "marked stage must replay")
     assert(ids() == Set(1L, 2L, 4L, 6L))
     assert(fs.exists(new Path(s"$idx/_batches/b3")))
-    assert(!fs.exists(new Path(s"$idx/_ing_staging")))
+    assert(!fs.exists(new Path(staging)))
     // the retry of the recovered batch no-ops
     StreamingEval.ingestBatch(
       Seq((6L, doc(6))).toDF("doc_id", "text"), 3L, idx, hashFn, dedupFn)
     assert(spark.read.parquet(idx).count() == 4L)
     // crash BEFORE the marker: an unmarked stage is discarded untouched
     hashFn(Seq((7L, doc(7))).toDF("doc_id", "text"))
-      .write.mode("overwrite").parquet(s"$idx/_ing_staging/data")
-    assert(!StreamingEval.recoverIngestAppend(spark, idx))
-    assert(!fs.exists(new Path(s"$idx/_ing_staging")) && ids() == Set(1L, 2L, 4L, 6L))
+      .write.mode("overwrite")
+      .parquet(IndexCommit.stagedPath(idx, IndexCommit.Root))
+    assert(!IndexCommit.recover(spark, idx))
+    assert(!fs.exists(new Path(staging)) && ids() == Set(1L, 2L, 4L, 6L))
     // fence compaction: batches 0..3 fold to ONE range summary; old and
     // new tags keep fencing; a fresh batch commits and a re-fold merges
     // the summary with the new fences
@@ -2131,18 +2136,49 @@ class StreamingSpec extends SparkSpec {
       // holds the authoritative set, versions half-gone; the next call's
       // preamble must finish the rename
       val fsRoot = new java.io.File(s"$dir/index")
-      val staged = new java.io.File(fsRoot, "compact_staging")
-      assert(new java.io.File(fsRoot, "v000000002").renameTo(staged))
-      // the rename carried the prior marker's checksum sidecar: clear
-      // both before planting the simulated marker (a real crash leaves a
-      // marker whose fs.create-written checksum matches)
-      new java.io.File(staged, "_TARGET").delete()
-      new java.io.File(staged, "._TARGET.crc").delete()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(staged.toString, "_TARGET"), "v000000002\n")
+      val staged = new java.io.File(fsRoot, IndexCommit.StagingName)
+      assert(staged.mkdir())
+      assert(new java.io.File(fsRoot, "v000000002")
+        .renameTo(new java.io.File(staged, "v000000002")))
+      IndexCommit.writeMarker(
+        org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf()),
+        new org.apache.hadoop.fs.Path(s"$dir/index"), Seq("swap" -> "v000000002"))
       graft.streaming.StreamingEval.compactSpanIndex(spark, s"$dir/index", 3L)
       assert(new java.io.File(fsRoot, "v000000002").exists && !staged.exists)
       assert(fpSet() == before)
+    } finally query.stop()
+  }
+
+  test("span stream batch after a crashed fold still cuts spans seen before the fold") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = tempDir("graft-span-fold-crash")
+    val idx = s"$dir/index"
+    val boiler = (1 to 13).map(i => s"w$i").mkString(" ")
+    val input = MemoryStream[(Long, String)]
+    val query = StreamingEval.spanDedupStream(
+        input.toDF().toDF("doc_id", "text"), "text", "doc_id", idx, s"$dir/out",
+        span = 13)
+      .start()
+    try {
+      Seq(Seq((1L, s"intro $boiler outro")), Seq((2L, "clean text one")),
+          Seq((3L, "clean text two")))
+        .foreach { b => input.addData(b: _*); query.processAllAvailable() }
+      // a fold of v0..v1 reached its marker, then the crash: both folded
+      // versions are already gone and the folded set is not yet swapped in
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
+      IndexCommit.writeMarker(fs, new Path(idx),
+        StreamingEval.stageSpanFold(spark, idx, 2L, 2, identity))
+      Seq("v000000000", "v000000001").foreach(v => fs.delete(new Path(s"$idx/$v"), true))
+      // batch 3 must still cut the boilerplate batch 0 owned
+      input.addData((4L, s"lead $boiler tail"))
+      query.processAllAvailable()
+      val out = spark.read.parquet(s"$dir/out/v000000003")
+        .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
+      assert(out == Map(4L -> "lead tail"), s"got $out")
+      assert(fs.exists(new Path(s"$idx/v000000001")) &&
+        !fs.exists(new Path(IndexCommit.stagingDir(idx))))
     } finally query.stop()
   }
 
