@@ -8,6 +8,9 @@ runs the matching oracle SQL from oracle_sql.json in DuckDB with the
 testdata tables registered as views, and compares values exactly
 (column-name-sorted, like the driver). Dev tool only — NOT part of the
 shipped library.
+
+An output directory without oracle SQL counts as a failure; the exit
+status is 1 on any failure.
 """
 import json
 import sys
@@ -67,16 +70,18 @@ def main() -> int:
         if p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = n_missing = 0
     for d in sorted(out_dir.iterdir()):
         if not d.is_dir():
             continue
         name = d.name
         spark_df = pd.read_parquet(d)
         if name not in oracle_sql:
-            status = "ROWS-ONLY" if len(spark_df) > 0 else "ROWS-ONLY(EMPTY!)"
-            print(f"  {status:10s} {name}: {len(spark_df)} rows")
-            n_rows_only += 1
+            # every registry query carries oracle SQL; a result without
+            # one is unchecked, so it fails
+            print(f"  FAIL       {name}: no oracle SQL ({len(spark_df)} rows)")
+            n_fail += 1
+            n_missing += 1
             continue
         try:
             oracle_df = con.execute(oracle_sql[name]).df()
@@ -94,7 +99,7 @@ def main() -> int:
             print(f"  PASS       {name}: {len(spark_df)} rows")
             n_pass += 1
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail ({n_missing} without oracle SQL)")
     return 1 if n_fail else 0
 
 

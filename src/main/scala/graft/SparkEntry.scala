@@ -9,9 +9,8 @@ import graft.queries.{ParityQueries, PipelineQueries}
   *
   * `queries` maps operator names (SURVEY.md §2 inventory + the
   * training-data-pipeline extensions) to DataFrame builders over the shared
-  * parquet testdata; `oracleSql` carries the DuckDB-equivalent SQL the
-  * driver hash-compares against. Hash-based operators (minhash / simhash /
-  * LSH) are not SQL-expressible portably and ship without oracles.
+  * parquet testdata; `oracleSql` carries, for every query, the
+  * DuckDB-equivalent SQL its result is hash-compared against.
   */
 object SparkEntry {
 
@@ -26,7 +25,7 @@ object SparkEntry {
     ParityQueries.queries ++ PipelineQueries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
     ParityQueries.oracleSql ++ PipelineQueries.oracleSql
 }

@@ -16,13 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * min-hashes `(a*h + b) mod (2^31-1)` with [[PolyMinHashSignature.perms]]
   * constants, all in ONE compiled per-row loop.
   *
-  * The sibling of [[MinHashSignature]] with md5 in place of xxhash64:
-  * every step is arithmetic any engine reproduces (DuckDB oracle-checked
-  * end-to-end in q67), value-identical to the HOF formulation in
-  * `Dedup.polyShingleSignatureHof` (differential-tested) but ~two orders
-  * of magnitude faster — the HOF chain interprets one md5 + numPerms
-  * lambda trees per shingle. CodegenFallback is deliberate, same
-  * rationale as [[MinHashSignature]]. */
+  * Every step is arithmetic any engine reproduces (DuckDB oracle-checked
+  * end-to-end in q41/q67), value-identical to the HOF formulation the
+  * specs keep as its differential oracle, but ~two orders of magnitude
+  * faster — the HOF chain interprets one md5 + numPerms lambda trees per
+  * shingle. CodegenFallback is deliberate: one virtual call per row into
+  * a tight loop beats generated code that would still interpret HOF
+  * lambdas. */
 case class PolyMinHashSignature(child: Expression, numPerms: Int, k: Int)
     extends UnaryExpression with CodegenFallback with Serializable {
 
@@ -52,7 +52,9 @@ case class PolyMinHashSignature(child: Expression, numPerms: Int, k: Int)
   }
 
   override protected def nullSafeEval(input: Any): Any = {
-    // canonicalization identical to MinHashSignature / TextAnalysis
+    // mirror TextAnalysis.canonicalize exactly: lower, collapse \s+ runs
+    // to ' ', then Spark trim (strips ' ' — after the collapse every edge
+    // whitespace IS a space)
     val lowered = input.asInstanceOf[UTF8String].toLowerCase.toString
     val collapsed = ws.matcher(lowered).replaceAll(" ")
     var st = 0
@@ -106,7 +108,7 @@ object PolyMinHashSignature {
       (1000003L * i % 1073741789L + 1L, 998244353L * i % 2147483647L)
     }
 
-  private val digests = new ThreadLocal[java.security.MessageDigest] {
+  private[expressions] val digests = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * interprets its lambdas per element outside whole-stage codegen; at
   * 100 TB the per-vector quantize is the innermost loop of the quantized
   * scan, so like [[DotProduct]] it gets fused single-pass codegen.
-  * Bit-compatible with the HOF formulation in
-  * [[graft.ops.Similarity.quantizeInt8Hof]] for FINITE, non-null element
+  * Bit-compatible with the HOF formulation (the specs'
+  * `HofOracles.quantizeInt8Hof`) for FINITE, non-null element
   * values (the differential-test oracle's domain); on corrupt inputs
   * (null/NaN/Inf elements) the native expressions null the whole result —
   * the engine's "null is loud" contract — where the HOF chain would emit

@@ -12,11 +12,11 @@ import org.apache.spark.sql.types._
   * the estimated-Jaccard numerator of the near-dup pair operators.
   *
   * This runs once per CANDIDATE PAIR, which on a near-dup-rich corpus is
-  * the hot inner loop of `minhashNearDupPairs` / `polyMinhashNearDupPairs`
-  * (and the q39/q57/q66 pipeline compositions built on them): the
-  * `aggregate(zip_with(...))` formulation interprets 2·numHashes lambda
-  * calls and materializes an intermediate array per pair. Here it is one
-  * fused primitive loop inside whole-stage codegen. The HOF formulation
+  * the hot inner loop of `polyMinhashNearDupPairs` /
+  * `incrementalNearDupPairsFromSigs` (and the pipeline compositions built
+  * on them): the `aggregate(zip_with(...))` formulation interprets
+  * 2·numHashes lambda calls and materializes an intermediate array per
+  * pair. Here it is one fused primitive loop inside whole-stage codegen. The HOF formulation
   * stays in the operators' specs as the differential oracle.
   *
   * Mismatched lengths yield the agreement over the shorter prefix plus

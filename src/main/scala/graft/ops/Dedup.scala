@@ -19,14 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** HOF formulation of [[graft.expressions.SignatureAgreement]]
-    * (identical values — the differential-test oracle for the native
-    * per-pair agreement loop). */
-  private[graft] def sigAgreementHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x)
-
   /** Distinct word n-grams of the lowercased text (1 = unigram tokens).
     * Empty/whitespace-only documents yield an EMPTY array for every n —
     * without the size guard, n>1 would emit one empty-string gram and any
@@ -39,19 +31,6 @@ object Dedup {
     * is O(tokens²) per document — measured ~10x slower on real corpora. */
   private[graft] def wordGrams(textCol: Column, ngram: Int): Column =
     graft.expressions.WordGrams.wordGrams(textCol, ngram)
-
-  /** HOF formulation of [[wordGrams]] (identical values — the
-    * differential-test oracle for the native expression). */
-  private[graft] def wordGramsHof(textCol: Column, ngram: Int): Column = {
-    val toks = TextAnalysis.tokens(lower(textCol))
-    val grams =
-      if (ngram == 1) toks
-      else when(size(toks) === 0, array().cast("array<string>"))
-        .otherwise(transform(
-          sequence(lit(0), greatest(size(toks) - lit(ngram), lit(0))),
-          i => concat_ws(" ", slice(toks, i + 1, lit(ngram)))))
-    array_distinct(grams)
-  }
 
   /** Character k-shingles of the canonicalized text. */
   def shingles(text: Column, k: Int = 5): Column = {
@@ -88,57 +67,6 @@ object Dedup {
       .drop("__fp", "__rn")
   }
 
-  /** MinHash signature: for each of `numHashes` affine hash functions
-    * `(a_j*h + b_j) mod p`, the minimum over shingle hashes — computed in
-    * ONE traversal of the shingle array with a `numHashes`-wide accumulator
-    * (`aggregate` + `zip_with`). Higher-order functions evaluate outside
-    * whole-stage codegen, so a single pass (instead of `numHashes`
-    * array-min scans, each re-deriving the shingle hashes) is the
-    * difference between seconds and minutes per million documents.
-    * Shingle hashes are folded to 31 bits so `a*h + b` never overflows. */
-  def minhashSignature(text: Column, numHashes: Int = 64, k: Int = 5): Column =
-    graft.expressions.MinHashSignature(text, numHashes, k)
-
-  /** HOF formulation of the same signature (identical values — kept as the
-    * zero-custom-code fallback and differential-test oracle for the native
-    * [[graft.expressions.MinHashSignature]]). */
-  def minhashSignatureHof(text: Column, numHashes: Int = 64, k: Int = 5): Column = {
-    val p = 2147483647L // 2^31 - 1 (Mersenne prime)
-    val hashes = transform(shingles(text, k), s => pmod(xxhash64(s), lit(p)))
-    aggregate(
-      hashes,
-      array_repeat(lit(p), numHashes),
-      (acc, h) => zip_with(
-        acc,
-        sequence(lit(0L), lit(numHashes - 1L)),
-        (m, j) => least(m, pmod(h * (j * lit(2L) + lit(1L)) + (j + lit(1L)) * lit(7919L), lit(p)))))
-  }
-
-  /** Signature -> `bands` band keys (hash of each signature slice). Two
-    * documents land in the same (band, key) bucket iff a whole band of
-    * their signatures agrees — the standard LSH amplification. */
-  def bandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(to_json(struct(slice(signature, b * rowsPerBand + 1, rowsPerBand)))).as("key"))
-    }: _*)
-
-  /** Docs -> (id, minhash signature, exploded band buckets). */
-  def minhashBuckets(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      k: Int = 5
-  ): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    df.select(col(idCol), minhashSignature(col(textCol), numHashes, k).as("signature"))
-      .withColumn("bucket", explode(bandKeys(col("signature"), bands, numHashes / bands)))
-      .select(col(idCol), col("signature"),
-        col("bucket.band").as("band"), col("bucket.key").as("band_key"))
-  }
-
   // ------- oracle-reproducible polynomial MinHash (md5 token hashes)
 
   /** Permutation constants for the poly minhash family — pure arithmetic
@@ -150,7 +78,7 @@ object Dedup {
 
   /** md5-prefix hashes (32-bit, engine-independent) of an array of text
     * units — the shared hash step of the poly minhash family. */
-  private def polyHashes(units: Column): Column =
+  private[graft] def polyHashes(units: Column): Column =
     transform(units, t => conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
 
   /** Distinct-word-token units for [[polyMinhashBands]]. */
@@ -161,22 +89,12 @@ object Dedup {
     * array: min of `(a*h + b) mod p`, empty/null arrays pinned to p.
     * The ONE body both the banding and the HOF-differential paths share
     * — a constant tweak applied to a single copy cannot de-sync them. */
-  private def polySig(hs: Column, numPerms: Int): Seq[Column] =
+  private[graft] def polySig(hs: Column, numPerms: Int): Seq[Column] =
     polyPerms(numPerms).map { case (a, b) =>
       coalesce(
         array_min(transform(hs, h => pmod(h * lit(a) + lit(b), lit(PolyPrime)))),
         lit(PolyPrime))
     }
-
-  private def polySigCols(numPerms: Int): Seq[Column] =
-    polySig(col("__hs"), numPerms)
-
-  /** HOF formulation of [[graft.expressions.PolyMinHashSignature]] over
-    * char `k`-shingles (identical values — the differential-test oracle
-    * for the native expression, and the array the q67 DuckDB SQL mirrors
-    * term-for-term). */
-  private[graft] def polyShingleSignatureHof(text: Column, numPerms: Int, k: Int): Column =
-    array(polySig(polyHashes(shingles(text, k)), numPerms): _*)
 
   /** Incremental-snapshot diff: the rows of `current` whose CANONICAL
     * content ([[TextAnalysis.fingerprint]]: lowercase, whitespace-
@@ -236,12 +154,11 @@ object Dedup {
 
   /** MinHash LSH banding over ENGINE-INDEPENDENT hashes: token hash =
     * first 8 md5 hex chars as a 32-bit int, permutations
-    * `h -> (a*h + b) mod p` with (a, b) from [[polyPerms]]. The
-    * production [[minhashSignature]] is the native xxhash64 codegen path
-    * (faster, but xxhash64 exists in no other engine — rows-only
-    * checkable); every step here is plain md5 + integer arithmetic, so
-    * the complete signature->band pipeline gets a full DuckDB oracle and
-    * any external system can re-derive the buckets bit-for-bit. Min is
+    * `h -> (a*h + b) mod p` with (a, b) from [[polyPerms]]. Every step
+    * is plain md5 + integer arithmetic, so the complete signature->band
+    * pipeline gets a full DuckDB oracle and any external system can
+    * re-derive the buckets bit-for-bit. Word-token units;
+    * [[polyShingleBands]] is the char-shingle sibling. Min is
     * duplicate-invariant, so distinct-vs-raw token lists agree by
     * construction. `a*h < 2^30 * 2^32 = 2^62`: no 64-bit overflow. */
   def polyMinhashBands(
@@ -250,30 +167,58 @@ object Dedup {
       idCol: String,
       numPerms: Int = 16,
       bands: Int = 4
-  ): DataFrame = {
+  ): DataFrame =
+    // two projections: the token hashes are computed once per row, not
+    // once per signature position (CollapseProject keeps a non-cheap
+    // expression that is referenced numPerms times in its own projection)
+    sigBands(
+      df.select(col(idCol), polyTokenHashes(col(textCol)).as("__hs"))
+        .select(col(idCol), array(polySig(col("__hs"), numPerms): _*).as("__sig")),
+      idCol, "__sig", numPerms, bands)
+
+  /** Exploded `(idCol, band, band_key)` buckets of a signature column:
+    * band `b` keys on positions `b*rows+1 .. (b+1)*rows`, '-'-joined
+    * decimal strings. Two documents share a (band, key) bucket iff a
+    * whole band of their signatures agrees — the LSH amplification. */
+  private def sigBands(sigs: DataFrame, idCol: String, sigCol: String,
+      numPerms: Int, bands: Int): DataFrame = {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
     val rows = numPerms / bands
-    val withHs = df.select(col(idCol), polyTokenHashes(col(textCol)).as("__hs"))
-    val sig = polySigCols(numPerms)
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
-        concat_ws("-", sig.slice(b * rows, (b + 1) * rows): _*).as("band_key"))
+        concat_ws("-", (0 until rows).map(r =>
+          element_at(col(sigCol), b * rows + r + 1)): _*).as("band_key"))
     }
-    withHs.select(col(idCol), explode(array(bandCols: _*)).as("bk"))
+    sigs.select(col(idCol), explode(array(bandCols: _*)).as("bk"))
       .select(col(idCol), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
-  /** [[minhashNearDupPairs]] with the engine-independent poly hash family:
-    * identical bucketed-candidate plan shape (ids-only bucket self-join,
-    * signatures re-joined after the distinct) and the SAME text unit —
-    * character `k`-shingles of the canonical form — but every hash is md5
-    * + integer arithmetic, so candidate pairs AND estimated Jaccard get a
-    * full DuckDB oracle — the pair-level companion to [[polyMinhashBands]].
-    * (Shingles, not word tokens: on template-heavy corpora unigram sets
-    * overlap massively and a 16-perm token signature saturates — measured
-    * 65k pairs at threshold 0.5 on 500 synthetic docs vs a few hundred
-    * with shingles.) `est_jaccard` = agreeing positions / numPerms is an
-    * exact small rational in both engines. */
+  /** MinHash LSH band buckets `(idCol, band, band_key)` over the native
+    * char-5-shingle [[graft.expressions.PolyMinHashSignature]] at 16
+    * permutations in 4 bands — the candidate keys
+    * [[polyMinhashNearDupPairs]] joins on at its defaults. Every hash is
+    * md5 + integer arithmetic, so DuckDB re-derives every key (q41).
+    *
+    * Checkpoints: a lazy projection of `df` that reads no checkpoint, so
+    * [[graft.Checkpoints.freeAll]] leaves it valid. */
+  def polyShingleBands(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    sigBands(polySignatures(df, textCol, idCol), idCol, "signature", 16, 4)
+
+  /** MinHash LSH near-duplicate pairs `(id_a, id_b, est_jaccard)`,
+    * `id_a < id_b`, over character `k`-shingles of the canonical form.
+    * Every hash is md5 + integer arithmetic, so candidate pairs AND
+    * estimated Jaccard get a full DuckDB oracle — the pair-level
+    * companion to [[polyMinhashBands]]. (Shingles, not word tokens: on
+    * template-heavy corpora unigram sets overlap massively and a 16-perm
+    * token signature saturates — measured 65k pairs at threshold 0.5 on
+    * 500 synthetic docs vs a few hundred with shingles.) `est_jaccard` =
+    * agreeing positions / numPerms is an exact small rational in both
+    * engines.
+    *
+    * Checkpoints: when `df`'s plan has 32 or more nodes the signatures
+    * are read from a `localCheckpointIfDeep` checkpoint, so
+    * [[graft.Checkpoints.freeAll]] invalidates the result; consume it
+    * before the host's barrier. */
   def polyMinhashNearDupPairs(
       df: DataFrame,
       textCol: String,
@@ -283,24 +228,25 @@ object Dedup {
       bands: Int = 4,
       k: Int = 5
   ): DataFrame = {
-    require(numPerms % bands == 0, "numPerms must be divisible by bands")
-    val rows = numPerms / bands
-    // same materialization barrier + plan-truncating checkpoint as
-    // minhashNearDupPairs: the signature projection feeds the bucket
-    // explode and both join-backs. Native one-pass expression;
-    // polyShingleSignatureHof is the differential.
+    // The repartition is a deliberate materialization barrier: the
+    // signature projection feeds the bucket explode and both join-backs,
+    // and without the exchange Catalyst delays the (non-codegen)
+    // projection past the bucket self-join and recomputes it per JOINED
+    // row; with it the projection runs once per document and
+    // ReuseExchange shares it. A deep input plan (a full pipeline output)
+    // is then truncated by a checkpoint of ids + signatures only —
+    // otherwise every reference subtree repeats the pipeline verbatim and
+    // a long chain OOMs the driver building explain output (observed via
+    // splitLeakagePairs over prepareTrainingCorpus). Shallow plans skip
+    // that job: it cost ~0.6s flat on sub-second queries.
     val sigs = graft.Checkpoints.localCheckpointIfDeep(
-      df.select(col(idCol),
-          graft.expressions.PolyMinHashSignature(col(textCol), numPerms, k).as("signature"))
-        .repartition(col(idCol)))
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("-", (0 until rows).map(r =>
-          element_at(col("signature"), b * rows + r + 1)): _*).as("band_key"))
-    }
-    val buckets = sigs.select(col(idCol), explode(array(bandCols: _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
+      polySignatures(df, textCol, idCol, numPerms, k).repartition(col(idCol)))
+    val buckets = sigBands(sigs, idCol, "signature", numPerms, bands)
 
+    // Candidate pairs carry ONLY the two ids through the bucket self-join
+    // and distinct — shipping the signatures through a dense-bucket
+    // shuffle is what kills this operator at scale. Signatures re-join
+    // afterwards against the (much smaller) per-doc signature frame.
     val a = buckets.select(col(idCol).as("id_a"), col("band"), col("band_key"))
     val b = buckets.select(col(idCol).as("id_b"), col("band"), col("band_key"))
     val candidates = a.join(b, Seq("band", "band_key"))
@@ -308,7 +254,8 @@ object Dedup {
       .select("id_a", "id_b")
       .distinct()
 
-    // native per-pair agreement loop, same as minhashNearDupPairs
+    // native per-pair agreement loop (codegen'd) — this runs once per
+    // candidate pair, the hot inner loop on near-dup-rich corpora
     val agree = graft.expressions.SignatureAgreement(col("sig_a"), col("sig_b"))
     candidates
       .join(sigs.select(col(idCol).as("id_a"), col("signature").as("sig_a")), "id_a")
@@ -1028,8 +975,6 @@ object Dedup {
       numPerms: Int = 16,
       bands: Int = 4
   ): DataFrame = {
-    require(numPerms % bands == 0, "numPerms must be divisible by bands")
-    val rows = numPerms / bands
     // barrier per side: each signature frame feeds its bucket explode AND
     // the verify join-back (same shuffle-hygiene as the self-join path);
     // checkpoint only when the upstream plan is deep enough to need it
@@ -1037,19 +982,10 @@ object Dedup {
       graft.Checkpoints.localCheckpointIfDeep(
         df.select(col(idCol).as(idOut), col("signature").as(sigOut))
           .repartition(col(idOut)))
-    def bucketsOf(sigs: DataFrame, idOut: String, sigCol: String) = {
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws("-", (0 until rows).map(r =>
-            element_at(col(sigCol), b * rows + r + 1)): _*).as("band_key"))
-      }
-      sigs.select(col(idOut), explode(array(bandCols: _*)).as("bk"))
-        .select(col(idOut), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    }
     val idxSigs = prep(indexSigs, "index_id", "sig_i")
     val newSigs = prep(batchSigs, "new_id", "sig_n")
-    val candidates = bucketsOf(newSigs, "new_id", "sig_n")
-      .join(bucketsOf(idxSigs, "index_id", "sig_i"), Seq("band", "band_key"))
+    val candidates = sigBands(newSigs, "new_id", "sig_n", numPerms, bands)
+      .join(sigBands(idxSigs, "index_id", "sig_i", numPerms, bands), Seq("band", "band_key"))
       .select("new_id", "index_id")
       .distinct()
     val agree = graft.expressions.SignatureAgreement(col("sig_n"), col("sig_i"))
@@ -1112,145 +1048,20 @@ object Dedup {
       .select(col("id_a"), col("split_a"), col("id_b"), col("split_b"), col("est_jaccard"))
   }
 
-  /** MinHash LSH near-duplicate candidate pairs with estimated Jaccard
-    * (fraction of agreeing signature positions), filtered at `threshold`.
-    * Join is per (band, band_key) bucket; pair de-dup via id ordering. */
-  def minhashNearDupPairs(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      threshold: Double = 0.7,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      k: Int = 5
-  ): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    // The repartition is a deliberate materialization barrier: without it,
-    // Catalyst delays the (expensive, non-codegen) signature projection
-    // past the bucket self-join and recomputes it per JOINED row. With the
-    // exchange in place the projection runs once per document, and Spark's
-    // ReuseExchange computes the shared subplan once for all 3 references.
-    // The managed checkpoint then TRUNCATES the upstream plan: a deep
-    // input (a full pipeline output) would otherwise be repeated verbatim
-    // in all 3 reference subtrees — plan strings grow 3x the pipeline and
-    // a long chain OOMs the driver building explain output (observed via
-    // splitLeakagePairs over prepareTrainingCorpus). Signatures-only, so
-    // the checkpointed bytes are ids + numHashes ints, not corpus text;
-    // Checkpoints.freeAll reclaims them at the host's barrier. CONDITIONAL
-    // on plan depth: a raw-scan input has nothing to truncate, and the
-    // eager materialization job cost ~0.6s flat on sub-second queries
-    // (round-7 q56 regression) — shallow plans keep just the exchange.
-    val sigs = graft.Checkpoints.localCheckpointIfDeep(
-      df.select(col(idCol),
-        minhashSignature(col(textCol), numHashes, k).as("signature"))
-        .repartition(col(idCol)))
-    val buckets = sigs
-      .withColumn("bucket", explode(bandKeys(col("signature"), bands, numHashes / bands)))
-      .select(col(idCol), col("bucket.band").as("band"), col("bucket.key").as("band_key"))
-
-    // Candidate pairs carry ONLY the two ids through the bucket self-join
-    // and distinct — shipping the 64-long signatures through a dense-bucket
-    // shuffle is what kills this operator at scale. Signatures re-join
-    // afterwards against the (much smaller) per-doc signature frame.
-    val a = buckets.select(col(idCol).as("id_a"), col("band"), col("band_key"))
-    val b = buckets.select(col(idCol).as("id_b"), col("band"), col("band_key"))
-    val candidates = a.join(b, Seq("band", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-
-    // native per-pair agreement loop (codegen'd) — this runs once per
-    // candidate pair, the hot inner loop on near-dup-rich corpora; the
-    // HOF formulation stays as sigAgreementHof's differential oracle
-    val agree = graft.expressions.SignatureAgreement(col("sig_a"), col("sig_b"))
-    candidates
-      .join(sigs.select(col(idCol).as("id_a"), col("signature").as("sig_a")), "id_a")
-      .join(sigs.select(col(idCol).as("id_b"), col("signature").as("sig_b")), "id_b")
-      .withColumn("est_jaccard", agree.cast("double") / lit(numHashes.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-  }
-
-  /** 64-bit SimHash over whitespace tokens: per bit, sign of the sum of
-    * +-1 votes from each token's hash. Near-duplicates differ in few bits
-    * (small Hamming distance). */
-  def simhash(text: Column): Column =
-    graft.expressions.SimHash64(text)
-
-  /** HOF formulation of the same fingerprint (identical values — the
-    * differential-test oracle for the native [[graft.expressions.SimHash64]]). */
-  def simhashHof(text: Column): Column = {
-    val hashes = transform(TextAnalysis.tokens(lower(text)), t => xxhash64(t))
-    // Per bit i: vote = sum over tokens of (bit i of hash set ? +1 : -1);
-    // fingerprint bit i = (vote > 0). Shift counts must be literals in the
-    // functions API, so the 64 bit positions unroll as 64 array folds —
-    // still one codegen'd projection, no shuffle.
-    (0 until 64).map { i =>
-      val vote = aggregate(
-        hashes, lit(0),
-        (acc, h) => acc +
-          when(shiftright(h, i).bitwiseAND(lit(1L)) === lit(1L), 1).otherwise(-1))
-      when(vote > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** SimHash banding over ENGINE-INDEPENDENT hashes (md5) — the
-    * oracle-reproducible sibling of [[simhashWithBands]], same trick as
-    * [[polyMinhashBands]]: the production path hashes with the native
-    * xxhash64 codegen expression (which no other engine implements, so
-    * it is rows-only checkable), while every step here is md5 + integer
-    * arithmetic that DuckDB re-derives bit-for-bit.
-    *
-    * Per token (lowercased, non-distinct — votes weight by occurrence,
-    * like [[simhash]]): the first 16 hex chars of md5(token) supply 64
-    * bits, bit `i` living in hex digit `i/4` at weight `2^(i%4)`. Per
-    * bit, the fingerprint takes the sign of the summed ±1 votes; the 64
-    * bits split into 4 × 16-bit band keys (Hamming-distance-3 neighbors
-    * share a band by pigeonhole). Band values are ≤ 65535 — no signed-64
-    * overflow in any engine, unlike emitting the full fingerprint.
-    *
-    * One pass over the tokens with a 64-wide vote accumulator (the
-    * [[minhashSignatureHof]] shape); md5 runs once per token, digit
-    * extraction once per (token, hex digit). */
-  def simhashPolyBands(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val md5s = transform(TextAnalysis.tokens(lower(col(textCol))), t => md5(t))
-    val digitArrs = transform(md5s, m =>
-      transform(sequence(lit(1), lit(16)),
-        j => conv(m.substr(j, lit(1)), 16, 10).cast("int")))
-    val weights = typedlit(Seq(1, 2, 4, 8))
-    val votes = aggregate(
-      digitArrs,
-      array_repeat(lit(0), 64),
-      (acc, d) => zip_with(
-        acc,
-        sequence(lit(0), lit(63)),
-        (v, i) => {
-          val digit = element_at(d, (floor(i / lit(4)) + lit(1)).cast("int"))
-          val bit = pmod(
-            floor(digit / element_at(weights, pmod(i, lit(4)).cast("int") + lit(1)))
-              .cast("int"),
-            lit(2))
-          v + when(bit === 1, 1).otherwise(-1)
-        }))
-    val bands = (0 until 4).map { b =>
-      (0 until 16).map { r =>
-        when(element_at(votes, lit(b * 16 + r + 1)) > 0, lit(1 << r)).otherwise(lit(0))
-      }.reduce(_ + _).as(s"band$b")
-    }
-    df.select(col(idCol) +: bands: _*)
-  }
-
-  /** SimHash + 4 x 16-bit band keys (documents within Hamming distance 3
-    * share at least one exact 16-bit band — pigeonhole), for bucketed
-    * near-dup candidate generation. */
-  def simhashWithBands(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val sh = simhash(col(textCol))
-    df.select(col(idCol), sh.as("simhash"))
-      .withColumn("band0", col("simhash").bitwiseAND(0xFFFFL))
-      .withColumn("band1", shiftright(col("simhash"), 16).bitwiseAND(0xFFFFL))
-      .withColumn("band2", shiftright(col("simhash"), 32).bitwiseAND(0xFFFFL))
-      .withColumn("band3", shiftright(col("simhash"), 48).bitwiseAND(0xFFFFL))
-  }
+  /** SimHash banding over ENGINE-INDEPENDENT hashes: the native md5
+    * [[graft.expressions.SimHash64]] fingerprint split into 4 × 16-bit
+    * int band keys `band0..band3` (bits 0-15 first). Documents within
+    * Hamming distance 3 share at least one band by pigeonhole. Band values
+    * are ≤ 65535 — no signed-64 overflow in any engine, unlike emitting
+    * the full fingerprint — so DuckDB re-derives them exactly (q43, q65).
+    * Null or blank text has no tokens and bands to zero. */
+  def simhashPolyBands(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    // two projections: the fingerprint is computed once per row, not once
+    // per band (CollapseProject keeps a non-cheap expression that is
+    // referenced four times in its own projection)
+    df.select(col(idCol), graft.expressions.SimHash64(col(textCol)).as("__sh"))
+      .select(col(idCol) +: (0 until 4).map(b =>
+        shiftright(col("__sh"), 16 * b).bitwiseAND(0xFFFFL).cast("int").as(s"band$b")): _*)
 
   /** Exact token-set Jaccard similarity for all pairs within a blocking
     * key, via the inverted-index (explode -> self-join on token -> count
@@ -1273,7 +1084,7 @@ object Dedup {
     // materialization barrier: the tokenize+explode subtree feeds the
     // doc-frequency filter, the sizes aggregate, and BOTH join sides —
     // without the exchange Catalyst re-tokenizes the corpus per reference
-    // (same hazard as minhashNearDupPairs)
+    // (same hazard as polyMinhashNearDupPairs)
     val docTokens = df
       .select(col(idCol).as("id"), blockKey.as("__blk"),
         explode(wordGrams(col(textCol), ngram)).as("tok"))
@@ -1838,7 +1649,7 @@ object Dedup {
       nTables: Int = 3
   ): DataFrame = {
     // ids-only bucket join + distinct, vectors re-joined afterwards (same
-    // shuffle-hygiene rationale as minhashNearDupPairs).
+    // shuffle-hygiene rationale as polyMinhashNearDupPairs).
     val withB = (t: Int) => df.select(
       col(idCol),
       Similarity.hyperplaneBucket(col(vecCol), dim, nBits, 104729L * (t + 1)).as("bucket"),

@@ -41,25 +41,6 @@ object Dsir {
   private[graft] def grams(text: Column, n: Int): Column =
     graft.expressions.WordGrams.wordGramsMulti(text, n)
 
-  /** HOF formulation of [[grams]] — the differential oracle only. An
-    * interpreted lambda RE-EVALUATES its captured expression tree per
-    * element, so the token split runs once per window position — O(len²)
-    * per document (measured: 2x the whole q118 runtime just from the
-    * second `element_at`'s re-split). Never on the hot path. */
-  private[graft] def gramsHof(text: Column, n: Int): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val out =
-      if (n == 1) toks
-      else when(size(toks) === 0, toks)
-        .when(size(toks) < n, array(concat_ws(" ", toks)))
-        .otherwise(transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ",
-            (0 until n).map(j => element_at(toks, i + lit(j + 1))): _*)))
-    // legacy size(null) = -1 would fall into the short-doc branch and emit
-    // [""] for null text; the native expression (and the oracle) yield null
-    when(text.isNotNull, out)
-  }
-
   /** md5-prefix feature bucket in [0, buckets) — the hashing trick over
     * an engine-mirrorable hash (DuckDB:
     * `CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) % buckets`). */

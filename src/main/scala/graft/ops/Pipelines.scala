@@ -42,7 +42,12 @@ object Pipelines {
     * n-gram model (`lmOrder` 2 = [[LmScore.bigramScore]], 3 = the
     * interpolated [[LmScore.trigramScore]]); `maxLengthZ` drops
     * per-language token-count outliers ([[Outliers.dropOutliers]]).
-    * The funnel counts come from the underlying clean stats. */
+    * The funnel counts come from the underlying clean stats.
+    *
+    * Checkpoints: the near-dup stage reads a `localCheckpointIfDeep`
+    * checkpoint of its signatures when the plan reaching it has 32 or
+    * more nodes, so [[graft.Checkpoints.freeAll]] invalidates `df` and
+    * `stats`; consume both before the host's barrier. */
   def prepareTrainingCorpus(
       docs: DataFrame,
       textCol: String = "text",
@@ -54,7 +59,6 @@ object Pipelines {
         "train" -> 0.875, "val" -> 0.0625, "test" -> 0.0625),
       salt: String = "graft",
       htmlClean: Boolean = false,
-      portableHashes: Boolean = true,
       lineDedupMaxDocFreq: Option[Long] = None,
       sourceQuota: Option[(String, Int)] = None,
       shuffleShards: Option[Int] = None,
@@ -67,7 +71,7 @@ object Pipelines {
   ): CleanResult = {
     require(lmOrder == 2 || lmOrder == 3, "lmOrder must be 2 (bigram) or 3 (trigram)")
     val cleaned = cleanCorpus(docs, textCol, idCol,
-      nearDupThreshold, minQuality, langAllowlist, htmlClean, portableHashes,
+      nearDupThreshold, minQuality, langAllowlist, htmlClean,
       lineDedupMaxDocFreq, gopherRules)
     // optional benchmark decontamination on the cleaned survivors, via
     // the Bloom scale path (exact-equivalent, see bloomDecontaminate):
@@ -124,6 +128,16 @@ object Pipelines {
     CleanResult(ordered, cleaned.stats)
   }
 
+  /** Steps 0-4 of the object doc over `docs`: the optional pre-clean
+    * stages, exact dedup, near-dup removal over
+    * [[Dedup.polyMinhashNearDupPairs]] at `nearDupThreshold`, the quality
+    * gate and the language allowlist. Lazy; `stats` counts the funnel in
+    * one pass.
+    *
+    * Checkpoints: the near-dup stage reads a `localCheckpointIfDeep`
+    * checkpoint of its signatures when the plan reaching it has 32 or
+    * more nodes, so [[graft.Checkpoints.freeAll]] invalidates `df` and
+    * `stats`; consume both before the host's barrier. */
   def cleanCorpus(
       docs: DataFrame,
       textCol: String = "text",
@@ -132,7 +146,6 @@ object Pipelines {
       minQuality: Double = 40.0,
       langAllowlist: Seq[String] = Nil,
       htmlClean: Boolean = false,
-      portableHashes: Boolean = true,
       lineDedupMaxDocFreq: Option[Long] = None,
       gopherRules: Option[QualityRules.GopherConfig] = None,
       nfcNormalize: Boolean = false,
@@ -205,26 +218,16 @@ object Pipelines {
     // measured 25-40% SLOWER than re-running the fingerprint window per
     // reference — the dedup subtree is cheap relative to shuffling text
     // payloads. The signature path has its own ids+signature barrier
-    // inside minhashNearDupPairs, which is the expensive projection.)
+    // inside polyMinhashNearDupPairs, which is the expensive projection.)
     val exact = Dedup.dropExactDups(input, textCol, idCol)
 
     // 2. near-dup removal: for every LSH-confirmed pair drop the higher id
     // (greedy transitive-ish reduction: any doc that is the higher side of
     // some pair goes; the lowest id of each near-dup cluster survives).
-    // The DEFAULT signature family is the md5 poly family — reproducible
-    // by any engine, so the production-default pipeline is the
-    // DuckDB-oracle-checked one (q71/q103/q104). portableHashes = false
-    // opts into the xxhash64 fast path (one 8-byte hash call per shingle
-    // vs an md5 per shingle x perm) — same bucketed plan shape, pinned
-    // equivalent by the differential specs, but its hashes exist in no
-    // other engine (rows-only checkable).
-    val pairs =
-      if (portableHashes)
-        Dedup.polyMinhashNearDupPairs(exact, textCol, idCol,
-          threshold = nearDupThreshold)
-      else
-        Dedup.minhashNearDupPairs(exact, textCol, idCol,
-          threshold = nearDupThreshold)
+    // The md5 poly signature family is reproducible by any engine, so the
+    // whole pipeline is DuckDB-oracle-checked (q39/q57/q66/q71/q103/q104).
+    val pairs = Dedup.polyMinhashNearDupPairs(exact, textCol, idCol,
+      threshold = nearDupThreshold)
     val losers = pairs
       .select(col("id_b").as(idCol))
       .distinct()

@@ -18,13 +18,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.expressions.VectorExpressions.dot(a, b)
 
-  /** The same dot product via stock higher-order functions — identical
-    * values (same summation order), ~an order of magnitude slower (HOFs
-    * evaluate interpreted, outside whole-stage codegen). Kept as the
-    * zero-custom-code fallback and as a differential-test oracle. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** Cosine similarity: dot/(sqrt(dot(a,a))*sqrt(dot(b,b))) — the exact
     * formula mirrored by the DuckDB oracle SQL, computed by the one-pass
     * codegen'd [[graft.expressions.CosineSimilarity]] (same element order
@@ -57,23 +50,6 @@ object Similarity {
       graft.expressions.QuantizeExpressions.maxAbs(vec).as("scale"),
       graft.expressions.QuantizeExpressions.int8Codes(vec)
         .cast("array<tinyint>").as("codes"))
-
-  /** HOF formulation of the same quantization (identical values — the
-    * differential-test oracle for the native fused
-    * [[graft.expressions.Int8Codes]]/[[graft.expressions.MaxAbs]]). */
-  def quantizeInt8Hof(vec: Column): Column = {
-    val scale = array_max(transform(vec, x => abs(x.cast("double"))))
-    val codes = transform(vec, { x =>
-      val r = x.cast("double") / scale * lit(127.0)
-      // explicit half-away-from-zero: engines disagree on round()'s mode
-      val q = signum(r) * floor(abs(r) + lit(0.5))
-      greatest(lit(-127.0), least(lit(127.0), q)).cast("byte")
-    })
-    struct(
-      scale.as("scale"),
-      when(scale === 0.0, transform(vec, _ => lit(0).cast("byte")))
-        .otherwise(codes).as("codes"))
-  }
 
   /** Dequantize [[quantizeInt8]] output back to doubles:
     * `code * scale / 127`. Max absolute error is `scale / 254`. */
@@ -198,16 +174,6 @@ object Similarity {
     * reproducible across runs. */
   def hyperplaneBucket(vec: Column, dim: Int, nBits: Int, seed: Long): Column =
     graft.expressions.HyperplaneBits(vec, hyperplanes(dim, nBits, seed))
-
-  /** Composed formulation — nBits separate dot products; identical bucket
-    * keys (differential-test oracle for the fused native expression). */
-  def hyperplaneBucketHof(vec: Column, dim: Int, nBits: Int, seed: Long): Column = {
-    val vd = vec.cast("array<double>")
-    val planes = hyperplanes(dim, nBits, seed)
-    (0 until nBits).map { b =>
-      when(dot(vd, typedlit(planes(b))) >= 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** Deterministic seeded +-1 hyperplanes. */
   def hyperplanes(dim: Int, nBits: Int, seed: Long): Seq[Seq[Double]] = {

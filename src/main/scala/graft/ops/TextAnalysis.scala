@@ -38,10 +38,6 @@ object TextAnalysis {
   def distinctTokenCount(text: Column): Column =
     size(graft.expressions.WordGrams.distinctTokens(text))
 
-  /** HOF formulation of [[distinctTokenCount]] (differential oracle). */
-  private[graft] def distinctTokenCountHof(text: Column): Column =
-    size(array_distinct(tokens(text)))
-
   /** Mean characters per token (whitespace removed / token count). */
   def avgWordLen(text: Column): Column =
     length(regexp_replace(text, "\\s+", "")).cast("double") * lit(1.0) /
@@ -199,28 +195,11 @@ object TextAnalysis {
     * dedupe. Robust to small edits; the document-similarity analogue of
     * Rabin fingerprinting. Returns array<long>. Native one-pass
     * expression ([[graft.expressions.WinnowingFingerprints]]) — the HOF
-    * formulation below is O(len³): its outer lambda re-evaluates the
-    * entire shingle transform (which itself re-canonicalizes) per
-    * window position. */
+    * formulation the specs keep as its differential oracle is O(len³):
+    * its outer lambda re-evaluates the entire shingle transform (which
+    * itself re-canonicalizes) per window position. */
   def winnowingFingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
     graft.expressions.WinnowingFingerprints.winnowing(canonicalize(text), k, w)
-
-  /** HOF formulation of [[winnowingFingerprints]] — differential oracle
-    * only, never the hot path (captured-expression re-evaluation makes
-    * it cubic in document length). */
-  private[graft] def winnowingFingerprintsHof(text: Column, k: Int = 8, w: Int = 4): Column = {
-    val canon = canonicalize(text)
-    val shingleHashes = transform(
-      sequence(lit(0), greatest(length(canon) - lit(k), lit(0))),
-      i => xxhash64(substr(canon, i + 1, lit(k))))
-    // window-min over shingle hashes
-    val mins = transform(
-      sequence(lit(0), greatest(size(shingleHashes) - lit(w), lit(0))),
-      i => array_min(slice(shingleHashes, i + 1, lit(w))))
-    // guard: xxhash64(null) returns the SEED, so without this a null
-    // text would fingerprint as [42] instead of null
-    when(text.isNotNull, array_distinct(mins))
-  }
 
   /** Convenience: full per-document text-analysis projection. */
   def analyze(df: DataFrame, textCol: String): DataFrame = {

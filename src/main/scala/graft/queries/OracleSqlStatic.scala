@@ -1086,6 +1086,128 @@ private[queries] trait OracleSqlStatic { this: PipelineQueries.type =>
          |UNION ALL SELECT node, component, keeper_id FROM singles
          |ORDER BY node""".stripMargin
 
+  /** The q71 cleaning chain as CTEs: exact dedup keeps the min id per
+    * canonical md5 (`exact`), poly-minhash near-dup losers at est
+    * Jaccard >= `nearDupThreshold` drop (`surv`, with text), and `scored`
+    * carries each survivor's quality `qscore` — shared by the cleanCorpus
+    * (q57/q66/q71/q103) and prepareTrainingCorpus (q39/q104/q167)
+    * oracles. */
+  private def cleanChainCtes(nearDupThreshold: Double): String =
+    s"""canon0 AS (
+       |  SELECT doc_id, lang, source, n_chars, text,
+       |    trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS ccanon
+       |  FROM documents
+       |), exact AS (
+       |  SELECT * FROM canon0
+       |  WHERE doc_id IN (SELECT MIN(doc_id) FROM canon0 GROUP BY md5(ccanon))
+       |), ${polyShingleSigCte("exact")}, ${polyPairsCte(nearDupThreshold)}, losers AS (
+       |  SELECT DISTINCT id_b FROM pairs0
+       |), surv AS (
+       |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT id_b FROM losers)
+       |), ${qualityCte("surv", "lang, source, n_chars")}""".stripMargin
+
+  /** cleanCorpus output at `minQuality = 30` (q57, q71). */
+  private def cleanSql(nearDupThreshold: Double): String =
+    s"""WITH ${cleanChainCtes(nearDupThreshold)}
+       |SELECT doc_id, lang, source, n_chars FROM scored
+       |WHERE qscore >= 30.0 ORDER BY doc_id""".stripMargin
+
+  /** cleanCorpus funnel counts at `minQuality = 30` (q66, q103). */
+  private def funnelSql(nearDupThreshold: Double): String =
+    s"""WITH ${cleanChainCtes(nearDupThreshold)}
+       |SELECT
+       |  (SELECT count(*) FROM documents) AS n_input,
+       |  (SELECT count(*) FROM exact) AS n_exact,
+       |  (SELECT count(*) FROM surv) AS n_near,
+       |  (SELECT count(*) FROM scored WHERE qscore >= 30.0) AS n_quality,
+       |  (SELECT count(*) FROM scored WHERE qscore >= 30.0) AS n_output""".stripMargin
+
+  /** prepareTrainingCorpus's enrichment of the `src` rows (doc_id, lang,
+    * source, n_chars, text) as CTEs ending in `enr`: token count,
+    * stop-word language id, canonical fingerprint and the default-salt
+    * split. */
+  private def enrichCtes(src: String): String =
+    s"""hits AS (
+       |  SELECT *,
+       |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('the','and','of','to','a','in','is','that','it','for'))) AS c_en,
+       |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('el','la','de','que','y','en','los','se','del','las'))) AS c_es,
+       |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('le','la','les','de','et','des','un','une','du','est'))) AS c_fr,
+       |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('der','die','das','und','von','zu','den','mit','ist','im'))) AS c_de
+       |  FROM $src
+       |), enr0 AS (
+       |  SELECT doc_id, lang, source, n_chars,
+       |    CASE WHEN len(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')) = 0 THEN 0
+       |         ELSE len(string_split_regex(regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) END AS n_tokens,
+       |    CASE
+       |      WHEN c_en = GREATEST(c_en, c_es, c_fr, c_de) AND c_en > 0 THEN 'en'
+       |      WHEN c_es = GREATEST(c_en, c_es, c_fr, c_de) AND c_es > 0 THEN 'es'
+       |      WHEN c_fr = GREATEST(c_en, c_es, c_fr, c_de) AND c_fr > 0 THEN 'fr'
+       |      WHEN c_de = GREATEST(c_en, c_es, c_fr, c_de) AND c_de > 0 THEN 'de'
+       |      ELSE 'und' END AS lang_id,
+       |    md5(trim(lower(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint,
+       |    CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'graft'), 1, 8)) AS BIGINT) AS DOUBLE) / 4294967296.0 AS uh
+       |  FROM hits
+       |), enr AS (
+       |  SELECT *,
+       |    CASE WHEN uh < 0.875 THEN 'train'
+       |         WHEN uh < 0.9375 THEN 'val'
+       |         WHEN uh < 1.0 THEN 'test'
+       |         ELSE NULL END AS split
+       |  FROM enr0
+       |)""".stripMargin
+
+  /** prepareTrainingCorpus output columns `cols` at `minQuality = 30`
+    * (q39, q104). */
+  private def prepareSql(nearDupThreshold: Double, cols: String): String =
+    s"""WITH ${cleanChainCtes(nearDupThreshold)}, final0 AS (
+       |  SELECT s.doc_id, s.lang, s.source, s.n_chars, v.text
+       |  FROM scored s JOIN surv v USING (doc_id)
+       |  WHERE s.qscore >= 30.0
+       |), ${enrichCtes("final0")}
+       |SELECT $cols FROM enr ORDER BY doc_id""".stripMargin
+
+  /** The pair pipeline on doc_id < 1000 at `threshold` (q47, q67): sig +
+    * band CTEs, the bucketed candidate self-join and the
+    * position-agreement Jaccard estimate (an exact n/16 rational in both
+    * engines). */
+  private def polyPairsSql(threshold: Double): String =
+    s"""WITH ${polyShingleSigCte("documents WHERE doc_id < 1000")}, ${polyPairsCte(threshold)}
+       |SELECT id_a, id_b, est_jaccard FROM pairs0
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** md5-hex SimHash bands of `srcRel`'s (doc_id, text) rows (q43, q65):
+    * bit i lives in hex digit i//4 at weight 2^(i%4); per-bit +-1 vote
+    * sums, sign -> 4 x 16-bit band keys; no tokens -> zero bands. */
+  private def polySimhashSql(srcRel: String): String =
+    s"""WITH base AS (
+       |  SELECT doc_id,
+       |    CASE WHEN len(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g')) = 0 THEN []
+       |         ELSE string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+') END AS toks
+       |  FROM $srcRel
+       |), tok AS (
+       |  SELECT doc_id, unnest(toks) AS t FROM base WHERE len(toks) > 0
+       |), votes AS (
+       |  SELECT doc_id, b.i AS bit,
+       |    SUM(CASE WHEN (CAST(('0x' || substr(md5(t), CAST(b.i // 4 AS INT) + 1, 1)) AS INT)
+       |      // (CASE WHEN b.i % 4 = 0 THEN 1 WHEN b.i % 4 = 1 THEN 2 WHEN b.i % 4 = 2 THEN 4 ELSE 8 END)) % 2 = 1
+       |      THEN 1 ELSE -1 END) AS vote
+       |  FROM tok, range(64) AS b(i)
+       |  GROUP BY doc_id, b.i
+       |), bands AS (
+       |  SELECT doc_id,
+       |    CAST(SUM(CASE WHEN vote > 0 AND bit < 16 THEN (1 << CAST(bit AS INT)) ELSE 0 END) AS INTEGER) AS band0,
+       |    CAST(SUM(CASE WHEN vote > 0 AND bit >= 16 AND bit < 32 THEN (1 << CAST(bit - 16 AS INT)) ELSE 0 END) AS INTEGER) AS band1,
+       |    CAST(SUM(CASE WHEN vote > 0 AND bit >= 32 AND bit < 48 THEN (1 << CAST(bit - 32 AS INT)) ELSE 0 END) AS INTEGER) AS band2,
+       |    CAST(SUM(CASE WHEN vote > 0 AND bit >= 48 THEN (1 << CAST(bit - 48 AS INT)) ELSE 0 END) AS INTEGER) AS band3
+       |  FROM votes GROUP BY doc_id
+       |)
+       |SELECT d.doc_id,
+       |  COALESCE(band0, 0) AS band0, COALESCE(band1, 0) AS band1,
+       |  COALESCE(band2, 0) AS band2, COALESCE(band3, 0) AS band3
+       |FROM (SELECT doc_id FROM $srcRel) d
+       |LEFT JOIN bands USING (doc_id)
+       |ORDER BY d.doc_id""".stripMargin
+
   protected lazy val staticOracleSql: Map[String, String] = Map(
     // bottom-64 uniform sample (md5 unit hash, ties to smaller id) then
     // quantile_cont == Spark exact percentile (q93-pinned parity)
@@ -3922,89 +4044,19 @@ private[queries] trait OracleSqlStatic { this: PipelineQueries.type =>
 
     // stage counts off the same CTE chain as q71; no lang allowlist, so
     // output == afterQuality
-    "q103_funnel_portable" -> {
-      s"""WITH canon0 AS (
-         |  SELECT doc_id, lang, source, n_chars, text,
-         |    trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS ccanon
-         |  FROM documents
-         |), exact AS (
-         |  SELECT * FROM canon0
-         |  WHERE doc_id IN (SELECT MIN(doc_id) FROM canon0 GROUP BY md5(ccanon))
-         |), ${polyShingleSigCte("exact")}, ${polyPairsCte(0.9)}, losers AS (
-         |  SELECT DISTINCT id_b FROM pairs0
-         |), surv AS (
-         |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT id_b FROM losers)
-         |), ${qualityCte("surv", "lang, source, n_chars")}
-         |SELECT
-         |  (SELECT count(*) FROM documents) AS n_input,
-         |  (SELECT count(*) FROM exact) AS n_exact,
-         |  (SELECT count(*) FROM surv) AS n_near,
-         |  (SELECT count(*) FROM scored WHERE qscore >= 30.0) AS n_quality,
-         |  (SELECT count(*) FROM scored WHERE qscore >= 30.0) AS n_output""".stripMargin
-    },
+    "q103_funnel_portable" -> funnelSql(0.9),
+    "q66_corpus_funnel" -> funnelSql(0.8),
 
     // q71's chain -> join text back -> q46/q48/q49/q36-style enrichment,
     // with the default salt 'graft' and dyadic cuts 0.875/0.9375/1.0
-    "q104_prepare_portable" -> {
-      s"""WITH canon0 AS (
-         |  SELECT doc_id, lang, source, n_chars, text,
-         |    trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS ccanon
-         |  FROM documents
-         |), exact AS (
-         |  SELECT * FROM canon0
-         |  WHERE doc_id IN (SELECT MIN(doc_id) FROM canon0 GROUP BY md5(ccanon))
-         |), ${polyShingleSigCte("exact")}, ${polyPairsCte(0.9)}, losers AS (
-         |  SELECT DISTINCT id_b FROM pairs0
-         |), surv AS (
-         |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT id_b FROM losers)
-         |), ${qualityCte("surv", "lang, source, n_chars")}, final0 AS (
-         |  SELECT s.doc_id, s.lang, s.source, s.n_chars, v.text
-         |  FROM scored s JOIN surv v USING (doc_id)
-         |  WHERE s.qscore >= 30.0
-         |), hits AS (
-         |  SELECT *,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('the','and','of','to','a','in','is','that','it','for'))) AS c_en,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('el','la','de','que','y','en','los','se','del','las'))) AS c_es,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('le','la','les','de','et','des','un','une','du','est'))) AS c_fr,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('der','die','das','und','von','zu','den','mit','ist','im'))) AS c_de
-         |  FROM final0
-         |), enr AS (
-         |  SELECT doc_id, lang, source, n_chars,
-         |    CASE WHEN len(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')) = 0 THEN 0
-         |         ELSE len(string_split_regex(regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) END AS n_tokens,
-         |    CASE
-         |      WHEN c_en = GREATEST(c_en, c_es, c_fr, c_de) AND c_en > 0 THEN 'en'
-         |      WHEN c_es = GREATEST(c_en, c_es, c_fr, c_de) AND c_es > 0 THEN 'es'
-         |      WHEN c_fr = GREATEST(c_en, c_es, c_fr, c_de) AND c_fr > 0 THEN 'fr'
-         |      WHEN c_de = GREATEST(c_en, c_es, c_fr, c_de) AND c_de > 0 THEN 'de'
-         |      ELSE 'und' END AS lang_id,
-         |    md5(trim(lower(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint,
-         |    CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'graft'), 1, 8)) AS BIGINT) AS DOUBLE) / 4294967296.0 AS uh
-         |  FROM hits
-         |)
-         |SELECT doc_id, lang, source, n_chars, n_tokens, lang_id, fingerprint,
-         |  CASE WHEN uh < 0.875 THEN 'train'
-         |       WHEN uh < 0.9375 THEN 'val'
-         |       WHEN uh < 1.0 THEN 'test'
-         |       ELSE NULL END AS split
-         |FROM enr ORDER BY doc_id""".stripMargin
-    },
+    "q104_prepare_portable" -> prepareSql(0.9,
+      "doc_id, lang, source, n_chars, n_tokens, lang_id, fingerprint, split"),
+    "q39_training_corpus" -> prepareSql(0.8, "doc_id, split, n_tokens, lang_id"),
 
     // q104's chain + the q90 classifier margin as a gate after the
     // quality stage (between decontamination and enrichment)
     "q167_prepare_clf_gate" -> {
-      s"""WITH canon0 AS (
-         |  SELECT doc_id, lang, source, n_chars, text,
-         |    trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS ccanon
-         |  FROM documents
-         |), exact AS (
-         |  SELECT * FROM canon0
-         |  WHERE doc_id IN (SELECT MIN(doc_id) FROM canon0 GROUP BY md5(ccanon))
-         |), ${polyShingleSigCte("exact")}, ${polyPairsCte(0.9)}, losers AS (
-         |  SELECT DISTINCT id_b FROM pairs0
-         |), surv AS (
-         |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT id_b FROM losers)
-         |), ${qualityCte("surv", "lang, source, n_chars")}, final0 AS (
+      s"""WITH ${cleanChainCtes(0.9)}, final0 AS (
          |  SELECT s.doc_id, s.lang, s.source, s.n_chars, v.text
          |  FROM scored s JOIN surv v USING (doc_id)
          |  WHERE s.qscore >= 30.0
@@ -4020,32 +4072,8 @@ private[queries] trait OracleSqlStatic { this: PipelineQueries.type =>
          |    list_reduce(list_prepend(0.0, list_transform(ts, t ->
          |      $clfWeightsSql[CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % 64 AS INT) + 1])),
          |      (a, b) -> a + b) / len(ts)))) >= 0.45
-         |), hits AS (
-         |  SELECT *,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('the','and','of','to','a','in','is','that','it','for'))) AS c_en,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('el','la','de','que','y','en','los','se','del','las'))) AS c_es,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('le','la','les','de','et','des','un','une','du','est'))) AS c_fr,
-         |    len(list_filter(string_split_regex(regexp_replace(lower(text), '^\\s+|\\s+$$', '', 'g'), '\\s+'), x -> x IN ('der','die','das','und','von','zu','den','mit','ist','im'))) AS c_de
-         |  FROM clfg
-         |), enr AS (
-         |  SELECT doc_id, lang, source, n_chars,
-         |    CASE WHEN len(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')) = 0 THEN 0
-         |         ELSE len(string_split_regex(regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) END AS n_tokens,
-         |    CASE
-         |      WHEN c_en = GREATEST(c_en, c_es, c_fr, c_de) AND c_en > 0 THEN 'en'
-         |      WHEN c_es = GREATEST(c_en, c_es, c_fr, c_de) AND c_es > 0 THEN 'es'
-         |      WHEN c_fr = GREATEST(c_en, c_es, c_fr, c_de) AND c_fr > 0 THEN 'fr'
-         |      WHEN c_de = GREATEST(c_en, c_es, c_fr, c_de) AND c_de > 0 THEN 'de'
-         |      ELSE 'und' END AS lang_id,
-         |    md5(trim(lower(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint,
-         |    CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'graft'), 1, 8)) AS BIGINT) AS DOUBLE) / 4294967296.0 AS uh
-         |  FROM hits
-         |)
-         |SELECT doc_id, lang, source, n_chars, n_tokens, lang_id, fingerprint,
-         |  CASE WHEN uh < 0.875 THEN 'train'
-         |       WHEN uh < 0.9375 THEN 'val'
-         |       WHEN uh < 1.0 THEN 'test'
-         |       ELSE NULL END AS split
+         |), ${enrichCtes("clfg")}
+         |SELECT doc_id, lang, source, n_chars, n_tokens, lang_id, fingerprint, split
          |FROM enr ORDER BY doc_id""".stripMargin
     },
 
@@ -4327,13 +4355,17 @@ private[queries] trait OracleSqlStatic { this: PipelineQueries.type =>
          |)
          |ORDER BY doc_id, band""".stripMargin,
 
-    // pair-level poly minhash over char 5-shingles: sig + band CTEs, then
-    // the bucketed candidate self-join and the position-agreement Jaccard
-    // estimate (an exact n/16 rational in both engines)
-    "q67_poly_near_dup" ->
-      s"""WITH ${polyShingleSigCte("documents WHERE doc_id < 1000")}, ${polyPairsCte(0.5)}
-         |SELECT id_a, id_b, est_jaccard FROM pairs0
-         |ORDER BY id_a, id_b""".stripMargin,
+    // pair-level poly minhash over char 5-shingles
+    "q67_poly_near_dup" -> polyPairsSql(0.5),
+    "q47_near_dup_pairs" -> polyPairsSql(0.7),
+
+    // q62's band keys over char 5-shingle signatures of the whole corpus
+    "q41_minhash_buckets" ->
+      s"""WITH ${polyShingleSigCte("documents")}
+         |SELECT doc_id, band, band_key FROM (
+         |$polyBandSelects
+         |)
+         |ORDER BY doc_id, band""".stripMargin,
 
     // the full cleaning chain mirrored step-for-step: strip script/style +
     // tags, decode entities (ampersand LAST), drop boilerplate lines,
@@ -5281,22 +5313,8 @@ private[queries] trait OracleSqlStatic { this: PipelineQueries.type =>
     // min id per canonical md5), poly-minhash near-dup losers at est
     // Jaccard >= 0.9, then the qualityScore blend term-for-term (all
     // components already proven green in q46/q46b/q48-style oracles)
-    "q71_clean_pipeline" -> {
-      s"""WITH canon0 AS (
-         |  SELECT doc_id, lang, source, n_chars, text,
-         |    trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS ccanon
-         |  FROM documents
-         |), exact AS (
-         |  SELECT * FROM canon0
-         |  WHERE doc_id IN (SELECT MIN(doc_id) FROM canon0 GROUP BY md5(ccanon))
-         |), ${polyShingleSigCte("exact")}, ${polyPairsCte(0.9)}, losers AS (
-         |  SELECT DISTINCT id_b FROM pairs0
-         |), surv AS (
-         |  SELECT * FROM exact WHERE doc_id NOT IN (SELECT id_b FROM losers)
-         |), ${qualityCte("surv", "lang, source, n_chars")}
-         |SELECT doc_id, lang, source, n_chars FROM scored
-         |WHERE qscore >= 30.0 ORDER BY doc_id""".stripMargin
-    },
+    "q71_clean_pipeline" -> cleanSql(0.9),
+    "q57_clean_corpus" -> cleanSql(0.8),
 
     // the pairs -> connected-components chain: the shared poly pair CTEs
     // at threshold 0.9, then transitive closure by recursive CTE; cluster
@@ -5318,37 +5336,8 @@ private[queries] trait OracleSqlStatic { this: PipelineQueries.type =>
          |FROM reach GROUP BY src
          |ORDER BY doc_id""".stripMargin,
 
-    // md5-hex vote bits: bit i lives in hex digit i//4 at weight 2^(i%4);
-    // per-bit +-1 vote sums, sign -> 4 x 16-bit band keys
-    "q65_poly_simhash" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(regexp_replace(lower(text), '^\s+|\s+$', '', 'g')) = 0 THEN []
-        |         ELSE string_split_regex(regexp_replace(lower(text), '^\s+|\s+$', '', 'g'), '\s+') END AS toks
-        |  FROM documents WHERE doc_id < 1000
-        |), tok AS (
-        |  SELECT doc_id, unnest(toks) AS t FROM base WHERE len(toks) > 0
-        |), votes AS (
-        |  SELECT doc_id, b.i AS bit,
-        |    SUM(CASE WHEN (CAST(('0x' || substr(md5(t), CAST(b.i // 4 AS INT) + 1, 1)) AS INT)
-        |      // (CASE WHEN b.i % 4 = 0 THEN 1 WHEN b.i % 4 = 1 THEN 2 WHEN b.i % 4 = 2 THEN 4 ELSE 8 END)) % 2 = 1
-        |      THEN 1 ELSE -1 END) AS vote
-        |  FROM tok, range(64) AS b(i)
-        |  GROUP BY doc_id, b.i
-        |), bands AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN vote > 0 AND bit < 16 THEN (1 << CAST(bit AS INT)) ELSE 0 END) AS INTEGER) AS band0,
-        |    CAST(SUM(CASE WHEN vote > 0 AND bit >= 16 AND bit < 32 THEN (1 << CAST(bit - 16 AS INT)) ELSE 0 END) AS INTEGER) AS band1,
-        |    CAST(SUM(CASE WHEN vote > 0 AND bit >= 32 AND bit < 48 THEN (1 << CAST(bit - 32 AS INT)) ELSE 0 END) AS INTEGER) AS band2,
-        |    CAST(SUM(CASE WHEN vote > 0 AND bit >= 48 THEN (1 << CAST(bit - 48 AS INT)) ELSE 0 END) AS INTEGER) AS band3
-        |  FROM votes GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  COALESCE(band0, 0) AS band0, COALESCE(band1, 0) AS band1,
-        |  COALESCE(band2, 0) AS band2, COALESCE(band3, 0) AS band3
-        |FROM (SELECT doc_id FROM documents WHERE doc_id < 1000) d
-        |LEFT JOIN bands USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+    "q65_poly_simhash" -> polySimhashSql("documents WHERE doc_id < 1000"),
+    "q43_simhash" -> polySimhashSql("documents"),
 
     "q44_cosine_pairs" ->
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),

@@ -9,9 +9,9 @@ import RegistryMemo.{memo, memoDir}
 
 /** Training-data-pipeline and classical-relational queries over the shared
   * testdata: dedup, similarity search, text analysis, multimodal plumbing,
-  * event-stream batch analytics. Oracle SQL mirrors arithmetic op-for-op
-  * where DuckDB can express it; hash-sensitive ops (xxhash64-based minhash/
-  * simhash/LSH) ship without oracles (rows-only driver check).
+  * event-stream batch analytics. Every query has DuckDB oracle SQL that
+  * mirrors its arithmetic op-for-op; hashes are md5 + integer arithmetic
+  * or interpolated seeded constants, so DuckDB re-derives them exactly.
   */
 object PipelineQueries extends OracleSqlStatic {
 
@@ -989,24 +989,22 @@ object PipelineQueries extends OracleSqlStatic {
     },
 
     "q103_funnel_portable" -> { (s, dir) =>
-      // the q66 funnel counts under PORTABLE hashes: every stage count
-      // re-derived in DuckDB off the q71 CTE chain — the composition's
-      // arithmetic is hash-verified end to end, not just rows>0
+      // the cleaning funnel counts: every stage count re-derived in
+      // DuckDB off the q71 CTE chain — the composition's arithmetic is
+      // hash-verified end to end, not just rows>0
       import s.implicits._
       val st = graft.ops.Pipelines.cleanCorpus(
-        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0,
-        portableHashes = true).stats()
+        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0).stats()
       Seq((st.input, st.afterExactDedup, st.afterNearDedup, st.afterQuality, st.output))
         .toDF("n_input", "n_exact", "n_near", "n_quality", "n_output")
     },
 
     "q104_prepare_portable" -> { (s, dir) =>
-      // the ENTIRE prepareTrainingCorpus output under portable hashes —
-      // cleaning chain + token/lang/fingerprint enrichment + deterministic
-      // split, every column re-derived in DuckDB
+      // the ENTIRE prepareTrainingCorpus output — cleaning chain +
+      // token/lang/fingerprint enrichment + deterministic split, every
+      // column re-derived in DuckDB
       graft.ops.Pipelines.prepareTrainingCorpus(
-        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0,
-        portableHashes = true)
+        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0)
         .df.select("doc_id", "lang", "source", "n_chars",
           "n_tokens", "lang_id", "fingerprint", "split")
         .orderBy("doc_id")
@@ -1160,8 +1158,7 @@ object PipelineQueries extends OracleSqlStatic {
     "q62_poly_minhash" -> { (s, dir) =>
       // oracle-checked MinHash LSH banding: md5 token hashes + integer
       // permutation arithmetic, so DuckDB re-derives every band key
-      // bit-for-bit (the production minhashBuckets path is xxhash64 —
-      // faster, but rows-only checkable; q41 covers it)
+      // bit-for-bit (word-token units; q41 bands char shingles)
       Dedup.polyMinhashBands(t(s, dir, "documents"), "text", "doc_id")
         .orderBy("doc_id", "band")
     },
@@ -4134,7 +4131,7 @@ object PipelineQueries extends OracleSqlStatic {
     "q65_poly_simhash" -> { (s, dir) =>
       // oracle-checked SimHash banding: md5 hex digits supply the 64 vote
       // bits, band values are 16-bit ints — DuckDB re-derives them exactly
-      // (q43's xxhash64 simhash stays the production path)
+      // (q43 bands the whole corpus)
       Dedup.simhashPolyBands(
         t(s, dir, "documents").filter(col("doc_id") < 1000), "text", "doc_id")
         .orderBy("doc_id")
@@ -4142,10 +4139,8 @@ object PipelineQueries extends OracleSqlStatic {
 
     "q67_poly_near_dup" -> { (s, dir) =>
       // the full near-dup PAIR pipeline (bucketed candidates + estimated
-      // Jaccard) under the engine-independent hash family — the pair-level
-      // oracle q47's xxhash64 path can't have. Same doc_id<1000 subset as
-      // q47: the md5-per-shingle HOF chain is the deliberately portable
-      // (not production-fast) path, ~3ms/doc interpreted.
+      // Jaccard) on the doc_id<1000 subset at threshold 0.5 (q47 pairs
+      // the same subset at 0.7)
       Dedup.polyMinhashNearDupPairs(
         t(s, dir, "documents").filter(col("doc_id") < 1000), "text", "doc_id",
         threshold = 0.5)
@@ -4237,20 +4232,16 @@ object PipelineQueries extends OracleSqlStatic {
         .orderBy("query_id", "nn_rank")
     },
 
-    // -------------------------------------- hash-based ops (rows-only)
-
     "q41_minhash_buckets" -> { (s, dir) =>
-      // EXPLICIT xxhash64 fast-path variant (rows-only by nature); the
-      // portable md5 twin q62 is the oracle-checked default family
-      Dedup.minhashBuckets(t(s, dir, "documents"), "text", "doc_id")
-        .select("doc_id", "band", "band_key")
+      // char-5-shingle band keys over the whole corpus (q62 bands word
+      // tokens): the candidate buckets q47/q67 self-join
+      Dedup.polyShingleBands(t(s, dir, "documents"), "text", "doc_id")
         .orderBy("doc_id", "band")
     },
 
     "q43_simhash" -> { (s, dir) =>
-      // EXPLICIT xxhash64 fast-path variant (rows-only by nature); the
-      // portable twin q65 is the oracle-checked default family
-      Dedup.simhashWithBands(t(s, dir, "documents"), "text", "doc_id")
+      // native md5 SimHash bands over the whole corpus (q65: doc_id<1000)
+      Dedup.simhashPolyBands(t(s, dir, "documents"), "text", "doc_id")
         .orderBy("doc_id")
     },
 
@@ -4338,58 +4329,45 @@ object PipelineQueries extends OracleSqlStatic {
     },
 
     "q47_near_dup_pairs" -> { (s, dir) =>
-      // EXPLICIT xxhash64 fast-path variant (rows-only by nature); the
-      // portable md5 twin q67 is the oracle-checked default family
-      Dedup.minhashNearDupPairs(
+      // q67's pair pipeline at the stricter threshold 0.7
+      Dedup.polyMinhashNearDupPairs(
         t(s, dir, "documents").filter(col("doc_id") < 1000),
-        "text", "doc_id", threshold = 0.5)
+        "text", "doc_id", threshold = 0.7)
         .orderBy("id_a", "id_b")
     },
 
     "q57_clean_corpus" -> { (s, dir) =>
-      // the EXPLICIT xxhash64 fast-path variant of the cleaning
-      // composition (portableHashes = false, opt-in): its hashes exist in
-      // no other engine, so rows-only — the pipeline DEFAULT is the
-      // portable md5 family, oracle-checked end-to-end as q71
+      // the q71 cleaning composition with a looser near-dup cut (0.8)
       graft.ops.Pipelines.cleanCorpus(
-        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0,
-        portableHashes = false)
+        t(s, dir, "documents"), nearDupThreshold = 0.8, minQuality = 30.0)
         .df.select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
     },
 
     "q39_training_corpus" -> { (s, dir) =>
-      // the EXPLICIT xxhash64 fast-path variant of the full preparation
-      // flow (portableHashes = false, opt-in): rows-only — the pipeline
-      // DEFAULT is the portable md5 family, oracle-checked as q104
+      // the q104 preparation flow with a looser near-dup cut (0.8)
       graft.ops.Pipelines.prepareTrainingCorpus(
-        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0,
-        portableHashes = false)
+        t(s, dir, "documents"), nearDupThreshold = 0.8, minQuality = 30.0)
         .df.select("doc_id", "split", "n_tokens", "lang_id")
         .orderBy("doc_id")
     },
 
     "q66_corpus_funnel" -> { (s, dir) =>
-      // the funnel counts of the EXPLICIT xxhash64 fast path (opt-in,
-      // rows-only) — catches silent filter breakage (a stage passing
-      // everything or nothing) at verify/bench scale; the DEFAULT
-      // portable-family funnel is oracle-checked as q103
+      // the preparation funnel counts at the q39 near-dup cut (0.8) —
+      // catches silent filter breakage (a stage passing everything or
+      // nothing) at verify/bench scale; q103 counts the 0.9 funnel
       import s.implicits._
       val st = graft.ops.Pipelines.prepareTrainingCorpus(
-        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0,
-        portableHashes = false).stats()
+        t(s, dir, "documents"), nearDupThreshold = 0.8, minQuality = 30.0).stats()
       Seq((st.input, st.afterExactDedup, st.afterNearDedup, st.afterQuality, st.output))
         .toDF("n_input", "n_exact", "n_near", "n_quality", "n_output")
     },
 
     "q71_clean_pipeline" -> { (s, dir) =>
-      // the ENTIRE corpus-cleaning composition under portable hashes:
-      // exact dedup -> poly-minhash near-dup removal -> quality gate, all
-      // DuckDB-re-derived (the q57 twin is rows-only because its xxhash64
-      // signatures exist in no other engine)
+      // the ENTIRE corpus-cleaning composition: exact dedup -> poly-minhash
+      // near-dup removal -> quality gate, all DuckDB-re-derived
       graft.ops.Pipelines.cleanCorpus(
-        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0,
-        portableHashes = true)
+        t(s, dir, "documents"), nearDupThreshold = 0.9, minQuality = 30.0)
         .df.select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
     },
@@ -4635,16 +4613,11 @@ object PipelineQueries extends OracleSqlStatic {
     * CAST AS DOUBLE (a bare decimal literal would parse as DECIMAL and
     * lose the low bits). */
   private[queries] def ivfOracleSql: Map[String, String] =
-    RegistryMemo.current[Centroids]("ivf").toSeq.flatMap { cents =>
-      def d(x: Double): String = s"CAST(${x.toString} AS DOUBLE)"
-      val rows = cents.map { case (i, c, c2) =>
-        s"    ($i, [${c.map(d).mkString(", ")}], ${d(c2)})"
-      }.mkString(",\n")
-      Seq(
+    lateBound(RegistryMemo.current[Centroids]("ivf").map(centroidRows))(
       // cluster-balanced sampling shares the quantizer: same cell
       // assignment CTEs, then the q105-style md5 unit hash ranked
       // ascending per cell (ties toward the smaller id)
-      "q111_cluster_balanced" ->
+      ("q111_cluster_balanced", rows =>
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |cent AS (
            |  SELECT * FROM (VALUES
@@ -4670,11 +4643,11 @@ object PipelineQueries extends OracleSqlStatic {
            |)
            |SELECT vec_id, list_id, sample_rank FROM rk
            |WHERE sample_rank <= 10
-           |ORDER BY list_id, sample_rank""".stripMargin,
+           |ORDER BY list_id, sample_rank""".stripMargin),
       // embedding-space drift: same literal-centroid cells, even/odd
       // halves, add-one-smoothed PSI contributions per cell (the q96
       // arithmetic over cell histograms)
-      "q267_embedding_drift" ->
+      ("q267_embedding_drift", rows =>
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |cent AS (
            |  SELECT * FROM (VALUES
@@ -4709,12 +4682,12 @@ object PipelineQueries extends OracleSqlStatic {
            |         - CAST(n_ref + 1 AS DOUBLE) / (tr + b))
            |    * ln((CAST(n_cur + 1 AS DOUBLE) / (tc + b))
            |        / (CAST(n_ref + 1 AS DOUBLE) / (tr + b))), 9) + 0.0 AS contrib_r
-           |FROM j, tt ORDER BY cell""".stripMargin,
+           |FROM j, tt ORDER BY cell""".stripMargin),
       // cell-balance health report: the same assignment CTEs aggregated
       // at CELL grain — population extremes, mean per trained cell, and
       // the skew ratio (max · n_cells / n_vecs), all from the
       // interpolated quantizer
-      "q304_ivf_describe" ->
+      ("q304_ivf_describe", rows =>
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |cent AS (
            |  SELECT * FROM (VALUES
@@ -4743,29 +4716,29 @@ object PipelineQueries extends OracleSqlStatic {
            |    AS mean_cell_r,
            |  round(CAST(max_cell_rows AS DOUBLE) * CAST(n_cells AS DOUBLE)
            |    / CAST(n_vecs AS DOUBLE), 6) + 0.0 AS skew_r
-           |FROM agg, nc""".stripMargin,
-      "q54_ivf_topk" -> q54IvfSql(rows),
+           |FROM agg, nc""".stripMargin),
+      ("q54_ivf_topk", rows => q54IvfSql(rows)),
       // serving-path parity: the persisted-index replay (q191) answers
       // the SAME question from the SAME quantizer, so it shares the
       // oracle verbatim
-      "q191_ivf_served" -> q54IvfSql(rows),
+      ("q191_ivf_served", rows => q54IvfSql(rows)),
       // takedown parity: the post-delete index serves exactly what a
       // rebuild over the SURVIVOR corpus serves (cell assignment is
       // per-vector) — the oracle filters the corpus, same quantizer
-      "q257_ivf_takedown" -> q54IvfSql(rows, " WHERE e.vec_id % 5 <> 2"),
+      ("q257_ivf_takedown", rows => q54IvfSql(rows, " WHERE e.vec_id % 5 <> 2")),
       // served hybrid: the q84 lexical run + the q54 vector chain
       // (same quantizer, queries 1–3) fused by the q218 RRF fold
-      "q290_hybrid_served" -> q290HybridSql(rows),
+      ("q290_hybrid_served", rows => q290HybridSql(rows)),
       // MMR diversification over the q54 top-20: the greedy replays as
       // a recursive CTE carrying the picked ids/vectors; λ and 1−λ
       // interpolate as exact doubles (1−0.7 is NOT 0.3 in IEEE)
-      "q294_mmr_rerank" -> q294MmrSql(rows),
+      ("q294_mmr_rerank", rows => q294MmrSql(rows)),
       // the hybrid page (q290 chain, top-20), min-max normalized per
       // query, diversified by the q294 recursive greedy
-      "q297_hybrid_mmr" -> q297HybridMmrSql(rows),
+      ("q297_hybrid_mmr", rows => q297HybridMmrSql(rows)),
       // embedding-space outliers: same literal-centroid cells, dist² in
       // integer micro-units, exact-moment z per cell (the q85 contract)
-      "q194_embedding_outliers" ->
+      ("q194_embedding_outliers", rows =>
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |cent AS (
            |  SELECT * FROM (VALUES
@@ -4797,9 +4770,7 @@ object PipelineQueries extends OracleSqlStatic {
            |SELECT vec_id, list_id, dist_u,
            |  round(CASE WHEN var > 0 THEN (CAST(dist_u AS DOUBLE) - mean) / sqrt(var) END, 6) + 0.0 AS z_r,
            |  CASE WHEN var > 0 THEN abs((CAST(dist_u AS DOUBLE) - mean) / sqrt(var)) > 2.0 END AS is_outlier
-           |FROM z ORDER BY vec_id""".stripMargin
-      )
-    }.toMap
+           |FROM z ORDER BY vec_id""".stripMargin))
 
   private[queries] def q54IvfSql(rows: String, corpusWhere: String = ""): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -5042,13 +5013,32 @@ object PipelineQueries extends OracleSqlStatic {
        |ORDER BY qid, mmr_rank""".stripMargin
   }
 
-  /** Static oracles plus the trained-quantizer q54/q111 oracles and the
-    * trained-PQ q149/q150 oracles (present once the corresponding query
-    * has run in this JVM — Verify runs every query before dumping
-    * oracle_sql.json, so the driver always sees them). */
+  /** Static oracles plus the trained-quantizer (IVF, Matryoshka) and
+    * trained-PQ oracles, which are written from the trained state once
+    * the corresponding query has run in this JVM — Verify runs every
+    * query before dumping oracle_sql.json. One entry per registry query. */
   def oracleSql: Map[String, String] =
     staticOracleSql ++ ivfOracleSql ++ pqOracleSql ++ ivfPqOracleSql ++
       matryoshkaOracleSql
+
+  /** Oracle entries written from the state a query trains (read through
+    * `current`, so `state` is empty until the query has run in this
+    * JVM). Every key is present either way, so the oracle map covers
+    * every registry query; without state an entry's SQL raises in DuckDB
+    * instead of going missing. */
+  private def lateBound[V](state: Option[V])(
+      entries: (String, V => String)*): Map[String, String] =
+    entries.map { case (k, sql) =>
+      k -> state.fold(
+        s"SELECT error('$k: oracle SQL needs trained state; run the query first')")(sql)
+    }.toMap
+
+  /** A trained centroid table as DuckDB `VALUES` rows
+    * `(list_id, [c...], |c|²)`, doubles via [[sqlDouble]]. */
+  private[queries] def centroidRows(cents: Centroids): String =
+    cents.map { case (i, c, c2) =>
+      s"    ($i, [${c.map(sqlDouble).mkString(", ")}], ${sqlDouble(c2)})"
+    }.mkString(",\n")
 
   /** DuckDB oracle for the q293 matryoshka serving flow, written from
     * the TRAINED sliced-vector quantizer ([[matryoshkaCentroids]], the
@@ -5056,15 +5046,10 @@ object PipelineQueries extends OracleSqlStatic {
     * the q54 machinery over `v[1:16]`, the recall side joins the
     * FULL-width exact brute ranking, both self-excluded/NaN-dropped. */
   private[queries] def matryoshkaOracleSql: Map[String, String] =
-    RegistryMemo.current[Centroids]("mat-centroids").toSeq.map { cents =>
-      def d(x: Double): String = s"CAST(${x.toString} AS DOUBLE)"
-      val rows = cents.map { case (i, c, c2) =>
-        s"    ($i, [${c.map(d).mkString(", ")}], ${d(c2)})"
-      }.mkString(",\n")
-      val dim = MatryoshkaDim
-      "q293_matryoshka_served" ->
+    lateBound(RegistryMemo.current[Centroids]("mat-centroids").map(centroidRows))(
+      ("q293_matryoshka_served", rows =>
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-           |et AS (SELECT vec_id, v[1:$dim] AS vt FROM e),
+           |et AS (SELECT vec_id, v[1:$MatryoshkaDim] AS vt FROM e),
            |cent AS (
            |  SELECT * FROM (VALUES
            |$rows
@@ -5123,8 +5108,7 @@ object PipelineQueries extends OracleSqlStatic {
            |FROM served s
            |JOIN en USING (query_id)
            |LEFT JOIN hits h ON h.query_id = s.query_id
-           |ORDER BY s.query_id, s.nn_rank""".stripMargin
-    }.toMap
+           |ORDER BY s.query_id, s.nn_rank""".stripMargin))
 
   private[queries] def sqlDouble(x: Double): String = s"CAST(${x.toString} AS DOUBLE)"
 
@@ -5160,25 +5144,15 @@ object PipelineQueries extends OracleSqlStatic {
     * cells + PQ codebooks) and replays probe selection, assignment, and
     * the ADC term chain. */
   private[queries] def ivfPqOracleSql: Map[String, String] =
-    (for {
+    lateBound(for {
       coarse <- RegistryMemo.current[Centroids]("km")
       cbs <- RegistryMemo.current[Seq[Centroids]]("pq")
-    } yield {
-      val coarseRows = coarse.map { case (i, c, c2) =>
-        s"    ($i, [${c.map(sqlDouble).mkString(", ")}], ${sqlDouble(c2)})"
-      }.mkString(",\n")
-      val subDim = cbs.head.head._2.size
-      val qsvSelects = cbs.indices.map { s =>
-        s"  SELECT query_id, $s AS s, qv[${s * subDim + 1}:${(s + 1) * subDim}] AS qs FROM q"
-      }.mkString("\n  UNION ALL\n")
-      val tPivot = cbs.indices.map(s =>
-        s"    max(CASE WHEN s = $s THEN term END) AS t$s").mkString(",\n")
-      val tChain = cbs.indices.map(s => s"t$s").mkString(" + ")
-      Map("q151_ivf_pq" ->
-        (pqCommonCtes(cbs) + s""",
+    } yield (coarse, cbs))(
+      ("q151_ivf_pq", { case (coarse, cbs) =>
+        pqCommonCtes(cbs) + s""",
            |coarse AS (
            |  SELECT * FROM (VALUES
-           |$coarseRows
+           |${centroidRows(coarse)}
            |  ) t(list_id, cc, cc2)
            |), cells AS (
            |  SELECT vec_id, list_id FROM (
@@ -5194,7 +5168,7 @@ object PipelineQueries extends OracleSqlStatic {
            |        ORDER BY 2.0 * list_dot_product(q.qv, coarse.cc) - coarse.cc2 DESC, coarse.list_id) AS rn
            |    FROM q, coarse) WHERE rn <= 3
            |), qsv AS (
-           |$qsvSelects
+           |${pqQuerySlices(cbs)}
            |), lut AS (
            |  SELECT query_id, qsv.s, cb.cid,
            |    list_dot_product(qs, qs) - 2.0 * list_dot_product(qs, cb.c) + cb.c2 AS term
@@ -5210,18 +5184,17 @@ object PipelineQueries extends OracleSqlStatic {
            |  JOIN lut l ON l.query_id = c.query_id AND l.s = a.s AND l.cid = a.cid
            |), pv AS (
            |  SELECT query_id, vec_id,
-           |$tPivot
+           |${pqPivot(cbs, "term", "t")}
            |  FROM contrib GROUP BY query_id, vec_id
            |), dist AS (
-           |  SELECT query_id, vec_id, round($tChain, 6) + 0.0 AS adist_r FROM pv
+           |  SELECT query_id, vec_id, round(${pqTermChain(cbs)}, 6) + 0.0 AS adist_r FROM pv
            |), rk AS (
            |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist_r ASC, vec_id) AS pq_rank
            |  FROM dist
            |)
            |SELECT query_id, vec_id, adist_r, pq_rank
            |FROM rk WHERE pq_rank <= 10
-           |ORDER BY query_id, pq_rank""".stripMargin))
-    }).getOrElse(Map.empty)
+           |ORDER BY query_id, pq_rank""".stripMargin }))
 
   /** Late-bound PQ oracles: the trained codebooks interpolate as a VALUES
     * table; assignment is the literal argmax (rounded-free — both engines
@@ -5229,52 +5202,55 @@ object PipelineQueries extends OracleSqlStatic {
     * term-for-term with the subspace sum in the engine's left-assoc
     * order. */
   private[queries] def pqOracleSql: Map[String, String] =
-    RegistryMemo.current[Seq[Centroids]]("pq").toSeq.flatMap { cbs =>
-      val subDim = cbs.head.head._2.size
-      val qsvSelects = cbs.indices.map { s =>
-        val lo = s * subDim + 1
-        val hi = (s + 1) * subDim
-        s"  SELECT query_id, $s AS s, qv[$lo:$hi] AS qs FROM q"
-      }.mkString("\n  UNION ALL\n")
-      val commonCtes = pqCommonCtes(cbs)
-      val pivot = cbs.indices.map(s =>
-        s"    max(CASE WHEN s = $s THEN cid END) AS c$s").mkString(",\n")
-      val tPivot = cbs.indices.map(s =>
-        s"    max(CASE WHEN s = $s THEN term END) AS t$s").mkString(",\n")
-      val tChain = cbs.indices.map(s => s"t$s").mkString(" + ")
-      Seq(
-        "q149_pq_encode" ->
-          s"""$commonCtes
-             |SELECT vec_id,
-             |$pivot
-             |FROM asg GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-        "q150_pq_topk" ->
-          s"""$commonCtes,
-             |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-             |qsv AS (
-             |$qsvSelects
-             |), lut AS (
-             |  SELECT query_id, qsv.s, cb.cid,
-             |    list_dot_product(qs, qs) - 2.0 * list_dot_product(qs, cb.c) + cb.c2 AS term
-             |  FROM qsv JOIN cb ON cb.sub = qsv.s
-             |), contrib AS (
-             |  SELECT l.query_id, a.vec_id, a.s, l.term
-             |  FROM asg a JOIN lut l ON l.s = a.s AND l.cid = a.cid
-             |), pv AS (
-             |  SELECT query_id, vec_id,
-             |$tPivot
-             |  FROM contrib GROUP BY query_id, vec_id
-             |), dist AS (
-             |  SELECT query_id, vec_id, round($tChain, 6) + 0.0 AS adist_r
-             |  FROM pv WHERE vec_id <> query_id
-             |), rk AS (
-             |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist_r ASC, vec_id) AS pq_rank
-             |  FROM dist
-             |)
-             |SELECT query_id, vec_id, adist_r, pq_rank
-             |FROM rk WHERE pq_rank <= 10
-             |ORDER BY query_id, pq_rank""".stripMargin)
-    }.toMap
+    lateBound(RegistryMemo.current[Seq[Centroids]]("pq"))(
+      ("q149_pq_encode", cbs =>
+        s"""${pqCommonCtes(cbs)}
+           |SELECT vec_id,
+           |${pqPivot(cbs, "cid", "c")}
+           |FROM asg GROUP BY vec_id ORDER BY vec_id""".stripMargin),
+      ("q150_pq_topk", cbs =>
+        s"""${pqCommonCtes(cbs)},
+           |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
+           |qsv AS (
+           |${pqQuerySlices(cbs)}
+           |), lut AS (
+           |  SELECT query_id, qsv.s, cb.cid,
+           |    list_dot_product(qs, qs) - 2.0 * list_dot_product(qs, cb.c) + cb.c2 AS term
+           |  FROM qsv JOIN cb ON cb.sub = qsv.s
+           |), contrib AS (
+           |  SELECT l.query_id, a.vec_id, a.s, l.term
+           |  FROM asg a JOIN lut l ON l.s = a.s AND l.cid = a.cid
+           |), pv AS (
+           |  SELECT query_id, vec_id,
+           |${pqPivot(cbs, "term", "t")}
+           |  FROM contrib GROUP BY query_id, vec_id
+           |), dist AS (
+           |  SELECT query_id, vec_id, round(${pqTermChain(cbs)}, 6) + 0.0 AS adist_r
+           |  FROM pv WHERE vec_id <> query_id
+           |), rk AS (
+           |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist_r ASC, vec_id) AS pq_rank
+           |  FROM dist
+           |)
+           |SELECT query_id, vec_id, adist_r, pq_rank
+           |FROM rk WHERE pq_rank <= 10
+           |ORDER BY query_id, pq_rank""".stripMargin))
+
+  /** Per-subspace slices `qs` of the query vectors `q(query_id, qv)`. */
+  private def pqQuerySlices(cbs: Seq[Centroids]): String = {
+    val subDim = cbs.head.head._2.size
+    cbs.indices.map { s =>
+      s"  SELECT query_id, $s AS s, qv[${s * subDim + 1}:${(s + 1) * subDim}] AS qs FROM q"
+    }.mkString("\n  UNION ALL\n")
+  }
+
+  /** One `max(CASE ...)` pivot column `<prefix><s>` of `value` per subspace. */
+  private def pqPivot(cbs: Seq[Centroids], value: String, prefix: String): String =
+    cbs.indices.map(s =>
+      s"    max(CASE WHEN s = $s THEN $value END) AS $prefix$s").mkString(",\n")
+
+  /** The ADC distance: the subspace terms summed left to right. */
+  private def pqTermChain(cbs: Seq[Centroids]): String =
+    cbs.indices.map(s => s"t$s").mkString(" + ")
 
   /** BPE training oracle, shared machinery: `state_0` is the word
     * histogram symbolized to code points + '</w>'; each round derives

@@ -80,7 +80,7 @@ class DsirSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3)) {
       val native = docs.select(col("doc_id"), Dsir.grams(col("text"), n).as("g"))
         .collect().map(r => r.getLong(0) -> Option(r.getSeq[String](1)).map(_.toList)).toMap
-      val hof = docs.select(col("doc_id"), Dsir.gramsHof(col("text"), n).as("g"))
+      val hof = docs.select(col("doc_id"), HofOracles.gramsHof(col("text"), n).as("g"))
         .collect().map(r => r.getLong(0) -> Option(r.getSeq[String](1)).map(_.toList)).toMap
       assert(native == hof, s"n=$n")
     }

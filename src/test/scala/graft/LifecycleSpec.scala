@@ -39,7 +39,7 @@ class LifecycleSpec extends SparkSpec {
     // the near-dup signature path rides the conditional: a raw-frame
     // input leaves no tracked checkpoint behind
     val docs = (0 until 50).map(i => (i.toLong, s"doc text $i body")).toDF("doc_id", "text")
-    Dedup.minhashNearDupPairs(docs, "text", "doc_id", threshold = 0.9).count()
+    Dedup.polyMinhashNearDupPairs(docs, "text", "doc_id", threshold = 0.9).count()
     assert(Checkpoints.trackedCount == 0,
       "raw-scan near-dup input must not leave checkpoint blocks")
     Checkpoints.freeAll(spark)

@@ -32,7 +32,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("minhash near-dup pairs find planted near-duplicates") {
-    val pairs = Dedup.minhashNearDupPairs(docs, "text", "doc_id", threshold = 0.5)
+    val pairs = Dedup.polyMinhashNearDupPairs(docs, "text", "doc_id", threshold = 0.5)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     // the dup cluster {0,1,4} and near-dup 2 must pair up; 3 must not
     assert(pairs.contains((0L, 1L)))
@@ -40,7 +40,7 @@ class OpsSpec extends SparkSpec {
     assert(pairs.contains((0L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
     // exact dups have estimated jaccard 1.0
-    val est = Dedup.minhashNearDupPairs(docs, "text", "doc_id", threshold = 0.5)
+    val est = Dedup.polyMinhashNearDupPairs(docs, "text", "doc_id", threshold = 0.5)
       .filter(col("id_a") === 0 && col("id_b") === 1)
       .head().getAs[Double]("est_jaccard")
     assert(est == 1.0)
@@ -61,25 +61,6 @@ class OpsSpec extends SparkSpec {
     assert(b(0L).intersect(b(3L)).isEmpty)
     // deterministic and partition-invariant (md5 arithmetic, no RNG state)
     assert(bands(docs.repartition(7)) == b)
-  }
-
-  test("polyMinhash candidate pairs agree with the xxhash64 minhashBuckets path") {
-    // the two banding paths hash differently, so band KEYS differ — but on
-    // planted dups both must bucket the same candidate pairs
-    def pairsOf(buckets: org.apache.spark.sql.DataFrame, keyCol: String): Set[(Long, Long)] = {
-      val a = buckets.select(col("doc_id").as("id_a"), col("band"), col(keyCol))
-      val b = buckets.select(col("doc_id").as("id_b"), col("band"), col(keyCol))
-      a.join(b, Seq("band", keyCol)).filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val poly = pairsOf(Dedup.polyMinhashBands(docs, "text", "doc_id"), "band_key")
-    val xx = pairsOf(Dedup.minhashBuckets(docs, "text", "doc_id"), "band_key")
-    // the exact-dup cluster {0,1,4} must pair under both hash families
-    val cluster = Set((0L, 1L), (0L, 4L), (1L, 4L))
-    assert(cluster.subsetOf(poly))
-    assert(cluster.subsetOf(xx))
-    assert(!poly.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
   test("dupClusters: transitive chains collapse to the min-id component") {
@@ -330,13 +311,14 @@ class OpsSpec extends SparkSpec {
     import graft.expressions.SignatureAgreement
     val sigs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(80)
-      .select(col("doc_id"), Dedup.minhashSignature(col("text")).as("sig"))
+      .select(col("doc_id"),
+        graft.expressions.PolyMinHashSignature(col("text"), 64, 5).as("sig"))
     val pairs = sigs.select(col("doc_id").as("ida"), col("sig").as("a"))
       .crossJoin(sigs.select(col("doc_id").as("idb"), col("sig").as("b")))
       .filter(col("ida") < col("idb")).limit(500)
     val both = pairs.select(
       SignatureAgreement(col("a"), col("b")).as("fast"),
-      Dedup.sigAgreementHof(col("a"), col("b")).as("slow")).collect()
+      HofOracles.sigAgreementHof(col("a"), col("b")).as("slow")).collect()
     assert(both.nonEmpty)
     assert(both.forall(r => r.getInt(0) == r.getInt(1)))
     // ragged + empty arrays: zip_with null-pads, the when falls to 0 —
@@ -349,7 +331,7 @@ class OpsSpec extends SparkSpec {
       .toDF("a", "b")
     val e = edge.select(
       SignatureAgreement(col("a"), col("b")).as("fast"),
-      Dedup.sigAgreementHof(col("a"), col("b")).as("slow")).collect()
+      HofOracles.sigAgreementHof(col("a"), col("b")).as("slow")).collect()
     assert(e.map(r => (r.getInt(0), r.getInt(1))).toSeq ==
       Seq((2, 2), (0, 0), (1, 1)))
   }
@@ -365,7 +347,7 @@ class OpsSpec extends SparkSpec {
       graft.expressions.PolyMinHashSignature(col("text"), 16, 5).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val hof = corpus.select(col("doc_id"),
-      Dedup.polyShingleSignatureHof(col("text"), 16, 5).as("sig"))
+      HofOracles.polyShingleSignatureHof(col("text"), 16, 5).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native == hof)
     assert(native.values.forall(_.length == 16))
@@ -408,8 +390,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("simhash: identical docs identical fingerprints, near-dups close") {
-    val fp = Dedup.simhashWithBands(docs, "text", "doc_id").collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
+    val fp = docs.select(col("doc_id"), graft.expressions.SimHash64(col("text")).as("simhash"))
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
     assert(fp(0L) == fp(1L)) // identical text
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(hamming(fp(0L), fp(2L)) < hamming(fp(0L), fp(3L)))
@@ -575,7 +557,7 @@ class OpsSpec extends SparkSpec {
         df.select(col("doc_id"), c.as("f")).collect()
           .map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toList)).toMap
       val native = fps(TextAnalysis.winnowingFingerprints(col("text"), k, w))
-      val hof = fps(TextAnalysis.winnowingFingerprintsHof(col("text"), k, w))
+      val hof = fps(HofOracles.winnowingFingerprintsHof(col("text"), k, w))
       assert(native == hof, s"k=$k w=$w")
       assert(native(4L).isEmpty, "null text must fingerprint as null")
     }
@@ -627,7 +609,7 @@ class OpsSpec extends SparkSpec {
     val pairs = emb.crossJoin(q)
     val both = pairs.select(
       Similarity.dot(col("embedding").cast("array<double>"), col("qv").cast("array<double>")).as("fast"),
-      Similarity.dotHof(col("embedding").cast("array<double>"), col("qv").cast("array<double>")).as("slow"))
+      HofOracles.dotHof(col("embedding").cast("array<double>"), col("qv").cast("array<double>")).as("slow"))
     assert(both.collect().forall(r => r.getDouble(0) == r.getDouble(1)))
 
     // hand-computed value
@@ -643,7 +625,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("a", "b")
     val outs = dfe.select(
       Similarity.dot(col("a"), col("b")).as("fast"),
-      Similarity.dotHof(col("a").cast("array<double>"), col("b").cast("array<double>")).as("slow"))
+      HofOracles.dotHof(col("a").cast("array<double>"), col("b").cast("array<double>")).as("slow"))
       .collect()
     outs.foreach { r =>
       assert(r.isNullAt(0), "native must be null for null elements / mismatched lengths")
@@ -698,24 +680,6 @@ class OpsSpec extends SparkSpec {
         (sqrt(Similarity.dot(col("qv").cast("array<double>"), col("qv").cast("array<double>"))) *
          sqrt(Similarity.dot(col("embedding").cast("array<double>"), col("embedding").cast("array<double>"))))).as("composed"))
     assert(both.collect().forall(r => r.getDouble(0) == r.getDouble(1)))
-  }
-
-  test("native MinHashSignature matches HOF formulation exactly") {
-    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(40)
-    val both = real.select(
-      Dedup.minhashSignature(col("text")).as("fast"),
-      Dedup.minhashSignatureHof(col("text")).as("slow"))
-    assert(both.collect().forall(r => r.getSeq[Long](0) == r.getSeq[Long](1)))
-    // short-text edge (length < k) and whitespace canonicalization
-    val edge = Seq((0L, "ab"), (1L, "A  B"), (2L, "a b"),
-      (3L, "\tA\nB "), (4L, "\u0001xy"), (5L, "")).toDF("doc_id", "text")
-    val e = edge.select(col("doc_id"),
-      Dedup.minhashSignature(col("text")).as("fast"),
-      Dedup.minhashSignatureHof(col("text")).as("slow")).collect()
-    assert(e.forall(r => r.getSeq[Long](1) == r.getSeq[Long](2)))
-    // "A  B" and "a b" canonicalize identically
-    val byId = e.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(byId(1L) == byId(2L))
   }
 
   test("multimodal: decodable payloads resize through the real pixel scaler") {
@@ -819,14 +783,6 @@ class OpsSpec extends SparkSpec {
     val noLang = Pipelines.cleanCorpus(corpus, nearDupThreshold = 0.6, minQuality = 40.0)
     assert(noLang.df.select("doc_id").collect().map(_.getLong(0)).toSet == Set(0L, 4L))
 
-    // portable (md5 poly) hashes make the same keep/drop decisions on
-    // planted dups as the xxhash64 production family — the q71 oracle
-    // pipeline and the q57 production pipeline are semantic twins
-    val poly = Pipelines.cleanCorpus(corpus, nearDupThreshold = 0.6,
-      minQuality = 40.0, portableHashes = true)
-    assert(poly.df.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      noLang.df.select("doc_id").collect().map(_.getLong(0)).toSet)
-
     // the optional Gopher bundle rides the quality stage: a doc passing
     // the heuristic score but failing a rule (word count here) drops,
     // and the funnel's afterQuality count reflects it
@@ -871,20 +827,27 @@ class OpsSpec extends SparkSpec {
   }
 
   test("native SimHash64 matches HOF formulation exactly") {
+    import graft.expressions.SimHash64
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
     val both = real.select(
-      Dedup.simhash(col("text")).as("fast"),
-      Dedup.simhashHof(col("text")).as("slow"))
+      SimHash64(col("text")).as("fast"),
+      HofOracles.simhashHof(col("text")).as("slow"))
     assert(both.collect().forall(r => r.getLong(0) == r.getLong(1)))
-    val edge = Seq((0L, ""), (1L, "   "), (2L, "ONE token"), (3L, "one token"),
-      (4L, "\thello"), (5L, "a\n"), (6L, "\u0001x"), (7L, " x "), (8L, "a\r\nb"))
+    val edge = Seq[(Long, String)]((0L, ""), (1L, "   "), (2L, "ONE token"), (3L, "one token"),
+      (4L, "\thello"), (5L, "a\n"), (6L, "\u0001x"), (7L, " x "), (8L, "a\r\nb"),
+      (9L, null), (10L, "\t\n "))
       .toDF("doc_id", "text")
-    val e = edge.select(col("doc_id"), Dedup.simhash(col("text")).as("f"),
-      Dedup.simhashHof(col("text")).as("s")).collect()
+    val e = edge.select(col("doc_id"), SimHash64(col("text")).as("f"),
+      HofOracles.simhashHof(col("text")).as("s")).collect()
     assert(e.forall(r => r.getLong(1) == r.getLong(2)))
     val byId = e.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byId(0L) == 0L && byId(1L) == 0L)
+    assert(byId(9L) == 0L && byId(10L) == 0L) // null and whitespace-only: no votes
     assert(byId(2L) == byId(3L)) // case-insensitive
+    // simhashPolyBands is the native fingerprint split into 16-bit bands
+    val bands = Dedup.simhashPolyBands(edge, "text", "doc_id").collect()
+      .map(r => r.getLong(0) -> (0 until 4).map(b => r.getInt(b + 1).toLong << (16 * b)).sum).toMap
+    assert(bands == byId)
   }
 
   test("as-of join backward: latest at-or-before match, tolerance, no-match") {
@@ -967,7 +930,7 @@ class OpsSpec extends SparkSpec {
     for (df <- Seq(real.select("text"), edges); n <- Seq(1, 2, 3)) {
       val both = df.select(
         Dedup.wordGrams(col("text"), n).as("fast"),
-        Dedup.wordGramsHof(col("text"), n).as("slow")).collect()
+        HofOracles.wordGramsHof(col("text"), n).as("slow")).collect()
       both.foreach { r =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
           s"n=$n diverged: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}")
@@ -998,7 +961,7 @@ class OpsSpec extends SparkSpec {
       .union(Seq("", "  ", "Case case CASE", "a A a\tA\n").toDF("text"))
     val both = df.select(
       TextAnalysis.distinctTokenCount(col("text")).as("fast"),
-      graft.ops.TextAnalysis.distinctTokenCountHof(col("text")).as("slow")).collect()
+      HofOracles.distinctTokenCountHof(col("text")).as("slow")).collect()
     both.foreach(r => assert(r.getInt(0) == r.getInt(1), s"diverged: $r"))
     // case-preserving: "Case case CASE" has 3 distinct tokens
     val c = Seq("Case case CASE").toDF("text")
@@ -3049,7 +3012,7 @@ class OpsSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200)
     emb.select(
         Similarity.quantizeInt8(col("embedding")).as("fast"),
-        Similarity.quantizeInt8Hof(col("embedding")).as("slow"))
+        HofOracles.quantizeInt8Hof(col("embedding")).as("slow"))
       .collect().foreach { r =>
         val f = r.getStruct(0); val s = r.getStruct(1)
         assert(f.getDouble(0) == s.getDouble(0), "scale must match bit-exactly")
@@ -3057,7 +3020,7 @@ class OpsSpec extends SparkSpec {
       }
     val z = Seq((0L, Seq(0.0f, 0.0f))).toDF("id", "embedding")
       .select(Similarity.quantizeInt8(col("embedding")).as("fast"),
-        Similarity.quantizeInt8Hof(col("embedding")).as("slow")).head()
+        HofOracles.quantizeInt8Hof(col("embedding")).as("slow")).head()
     assert(z.getStruct(0) == z.getStruct(1), "zero vector: all-zero codes both ways")
 
     // corrupt inputs: native nulls the WHOLE result (null is loud), where
@@ -3100,7 +3063,7 @@ class OpsSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(100)
     val both = emb.select(
       Similarity.hyperplaneBucket(col("embedding"), 64, 12, 7919L).as("fast"),
-      Similarity.hyperplaneBucketHof(col("embedding"), 64, 12, 7919L).as("slow"))
+      HofOracles.hyperplaneBucketHof(col("embedding"), 64, 12, 7919L).as("slow"))
     assert(both.collect().forall(r => r.getLong(0) == r.getLong(1)))
   }
 
