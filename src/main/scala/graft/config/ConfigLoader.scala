@@ -247,10 +247,4 @@ object ConfigLoader {
 
   def toYamlString(config: Map[String, Any]): String =
     new Yaml().dump(toJavaDeep(config))
-
-  def writeJson(config: Map[String, Any], path: String): Unit =
-    Files.write(Paths.get(path), toJsonString(config).getBytes("UTF-8"))
-
-  def writeYaml(config: Map[String, Any], path: String): Unit =
-    Files.write(Paths.get(path), toYamlString(config).getBytes("UTF-8"))
 }

@@ -218,9 +218,9 @@ object Layout {
     *
     * `batchTag` makes the append EXACTLY-ONCE for streaming callers
     * ([[graft.streaming.StreamingEval.exportStream]]): the tag commits
-    * atomically WITH the data (one row merged into the `batches/`
-    * table by the same marker replay), so a retried micro-batch sees
-    * its tag and no-ops instead of double-counting the delivery. */
+    * atomically WITH the data (its fence file rides the same marker
+    * replay), so a retried micro-batch sees its tag and no-ops instead
+    * of double-counting the delivery. */
   def appendShardsWithManifest(
       df: DataFrame,
       path: String,
@@ -229,9 +229,9 @@ object Layout {
   ): Unit = {
     val spark = df.sparkSession
     // exactly-once fencing for streaming callers: a tag that already
-    // committed (its row rode the atomic marker replay into `batches/`)
-    // makes the whole append a no-op — a foreachBatch RETRY after a
-    // crash must not double-count the delivery
+    // committed (its fence rode the atomic marker replay) makes the
+    // whole append a no-op — a foreachBatch RETRY after a crash must
+    // not double-count the delivery
     graft.ops.IndexCommit.maintain(spark, path, batchTag) { staging =>
       // an EMPTY increment (an idle micro-batch tick) must be a no-op,
       // not a crash: the staged-data read-back below cannot infer a
@@ -379,9 +379,9 @@ object Layout {
   /** OFFLINE maintenance for a standing shard export: fold the small
     * files accumulated by [[appendShardsWithManifest]] (one per shard
     * per append, forever under a streaming delivery) back to
-    * `filesPerShard` files per shard, and compact the `batches/`
-    * exactly-once tag table alongside (the
-    * [[graft.ops.IndexCommit.stageTagCompaction]] rider) — identical
+    * `filesPerShard` files per shard, and fold the exactly-once fences
+    * alongside (the [[graft.ops.IndexCommit.stageTagCompaction]]
+    * rider) — identical
     * rows, the manifest untouched because counts and checksums don't
     * change. The [[graft.ops.Retrieval.compactBm25Index]] discipline at
     * the delivery: marker-fenced, run with the export stream stopped

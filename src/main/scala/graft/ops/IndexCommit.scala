@@ -38,6 +38,18 @@ import org.apache.spark.sql.SparkSession
   *    every delete, so a marker never deletes a path that one of its
   *    own later actions publishes.
   *
+  * Exactly-once fence: a streamed batch id (`batchTag` of [[maintain]])
+  * commits as the zero-byte file `<root>/_batches/b<tag>`, staged with
+  * the batch's tables and published by the same marker (`merge
+  * _batches`), so a retried micro-batch finds its fence with a file
+  * lookup and no-ops. A fold ([[stageTagCompaction]], riding every
+  * compactor's marker, or [[compactTags]] alone) stages one
+  * `range_<lo>_<hi>` summary per contiguous run of committed ids and
+  * publishes it with `merge _batches` plus one `delete
+  * _batches/<entry>` per superseded entry: the same marker covers the
+  * fold, so a crash mid-fold replays to the folded state. The fence
+  * dir is `_`-prefixed, so flat parquet roots never read it.
+  *
   * Concurrency contract: ONE maintenance operation at a time per root
   * (stop the writer before compacting, etc.). Readers of a mid-commit
   * index may see a torn view; serving reads and maintenance are
@@ -48,6 +60,9 @@ object IndexCommit {
   /** The table name of the root itself, for `merge` into a flat root. */
   val Root = "."
   private val MarkerName = "_COMMIT"
+  private val FenceDir = "_batches"
+  /** The old fence layout's parquet tag table: refused, never read. */
+  private val OldFenceTable = "batches"
 
   def fsFor(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
@@ -83,18 +98,28 @@ object IndexCommit {
   /** One maintenance operation on `root`: recover any pending commit,
     * no-op when `batchTag` already committed ([[tagCommitted]]), let
     * `stage` write its tables under the staging dir (its argument) and
-    * return the actions, then commit them — with the tag's `batches/`
-    * row ([[stageTag]]) riding the same marker. An empty action list
-    * means nothing to publish: no commit, and the tag does not fence. */
+    * return the actions, then commit them — with the tag's fence file
+    * staged as `_batches/b<tag>` and its `merge _batches` riding the
+    * same marker. An empty action list means nothing to publish: no
+    * commit, and the tag does not fence. A tagged operation refuses a
+    * root that still holds the old fence layout's `batches/` parquet
+    * table, which is not read: a committed batch would apply twice. */
   def maintain(spark: SparkSession, root: String, batchTag: Option[Long] = None)(
       stage: String => Seq[(String, String)]): Unit = {
     recover(spark, root)
+    val fs = fsFor(spark, root)
+    if (batchTag.nonEmpty && fs.exists(new Path(root, OldFenceTable)))
+      throw new IllegalStateException(
+        s"$root holds a `batches/` tag table, the old fence layout, which " +
+          "is no longer read: rebuild it with a fresh save before a tagged append")
     if (batchTag.exists(tagCommitted(spark, root, _))) return
     val actions = stage(stagingDir(root))
     if (actions.isEmpty) return
-    val all = actions ++ batchTag.map(stageTag(spark, root, _))
-    val fs = fsFor(spark, root)
-    writeMarker(fs, new Path(root), all)
+    val fence = batchTag.map { tag =>
+      fs.create(new Path(stagedPath(root, FenceDir), s"b$tag"), true).close()
+      "merge" -> FenceDir
+    }
+    writeMarker(fs, new Path(root), actions ++ fence)
     replay(fs, new Path(root))
   }
 
@@ -102,12 +127,11 @@ object IndexCommit {
     * previous artifact at the same path (a MARKED leftover would replay
     * into the new one) and the tag history an old incarnation
     * accumulated (a restarted stream against a rebuilt artifact must
-    * not skip batches because the OLD one saw their tags). */
+    * not skip batches because the OLD one saw their tags), including
+    * the old layout's `batches/` table. */
   def fresh(spark: SparkSession, root: String): Unit = {
     val fs = fsFor(spark, root)
-    fs.delete(new Path(stagingDir(root)), true)
-    fs.delete(new Path(s"$root/batches"), true)
-    ()
+    Seq(StagingName, FenceDir, OldFenceTable).foreach(n => fs.delete(new Path(root, n), true))
   }
 
   /** The marker write alone — the commit's point of no return, split out
@@ -126,48 +150,90 @@ object IndexCommit {
       actions.map(a => s"${a._1} ${a._2}").mkString("\n").getBytes("UTF-8"))
   }
 
-  /** Exactly-once fencing for STREAMING appenders: has `tag` already
-    * committed into this root's `batches/` table? A tag's row rides the
-    * same atomic marker replay as the data it fences ([[stageTag]]), so
-    * a crash-retried micro-batch that finds its tag knows the whole
-    * append landed — and one that doesn't knows none of it did.
-    *
-    * Cost contract: the check reads the `batches/` table, which gains
-    * one small file per committed batch — so each check costs O(batches
-    * since the last compaction) file listings/footers. Every index
-    * family's compactor folds the table back to one file (the
-    * [[stageTagCompaction]] rider), which bounds the check: a
-    * long-lived stream must run its artifact's compaction on a cadence
-    * (every ~10³ batches keeps the per-batch check at a few thousand
-    * footer reads worst-case), the same stop-the-writer maintenance
-    * window the data files need anyway. */
+  /** Exactly-once fence probe for streaming appenders: has `tag`
+    * already committed into `root`? A tag's fence file rides the same
+    * marker replay as the data it fences ([[maintain]]), so a
+    * crash-retried micro-batch that finds its fence knows the whole
+    * append landed, and one that doesn't knows none of it did. File
+    * lookups only, no Spark job: one existence check, plus a listing
+    * of the fence dir (bounded by the fold cadence, [[compactTags]])
+    * when the tag has no file of its own. */
   def tagCommitted(spark: SparkSession, root: String, tag: Long): Boolean = {
     val fs = fsFor(spark, root)
-    fs.exists(new Path(s"$root/batches")) &&
-      spark.read.parquet(s"$root/batches")
-        .filter(org.apache.spark.sql.functions.col("batch_tag") === tag)
-        .limit(1).count() > 0
+    val dir = new Path(root, FenceDir)
+    fs.exists(new Path(dir, s"b$tag")) ||
+      fs.exists(dir) && fs.listStatus(dir).exists(st =>
+        parseRange(st.getPath.getName).exists { case (lo, hi) => lo <= tag && tag <= hi })
   }
 
-  /** Stage `tag`'s one-row `batches/` increment under the root's staging
-    * dir; returns the commit action to append to the operation's list. */
-  private def stageTag(spark: SparkSession, root: String, tag: Long): (String, String) = {
-    writeRow(spark, s"${stagingDir(root)}/batches", "batch_tag" -> tag)
-    "merge" -> "batches"
+  /** `range_<lo>_<hi>` → Some((lo, hi)); anything else, including a
+    * stray `range_*` entry that does not parse, → None, so a stray
+    * name neither breaks the probe nor fences anything. */
+  private def parseRange(n: String): Option[(Long, Long)] =
+    n.split("_") match {
+      case Array("range", lo, hi) => scala.util.Try((lo.toLong, hi.toLong)).toOption
+      case _ => None
+    }
+
+  /** Fence fold, staged: a long-lived stream leaves one fence file per
+    * batch. Stage one `range_<lo>_<hi>` summary per CONTIGUOUS run of
+    * committed ids and return the actions that publish them and
+    * delete every entry they supersede (stray names included) — the
+    * rider every index family's compactor appends to its own actions,
+    * and the whole of [[compactTags]]. A summary never spans a gap: the
+    * missing id never committed, and fencing it would turn its retry
+    * into a silent loss, so each gap starts a new range.
+    * `singleRange = true` refuses a gappy history instead (sequential
+    * ids are the foreachBatch norm). Empty when there is nothing to
+    * fold. */
+  def stageTagCompaction(spark: SparkSession, root: String,
+      singleRange: Boolean = false): Seq[(String, String)] = {
+    val fs = fsFor(spark, root)
+    val dir = new Path(root, FenceDir)
+    if (!fs.exists(dir)) return Seq.empty
+    val entries = fs.listStatus(dir).map(_.getPath.getName).toSeq
+    val ids = entries.filter(_.startsWith("b"))
+      .flatMap(n => scala.util.Try(n.drop(1).toLong).toOption)
+    val intervals = (ids.map(i => (i, i)) ++ entries.flatMap(parseRange)).sortBy(_._1)
+    if (intervals.isEmpty) return Seq.empty
+    // merge touching/overlapping intervals; a gap starts a new run
+    val merged = intervals.tail.foldLeft(List(intervals.head)) {
+      case ((lo1, hi1) :: rest, (lo2, hi2)) if lo2 <= hi1 + 1 =>
+        (lo1, math.max(hi1, hi2)) :: rest
+      case (acc, iv) => iv :: acc
+    }.reverse
+    if (singleRange && merged.length > 1)
+      throw new IllegalStateException(
+        s"compactTags: committed batch ids jump from ${merged.head._2} to " +
+          s"${merged(1)._1}; one range over the gap would fence uncommitted " +
+          "ids and lose their retries (rerun without singleRange)")
+    val summaries = merged.map { case (lo, hi) => s"range_${lo}_$hi" }
+    val added = summaries.filterNot(entries.contains)
+    added.foreach(s =>
+      fs.create(new Path(stagedPath(root, FenceDir), s), true).close())
+    // the deletes never name a summary, so a replay cannot undo the merge
+    (if (added.nonEmpty) Seq("merge" -> FenceDir) else Nil) ++
+      entries.filterNot(summaries.contains).map(n => "delete" -> s"$FenceDir/$n")
   }
 
-  /** Compaction rider for the tag table: a long-lived stream leaves one
-    * tiny `batches/` file per micro-batch; fold them to one file in the
-    * same staged commit as the index compaction (tags keep fencing —
-    * the rows are identical). Returns the action to append, or None
-    * when the root has no tag history. */
-  def stageTagCompaction(
-      spark: SparkSession, root: String): Option[(String, String)] = {
-    if (!fsFor(spark, root).exists(new Path(s"$root/batches"))) return None
-    spark.read.parquet(s"$root/batches")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${stagingDir(root)}/batches")
-    Some("swap" -> "batches")
+  /** OFFLINE fence fold for a long-lived stream ([[stageTagCompaction]]
+    * as one commit): every committed id keeps fencing, through one
+    * listing of a few summaries. Run with the stream stopped, like
+    * every maintenance op. */
+  def compactTags(spark: SparkSession, root: String,
+      singleRange: Boolean = false): Unit =
+    maintain(spark, root)(_ => stageTagCompaction(spark, root, singleRange))
+
+  /** Preamble for a NEW stream incarnation (a fresh checkpoint) against
+    * a standing root: batch ids restart at 0, so the previous
+    * incarnation's fences must drop, or the new stream's first batches
+    * find old fences and silently no-op. Only after a CLEAN stop (and
+    * [[recover]]): a same-checkpoint restart must NOT clear, its
+    * retried batch id relies on the fence. A fresh save ([[fresh]])
+    * does this itself. */
+  def clearTags(spark: SparkSession, root: String): Unit = {
+    fsFor(spark, root).delete(new Path(root, FenceDir), true)
+    ()
   }
 
   /** Write a one-row parquet sidecar (stats, recipe, tag) to `dir`,

@@ -1009,7 +1009,7 @@ object Retrieval {
   }
 
   /** OFFLINE maintenance: fold the forward sidecar's per-append small
-    * files back to ~one per bucket, plus the tag-table rider — the
+    * files back to ~one per bucket, plus the fence-fold rider — the
     * [[compactBm25Index]] discipline. */
   def compactBm25Forward(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
@@ -1414,8 +1414,8 @@ object Retrieval {
       indexPath: String,
       batchTag: Option[Long] = None
   ): Unit = {
-    // exactly-once fencing for streaming appenders (the tag's row rides
-    // the same atomic marker replay as the postings increment)
+    // exactly-once fencing for streaming appenders (the tag's fence
+    // rides the same atomic marker replay as the postings increment)
     IndexCommit.maintain(newDocs.sparkSession, indexPath, batchTag)(_ =>
       stageBm25Append(newDocs, textCol, indexPath))
   }

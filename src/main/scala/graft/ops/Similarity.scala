@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding-similarity operators: exact cosine, brute-force top-k, and a
@@ -145,28 +144,6 @@ object Similarity {
       .drop("__q_vec")
   }
 
-  /** Exact brute-force top-k: per query, the k nearest corpus vectors by
-    * cosine. Deterministic tiebreak on corpus id. The per-query window
-    * shuffles only (n_queries x corpus) scored rows on the query key —
-    * with broadcast queries this is the canonical exact-ANN baseline. */
-  def bruteForceTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      corpusId: String = "vec_id",
-      corpusVec: String = "embedding",
-      queryId: String = "vec_id",
-      queryVec: String = "embedding"
-  ): DataFrame = {
-    val scored = crossCosine(corpus, queries, corpusId, corpusVec, queryId, queryVec)
-      .filter(!isnan(col("cosine"))) // zero-norm vectors: NaN sorts FIRST in Spark
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col(corpusId).asc)
-    scored
-      .withColumn("nn_rank", row_number().over(w))
-      .filter(col("nn_rank") <= k)
-  }
-
   /** Sign bits of the vector against `nBits` deterministic pseudo-random
     * +-1 hyperplanes -> an integer bucket key. The planes are generated
     * driver-side from a seeded PRNG and embedded as array literals, so the
@@ -181,11 +158,12 @@ object Similarity {
     Seq.fill(nBits)(Seq.fill(dim)(if (rnd.nextBoolean()) 1.0 else -1.0))
   }
 
-  /** [[bruteForceTopK]] with the heap aggregator instead of the ranking
-    * window ([[GroupTopK]]): same (query_id, id, cosine, nn_rank) rows
-    * and schema, but map-side partial aggregation reduces each partition
-    * to k candidates per query BEFORE the shuffle — the formulation to
-    * use when the corpus side is huge. */
+  /** Exact brute-force top-k: per query, the k nearest corpus vectors by
+    * cosine, ties toward the smaller corpus id; NaN cosines (zero-norm
+    * vectors) never rank. A [[GroupTopK]] heap aggregate instead of a
+    * ranking window: map-side partial aggregation reduces each
+    * partition to k candidates per query BEFORE the shuffle. Output
+    * (query_id, id, cosine, nn_rank: int). */
   def bruteForceTopKAgg(
       corpus: DataFrame,
       queries: DataFrame,
@@ -605,7 +583,7 @@ object Similarity {
   ): Unit = {
     val spark = newVecs.sparkSession
     // exactly-once fencing for streaming appenders: a committed tag
-    // means this whole increment already landed (the tag's row rode the
+    // means this whole increment already landed (its fence rode the
     // same atomic marker replay) — the crash-retried batch no-ops
     IndexCommit.maintain(spark, path, batchTag) { staging =>
       assignCells(newVecs, corpusVec, loadIvfCentroids(spark, path), "list_id")

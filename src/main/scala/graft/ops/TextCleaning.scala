@@ -52,11 +52,6 @@ object TextCleaning {
   def normalizeWhitespace(text: Column): Column =
     regexp_replace(regexp_replace(text, "\\s+", " "), "^ | $", "")
 
-  /** stripTags + decodeEntities + normalizeWhitespace: the plain-text
-    * rendering of an HTML fragment. */
-  def stripHtml(text: Column): Column =
-    normalizeWhitespace(decodeEntities(stripTags(text)))
-
   // ------------------------------------------------------------- PII
 
   private val EmailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"

@@ -692,17 +692,10 @@ object StreamingEval {
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
       graft.ops.IndexCommit.recover(spark, indexPath)
-      val root = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val vs = versions(spark, indexPath, Some(batchId))
       val standing =
-        if (!fs.exists(root)) None
-        else {
-          val vs = fs.listStatus(root).map(_.getPath.getName)
-            .filter(_.matches("v\\d+"))
-            .filter(_.drop(1).toLong < batchId)
-          if (vs.isEmpty) None
-          else Some(spark.read.parquet(vs.map(v => s"$indexPath/$v"): _*))
-        }
+        if (vs.isEmpty) None
+        else Some(spark.read.parquet(vs.map(v => s"$indexPath/$v"): _*))
       val (cleaned, newFps) = graft.ops.Dedup.selfDedupAgainstIndex(
         batch, textCol, idCol, span, standing)
       cleaned.write.mode("overwrite").parquet(f"$outPath/v$batchId%09d")
@@ -790,13 +783,7 @@ object StreamingEval {
       minVersions: Int,
       transform: DataFrame => DataFrame
   ): Seq[(String, String)] = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = graft.ops.IndexCommit.fsFor(spark, indexPath)
-    if (!fs.exists(root)) return Seq.empty
-    val vs = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.matches("v\\d+"))
-      .filter(_.drop(1).toLong < upToBatchId)
-      .sorted
+    val vs = versions(spark, indexPath, Some(upToBatchId))
     if (vs.length < minVersions) return Seq.empty
     transform(spark.read.parquet(vs.map(v => s"$indexPath/$v"): _*).distinct())
       .write.mode("overwrite")
@@ -1082,10 +1069,10 @@ object StreamingEval {
     * standing [[graft.io.Layout.writeShardsWithManifest]] export: each
     * micro-batch appends through the marker-fenced
     * [[graft.io.Layout.appendShardsWithManifest]] with the BATCH ID as
-    * the exactly-once tag (the tag's row merges into the `batches/`
-    * table by the same atomic marker replay as the data, so a replayed
-    * batch after a crash sees its tag and no-ops — the delivery's
-    * manifest never double-counts). The export root must exist (seed it
+    * the exactly-once tag (its fence file commits by the same atomic
+    * marker replay as the data, so a replayed batch after a crash
+    * sees its tag and no-ops — the delivery's manifest never
+    * double-counts). The export root must exist (seed it
     * with one write-once call — the routing recipe lives in its
     * manifest); readers [[graft.io.Layout.verifyShards]]-check as ever.
     * One writer per export root (the IndexCommit contract — don't run
@@ -1252,125 +1239,21 @@ object StreamingEval {
       ingestBatch(batch, batchId, indexPath, hashFn, dedupFn)
     }
 
-  private val IngestTagDirName = "_batches"
-
-  /** Exactly-once fence probe for the flat ingest indexes: tags are
-    * zero-byte FILES under `_batches/` (underscore-prefixed, so parquet
-    * reads of the flat root never see them), created by the same marker
-    * replay that publishes the batch's admitted rows — an O(1)
-    * existence check per micro-batch, no table scan at all (the flat
-    * layout's answer to [[graft.ops.IndexCommit.tagCommitted]]'s
-    * cost contract). */
-  private[graft] def ingestTagCommitted(
-      fs: org.apache.hadoop.fs.FileSystem, indexPath: String,
-      batchId: Long): Boolean = {
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexPath/$IngestTagDirName/b$batchId"))) return true
-    // folded history: a range summary left by [[compactIngestTags]]
-    // covers its whole contiguous id span. The listing is bounded by
-    // the compaction cadence (one range file + fences since the fold).
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/$IngestTagDirName")
-    fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      // Try-guarded parse: a stray `range_*` entry (editor backup,
-      // interrupted tooling) must not brick every subsequent
-      // micro-batch's fence probe — unparseable names are ignored,
-      // matching compactIngestTags' own b<id> parse.
-      parseRangeName(st.getPath.getName)
-        .exists { case (lo, hi) => lo <= batchId && batchId <= hi }
-    }
-  }
-
-  /** `range_<lo>_<hi>` → Some((lo, hi)); anything else (including a
-    * stray or corrupt `range_*`-prefixed entry) → None. */
-  private def parseRangeName(n: String): Option[(Long, Long)] =
-    if (!n.startsWith("range_")) None
-    else {
-      val p = n.split("_")
-      if (p.length != 3) None
-      else scala.util.Try((p(1).toLong, p(2).toLong)).toOption
-    }
-
-  /** OFFLINE maintenance for a long-lived ingest stream's fences: fold
-    * the per-batch zero-byte tag files into `range_<lo>_<hi>`
-    * summaries — one per CONTIGUOUS committed-id run, so even a gappy
-    * history (a checkpoint restored across a skipped batch id) folds
-    * to a bounded list of ranges. A summary NEVER spans a gap: the
-    * missing id in the span never committed, and fencing it as done
-    * would make its retry no-op and silently LOSE the batch — each
-    * gap simply starts a new range. `singleRange = true` requests the
-    * strict one-summary fold and refuses loudly on any gap (the
-    * foreachBatch norm is sequential ids, so a gap under strict mode
-    * is a real anomaly worth investigating). Crash-safe by ordering:
-    * the covering summaries publish first, then the redundant entries
-    * delete — a crash in between leaves extra (harmless) fences. Run
-    * with the stream stopped, like every maintenance op. */
-  def compactIngestTags(
-      spark: SparkSession, indexPath: String,
-      singleRange: Boolean = false): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$indexPath/$IngestTagDirName")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return
-    val entries = fs.listStatus(dir).map(_.getPath.getName)
-    val ids = entries.filter(n => n.startsWith("b") && !n.startsWith("range_"))
-      .flatMap(n => scala.util.Try(n.drop(1).toLong).toOption)
-    val ranges = entries.flatMap(parseRangeName)
-    if (ids.isEmpty && ranges.isEmpty) return // nothing fences — no-op
-    // already folded AND nothing stray to sweep
-    if (ids.isEmpty && ranges.length == 1 && entries.length == 1) return
-    val intervals = (ids.map(i => (i, i)) ++ ranges).sortBy(_._1)
-    // merge touching/overlapping intervals; a gap starts a new run
-    val merged = intervals.tail.foldLeft(List(intervals.head)) {
-      case ((lo1, hi1) :: rest, (lo2, hi2)) if lo2 <= hi1 + 1 =>
-        (lo1, math.max(hi1, hi2)) :: rest
-      case (acc, iv) => iv :: acc
-    }.reverse
-    if (singleRange && merged.length > 1) {
-      val (_, hi1) = merged.head
-      val (lo2, _) = merged(1)
-      throw new IllegalStateException(
-        s"compactIngestTags: committed batch ids jump from $hi1 to $lo2 — " +
-          "a single range summary would fence the missing ids as committed " +
-          "and a retry of one would silently lose its batch; rerun without " +
-          "singleRange to fold per contiguous run (or investigate the gap)")
-    }
-    val summaries = merged.map { case (lo, hi) => s"range_${lo}_$hi" }.toSet
-    summaries.foreach { s =>
-      fs.create(new org.apache.hadoop.fs.Path(dir, s), true).close()
-    }
-    entries.filterNot(summaries.contains).foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, n), false)
-    }
-  }
-
-  /** Preamble for a NEW stream incarnation (a fresh checkpoint) against
-    * a standing ingest index: batch ids restart at 0, so the previous
-    * incarnation's fences must drop — otherwise the new stream's first
-    * batches find old tags and silently no-op. Only call after a CLEAN
-    * stop (and after [[graft.ops.IndexCommit.recover]]): a
-    * same-checkpoint restart must NOT clear, its retried batch id
-    * relies on the fence. The flat-index analogue of the tag reset in
-    * [[graft.ops.IndexCommit.fresh]] (where the index-seeding save
-    * performs this implicitly). */
-  def clearIngestTags(spark: SparkSession, indexPath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(root, IngestTagDirName), true)
-    ()
-  }
-
   /** One exactly-once ingest micro-batch — the foreachBatch body of
     * every modality's ingest stream, split out so crash/retry specs can
     * drive it directly. The batch's admitted rows and its batch-id
-    * fence publish in ONE [[graft.ops.IndexCommit]] commit (`merge .`
-    * the rows into the flat root, `merge _batches` the fence file): a
-    * crash before the marker discards the stage (and the retry re-vets
-    * — the index never saw the attempt), a crash after it is completed
-    * by the next call's recovery preamble (which also completes a
-    * crashed [[removeFromIngestIndex]] takedown, so the batch never
-    * vets against a half-deleted index), and a retry of a committed
-    * batch id no-ops — so a foreachBatch replay can neither
-    * double-append signature rows (counts stayed honest before only at
-    * CLASS level) nor bloat the file set. */
+    * fence publish in ONE [[graft.ops.IndexCommit.maintain]] commit
+    * (`merge .` the rows into the flat root; the fence rides the same
+    * marker): a crash before the marker discards the stage (and the
+    * retry re-vets — the index never saw the attempt), a crash after it
+    * is completed by the next call's recovery preamble (which also
+    * completes a crashed [[removeFromIngestIndex]] takedown, so the
+    * batch never vets against a half-deleted index), and a retry of a
+    * committed batch id no-ops — so a foreachBatch replay can neither
+    * double-append signature rows nor bloat the file set. A new stream
+    * incarnation against a standing index starts with
+    * [[graft.ops.IndexCommit.clearTags]]; a long-lived one folds its
+    * fences with [[graft.ops.IndexCommit.compactTags]]. */
   private[graft] def ingestBatch(
       batch: DataFrame,
       batchId: Long,
@@ -1379,29 +1262,22 @@ object StreamingEval {
       dedupFn: (DataFrame, DataFrame) => DataFrame
   ): Unit = {
     val spark = batch.sparkSession
-    val fs = graft.ops.IndexCommit.fsFor(spark, indexPath)
-    graft.ops.IndexCommit.maintain(spark, indexPath) { staging =>
-      if (ingestTagCommitted(fs, indexPath, batchId)) Seq.empty
-      else {
-        val hashes = hashFn(batch)
-        // first batch against a not-yet-created (or tag-only) index: empty
-        // frame of the hash schema (an existence probe, not try/catch —
-        // Spark logs the failed read's full stack before the exception
-        // surfaces, and a root holding only fences/staging has no schema)
-        val index =
-          if (liveDataFiles(spark, indexPath).nonEmpty) spark.read.parquet(indexPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hashes.schema)
-        // stage the admissions and the fence, mark, publish: the NEXT
-        // batch's read sees them, which is what makes cross-batch dedup
-        // work. An empty admission set stages no data files and still
-        // fences the tag.
-        dedupFn(index, hashes).write.mode("overwrite").parquet(
-          graft.ops.IndexCommit.stagedPath(indexPath, graft.ops.IndexCommit.Root))
-        fs.create(new org.apache.hadoop.fs.Path(
-          s"$staging/$IngestTagDirName/b$batchId"), true).close()
-        Seq("merge" -> graft.ops.IndexCommit.Root, "merge" -> IngestTagDirName)
-      }
+    graft.ops.IndexCommit.maintain(spark, indexPath, Some(batchId)) { _ =>
+      val hashes = hashFn(batch)
+      // first batch against a not-yet-created (or fence-only) index: empty
+      // frame of the hash schema (an existence probe, not try/catch —
+      // Spark logs the failed read's full stack before the exception
+      // surfaces, and a root holding only fences/staging has no schema)
+      val index =
+        if (liveDataFiles(spark, indexPath).nonEmpty) spark.read.parquet(indexPath)
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hashes.schema)
+      // stage the admissions, mark, publish: the NEXT batch's read sees
+      // them, which is what makes cross-batch dedup work. An empty
+      // admission set stages no data files and still fences the tag.
+      dedupFn(index, hashes).write.mode("overwrite").parquet(
+        graft.ops.IndexCommit.stagedPath(indexPath, graft.ops.IndexCommit.Root))
+      Seq("merge" -> graft.ops.IndexCommit.Root)
     }
   }
 
@@ -1777,18 +1653,9 @@ object StreamingEval {
       spark: SparkSession,
       historyPath: String,
       beforeVersion: Option[Long] = None
-  ): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(historyPath)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) None
-    else {
-      val vs = fs.listStatus(path).map(_.getPath.getName)
-        .filter(_.matches("v\\d+"))
-        .filter(n => beforeVersion.forall(b => n.drop(1).toLong < b))
-      if (vs.isEmpty) None
-      else Some(spark.read.parquet(s"$historyPath/${vs.max}"))
-    }
-  }
+  ): Option[DataFrame] =
+    versions(spark, historyPath, beforeVersion).lastOption
+      .map(v => spark.read.parquet(s"$historyPath/$v"))
 
   /** Retention for the SNAPSHOT-versioned layouts ([[scd2Stream]],
     * [[ccStream]]), where every `v<batchId>` dir is a COMPLETE state
@@ -1805,15 +1672,23 @@ object StreamingEval {
       path: String,
       belowId: Long
   ): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0
-    val vs = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.matches("v\\d+")).sorted
-    if (vs.isEmpty) return 0
-    val newest = vs.last
-    val doomed = vs.filter(v => v != newest && v.drop(1).toLong < belowId)
+    val fs = graft.ops.IndexCommit.fsFor(spark, path)
+    val doomed = versions(spark, path).dropRight(1).filter(_.drop(1).toLong < belowId)
     doomed.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(path, v), true))
     doomed.length
+  }
+
+  /** The `v<id>` version dirs under `path` in name order (zero-padded
+    * ids, so numeric order), only ids strictly below `below` when
+    * given; empty when `path` does not exist. */
+  private def versions(
+      spark: SparkSession, path: String, below: Option[Long] = None): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = graft.ops.IndexCommit.fsFor(spark, path)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.matches("v\\d+"))
+      .filter(n => below.forall(n.drop(1).toLong < _))
+      .sorted
   }
 }

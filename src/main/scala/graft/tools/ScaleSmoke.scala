@@ -341,7 +341,7 @@ object ScaleSmoke {
 
       // shard-export lifecycle: an append-heavy delivery accretes one
       // file set per batch; compaction folds each shard back to one
-      // file and the tag table to one file; a takedown rewrites ONLY
+      // file and the fences to one range; a takedown rewrites ONLY
       // the affected shard dirs (recipe-located, partition-pruned)
       {
         val dir = graft.io.TempDirs.create("graft-smoke-export").toString

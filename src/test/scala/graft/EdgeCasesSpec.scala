@@ -105,7 +105,7 @@ class EdgeCasesSpec extends SparkSpec {
     ).toDF("vec_id", "embedding", "label")
     val q = df.filter(col("vec_id") === 0)
 
-    val topk = graft.ops.Similarity.bruteForceTopK(df, q, k = 3)
+    val topk = graft.ops.Similarity.bruteForceTopKAgg(df, q, k = 3)
       .orderBy("nn_rank").collect()
     assert(!topk.exists(_.getAs[Long]("vec_id") == 2L), "NaN row must not rank")
     assert(topk.head.getAs[Long]("vec_id") == 1L) // true nearest first

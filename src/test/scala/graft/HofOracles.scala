@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -127,5 +128,27 @@ object HofOracles {
     // legacy size(null) = -1 would fall into the short-doc branch and emit
     // [""] for null text; the native expression (and the oracle) yield null
     when(text.isNotNull, out)
+  }
+
+  /** `Similarity.bruteForceTopKAgg` as a ranking window: per query, the
+    * k nearest corpus vectors by cosine, ties toward the smaller corpus
+    * id. The exact reference of the recall specs and of the heap
+    * aggregate's differential spec. */
+  def bruteForceTopK(
+      corpus: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      corpusId: String = "vec_id",
+      corpusVec: String = "embedding",
+      queryId: String = "vec_id",
+      queryVec: String = "embedding"
+  ): DataFrame = {
+    val scored = Similarity.crossCosine(corpus, queries, corpusId, corpusVec, queryId, queryVec)
+      .filter(!isnan(col("cosine"))) // zero-norm vectors: NaN sorts FIRST in Spark
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col(corpusId).asc)
+    scored
+      .withColumn("nn_rank", row_number().over(w))
+      .filter(col("nn_rank") <= k)
   }
 }

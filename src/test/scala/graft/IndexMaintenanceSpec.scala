@@ -813,4 +813,97 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(r2.getAs[Long]("n_vecs") == 20L)
     assert(r2.getAs[Long]("n_cells") == cents.size.toLong)
   }
+
+  test("a tagged append whose tag already committed launches no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.graft.ListenerBridge
+    import graft.io.Layout
+    val sc = spark.sparkContext
+    val idx = tempDir("graft-fence-jobs")
+    Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text", idx,
+      numBuckets = 4)
+    Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text", idx,
+      batchTag = Some(0L))
+    val out = tempDir("graft-fence-jobs-export")
+    Layout.writeShardsWithManifest(Seq((1L, "a")).toDF("id", "payload"), "id", out,
+      numShards = 2)
+    Layout.appendShardsWithManifest(Seq((2L, "b")).toDF("id", "payload"), out,
+      batchTag = Some(0L))
+    def jobsOf(retry: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      ListenerBridge.waitUntilEmpty(sc)
+      sc.addSparkListener(listener)
+      try { retry; ListenerBridge.waitUntilEmpty(sc) }
+      finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val statsBefore = tableRows(idx, "stats")
+    assert(jobsOf(Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text",
+      idx, batchTag = Some(0L))) == 0)
+    assert(tableRows(idx, "stats") == statsBefore, "the retry must no-op")
+    assert(jobsOf(Layout.appendShardsWithManifest(Seq((2L, "b")).toDF("id", "payload"),
+      out, batchTag = Some(0L))) == 0)
+    assert(spark.read.parquet(s"$out/data").count() == 2L, "the retry must no-op")
+  }
+
+  test("a root holding the old batches/ tag table refuses a tagged append; a fresh save clears it") {
+    val fs = IndexCommit.fsFor(spark, "/")
+    val idx = tempDir("graft-old-fence")
+    Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text", idx,
+      numBuckets = 4)
+    IndexCommit.writeRow(spark, s"$idx/batches", "batch_tag" -> 0L)
+    val before = allTables(idx)
+    val e = intercept[IllegalStateException] {
+      Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text", idx,
+        batchTag = Some(1L))
+    }
+    assert(e.getMessage.contains(idx) && e.getMessage.contains("batches/"), e.getMessage)
+    assert(allTables(idx) == before, "a refused append must publish nothing")
+    Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text", idx,
+      numBuckets = 4)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/batches")))
+    Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text", idx,
+      batchTag = Some(0L))
+    assert(IndexCommit.tagCommitted(spark, idx, 0L))
+    assert(allTables(idx) != before, "the old table's tag 0 must not fence")
+  }
+
+  test("fence fold stopped after its marker: recover completes it, committed ids stay fenced") {
+    import org.apache.hadoop.fs.Path
+    val fs = IndexCommit.fsFor(spark, "/")
+    val idx = tempDir("graft-fence-fold")
+    Retrieval.saveBm25Index(docs1.toDF("doc_id", "text"), "doc_id", "text", idx,
+      numBuckets = 4)
+    // committed ids 0, 1 and 3: a gap at 2
+    Seq(0L -> docs2, 1L -> docs3, 3L -> Seq((12L, "late shuffle"))).foreach {
+      case (tag, d) =>
+        Retrieval.appendToBm25Index(d.toDF("doc_id", "text"), "text", idx,
+          batchTag = Some(tag))
+    }
+    def fences() = fs.listStatus(new Path(s"$idx/_batches")).map(_.getPath.getName).toSet
+    assert(fences() == Set("b0", "b1", "b3"))
+    // stage the fold and write its marker, then "crash" before the replay
+    val actions = IndexCommit.stageTagCompaction(spark, idx).toSeq
+    IndexCommit.writeMarker(fs, new Path(idx), actions)
+    assert(IndexCommit.recover(spark, idx), "a marked fold must replay")
+    assert(fences() == Set("range_0_1", "range_3_3"))
+    assert(!fs.exists(new Path(IndexCommit.stagingDir(idx))))
+    assert(Seq(0L, 1L, 3L).forall(IndexCommit.tagCommitted(spark, idx, _)))
+    assert(!IndexCommit.tagCommitted(spark, idx, 2L), "the gap id must stay unfenced")
+    // a second replay of the same marker re-runs its deletes: the
+    // summaries survive, nothing else changes
+    IndexCommit.writeMarker(fs, new Path(idx), actions)
+    assert(IndexCommit.recover(spark, idx))
+    assert(fences() == Set("range_0_1", "range_3_3"))
+    // the folded fences keep the retries no-ops
+    val before = allTables(idx)
+    Retrieval.appendToBm25Index(docs2.toDF("doc_id", "text"), "text", idx,
+      batchTag = Some(0L))
+    assert(allTables(idx) == before, "a folded fence must keep fencing")
+  }
 }

@@ -443,7 +443,7 @@ class OpsSpec extends SparkSpec {
   test("brute-force top-k returns true nearest neighbors") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") === 0)
-    val topk = Similarity.bruteForceTopK(emb, queries, k = 5)
+    val topk = Similarity.bruteForceTopKAgg(emb, queries, k = 5)
       .orderBy("nn_rank").collect()
     assert(topk.length == 5)
     // ranks are 1..5 with non-increasing cosine
@@ -1169,7 +1169,7 @@ class OpsSpec extends SparkSpec {
   test("quantized top-k recalls the exact neighbors after rerank") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 3)
-    val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
+    val exact = HofOracles.bruteForceTopK(emb, queries, k = 10)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val quant = Similarity.quantizedTopK(emb, queries, k = 10, rerank = 40)
@@ -1354,7 +1354,7 @@ class OpsSpec extends SparkSpec {
       org.apache.spark.sql.types.IntegerType)
     val aggRows = viaAgg.select("query_id", "nn_rank", "vec_id", "cosine").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val winRows = Similarity.bruteForceTopK(emb, queries, k = 7)
+    val winRows = HofOracles.bruteForceTopK(emb, queries, k = 7)
       .select("query_id", "nn_rank", "vec_id", "cosine").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(aggRows.sorted.toSeq == winRows.sorted.toSeq)
@@ -2135,6 +2135,47 @@ class OpsSpec extends SparkSpec {
     }
     assert(!groups.isEmpty)
     assert(groups.asScala.forall(_ == "g"), groups.asScala.mkString(","))
+
+    // cancelling the group when the first prep job starts stops the
+    // call with the cancellation, and no prep job starts once the
+    // cancel has returned. A prep job is one whose SQL execution was
+    // started from ccPrepIncrement (its call site).
+    val prepExecutions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val cancelledAt = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
+    val late = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val canceller = new SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.details.contains("ccPrepIncrement") =>
+            prepExecutions.add(s.executionId.toString); ()
+          case _ => ()
+        }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.jobGroup.id") == "g" &&
+            prepExecutions.contains(j.properties.getProperty("spark.sql.execution.id"))) {
+          if (j.time > cancelledAt.get) late.add(j.jobId)
+          else if (cancelledAt.get == Long.MaxValue) {
+            sc.cancelJobGroup("g")
+            cancelledAt.set(System.currentTimeMillis())
+          }
+        }
+    }
+    sc.addSparkListener(canceller)
+    sc.setJobGroup("g", "ccIncremental job group")
+    try {
+      val e = intercept[Exception] {
+        Graphs.ccIncremental(edges.take(15).toDF("s", "d"),
+          edges.drop(15).toDF("s", "d"), "s", "d").collect()
+      }
+      assert(String.valueOf(e.getMessage).toLowerCase.contains("cancel"), e)
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(canceller)
+    }
+    assert(cancelledAt.get != Long.MaxValue, "no prep job started")
+    assert(late.isEmpty, s"prep jobs started after the cancel: ${late.asScala.mkString(",")}")
   }
 
   test("horizonDedup: greedy anchors, boundary kept, ties, brute-force replay") {

@@ -13,7 +13,7 @@ class ScaleOpsSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 5)
 
-    val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
+    val exact = HofOracles.bruteForceTopK(emb, queries, k = 10)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = Similarity.ivfTopK(emb, queries, k = 10, nLists = 16, nProbe = 8)

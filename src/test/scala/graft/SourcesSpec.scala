@@ -319,15 +319,15 @@ class SourcesSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$out/data/shard=$shard"))
       .count(s => !s.getPath.getName.startsWith("_"))
     assert((0L to 3L).exists(dataFiles(_) > 1), "appends should accrete files")
-    val tagFiles0 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/batches"))
-      .count(s => s.getPath.getName.endsWith(".parquet"))
+    val tagFiles0 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/_batches"))
+      .count(s => !s.getPath.getName.startsWith("."))
     assert(tagFiles0 >= 3)
     val mBefore = spark.read.parquet(s"$out/manifest")
       .select("shard", "n_rows", "id_checksum").collect().map(_.toSeq).toSet
     Layout.compactShardExport(spark, out)
     assert((0L to 3L).forall(s => dataFiles(s) <= 1), "compaction must fold shard files")
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/batches"))
-      .count(s => s.getPath.getName.endsWith(".parquet")) == 1,
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/_batches"))
+      .count(s => !s.getPath.getName.startsWith(".")) == 1,
       "compaction must fold the tag table")
     assert(spark.read.parquet(s"$out/manifest")
       .select("shard", "n_rows", "id_checksum").collect().map(_.toSeq).toSet == mBefore)

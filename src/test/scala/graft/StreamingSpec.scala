@@ -760,7 +760,7 @@ class StreamingSpec extends SparkSpec {
     // new tags keep fencing; a fresh batch commits and a re-fold merges
     // the summary with the new fences
     assert(fs.listStatus(new Path(s"$idx/_batches")).length == 4)
-    StreamingEval.compactIngestTags(spark, idx)
+    IndexCommit.compactTags(spark, idx)
     assert(fs.listStatus(new Path(s"$idx/_batches")).length == 1, "fences must fold")
     StreamingEval.ingestBatch(
       Seq((8L, doc(2))).toDF("doc_id", "text"), 2L, idx, hashFn, dedupFn)
@@ -768,7 +768,7 @@ class StreamingSpec extends SparkSpec {
     StreamingEval.ingestBatch(
       Seq((8L, doc(8))).toDF("doc_id", "text"), 4L, idx, hashFn, dedupFn)
     assert(ids() == Set(1L, 2L, 4L, 6L, 8L))
-    StreamingEval.compactIngestTags(spark, idx)
+    IndexCommit.compactTags(spark, idx)
     assert(fs.listStatus(new Path(s"$idx/_batches")).length == 1)
     assert(fs.exists(new Path(s"$idx/_batches/range_0_4")))
     // a GAP in the committed ids: strict singleRange refuses loudly
@@ -781,35 +781,35 @@ class StreamingSpec extends SparkSpec {
     Seq(0L, 1L, 3L).foreach(i =>
       fs.create(new Path(s"$gappy/_batches/b$i"), true).close())
     val eGap = intercept[IllegalStateException] {
-      StreamingEval.compactIngestTags(spark, gappy, singleRange = true)
+      IndexCommit.compactTags(spark, gappy, singleRange = true)
     }
     assert(eGap.getMessage.contains("jump"), eGap.getMessage)
-    StreamingEval.compactIngestTags(spark, gappy)
+    IndexCommit.compactTags(spark, gappy)
     assert(fs.exists(new Path(s"$gappy/_batches/range_0_1")) &&
       fs.exists(new Path(s"$gappy/_batches/range_3_3")) &&
       fs.listStatus(new Path(s"$gappy/_batches")).length == 2,
       "a gappy history must fold to one range per contiguous run")
     // fencing across the gap-tolerant fold: committed ids fence, the
     // gap id does NOT (its retry must still run)
-    assert(StreamingEval.ingestTagCommitted(fs, gappy, 1L))
-    assert(StreamingEval.ingestTagCommitted(fs, gappy, 3L))
-    assert(!StreamingEval.ingestTagCommitted(fs, gappy, 2L),
+    assert(IndexCommit.tagCommitted(spark, gappy, 1L))
+    assert(IndexCommit.tagCommitted(spark, gappy, 3L))
+    assert(!IndexCommit.tagCommitted(spark, gappy, 2L),
       "the gap batch must stay unfenced after the fold")
     // the gap closes later -> a re-fold merges everything to one range
     fs.create(new Path(s"$gappy/_batches/b2"), true).close()
-    StreamingEval.compactIngestTags(spark, gappy)
+    IndexCommit.compactTags(spark, gappy)
     assert(fs.exists(new Path(s"$gappy/_batches/range_0_3")) &&
       fs.listStatus(new Path(s"$gappy/_batches")).length == 1,
       "a closed gap must re-fold to one covering range")
     // a stray unparseable range_* file must neither brick the fence
     // probe nor be mistaken for a summary
     fs.create(new Path(s"$gappy/_batches/range_tmp_x"), true).close()
-    assert(StreamingEval.ingestTagCommitted(fs, gappy, 2L))
-    assert(!StreamingEval.ingestTagCommitted(fs, gappy, 9L))
-    StreamingEval.compactIngestTags(spark, gappy)
+    assert(IndexCommit.tagCommitted(spark, gappy, 2L))
+    assert(!IndexCommit.tagCommitted(spark, gappy, 9L))
+    IndexCommit.compactTags(spark, gappy)
     assert(!fs.exists(new Path(s"$gappy/_batches/range_tmp_x")),
       "a re-fold sweeps stray files (their names fence nothing)")
-    assert(StreamingEval.ingestTagCommitted(fs, gappy, 3L))
+    assert(IndexCommit.tagCommitted(spark, gappy, 3L))
 
     // --- image / audio / video: the shared fence through each modality's
     // hash + vet functions (one batch, then its retry)
@@ -896,7 +896,7 @@ class StreamingSpec extends SparkSpec {
     // incarnation's exactly-once fences is the documented preamble;
     // without it the new stream's batch 0 would find the old tag and
     // silently no-op.
-    graft.streaming.StreamingEval.clearIngestTags(spark, indexPath)
+    graft.ops.IndexCommit.clearTags(spark, indexPath)
     val input2 = MemoryStream[(Long, String)]
     val query2 = graft.streaming.StreamingEval.textIngestStream(
         input2.toDF().toDF("doc_id", "text"), "text", "doc_id", indexPath)
@@ -996,8 +996,8 @@ class StreamingSpec extends SparkSpec {
     assert(serve(idx) == serve(want))
     // compaction folds the per-batch tag files to one and the tags
     // KEEP fencing (same rows, one file)
-    def tagFiles() = new java.io.File(s"$idx/batches").listFiles()
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
+    def tagFiles() = new java.io.File(s"$idx/_batches").listFiles()
+      .count(f => f.isFile && !f.getName.startsWith("."))
     assert(tagFiles() >= 2, "two streamed batches leave two tag files")
     Retrieval.compactBm25Index(spark, idx)
     assert(tagFiles() == 1, "compaction must fold the tag table")
